@@ -164,6 +164,11 @@ def run_ingest(spark: SparkSession, config: dict) -> dict:
         frame = spark.read.parquet(src["path"])
         inner = parse_fn or parse_change_events
         n_parts = kconf.get("n_partitions")
+        if n_parts is None:
+            # derive P once, over the whole topic: a slice lacking the
+            # top partition must not re-derive a smaller P, or its seq
+            # tie-breaks disagree with the other slices' and with _pos
+            n_parts = int(frame.agg(F.max("partition")).collect()[0][0] or 0) + 1
         tombs = kconf.get("tombstones", "drop")
 
         def _transport_parse(events: DataFrame) -> DataFrame:
@@ -172,14 +177,7 @@ def run_ingest(spark: SparkSession, config: dict) -> dict:
             )
 
         parse_fn = _transport_parse
-        raw = frame.withColumn(
-            "_pos",
-            kafka_total_seq(
-                n_parts
-                if n_parts is not None
-                else int(frame.agg(F.max("partition")).collect()[0][0] or 0) + 1
-            ),
-        )
+        raw = frame.withColumn("_pos", kafka_total_seq(n_parts))
 
     if "_pos" not in raw.columns:
         raw = raw.withColumn("_pos", F.col("seq"))
@@ -277,6 +275,11 @@ def run_ingest_stream(spark: SparkSession, config: dict) -> dict:
         _fail("in.path is required")
     if not run.get("checkpoint_dir"):
         _fail("run.checkpoint_dir is required for streaming ingest")
+    if run.get("quarantine_dir"):
+        # stream_directory takes no dead-letter dir; dropping it
+        # silently would lose malformed rows the caller asked to keep
+        _fail("run.quarantine_dir is not supported by streaming ingest "
+              "(use the batch facade, run_ingest)")
     fmt = src.get("format", "native")
     if fmt == "mongo_patch" or (c.get("merge") or {}).get("patch"):
         # batch facade supports patch mode; the streaming patch path

@@ -29,7 +29,7 @@ Consistency rules baked in:
   the view's key set always equals ``SELECT DISTINCT group FROM
   base``;
 - refresh is idempotent: the folded base-table version is recorded in
-  the view state (tmp + atomic rename, the sink-manifest pattern); a
+  the view state (``sinks.jsonlog.replace_json``); a
   redelivered refresh is a skip, a crash between data write and state
   write leaves only unreferenced garbage.
 
@@ -42,12 +42,12 @@ no joins against the base table.
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
+from ..sinks.jsonlog import read_json, replace_json
 from ..sinks.snapshot import ParquetSnapshotSink
 
 _N = "_n"  # internal per-group live-row count
@@ -83,16 +83,10 @@ class IncrementalAggView:
         return os.path.join(self.path, "view.json")
 
     def _state(self) -> dict:
-        if not os.path.exists(self._state_path):
-            return {"table_version": 0, "data": None}
-        with open(self._state_path) as f:
-            return json.load(f)
+        return read_json(self._state_path, {"table_version": 0, "data": None})
 
     def _write_state(self, state: dict) -> None:
-        tmp = self._state_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(state, f)
-        os.replace(tmp, self._state_path)
+        replace_json(self._state_path, state)
 
     def _stored(self, state: dict) -> DataFrame | None:
         name = state.get("data")

@@ -276,22 +276,6 @@ def fence_at_first_gap(
     )
 
 
-def fence_at_first_gap_sql(changes_sql: str, seq_col: str = "seq") -> str:
-    """DuckDB oracle twin: naive single-window LAG fence."""
-    return f"""
-        WITH src AS (SELECT * FROM ({changes_sql})),
-        l AS (
-            SELECT seq, LAG(seq) OVER (ORDER BY seq) AS prev
-            FROM (SELECT DISTINCT {seq_col} AS seq FROM src)
-        ),
-        fence AS (
-            SELECT COALESCE(MIN(prev + 1), 9223372036854775807) AS f
-            FROM l WHERE seq > prev + 1
-        )
-        SELECT src.* FROM src, fence WHERE src.{seq_col} < f
-    """
-
-
 def replication_lag_summary(
     df: DataFrame,
     applied_hwm_seq: "int | F.Column",

@@ -14,10 +14,11 @@ Spark job) and written as JSON next to the shards.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from ..sinks.jsonlog import replace_json
 
 DAY_COL = "_day"
 
@@ -51,8 +52,7 @@ def export_shards(
         "order_by": list(order_by),
         "shards": shards,
     }
-    with open(os.path.join(path, "_shard_manifest.json"), "w") as fh:
-        json.dump(manifest, fh, indent=1, sort_keys=True)
+    replace_json(os.path.join(path, "_shard_manifest.json"), manifest)
     return manifest
 
 

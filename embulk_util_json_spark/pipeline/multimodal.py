@@ -27,8 +27,6 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
 
-MEDIA_SCHEMA = "mime string, n_bytes int"
-
 FEATURE_SCHEMA = (
     "doc_id long, n_bytes int, first_byte int, byte_sum long, width int, height int"
 )

@@ -148,29 +148,3 @@ def fence_per_shard(
         .drop("_f_shard", "_f_fence")
     )
 
-
-def fence_per_shard_sql(
-    changes_sql: str, shard_col: str = "shard", seq_col: str = "seq"
-) -> str:
-    """DuckDB oracle twin: naive per-shard LAG fence over the same
-    frame (single window — the formulation the distributed scan must
-    equal bit-for-bit)."""
-    return f"""
-        WITH src AS (SELECT * FROM ({changes_sql})),
-        l AS (
-            SELECT {shard_col} AS shard, seq,
-                   LAG(seq) OVER (PARTITION BY {shard_col} ORDER BY seq)
-                       AS prev
-            FROM (SELECT DISTINCT {shard_col}, {seq_col} AS seq FROM src)
-        ),
-        fence AS (
-            SELECT shard,
-                   COALESCE(
-                       MIN(CASE WHEN seq > prev + 1 THEN prev + 1 END),
-                       {MAX_SEQ}
-                   ) AS f
-            FROM l GROUP BY shard
-        )
-        SELECT src.* FROM src JOIN fence ON src.{shard_col} = fence.shard
-        WHERE src.{seq_col} < fence.f
-    """

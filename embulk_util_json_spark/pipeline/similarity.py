@@ -446,20 +446,6 @@ def cosine_topk_arrow(
 # ---- IVF ANN ---------------------------------------------------------------
 
 
-def ivf_assign(
-    df: DataFrame, vec_col: str, id_col: str, n_centroids: int, centroid_mod: int
-) -> DataFrame:
-    """IVF coarse quantizer without training: every vector whose id ≡ 0
-    (mod centroid_mod) is a centroid (deterministic "sampled
-    centroids" — at scale you'd k-means these, but assignment, the
-    part that matters for the index structure, is identical). Each
-    vector is assigned to its nearest centroid by quantized cosine
-    (ties → lowest centroid id). Returns (id, qvec, qnorm, cell)."""
-    return _ivf_ranked(df, vec_col, id_col, n_centroids, centroid_mod).filter(
-        F.col("_rn") == 1
-    ).select(id_col, "qvec", "qnorm", F.col("cent_id").alias("cell"))
-
-
 def _initial_centroids(
     qn: DataFrame, id_col: str, n_centroids: int, centroid_mod: int
 ) -> DataFrame:

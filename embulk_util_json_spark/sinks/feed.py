@@ -13,8 +13,8 @@ Delivery contract (the same one Kafka offers, deliberately):
 
 * ``poll()`` returns the net changes in ``(committed, current]`` plus
   a window token; ``commit(window)`` advances the cursor atomically
-  (tmp + rename). Crash between the two → the next poll re-reads the
-  SAME window: at-least-once.
+  (``jsonlog.replace_json``). Crash between the two → the next poll
+  re-reads the SAME window: at-least-once.
 * Exactly-once downstream is the CONSUMER's one-liner: derive its
   idempotence key from the window token (``batch_id(window)`` below
   gives the canonical form). A redelivered window then dedupes in the
@@ -41,12 +41,11 @@ scope this engine owns (SURVEY.md §2.4).
 
 from __future__ import annotations
 
-import json
 import os
-import tempfile
 
 from pyspark.sql import DataFrame
 
+from .jsonlog import read_json, read_json_dir, replace_json
 from .snapshot import ParquetSnapshotSink
 
 
@@ -73,10 +72,7 @@ class FeedCursor:
     def committed_version(self) -> int:
         """The consumer's durable position (0 = never committed: the
         first poll returns the whole current state as inserts)."""
-        if not os.path.exists(self._path):
-            return 0
-        with open(self._path) as f:
-            return int(json.load(f)["version"])
+        return int(read_json(self._path, {"version": 0})["version"])
 
     def lag(self) -> int:
         """Versions not yet committed by this consumer."""
@@ -122,28 +118,14 @@ class FeedCursor:
         self._write(int(version))
 
     def _write(self, version: int) -> None:
-        fd, tmp = tempfile.mkstemp(dir=self._dir, prefix=f".{self.name}~")
-        try:
-            with os.fdopen(fd, "w") as f:
-                json.dump({"version": version}, f)
-                f.flush()
-                os.fsync(f.fileno())
-            os.replace(tmp, self._path)
-        finally:
-            if os.path.exists(tmp):
-                os.unlink(tmp)
+        replace_json(self._path, {"version": version})
 
 
 def cursors(sink: ParquetSnapshotSink) -> dict[str, int]:
     """All named cursors on a sink and their committed versions — the
     consumer-group lag dashboard (drives retention: versions below
     ``min(cursors)`` are safe to vacuum without stranding anyone)."""
-    d = os.path.join(sink.root, "_cursors")
-    if not os.path.isdir(d):
-        return {}
-    out = {}
-    for fn in sorted(os.listdir(d)):
-        if fn.endswith(".json") and not fn.startswith("."):
-            with open(os.path.join(d, fn)) as f:
-                out[fn[: -len(".json")]] = int(json.load(f)["version"])
-    return out
+    return {
+        name: int(rec["version"])
+        for name, rec in read_json_dir(os.path.join(sink.root, "_cursors")).items()
+    }

@@ -364,14 +364,6 @@ def promote_patch_cols_sql(
     return f"UPDATE {table} SET {', '.join(sets)}"
 
 
-def promote_patch_col_sql(
-    table: str, col: str, order_cols: list[str], marker: str | None
-) -> str:
-    """Single-column convenience wrapper over
-    :func:`promote_patch_cols_sql`."""
-    return promote_patch_cols_sql(table, [col], order_cols, marker)
-
-
 def patch_props_sql(
     table: str, patch_cols: list[str], marker: str | None
 ) -> str:

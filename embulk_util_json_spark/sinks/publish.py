@@ -16,7 +16,8 @@ point re-converges:
    write — distributed, NO driver collect; a stale tmp from a crash is
    removed first);
 2. the tmp dir is atomically renamed to its final ``segment-…`` name;
-3. the manifest is rewritten via tmp + ``os.replace``;
+3. the manifest is rewritten with ``jsonlog.replace_json`` (tmp,
+   fsync, ``os.replace`` — readers see the old list or the new one);
 4. the cursor commits.
 
 A crash before (2) leaves garbage that step (1) clears; between (2)
@@ -34,12 +35,11 @@ nothing passes through the driver but the segment name.
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
-import tempfile
 
 from .feed import FeedCursor
+from .jsonlog import read_json, replace_json
 from .snapshot import ParquetSnapshotSink
 
 
@@ -91,25 +91,13 @@ def publish_changes(
     os.replace(tmp, final)
 
     manifest_path = os.path.join(out_dir, "_published.json")
-    manifest = {"segments": [], "wire": wire}
-    if os.path.exists(manifest_path):
-        with open(manifest_path) as f:
-            manifest = json.load(f)
+    manifest = read_json(manifest_path, {"segments": [], "wire": wire})
     if name not in [s["name"] for s in manifest["segments"]]:
         manifest["segments"].append(
             {"name": name, "from_version": lo, "to_version": hi}
         )
         manifest["segments"].sort(key=lambda s: s["to_version"])
-    fd, mtmp = tempfile.mkstemp(dir=out_dir, prefix="._published~")
-    try:
-        with os.fdopen(fd, "w") as f:
-            json.dump(manifest, f, indent=1)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(mtmp, manifest_path)
-    finally:
-        if os.path.exists(mtmp):
-            os.unlink(mtmp)
+    replace_json(manifest_path, manifest)
     cur.commit(window)
     return {"segment": name, "from_version": lo, "to_version": hi}
 
@@ -117,11 +105,9 @@ def publish_changes(
 def published_segments(out_dir: str) -> list[dict]:
     """The publish manifest's segment list (empty when nothing
     published yet)."""
-    p = os.path.join(out_dir, "_published.json")
-    if not os.path.exists(p):
-        return []
-    with open(p) as f:
-        return json.load(f)["segments"]
+    return read_json(os.path.join(out_dir, "_published.json"), {"segments": []})[
+        "segments"
+    ]
 
 
 def compact_published(spark, out_dir: str, keep_last: int = 1) -> dict | None:
@@ -148,10 +134,9 @@ def compact_published(spark, out_dir: str, keep_last: int = 1) -> dict | None:
     from ..sources.events import to_native_json
 
     manifest_path = os.path.join(out_dir, "_published.json")
-    if not os.path.exists(manifest_path):
+    manifest = read_json(manifest_path)
+    if manifest is None:
         return None
-    with open(manifest_path) as f:
-        manifest = json.load(f)
     segs = manifest["segments"]
     if len(segs) - keep_last < 2:
         return None  # nothing worth folding
@@ -188,16 +173,7 @@ def compact_published(spark, out_dir: str, keep_last: int = 1) -> dict | None:
     manifest["segments"] = [
         {"name": name, "from_version": lo, "to_version": hi, "compacted": True}
     ] + tail
-    fd, mtmp = tempfile.mkstemp(dir=out_dir, prefix="._published~")
-    try:
-        with os.fdopen(fd, "w") as f:
-            json.dump(manifest, f, indent=1)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(mtmp, manifest_path)
-    finally:
-        if os.path.exists(mtmp):
-            os.unlink(mtmp)
+    replace_json(manifest_path, manifest)
     live = {s["name"] for s in manifest["segments"]}
     removed = 0
     for d in os.listdir(out_dir):
@@ -220,11 +196,9 @@ def read_published(spark, out_dir: str, from_version: int = 0):
     directory IS a resumable feed."""
     from pyspark.sql import functions as F
 
-    manifest_path = os.path.join(out_dir, "_published.json")
-    wire = "debezium"
-    if os.path.exists(manifest_path):
-        with open(manifest_path) as f:
-            wire = json.load(f).get("wire", wire)
+    wire = read_json(os.path.join(out_dir, "_published.json"), {}).get(
+        "wire", "debezium"
+    )
     if wire == "debezium":
         from ..sources.debezium import parse_debezium_events as parse
     elif wire == "maxwell":

@@ -36,12 +36,12 @@ holds with the link loop replaced by a server-side object-store copy
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 
 from pyspark.sql import SparkSession
 
+from .jsonlog import create_json, read_json
 from .snapshot import ParquetSnapshotSink
 
 SAVEPOINT_META = "savepoint.json"
@@ -99,8 +99,7 @@ def export_savepoint(
         },
         "n_files": n_files,
     }
-    with open(os.path.join(out_root, SAVEPOINT_META), "w") as fh:
-        json.dump(meta, fh)
+    create_json(os.path.join(out_root, SAVEPOINT_META), meta)
 
     out = ParquetSnapshotSink(
         sink.spark,
@@ -133,11 +132,10 @@ def import_savepoint(spark: SparkSession, root: str) -> ParquetSnapshotSink:
     the layout recorded at export reconstructs the handle — apply the
     remainder of the change stream and the batch-id log carried over
     in the manifest keeps redelivered pre-savepoint batches no-ops."""
-    meta_path = os.path.join(root, SAVEPOINT_META)
-    if not os.path.exists(meta_path):
+    meta = read_json(os.path.join(root, SAVEPOINT_META))
+    if meta is None:
         raise ValueError(f"{root!r} is not a savepoint (no {SAVEPOINT_META})")
-    with open(meta_path) as fh:
-        layout = json.load(fh)["layout"]
+    layout = meta["layout"]
     return ParquetSnapshotSink(
         spark,
         root,

@@ -27,8 +27,8 @@ Scale design (the part that must survive 1000 executors / 100 TB):
 - Exactly-once: every applied batch_id is recorded in the manifest;
   re-applying a committed batch is a no-op (streaming foreachBatch +
   checkpoint replay lands here, SURVEY.md §7.3 #2). Commits are
-  atomic manifest renames; a crash mid-apply leaves orphan data files
-  but never a torn table.
+  atomic manifest links (``sinks.jsonlog``); a crash mid-apply leaves
+  orphan data files but never a torn table.
 - Schema evolution: additive via unionByName(allowMissingColumns) +
   mergeSchema on read; old rows read NULL for new columns
   (FIXTURES.md T7).
@@ -55,16 +55,18 @@ from ..operators.lww import (
     patch_stamp,
 )
 from ..sources.events import EXTRAS_COL, KEY_COLS, ORDER_COLS
+from .jsonlog import (
+    ConcurrentCommitError,
+    NumberedLog,
+    create_json,
+    read_json_dir,
+)
 
 BUCKET_COL = "_bucket"
 BAND_COL = "_band"  # time-band subdir written by banded compaction
 META_COLS = ["op", "seq"]  # ts doubles as payload and order column
 LINEAGE_COL = "_ingest_batch"  # row lineage: writer batch id (track_lineage)
 BLOOM_SEED = 0x9747B28C  # 2nd xxhash64 stream for double-hash blooms
-
-
-class ConcurrentCommitError(RuntimeError):
-    """Another writer committed this manifest version first."""
 
 
 _INT_RANK = {"tinyint": 0, "smallint": 1, "int": 2, "bigint": 3}
@@ -206,16 +208,17 @@ class ParquetSnapshotSink:
         if branch != "main" and not re.fullmatch(r"[A-Za-z0-9._-]+", branch):
             raise ValueError(f"invalid branch name {branch!r}")
         self.branch = branch
-        self._manifest_dir = os.path.join(
-            root, "_manifests" if branch == "main" else f"_manifests@{branch}"
+        self._log = NumberedLog(
+            os.path.join(
+                root, "_manifests" if branch == "main" else f"_manifests@{branch}"
+            ),
+            "v",
+            "version {n} was committed by another writer; re-read the "
+            "manifest and retry",
         )
-        # version -> raw JSON of the committed (immutable) manifest;
-        # see manifest_at for the safety argument
-        self._manifest_cache: dict[int, str] = {}
         # rel data path -> Spark StructType (immutable paths, see
         # _path_schema)
         self._path_schema_cache: dict[str, object] = {}
-        os.makedirs(self._manifest_dir, exist_ok=True)
         current = self.current_manifest()
         self.num_buckets = current["num_buckets"] if current else num_buckets
         # Patch config is table state, not caller state: once the
@@ -380,9 +383,6 @@ class ParquetSnapshotSink:
 
     # ---- manifest log -------------------------------------------------
 
-    def _manifest_path(self, version: int) -> str:
-        return os.path.join(self._manifest_dir, f"v{version:08d}.json")
-
     def _data_rel(self, version: int) -> str:
         """Root-relative data directory for a new commit attempt.
         Branch writes are namespaced (``data/<branch>~vN-…``) so two
@@ -458,10 +458,7 @@ class ParquetSnapshotSink:
                 name = d[len("_manifests@"):]
             else:
                 continue
-            if any(
-                f.startswith("v") and f.endswith(".json")
-                for f in os.listdir(os.path.join(self.root, d))
-            ):
+            if NumberedLog(os.path.join(self.root, d), "v").latest():
                 out.append(name)
         return out
 
@@ -494,28 +491,15 @@ class ParquetSnapshotSink:
             "version": v,
             "created_at": time.time(),
         }
-        tmp = os.path.join(tdir, f".{name}.tmp-{uuid.uuid4().hex}")
-        with open(tmp, "w") as f:
-            json.dump(rec, f)
         try:
-            os.link(tmp, os.path.join(tdir, f"{name}.json"))
+            create_json(os.path.join(tdir, f"{name}.json"), rec)
         except FileExistsError:
             raise ValueError(f"tag {name!r} already exists") from None
-        finally:
-            os.unlink(tmp)
         return rec
 
     def tags(self) -> dict[str, dict]:
         """All tags on the table (every branch), name → record."""
-        tdir = os.path.join(self.root, "_tags")
-        if not os.path.isdir(tdir):
-            return {}
-        out = {}
-        for f in sorted(os.listdir(tdir)):
-            if f.endswith(".json") and not f.startswith("."):
-                with open(os.path.join(tdir, f)) as fh:
-                    out[f[:-5]] = json.load(fh)
-        return out
+        return read_json_dir(os.path.join(self.root, "_tags"))
 
     def delete_tag(self, name: str) -> None:
         """Drop a tag. The version it pinned stays readable until a
@@ -1143,32 +1127,21 @@ class ParquetSnapshotSink:
         reads; manifests are small and per-branch chains short after
         their own vacuums)."""
         refs: set[str] = set()
-        own = os.path.basename(self._manifest_dir)
+        own = os.path.basename(self._log.dir)
         for d in os.listdir(self.root):
             if d == own or not (
                 d == "_manifests" or d.startswith("_manifests@")
             ):
                 continue
-            mdir = os.path.join(self.root, d)
-            for f in os.listdir(mdir):
-                if not (f.startswith("v") and f.endswith(".json")):
-                    continue
-                with open(os.path.join(mdir, f)) as fh:
-                    m = json.load(fh)
+            log = NumberedLog(os.path.join(self.root, d), "v")
+            for v in log.numbers():
+                m = log.read(v)
                 for b in m["buckets"]:
                     refs.update(self._paths_of(m, b))
         return refs
 
     def current_version(self) -> int:
-        # parse every digit up to ".json" — a fixed [1:9] slice would
-        # silently mis-parse once the version counter passes 10^8
-        # (the %08d format widens, it does not wrap)
-        versions = [
-            int(f[1:-5])
-            for f in os.listdir(self._manifest_dir)
-            if f.startswith("v") and f.endswith(".json")
-        ]
-        return max(versions, default=0)
+        return self._log.latest()
 
     def current_manifest(self) -> dict | None:
         return self.manifest_at(self.current_version())
@@ -1177,47 +1150,27 @@ class ParquetSnapshotSink:
         """Committed manifest for a specific version (time travel —
         manifests are immutable; any past version reconstructs its
         exact table state because data files are never mutated, only
-        superseded, exactly like Iceberg snapshots).
-
-        Cached per handle: committed manifests never change content
-        (only vacuum DELETES old ones, and a cached copy of a vacuumed
-        manifest is still the manifest that was committed), so a small
-        LRU avoids re-reading + re-parsing the JSON on every
-        apply/read/feed call — on an object store each miss is a GET,
-        and the incremental-view refresh loop hits the same few
-        versions dozens of times per micro-batch. Staleness is
-        impossible by construction; CURRENCY still comes from
-        ``current_version()``'s listing, which is never cached."""
-        if version <= 0:
-            return None
-        path = self._manifest_path(version)
-        if not os.path.exists(path):
-            # checked even on a cache hit: vacuum DELETES expired
-            # manifests, and time travel to an expired version must
-            # keep raising after the delete (content never changes,
-            # but existence does)
-            self._manifest_cache.pop(version, None)
+        superseded, exactly like Iceberg snapshots). ``None`` for
+        version 0; a version never committed, or expired by
+        ``vacuum``, raises. Reads go through the log's per-handle
+        cache (see ``NumberedLog.read``): the incremental-view refresh
+        loop hits the same few versions dozens of times per
+        micro-batch."""
+        m = self._log.read(version)
+        if m is None and version > 0:
             raise ValueError(f"no committed version {version}")
-        cached = self._manifest_cache.get(version)
-        if cached is not None:
-            return json.loads(cached)
-        with open(path) as fh:
-            raw = fh.read()
-        m = json.loads(raw)
-        self._manifest_cache[version] = raw
-        while len(self._manifest_cache) > 16:
-            self._manifest_cache.pop(next(iter(self._manifest_cache)))
         return m
 
     def _commit(self, manifest: dict) -> None:
-        """Atomic optimistic publish: write tmp, fsync, then
-        ``os.link`` into place — link (unlike rename) FAILS if the
-        version already exists, so two writers racing to commit the
-        same version cannot silently clobber each other (the loser
-        gets ConcurrentCommitError and must re-read + retry — the
-        Iceberg optimistic-concurrency protocol; the engine's runners
-        are single-writer, so a conflict here always means a
-        misconfigured second writer)."""
+        """Commit one manifest version: the table-level steps below,
+        then ``NumberedLog.publish`` — the atomic optimistic publish
+        (``jsonlog.create_json``: tmp, fsync, ``os.link``). A link,
+        unlike a rename, FAILS if the version already exists, so two
+        writers racing for the same version cannot silently clobber
+        each other: the loser gets ConcurrentCommitError and must
+        re-read + retry (the Iceberg optimistic-concurrency protocol;
+        the engine's runners are single-writer, so a conflict here
+        always means a misconfigured second writer)."""
         # Column-mapping carry-forward: commit sites that build fresh
         # manifest dicts (apply, compact, rebucket, ...) inherit the
         # predecessor's rename table here — ONE place, fill-if-absent
@@ -1262,25 +1215,7 @@ class ParquetSnapshotSink:
         # rollback, which copies the target manifest's fields — stamps
         # the time this version was committed, not the one it restores.
         manifest["committed_at"] = time.time()
-        path = self._manifest_path(manifest["version"])
-        tmp = path + f".tmp-{uuid.uuid4().hex}"
-        raw = json.dumps(manifest)
-        with open(tmp, "w") as fh:
-            fh.write(raw)
-            fh.flush()
-            os.fsync(fh.fileno())
-        try:
-            os.link(tmp, path)
-        except FileExistsError:
-            raise ConcurrentCommitError(
-                f"version {manifest['version']} was committed by another "
-                "writer; re-read the manifest and retry"
-            ) from None
-        finally:
-            os.unlink(tmp)
-        # seed the read cache — the very next current_manifest() is
-        # almost always for the version just committed
-        self._manifest_cache[manifest["version"]] = raw
+        self._log.publish(manifest["version"], manifest)
 
     def version_at_ts(self, ts) -> int:
         """Resolve a wall-clock instant to the table version visible at
@@ -1929,12 +1864,6 @@ class ParquetSnapshotSink:
         for b in manifest["buckets"]:
             out.extend(self._paths_of(manifest, b))
         return out
-
-    def _chain_depth(self, manifest: dict) -> int:
-        return max(
-            (len(self._paths_of(manifest, b)) for b in manifest["buckets"]),
-            default=0,
-        )
 
     # ---- apply (the MERGE) ---------------------------------------------
 
@@ -4486,17 +4415,17 @@ class ParquetSnapshotSink:
         for v in sorted(
             set(range(max(1, current - keep_versions + 1), current + 1)) | tagged
         ):
-            if not os.path.exists(self._manifest_path(v)):
+            m = self._log.read(v)
+            if m is None:
                 continue
             keep.add(v)
-            m = self.manifest_at(v)
             for b in m["buckets"]:
                 referenced.update(self._paths_of(m, b))
         removed_versions = 0
         for v in range(1, current):
             if v in keep:
                 continue
-            path = self._manifest_path(v)
+            path = self._log.path(v)
             if os.path.exists(path):
                 os.unlink(path)
                 removed_versions += 1
@@ -4601,9 +4530,9 @@ class ParquetSnapshotSink:
         Driver-side filesystem metadata work only — no Spark job."""
         referenced = self._foreign_branch_refs()
         for v in range(1, self.current_version() + 1):
-            if not os.path.exists(self._manifest_path(v)):
+            m = self._log.read(v)
+            if m is None:
                 continue
-            m = self.manifest_at(v)
             for b in m["buckets"]:
                 referenced.update(self._paths_of(m, b))
         removed = self._reclaim_unreferenced(

@@ -18,13 +18,15 @@ records, each mapping every participating table to the manifest
 version its slice produced. Visibility becomes atomic without
 touching the data path:
 
-- ``txn_apply`` writes a PENDING INTENT, applies every table's slice
-  (each sink's own batch-id log keeps the per-table apply
-  exactly-once), then publishes ONE record via the same
-  tmp+``os.link`` atomic-publish protocol the sink manifests use and
-  clears the intent. Until that link lands, NO table's new version is
-  visible through the transaction view — a crash mid-transaction
-  leaves the previous consistent snapshot readable.
+- ``txn_apply`` writes a PENDING INTENT (``jsonlog.replace_json``,
+  so a crash mid-write leaves no torn intent), applies every table's
+  slice (each sink's own batch-id log keeps the per-table apply
+  exactly-once), then publishes ONE record to a
+  ``jsonlog.NumberedLog`` — the same log and tmp+``os.link``
+  atomic-publish step the sink manifests use — and clears the
+  intent. Until that link lands, NO table's new version is visible
+  through the transaction view — a crash mid-transaction leaves the
+  previous consistent snapshot readable.
 - The intent makes interleavings safe: because sink chains are
   CUMULATIVE, a later transaction committing table A would otherwise
   pin a version that already contains a crashed transaction's A-half
@@ -54,13 +56,12 @@ a silent tear.
 
 from __future__ import annotations
 
-import json
 import os
-import uuid
 
 from pyspark.sql import DataFrame
 
-from .snapshot import ConcurrentCommitError, ParquetSnapshotSink
+from .jsonlog import ConcurrentCommitError, NumberedLog, read_json_dir, replace_json
+from .snapshot import ParquetSnapshotSink
 
 
 class PendingTransactionError(RuntimeError):
@@ -73,57 +74,25 @@ class TransactionLog:
     ``root/_txns`` (sibling of the participating sinks, typically)."""
 
     def __init__(self, root: str) -> None:
-        self._dir = os.path.join(root, "_txns")
-        self._pending_dir = os.path.join(self._dir, "pending")
+        self._log = NumberedLog(
+            os.path.join(root, "_txns"),
+            "t",
+            "txn seq {n} was committed by another coordinator; re-read "
+            "the log and retry",
+        )
+        self._pending_dir = os.path.join(self._log.dir, "pending")
         os.makedirs(self._pending_dir, exist_ok=True)
 
-    # ---- record log (same protocol as the sink manifest log) --------
-
-    def _path(self, seq: int) -> str:
-        return os.path.join(self._dir, f"t{seq:08d}.json")
-
     def current_seq(self) -> int:
-        # parse every digit up to ".json" — a fixed [1:9] slice would
-        # silently mis-parse past seq 10^8
-        seqs = [
-            int(f[1:-5])
-            for f in os.listdir(self._dir)
-            if f.startswith("t") and f.endswith(".json")
-        ]
-        return max(seqs, default=0)
+        return self._log.latest()
 
     def record_at(self, seq: int) -> dict | None:
-        if seq <= 0:
-            return None
-        if seq > self.current_seq():
-            raise ValueError(
-                f"no committed txn record {seq} (log is at {self.current_seq()})"
-            )
-        with open(self._path(seq)) as fh:
-            return json.load(fh)
+        if seq > 0 and seq > (cur := self._log.latest()):
+            raise ValueError(f"no committed txn record {seq} (log is at {cur})")
+        return self._log.read(seq)
 
     def head(self) -> dict | None:
-        return self.record_at(self.current_seq())
-
-    def _commit(self, record: dict) -> None:
-        """Atomic optimistic publish — tmp + ``os.link`` (fails on an
-        existing seq instead of clobbering), exactly like
-        ``ParquetSnapshotSink._commit``."""
-        path = self._path(record["seq"])
-        tmp = path + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as fh:
-            json.dump(record, fh)
-            fh.flush()
-            os.fsync(fh.fileno())
-        try:
-            os.link(tmp, path)
-        except FileExistsError:
-            raise ConcurrentCommitError(
-                f"txn seq {record['seq']} was committed by another "
-                "coordinator; re-read the log and retry"
-            ) from None
-        finally:
-            os.unlink(tmp)
+        return self._log.read(self._log.latest())
 
     # ---- pending intents ---------------------------------------------
 
@@ -133,14 +102,10 @@ class TransactionLog:
 
     def pending_intents(self) -> dict[str, list[str]]:
         """txn_id → tables, for every crashed/in-flight transaction."""
-        out = {}
-        for f in os.listdir(self._pending_dir):
-            if not f.endswith(".json"):
-                continue
-            with open(os.path.join(self._pending_dir, f)) as fh:
-                rec = json.load(fh)
-            out[rec["txn_id"]] = rec["tables"]
-        return out
+        return {
+            rec["txn_id"]: rec["tables"]
+            for rec in read_json_dir(self._pending_dir).values()
+        }
 
     # ---- transactions ------------------------------------------------
 
@@ -179,10 +144,7 @@ class TransactionLog:
                     f"(txn_apply with its slices) before {txn_id!r}"
                 )
         intent = self._intent_path(txn_id)
-        with open(intent, "w") as fh:
-            json.dump({"txn_id": txn_id, "tables": sorted(slices)}, fh)
-            fh.flush()
-            os.fsync(fh.fileno())
+        replace_json(intent, {"txn_id": txn_id, "tables": sorted(slices)})
         results = {
             name: sinks[name].apply(sl, f"{txn_id}:{name}")
             for name, sl in slices.items()
@@ -207,7 +169,7 @@ class TransactionLog:
                 "txn_ids": (head.get("txn_ids", []) if head else []) + [txn_id],
             }
             try:
-                self._commit(record)
+                self._log.publish(record["seq"], record)
                 os.unlink(intent)
                 return {"txn_id": txn_id, "tables": results, "seq": record["seq"]}
             except ConcurrentCommitError:

@@ -260,31 +260,3 @@ def ensure_events_segments(
     with open(done, "w") as fh:
         fh.write(str(n_events))
     return dir_path
-
-
-def ensure_events_parquet(
-    path: str,
-    n_events: int,
-    n_convs: int = 50,
-    n_turns: int = 40,
-    seed: int = 42,
-    evolve_after: float | None = None,
-    row_group_size: int = 1 << 20,
-    **kwargs,
-) -> str:
-    """Materialize the generated stream once; reuse on later calls."""
-    if not os.path.exists(path):
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        # A real binlog/WAL file is ordered by log position: persist in
-        # seq order (numpy-side sort — see generate_events) with modest
-        # row groups so a seq-range micro-batch filter prunes row
-        # groups at the parquet reader (each replay batch scans
-        # ~1/num_batches of the file instead of all of it).
-        table = generate_events(
-            n_events, n_convs, n_turns, seed, evolve_after=evolve_after,
-            sort_by_seq=True, **kwargs
-        )
-        tmp = path + ".tmp"
-        pq.write_table(table, tmp, row_group_size=min(row_group_size, 1 << 18))
-        os.rename(tmp, path)
-    return path

@@ -26,14 +26,7 @@ per-file WAL order.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
-
-JSONL_SCHEMA = T.StructType(
-    [
-        T.StructField("seq", T.LongType()),
-        T.StructField("event_json", T.StringType()),
-    ]
-)
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 
 def read_jsonl(spark: SparkSession, path: str, seq_col: str | None = None) -> DataFrame:

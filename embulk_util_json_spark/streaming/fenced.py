@@ -15,8 +15,8 @@ contract of the whole feed).
 durable state in a work dir:
 
 - ``fence.json`` — ``next_seq`` (the applied contiguous frontier + 1)
-  and the current pending-file name, written atomically (tmp + rename,
-  same pattern as the sink manifest);
+  and the current pending-file name, written atomically
+  (``sinks.jsonlog.replace_json``);
 - ``pending-<fence>.parquet`` — the held-back suffix (rows at/past the
   first unfilled hole), re-written each batch.
 
@@ -47,13 +47,13 @@ refetched (the documented escape hatch).
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..pipeline.disorder import seq_gaps
+from ..sinks.jsonlog import read_json, replace_json
 from ..sinks.snapshot import ParquetSnapshotSink
 from .runner import apply_events_batch
 
@@ -85,16 +85,10 @@ class FencedApplier:
         return os.path.join(self.work_dir, "fence.json")
 
     def _state(self) -> dict:
-        if not os.path.exists(self._state_path):
-            return {"next_seq": None, "pending": None}
-        with open(self._state_path) as f:
-            return json.load(f)
+        return read_json(self._state_path, {"next_seq": None, "pending": None})
 
     def _write_state(self, state: dict) -> None:
-        tmp = self._state_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(state, f)
-        os.replace(tmp, self._state_path)
+        replace_json(self._state_path, state)
 
     def _pending_df(self, state: dict) -> DataFrame | None:
         name = state.get("pending")

@@ -26,7 +26,7 @@ from ..sources.events import (
     parse_change_events,
     parse_change_events_single_pass,
 )
-from ..sinks.snapshot import ParquetSnapshotSink
+from ..sinks.snapshot import ParquetSnapshotSink, _obs_metrics
 
 EVENTS_SCHEMA = T.StructType(
     [
@@ -200,26 +200,6 @@ def replay_quarantine(
     }
 
 
-def _observed_long(obs: Observation, name: str, fallback) -> int:
-    """Read one long metric off an Observation without blocking and
-    without trusting the metrics row's shape. The zero-extra-job
-    pattern resolves the metric during the first apply's write job in
-    the common case, but a degenerate epoch (a table's slice empty, so
-    the first action over the batch is a cache-building collect
-    nested inside another cache's build) can leave the JVM future
-    unresolved — or resolved with a schema-less row that the py4j
-    bridge rejects. Any such miss falls back to ``fallback()`` — here
-    a count over the already-persisted batch: one cache-hit job on a
-    rare path, never a re-parse."""
-    try:
-        # Option[Row] probe — None means obs.get would block forever
-        if obs._jo.getRowOrEmpty().isEmpty():
-            return int(fallback())
-        return int(obs.get[name])
-    except Exception:
-        return int(fallback())
-
-
 def route_tables(
     events: DataFrame,
     sinks: dict[str, ParquetSnapshotSink],
@@ -284,12 +264,13 @@ def route_tables(
                 for name, sub in slices.items()
             }
             applied_any = any(not r.get("skipped") for r in results.values())
-        if applied_any:
-            unrouted = _observed_long(
-                obs, "unrouted", lambda: changes.filter(unrouted_cond).count()
-            )
-        else:
-            unrouted = changes.filter(unrouted_cond).count()
+        # the metric resolves during the first table-apply's job; a
+        # miss (no apply ran, or a degenerate epoch left the row
+        # unresolved) costs one cache-hit count, never a re-parse
+        got = (_obs_metrics(obs) or {}).get("unrouted") if applied_any else None
+        unrouted = (
+            int(got) if got is not None else changes.filter(unrouted_cond).count()
+        )
         return {"tables": results, "unrouted_rows": unrouted}
     finally:
         changes.unpersist()

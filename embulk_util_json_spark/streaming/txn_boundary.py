@@ -19,8 +19,8 @@ of visibility:
   has been seen; rows of ``abort``-ed transactions are dropped; rows
   of still-open transactions are held durably across batches.
 
-Durable state in a work dir (same tmp+rename / unreferenced-garbage
-pattern as :class:`.fenced.FencedApplier`):
+Durable state in a work dir (same ``replace_json`` / unreferenced-
+garbage pattern as :class:`.fenced.FencedApplier`):
 
 - ``txns.json`` — apply epoch (the exactly-once batch-id counter) and
   the current pending/marker parquet names, written atomically;
@@ -50,12 +50,12 @@ never enter the merge exchange. Driver-side state is O(1).
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..sinks.jsonlog import read_json, replace_json
 from ..sinks.snapshot import ParquetSnapshotSink
 from .runner import apply_events_batch
 
@@ -88,16 +88,12 @@ class TxnBoundaryApplier:
         return os.path.join(self.work_dir, "txns.json")
 
     def _state(self) -> dict:
-        if not os.path.exists(self._state_path):
-            return {"epoch": 0, "pending": None, "markers": None}
-        with open(self._state_path) as f:
-            return json.load(f)
+        return read_json(
+            self._state_path, {"epoch": 0, "pending": None, "markers": None}
+        )
 
     def _write_state(self, state: dict) -> None:
-        tmp = self._state_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(state, f)
-        os.replace(tmp, self._state_path)
+        replace_json(self._state_path, state)
 
     def _read_store(self, state: dict, key: str) -> DataFrame | None:
         name = state.get(key)

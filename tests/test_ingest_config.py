@@ -212,3 +212,74 @@ def test_streaming_ingest_validation():
         with pytest.raises(ValueError) as e:
             run_ingest_stream(None, cfg)
         assert frag in str(e.value), (cfg, str(e.value))
+
+
+def test_kafka_derived_partition_count_is_topic_wide(spark, tmp_path):
+    """Without ``kafka.n_partitions`` the facade derives P once, over
+    the whole topic. Here the second batch holds only partition 0: a
+    per-slice P (1 instead of 3) would give its update of c9 a
+    smaller seq than the same-ts insert already applied from
+    partition 2, and the stale insert would win."""
+    import datetime
+
+    ts = datetime.datetime(2024, 3, 1, 10, 0, 5)
+
+    def env(op, conv, text):
+        return (
+            f'{{"op":"{op}","ts":"{ts}","data":{{"conv_id":"{conv}",'
+            f'"turn_idx":0,"role":"u","text":"{text}","tool":null}}}}'
+        )
+
+    # (partition, offset) -> total position offset*3+partition; the two
+    # batches split at position 6: {0, 5} and {6, 12}
+    records = [
+        (0, 0, env("insert", "c1", "a")),
+        (2, 1, env("insert", "c9", "x")),
+        (0, 2, env("update", "c9", "y")),
+        (0, 4, env("insert", "c2", "z")),
+    ]
+    frame = spark.createDataFrame(
+        [(f'{{"conv_id":"k{o}"}}', v, "t", p, o, ts, 0) for p, o, v in records],
+        "key string, value string, topic string, partition int, offset long,"
+        " timestamp timestamp, timestampType int",
+    ).select(
+        F.col("key").cast("binary"), F.col("value").cast("binary"),
+        "topic", "partition", "offset", "timestamp", "timestampType",
+    )
+    kdir = str(tmp_path / "kafka")
+    frame.write.parquet(kdir)
+
+    def final(name, kafka):
+        res = run_ingest(
+            spark,
+            {
+                "in": {"type": "kafka_parquet", "path": kdir, "kafka": kafka},
+                "merge": {"num_buckets": 4},
+                "out": {"root": str(tmp_path / name)},
+                "run": {"num_batches": 2},
+            },
+        )
+        assert [b["change_rows"] for b in res["batches"]] == [2, 2]
+        return {
+            (r.conv_id, r.turn_idx, r.text) for r in res["sink"].read().collect()
+        }
+
+    given = final("given", {"n_partitions": 3})
+    assert given == {("c1", 0, "a"), ("c9", 0, "y"), ("c2", 0, "z")}
+    assert final("derived", {}) == given
+
+
+def test_streaming_ingest_rejects_quarantine_dir():
+    """The streaming facade has no dead-letter path: a configured
+    ``run.quarantine_dir`` fails validation instead of being dropped."""
+    from embulk_util_json_spark.ingest import run_ingest_stream
+
+    with pytest.raises(ValueError, match="quarantine_dir"):
+        run_ingest_stream(
+            None,
+            {
+                "in": {"type": "parquet_stream", "path": "/x"},
+                "out": {"root": "/y"},
+                "run": {"checkpoint_dir": "/c", "quarantine_dir": "/q"},
+            },
+        )

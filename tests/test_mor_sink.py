@@ -124,7 +124,7 @@ def test_concurrent_commit_conflict(spark, tmp_path):
     # manifest it read, then another writer commits that version first
     manifest = sink.current_manifest()
     v_next = manifest["version"] + 1
-    with open(sink._manifest_path(v_next), "w") as fh:
+    with open(sink._log.path(v_next), "w") as fh:
         json.dump({**manifest, "version": v_next, "batch_ids":
                    manifest["batch_ids"] + ["other-writer"]}, fh)
     with pytest.raises(ConcurrentCommitError):
@@ -530,7 +530,7 @@ def test_apply_with_retry_wins_after_race(spark, tmp_path):
         if not stolen["done"]:
             stolen["done"] = True
             m = a.current_manifest()
-            with open(a._manifest_path(manifest["version"]), "w") as fh:
+            with open(a._log.path(manifest["version"]), "w") as fh:
                 _json.dump(
                     {**m, "version": manifest["version"],
                      "batch_ids": m["batch_ids"] + ["writer-b"]},

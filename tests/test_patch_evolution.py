@@ -512,7 +512,7 @@ def test_evolution_loses_occ_race_cleanly_and_retries(spark, tmp_path):
         if not stolen["done"]:
             stolen["done"] = True
             m = sink.current_manifest()
-            with open(sink._manifest_path(manifest["version"]), "w") as fh:
+            with open(sink._log.path(manifest["version"]), "w") as fh:
                 _json.dump(
                     {**m, "version": manifest["version"],
                      "batch_ids": m["batch_ids"] + ["writer-b"]}, fh)
