@@ -241,9 +241,9 @@ def fsck(sink: ParquetSnapshotSink, deep: bool = False) -> dict:
       from disk or holding no parquet part (a reclaim raced a reader,
       a restore missed files, out-of-band deletion);
     - **dangling_stats** — zone-map/bloom entries (``file_stats`` /
-      ``key_stats`` / ``blooms``) keyed by paths NO chain references
-      (metadata leak: harmless to reads but unbounded growth =
-      a commit-path bug);
+      ``key_stats`` / ``col_stats`` / ``blooms``) keyed by paths NO
+      chain references (metadata leak: harmless to reads but
+      unbounded growth = a commit-path bug);
     - **duplicate_batch_ids** — the exactly-once ledger must be a set.
 
     ``deep=True`` adds ONE Spark job over every referenced path:
@@ -285,7 +285,7 @@ def fsck(sink: ParquetSnapshotSink, deep: bool = False) -> dict:
         ):
             report["missing_paths"].append(p)
     ref_set = set(referenced)
-    for kind in ("file_stats", "key_stats", "blooms"):
+    for kind in ("file_stats", "key_stats", "col_stats", "blooms"):
         for p in sorted(m.get(kind) or {}):
             if p not in ref_set:
                 report["dangling_stats"].append(f"{kind}:{p}")

@@ -26,7 +26,6 @@ has no single row an imperative UPDATE could replace.
 
 from __future__ import annotations
 
-import os
 import time
 import uuid
 
@@ -221,18 +220,10 @@ def merge_into(
         .withColumn(BUCKET_COL, sink._bucket_expr())
     )
 
-    out_rel = sink._data_rel(version)
-    out_dir = os.path.join(sink.root, out_rel)
-    sink._write_buckets(merged, out_dir, len(affected))
-    path_stats = {
-        f"{out_rel}/{BUCKET_COL}={b}": s
-        for b, s in sink._bucket_stats(
-            out_dir, sink._written_buckets(out_dir)
-        ).items()
-    }
-    buckets = dict(manifest["buckets"])
-    for b in affected:
-        buckets[str(b)] = [f"{out_rel}/{BUCKET_COL}={b}"]
+    chains, counts, path_stats = sink._write_buckets(
+        merged, version, len(affected)
+    )
+    buckets = {**manifest["buckets"], **chains}
     metrics = {
         "batch_id": batch_id,
         "version": version,
@@ -243,9 +234,7 @@ def merge_into(
         "inserted": int(obs.get["insert"]),
         "passthrough": int(obs.get["keep"]),
         "affected_buckets": len(affected),
-        "rows_per_bucket": sink._bucket_row_counts(
-            out_dir, sink._written_buckets(out_dir)
-        ),
+        "rows_per_bucket": counts,
         "wall_sec": round(time.time() - t0, 3),
     }
     return sink._finish_commit(

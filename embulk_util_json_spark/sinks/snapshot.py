@@ -67,6 +67,13 @@ BAND_COL = "_band"  # time-band subdir written by banded compaction
 META_COLS = ["op", "seq"]  # ts doubles as payload and order column
 LINEAGE_COL = "_ingest_batch"  # row lineage: writer batch id (track_lineage)
 BLOOM_SEED = 0x9747B28C  # 2nd xxhash64 stream for double-hash blooms
+# manifest fields ``_commit`` carries forward from the predecessor
+_CARRIED = (
+    "column_mapping", "column_defaults", "dropped_columns", "constraints",
+    "track_lineage",
+)
+# per-path maps, keyed by chain path; ``_commit`` merges and prunes them
+_PATH_MAPS = ("file_stats", "key_stats", "col_stats", "blooms")
 
 
 _INT_RANK = {"tinyint": 0, "smallint": 1, "int": 2, "bigint": 3}
@@ -1161,57 +1168,55 @@ class ParquetSnapshotSink:
             raise ValueError(f"no committed version {version}")
         return m
 
-    def _commit(self, manifest: dict) -> None:
-        """Commit one manifest version: the table-level steps below,
-        then ``NumberedLog.publish`` — the atomic optimistic publish
-        (``jsonlog.create_json``: tmp, fsync, ``os.link``). A link,
-        unlike a rename, FAILS if the version already exists, so two
-        writers racing for the same version cannot silently clobber
-        each other: the loser gets ConcurrentCommitError and must
-        re-read + retry (the Iceberg optimistic-concurrency protocol;
-        the engine's runners are single-writer, so a conflict here
-        always means a misconfigured second writer)."""
-        # Column-mapping carry-forward: commit sites that build fresh
-        # manifest dicts (apply, compact, rebucket, ...) inherit the
-        # predecessor's rename table here — ONE place, fill-if-absent
-        # so sites that DO set it (rename_column, rollback's restore,
-        # branch fork) win. Sound under OCC: a successful link means
-        # the cached current manifest IS this commit's predecessor.
-        if any(
-            f not in manifest
-            for f in (
-                "column_mapping", "column_defaults", "dropped_columns",
-                "constraints", "track_lineage",
-            )
-        ):
-            prev = self.current_manifest()
-            for f in (
-                "column_mapping", "column_defaults", "dropped_columns",
-                "constraints", "track_lineage",
-            ):
-                if f not in manifest and prev and prev.get(f):
+    def _commit(self, manifest: dict, path_stats: dict | None = None) -> None:
+        """Commit one manifest version. This is the ONE place that owns,
+        for every commit site:
+
+        - carry-forward of the predecessor's ALTER state (column
+          mapping, defaults, drops, constraints, lineage flag) and of
+          its per-path maps (``file_stats``, ``key_stats``,
+          ``col_stats``, ``blooms``) when the new manifest omits them;
+        - merging ``path_stats`` — the footer zone maps of the paths
+          this commit adds, as ``_write_buckets`` returns them
+          (``{path: {"ts", "key", "cols"}}``) — into ``file_stats`` /
+          ``key_stats`` / ``col_stats``;
+        - pruning all four per-path maps to the paths the new version
+          references (paths are never reused, so a replaced chain's
+          entries would otherwise be dead weight in every later
+          manifest; a new path simply has no bloom until the next
+          ``analyze_blooms`` — fail-open = exact);
+        - the ``committed_at`` wall-clock stamp;
+        - ``NumberedLog.publish`` — the atomic optimistic publish
+          (``jsonlog.create_json``: tmp, fsync, ``os.link``). A link,
+          unlike a rename, FAILS if the version already exists, so two
+          writers racing for the same version cannot silently clobber
+          each other: the loser gets ConcurrentCommitError and must
+          re-read + retry (the Iceberg optimistic-concurrency protocol;
+          the engine's runners are single-writer, so a conflict here
+          always means a misconfigured second writer)."""
+        # Fill-if-absent, so sites that DO set a field (rename_column,
+        # rollback's restore, branch fork, clone) win. Sound under OCC:
+        # a successful link means the current manifest read here IS
+        # this commit's predecessor.
+        absent = [f for f in (*_CARRIED, *_PATH_MAPS) if f not in manifest]
+        if absent:
+            prev = self.current_manifest() or {}
+            for f in absent:
+                if prev.get(f):
                     manifest[f] = prev[f]
-        # Bound auxiliary per-path metadata: blooms for paths the new
-        # version no longer references are dead weight in every later
-        # manifest (paths are never reused), so drop them here — ONE
-        # place covers every commit site. New paths simply have no
-        # bloom until the next analyze_blooms (fail-open = exact).
-        if manifest.get("blooms"):
-            referenced = {
-                p
-                for b in manifest.get("buckets", {})
-                for p in self._paths_of(manifest, b)
+        referenced = {
+            p
+            for b in manifest.get("buckets", {})
+            for p in self._paths_of(manifest, b)
+        }
+        new = path_stats or {}
+        for kind, part in zip(_PATH_MAPS, ("ts", "key", "cols", None)):
+            merged = {
+                **manifest.get(kind, {}),
+                **{p: s[part] for p, s in new.items() if part and s.get(part)},
             }
-            manifest = {
-                **manifest,
-                "blooms": {
-                    p: v
-                    for p, v in manifest["blooms"].items()
-                    if p in referenced
-                },
-            }
-        # Wall-clock commit stamp (Iceberg snapshot timestamp-ms): set
-        # HERE unconditionally so every commit site — including
+            manifest[kind] = {p: v for p, v in merged.items() if p in referenced}
+        # Set HERE unconditionally so every commit site — including
         # rollback, which copies the target manifest's fields — stamps
         # the time this version was committed, not the one it restores.
         manifest["committed_at"] = time.time()
@@ -1859,6 +1864,19 @@ class ParquetSnapshotSink:
         v = manifest["buckets"].get(bucket, [])
         return [v] if isinstance(v, str) else list(v)
 
+    @staticmethod
+    def _split_base(chain: list[str]) -> tuple[list[str], list[str]]:
+        """(base, deltas) of a non-empty chain. Every write lands under
+        one ``data/vN`` version dir, and a (major) compaction writes
+        ALL its chain elements — time bands included — under a single
+        version, so the base is the leading run sharing the first
+        element's version prefix; the rest are per-batch deltas."""
+        v0 = chain[0].split(f"/{BAND_COL}=")[0].split(f"/{BUCKET_COL}=")[0]
+        i = 1
+        while i < len(chain) and chain[i].startswith(f"{v0}/"):
+            i += 1
+        return chain[:i], chain[i:]
+
     def _all_paths(self, manifest: dict) -> list[str]:
         out: list[str] = []
         for b in manifest["buckets"]:
@@ -2053,19 +2071,24 @@ class ParquetSnapshotSink:
     def _write_buckets(
         self,
         df: DataFrame,
-        out_dir: str,
+        version: int,
         n: int,
         banded: bool = False,
         pre_partitioned: bool = False,
-    ) -> None:
-        """Shared bucket-partitioned write. Timestamps are forced to
-        TIMESTAMP_MICROS for the write (session conf scoped + restored):
-        Spark's INT96 default carries NO parquet column statistics, and
-        the footer zone maps ``_bucket_stats`` feeds off would be
-        empty. Readers are unaffected — Spark merges INT96 and INT64
-        timestamp files within one table transparently. ``banded``
-        additionally partitions by the ``_band`` time-band column
-        (banded compaction layout: ``_band=i/_bucket=b``)."""
+    ) -> tuple[dict[str, list[str]], dict[str, int], dict[str, dict]]:
+        """THE bucket-partitioned write: every writer stages its rows
+        through here into a fresh ``_data_rel(version)`` dir, then
+        hands the returned ``path_stats`` to ``_commit``. Returns
+        ``_bucket_footer_info`` of what was written.
+
+        Timestamps are forced to TIMESTAMP_MICROS for the write
+        (session conf scoped + restored): Spark's INT96 default
+        carries NO parquet column statistics, and the footer zone maps
+        would be empty. Readers are unaffected — Spark merges INT96
+        and INT64 timestamp files within one table transparently.
+        ``banded`` additionally partitions by the ``_band`` time-band
+        column (banded compaction layout: ``_band=i/_bucket=b``)."""
+        out_rel = self._data_rel(version)
         key = "spark.sql.parquet.outputTimestampType"
         prev = self.spark.conf.get(key)
         self.spark.conf.set(key, "TIMESTAMP_MICROS")
@@ -2081,10 +2104,11 @@ class ParquetSnapshotSink:
                 df.sortWithinPartitions(*self.keys)
                 .write.mode("overwrite")
                 .partitionBy(*part_cols)
-                .parquet(out_dir)
+                .parquet(os.path.join(self.root, out_rel))
             )
         finally:
             self.spark.conf.set(key, prev)
+        return self._bucket_footer_info(out_rel)
 
     def _partitioned_reduce(self, df: DataFrame, n: int) -> DataFrame:
         """Fused shuffle for the apply/compact hot path: hash-
@@ -2118,23 +2142,44 @@ class ParquetSnapshotSink:
         raise TypeError(f"not a timestamp: {v!r}")
 
     def _bucket_footer_info(
-        self, out_dir: str, buckets: list[str]
-    ) -> tuple[dict[str, int], dict[str, dict]]:
-        """One footer pass serving both per-bucket lineage row counts
-        and zone-map stats — the apply path needs both, and reading
-        every file's metadata twice doubled the driver-side footer I/O
-        per commit."""
+        self, out_rel: str
+    ) -> tuple[dict[str, list[str]], dict[str, int], dict[str, dict]]:
+        """One footer pass (local metadata reads, no Spark job)
+        over a freshly written data dir, flat or banded. Returns
+
+        - ``chains``: bucket → the new chain paths (one per band,
+          band dirs in name order), buckets in ``int`` order;
+        - ``counts``: bucket → rows written (the per-bucket lineage
+          record);
+        - ``path_stats``: chain path → zone map (``_bucket_stats``),
+          for ``_commit(path_stats=...)``."""
+        out_dir = os.path.join(self.root, out_rel)
+        bands = (
+            sorted(d for d in os.listdir(out_dir) if d.startswith(f"{BAND_COL}="))
+            if os.path.isdir(out_dir)
+            else []
+        )
+        chains: dict[str, list[str]] = {}
         counts: dict[str, int] = {}
-        stats = self._bucket_stats(out_dir, buckets, _counts_out=counts)
-        return counts, stats
+        path_stats: dict[str, dict] = {}
+        for sub in [f"/{bd}" for bd in bands] or [""]:
+            d = out_dir + sub
+            n_rows, stats = self._bucket_stats(d, self._written_buckets(d))
+            for b, n in n_rows.items():
+                rel = f"{out_rel}{sub}/{BUCKET_COL}={b}"
+                chains.setdefault(b, []).append(rel)
+                counts[b] = counts.get(b, 0) + n
+                if b in stats:
+                    path_stats[rel] = stats[b]
+        chains = {b: chains[b] for b in sorted(chains, key=int)}
+        return chains, counts, path_stats
 
     def _bucket_stats(
-        self, out_dir: str, buckets: list[str], _counts_out: dict | None = None
-    ) -> dict[str, dict]:
-        """Per-bucket-path zone maps folded from parquet row-group
-        footer statistics, driver-side, no Spark job (the write above
-        already produced them; this is a metadata read, like
-        ``_bucket_row_counts``):
+        self, out_dir: str, buckets: list[str]
+    ) -> tuple[dict[str, int], dict[str, dict]]:
+        """Per-bucket row counts and zone maps folded from parquet
+        row-group footer statistics, read locally, no Spark job (the
+        write already produced them; this is a metadata read):
 
         - ``"ts"``: [min, max] epoch-µs of the first order column;
         - ``"key"``: [min, max] of the bucket key column (files are
@@ -2176,6 +2221,7 @@ class ParquetSnapshotSink:
 
         watch = {"ts": ts_col, "key": key_col}
         watch.update({f"c:{c}": c for c in self.stats_cols})
+        counts: dict[str, int] = {}
         out: dict[str, dict] = {}
         for b in buckets:
             d = os.path.join(out_dir, f"{BUCKET_COL}={b}")
@@ -2221,8 +2267,7 @@ class ParquetSnapshotSink:
                         else:
                             acc[w][0] = min(acc[w][0], mn)
                             acc[w][1] = max(acc[w][1], mx)
-            if _counts_out is not None:
-                _counts_out[b] = n_rows
+            counts[b] = n_rows
             entry = {
                 w: acc[w]
                 for w in ("ts", "key")
@@ -2237,7 +2282,7 @@ class ParquetSnapshotSink:
                 entry["cols"] = cols
             if entry:
                 out[b] = entry
-        return out
+        return counts, out
 
     @staticmethod
     def _key_str(v) -> str:
@@ -2261,22 +2306,6 @@ class ParquetSnapshotSink:
             key=int,
         )
 
-    @staticmethod
-    def _bucket_row_counts(out_dir: str, buckets: list[str]) -> dict[str, int]:
-        """Per-bucket row counts from parquet footers, read driver-side
-        (metadata-only, no Spark job) — the per-partition lineage record."""
-        import pyarrow.parquet as pq
-
-        counts: dict[str, int] = {}
-        for b in buckets:
-            d = os.path.join(out_dir, f"{BUCKET_COL}={b}")
-            n = 0
-            for fn in os.listdir(d):
-                if fn.endswith(".parquet"):
-                    n += pq.read_metadata(os.path.join(d, fn)).num_rows
-            counts[b] = n
-        return counts
-
     def _finish_commit(
         self, manifest: dict, version: int, batch_id: str, buckets: dict,
         merged_cols: list[str], metrics: dict, obs=None,
@@ -2288,49 +2317,6 @@ class ParquetSnapshotSink:
         extra_fields = set(manifest.get("extra_fields", []))
         if obs is not None:
             extra_fields |= set((_obs_metrics(obs) or {}).get("extra_keys") or [])
-        # Zone maps: carry forward stats of still-referenced paths,
-        # adopt the writer's stats for new paths, drop the rest (a
-        # replaced chain's stats would otherwise linger forever).
-        # ``path_stats`` values are per-path dicts {"ts": [lo,hi],
-        # "key": [kmin,kmax]} from ``_bucket_stats``; stored as two
-        # parallel manifest maps.
-        referenced = {p for b in buckets for p in self._paths_of({"buckets": buckets}, b)}
-        file_stats = {
-            p: s
-            for p, s in {
-                **manifest.get("file_stats", {}),
-                **{
-                    p: s["ts"]
-                    for p, s in (path_stats or {}).items()
-                    if s.get("ts")
-                },
-            }.items()
-            if p in referenced
-        }
-        key_stats = {
-            p: s
-            for p, s in {
-                **manifest.get("key_stats", {}),
-                **{
-                    p: s["key"]
-                    for p, s in (path_stats or {}).items()
-                    if s.get("key")
-                },
-            }.items()
-            if p in referenced
-        }
-        col_stats = {
-            p: s
-            for p, s in {
-                **manifest.get("col_stats", {}),
-                **{
-                    p: s["cols"]
-                    for p, s in (path_stats or {}).items()
-                    if s.get("cols")
-                },
-            }.items()
-            if p in referenced
-        }
         self._commit(
             {
                 "version": version,
@@ -2345,11 +2331,8 @@ class ParquetSnapshotSink:
                 "patch_types": self.patch_types,
                 "stats_cols": self.stats_cols,
                 "track_lineage": self.track_lineage,
-                "file_stats": file_stats,
-                "key_stats": key_stats,
-                "col_stats": col_stats,
-                "blooms": manifest.get("blooms", {}),
-            }
+            },
+            path_stats=path_stats,
         )
         return metrics
 
@@ -2416,9 +2399,6 @@ class ParquetSnapshotSink:
         old_paths = [
             p for b in affected for p in self._paths_of(manifest, str(b))
         ]
-        out_rel = self._data_rel(version)
-        out_dir = os.path.join(self.root, out_rel)
-
         merged = staged
         if old_paths:
             # Bucket files don't store _bucket; recompute from the key
@@ -2429,20 +2409,12 @@ class ParquetSnapshotSink:
             merged = staged.unionByName(old, allowMissingColumns=True)
         n_affected = len(affected)
         merged = self._partitioned_reduce(merged, n_affected)
-        self._write_buckets(merged, out_dir, n_affected, pre_partitioned=True)
-
-        # Per-bucket lineage from parquet footers (driver-side
-        # metadata read — saves one Spark job per batch; one fused
-        # footer pass serves both counts and zone maps).
-        written = self._written_buckets(out_dir)
-        bucket_counts, stats = self._bucket_footer_info(out_dir, written)
-        path_stats = {
-            f"{out_rel}/{BUCKET_COL}={b}": s for b, s in stats.items()
-        }
-
-        buckets = dict(manifest["buckets"])
-        for b in affected:
-            buckets[str(b)] = [f"{out_rel}/{BUCKET_COL}={b}"]
+        # per-bucket lineage counts come from the footers (a metadata
+        # read — saves one Spark job per batch)
+        chains, bucket_counts, path_stats = self._write_buckets(
+            merged, version, n_affected, pre_partitioned=True
+        )
+        buckets = {**manifest["buckets"], **chains}
 
         m = _obs_metrics(obs)
         # unresolved row ⟹ zero-task plan ⟹ empty batch; the pinned
@@ -2471,20 +2443,13 @@ class ParquetSnapshotSink:
         combine — and append it as a delta level; never read the
         table. Write cost is O(batch) regardless of table size."""
         version = manifest["version"] + 1
-        out_rel = self._data_rel(version)
-        out_dir = os.path.join(self.root, out_rel)
-
         delta = self._partitioned_reduce(staged, self.num_buckets)
-        self._write_buckets(delta, out_dir, self.num_buckets, pre_partitioned=True)
-        present = self._written_buckets(out_dir)
-        bucket_counts, stats = self._bucket_footer_info(out_dir, present)
-        path_stats = {
-            f"{out_rel}/{BUCKET_COL}={b}": s for b, s in stats.items()
-        }
-
+        chains, bucket_counts, path_stats = self._write_buckets(
+            delta, version, self.num_buckets, pre_partitioned=True
+        )
         buckets = {b: self._paths_of(manifest, b) for b in manifest["buckets"]}
-        for b in present:
-            buckets[b] = buckets.get(b, []) + [f"{out_rel}/{BUCKET_COL}={b}"]
+        for b, new in chains.items():
+            buckets[b] = buckets.get(b, []) + new
 
         m = _obs_metrics(obs)
         # unresolved row ⟹ the write ran zero tasks ⟹ empty batch.
@@ -2498,7 +2463,7 @@ class ParquetSnapshotSink:
             "version": version,
             "change_rows": change_rows,
             "malformed_rows": int((m or {}).get("malformed_rows") or 0),
-            "affected_buckets": len(present),
+            "affected_buckets": len(chains),
             "rows_per_bucket": bucket_counts,
             "chain_depth": max((len(v) for v in buckets.values()), default=0),
             "wall_sec": round(time.time() - t0, 3),
@@ -3301,8 +3266,6 @@ class ParquetSnapshotSink:
             else:
                 df = df.filter(~is_del)
         version = manifest["version"] + 1
-        out_rel = self._data_rel(version)
-        out_dir = os.path.join(self.root, out_rel)
         ts_col = self.order_cols[0]
         if ts_bands:
             if isinstance(ts_bands, int):
@@ -3329,75 +3292,23 @@ class ParquetSnapshotSink:
                     F.unix_micros(F.col(ts_col)) >= F.lit(e), 1
                 ).otherwise(0)
             df = df.withColumn(BAND_COL, band)
-            self._write_buckets(
-                df, out_dir, self.num_buckets, banded=True, pre_partitioned=True
-            )
-        else:
-            self._write_buckets(
-                df, out_dir, self.num_buckets, pre_partitioned=True
-            )
-        # Chain paths + zone maps for what was written (flat layout:
-        # one element per bucket; banded: one per (band, bucket)).
-        new_chains: dict[str, list[str]] = {}
-        new_stats: dict[str, dict] = {}
-        if ts_bands:
-            band_dirs = (
-                sorted(
-                    d
-                    for d in os.listdir(out_dir)
-                    if d.startswith(f"{BAND_COL}=")
-                )
-                if os.path.isdir(out_dir)
-                else []
-            )
-            for bd in band_dirs:
-                band_dir = os.path.join(out_dir, bd)
-                bs = self._written_buckets(band_dir)
-                stats = self._bucket_stats(band_dir, bs)
-                for b in bs:
-                    rel = f"{out_rel}/{bd}/{BUCKET_COL}={b}"
-                    new_chains.setdefault(b, []).append(rel)
-                    if b in stats:
-                        new_stats[rel] = stats[b]
-        else:
-            present = self._written_buckets(out_dir)
-            stats = self._bucket_stats(out_dir, present)
-            for b in present:
-                rel = f"{out_rel}/{BUCKET_COL}={b}"
-                new_chains[b] = [rel]
-                if b in stats:
-                    new_stats[rel] = stats[b]
+        # flat layout: one chain element per bucket; banded: one per
+        # (band, bucket)
+        chains, _, path_stats = self._write_buckets(
+            df, version, self.num_buckets, banded=bool(ts_bands),
+            pre_partitioned=True,
+        )
         buckets = {
             b: self._paths_of(manifest, b)
             for b in manifest["buckets"]
             if b not in set(target)
         }
-        for b in sorted(new_chains, key=int):
-            buckets[b] = new_chains[b]
-        referenced = {p for b in buckets for p in self._paths_of({"buckets": buckets}, b)}
-        file_stats = {
-            p: s
-            for p, s in {
-                **manifest.get("file_stats", {}),
-                **{p: s["ts"] for p, s in new_stats.items() if s.get("ts")},
-            }.items()
-            if p in referenced
-        }
-        key_stats = {
-            p: s
-            for p, s in {
-                **manifest.get("key_stats", {}),
-                **{p: s["key"] for p, s in new_stats.items() if s.get("key")},
-            }.items()
-            if p in referenced
-        }
+        buckets.update(chains)
         self._commit(
             {
                 **manifest,
                 "version": version,
                 "buckets": buckets,
-                "file_stats": file_stats,
-                "key_stats": key_stats,
                 "applies": manifest["applies"]
                 + [
                     {
@@ -3408,7 +3319,8 @@ class ParquetSnapshotSink:
                         "wall_sec": round(time.time() - t0, 3),
                     }
                 ],
-            }
+            },
+            path_stats=path_stats,
         )
         return {"version": version, "buckets_compacted": len(target)}
 
@@ -3459,14 +3371,9 @@ class ParquetSnapshotSink:
             chain = self._paths_of(manifest, b)
             if len(chain) <= max_chain:
                 continue
-            v0 = chain[0].split(f"/{BAND_COL}=")[0].split(f"/{BUCKET_COL}=")[0]
-            i = 1
-            while i < len(chain) and chain[i].startswith(f"{v0}/"):
-                i += 1
-            base_bytes = _bytes(chain[:i])
-            delta_bytes = _bytes(chain[i:])
-            if i < len(chain) and base_bytes > base_delta_ratio * max(
-                delta_bytes, 1
+            base, deltas = self._split_base(chain)
+            if deltas and _bytes(base) > base_delta_ratio * max(
+                _bytes(deltas), 1
             ):
                 minor_b.append(b)
             else:
@@ -3534,13 +3441,9 @@ class ParquetSnapshotSink:
             chain = self._paths_of(manifest, b)
             if not chain:
                 continue
-            v0 = chain[0].split(f"/{BAND_COL}=")[0].split(f"/{BUCKET_COL}=")[0]
-            i = 1
-            while i < len(chain) and chain[i].startswith(f"{v0}/"):
-                i += 1
-            if len(chain) - i >= min_delta_levels:
-                base_of[b] = chain[:i]
-                deltas_of[b] = chain[i:]
+            base, deltas = self._split_base(chain)
+            if len(deltas) >= min_delta_levels:
+                base_of[b], deltas_of[b] = base, deltas
         if not deltas_of:
             return {"skipped": True, "reason": "no-chain-deep-enough"}
         df = self._read_bucket_paths(
@@ -3549,44 +3452,19 @@ class ParquetSnapshotSink:
         df = df.withColumn(BUCKET_COL, self._bucket_expr())
         df = self._partitioned_reduce(df, self.num_buckets)
         version = manifest["version"] + 1
-        out_rel = self._data_rel(version)
-        out_dir = os.path.join(self.root, out_rel)
-        self._write_buckets(df, out_dir, self.num_buckets, pre_partitioned=True)
-        present = self._written_buckets(out_dir)
-        stats = self._bucket_stats(out_dir, present)
+        chains, _, path_stats = self._write_buckets(
+            df, version, self.num_buckets, pre_partitioned=True
+        )
         buckets = {
             b: self._paths_of(manifest, b)
             for b in manifest["buckets"]
             if b not in deltas_of
         }
-        new_stats: dict[str, dict] = {}
         for b in sorted(deltas_of, key=int):
-            rel = f"{out_rel}/{BUCKET_COL}={b}"
             # a delta set can reduce to zero rows only if it was all
             # duplicates of itself — the write still emits the bucket
             # dir when any row lands; fall back to base-only otherwise
-            buckets[b] = base_of[b] + ([rel] if b in present else [])
-            if b in stats:
-                new_stats[rel] = stats[b]
-        referenced = {
-            p for b in buckets for p in self._paths_of({"buckets": buckets}, b)
-        }
-        file_stats = {
-            p: s
-            for p, s in {
-                **manifest.get("file_stats", {}),
-                **{p: s["ts"] for p, s in new_stats.items() if s.get("ts")},
-            }.items()
-            if p in referenced
-        }
-        key_stats = {
-            p: s
-            for p, s in {
-                **manifest.get("key_stats", {}),
-                **{p: s["key"] for p, s in new_stats.items() if s.get("key")},
-            }.items()
-            if p in referenced
-        }
+            buckets[b] = base_of[b] + chains.get(b, [])
         merged_levels = sum(len(ps) for ps in deltas_of.values())
         kept_levels = sum(len(ps) for ps in base_of.values())
         self._commit(
@@ -3594,8 +3472,6 @@ class ParquetSnapshotSink:
                 **manifest,
                 "version": version,
                 "buckets": buckets,
-                "file_stats": file_stats,
-                "key_stats": key_stats,
                 "applies": manifest["applies"]
                 + [
                     {
@@ -3607,7 +3483,8 @@ class ParquetSnapshotSink:
                         "wall_sec": round(time.time() - t0, 3),
                     }
                 ],
-            }
+            },
+            path_stats=path_stats,
         )
         return {
             "version": version,
@@ -3655,30 +3532,15 @@ class ParquetSnapshotSink:
             df = df.withColumn(BUCKET_COL, self._bucket_expr())
             df = self._partitioned_reduce(df, self.num_buckets)
             version = manifest["version"] + 1
-            out_rel = self._data_rel(version)
-            out_dir = os.path.join(self.root, out_rel)
-            self._write_buckets(df, out_dir, self.num_buckets, pre_partitioned=True)
-            present = self._written_buckets(out_dir)
-            stats = self._bucket_stats(out_dir, present)
+            chains, _, path_stats = self._write_buckets(
+                df, version, self.num_buckets, pre_partitioned=True
+            )
             self._commit(
                 {
                     **manifest,
                     "version": version,
                     "num_buckets": self.num_buckets,
-                    "buckets": {
-                        b: [f"{out_rel}/{BUCKET_COL}={b}"]
-                        for b in sorted(present, key=int)
-                    },
-                    "file_stats": {
-                        f"{out_rel}/{BUCKET_COL}={b}": s["ts"]
-                        for b, s in stats.items()
-                        if s.get("ts")
-                    },
-                    "key_stats": {
-                        f"{out_rel}/{BUCKET_COL}={b}": s["key"]
-                        for b, s in stats.items()
-                        if s.get("key")
-                    },
+                    "buckets": chains,
                     "applies": manifest["applies"]
                     + [
                         {
@@ -3689,7 +3551,8 @@ class ParquetSnapshotSink:
                             "wall_sec": round(time.time() - t0, 3),
                         }
                     ],
-                }
+                },
+                path_stats=path_stats,
             )
         except BaseException:
             # commit lost / write failed: the table is still on the old
@@ -3736,16 +3599,7 @@ class ParquetSnapshotSink:
             F.col(BUCKET_COL).isin([int(b) for b in target])
         )
         version = manifest["version"] + 1
-        out_rel = self._data_rel(version)
-        out_dir = os.path.join(self.root, out_rel)
-        (
-            df.repartition(min(len(target), 256), F.col(BUCKET_COL))
-            .sortWithinPartitions(*self.keys)
-            .write.mode("overwrite")
-            .partitionBy(BUCKET_COL)
-            .parquet(out_dir)
-        )
-        present = set(self._written_buckets(out_dir))
+        chains, _, path_stats = self._write_buckets(df, version, len(target))
         buckets = {
             b: self._paths_of(manifest, b)
             for b in manifest["buckets"]
@@ -3753,8 +3607,7 @@ class ParquetSnapshotSink:
         }
         # a targeted bucket with no truth rows is legitimately EMPTY
         # after the restore — it simply drops out of the manifest
-        for b in sorted(present, key=int):
-            buckets[b] = [f"{out_rel}/{BUCKET_COL}={b}"]
+        buckets.update(chains)
         self._commit(
             {
                 **manifest,
@@ -3769,7 +3622,8 @@ class ParquetSnapshotSink:
                         "wall_sec": round(time.time() - t0, 3),
                     }
                 ],
-            }
+            },
+            path_stats=path_stats,
         )
         return {"version": version, "buckets_restored": len(target)}
 
@@ -3857,6 +3711,7 @@ class ParquetSnapshotSink:
                 }
             ],
         }
+        path_stats = None
         if promote and manifest["buckets"]:
             # physical promotion rewrite: collapse under OLD config,
             # stamp promoted columns at the surviving rows' positions
@@ -3887,26 +3742,16 @@ class ParquetSnapshotSink:
                 marker,
                 absent_if=F.col("op") == "delete",
             )
-            out_rel = self._data_rel(version)
-            out_dir = os.path.join(self.root, out_rel)
-            (
-                df.withColumn(BUCKET_COL, self._bucket_expr())
-                .repartition(min(self.num_buckets, 256), F.col(BUCKET_COL))
-                .sortWithinPartitions(*self.keys)
-                .write.mode("overwrite")
-                .partitionBy(BUCKET_COL)
-                .parquet(out_dir)
+            new_manifest["buckets"], _, path_stats = self._write_buckets(
+                df.withColumn(BUCKET_COL, self._bucket_expr()),
+                version,
+                self.num_buckets,
             )
-            present = self._written_buckets(out_dir)
-            new_manifest["buckets"] = {
-                b: [f"{out_rel}/{BUCKET_COL}={b}"]
-                for b in sorted(present, key=int)
-            }
             new_manifest["schema_fields"] = sorted(
                 (set(manifest["schema_fields"]) | set(df.columns)) - {BUCKET_COL}
             )
             new_manifest["applies"][-1]["wall_sec"] = round(time.time() - t0, 3)
-        self._commit(new_manifest)
+        self._commit(new_manifest, path_stats=path_stats)
         self._adopt(new_manifest)
         return {
             "version": version,
@@ -3959,25 +3804,16 @@ class ParquetSnapshotSink:
                 f"{sorted(set(out.columns) ^ set(df.columns))} changed"
             )
         version = manifest["version"] + 1
-        out_rel = self._data_rel(version)
-        out_dir = os.path.join(self.root, out_rel)
-        (
-            out.withColumn(BUCKET_COL, self._bucket_expr())
-            .repartition(min(self.num_buckets, 256), F.col(BUCKET_COL))
-            .sortWithinPartitions(*self.keys)
-            .write.mode("overwrite")
-            .partitionBy(BUCKET_COL)
-            .parquet(out_dir)
+        chains, _, path_stats = self._write_buckets(
+            out.withColumn(BUCKET_COL, self._bucket_expr()),
+            version,
+            self.num_buckets,
         )
-        present = self._written_buckets(out_dir)
         self._commit(
             {
                 **manifest,
                 "version": version,
-                "buckets": {
-                    b: [f"{out_rel}/{BUCKET_COL}={b}"]
-                    for b in sorted(present, key=int)
-                },
+                "buckets": chains,
                 "applies": manifest["applies"]
                 + [
                     {
@@ -3987,7 +3823,8 @@ class ParquetSnapshotSink:
                         "wall_sec": round(time.time() - t0, 3),
                     }
                 ],
-            }
+            },
+            path_stats=path_stats,
         )
         return {"version": version, "rewritten": True}
 
@@ -4117,23 +3954,13 @@ class ParquetSnapshotSink:
             BUCKET_COL, self._bucket_expr()
         )
         version = manifest["version"] + 1
-        out_rel = self._data_rel(version)
-        out_dir = os.path.join(self.root, out_rel)
-        (
-            kept.repartition(min(len(target), 256), F.col(BUCKET_COL))
-            .sortWithinPartitions(*self.keys)
-            .write.mode("overwrite")
-            .partitionBy(BUCKET_COL)
-            .parquet(out_dir)
-        )
-        present = set(self._written_buckets(out_dir))
+        chains, _, path_stats = self._write_buckets(kept, version, len(target))
         buckets = {
             b: self._paths_of(manifest, b)
             for b in manifest["buckets"]
             if b not in set(target)
         }
-        for b in sorted(present, key=int):
-            buckets[b] = [f"{out_rel}/{BUCKET_COL}={b}"]
+        buckets.update(chains)
         purged = int((_obs_metrics(obs) or {}).get("purged_rows") or 0)
         self._commit(
             {
@@ -4150,7 +3977,8 @@ class ParquetSnapshotSink:
                         "wall_sec": round(time.time() - t0, 3),
                     }
                 ],
-            }
+            },
+            path_stats=path_stats,
         )
         out = {
             "version": version,

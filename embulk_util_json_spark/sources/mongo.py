@@ -124,7 +124,23 @@ MONGO_SCHEMA = T.StructType(
 
 _CONTROL_OPS = ("drop", "rename", "dropDatabase", "invalidate")
 
-_WALL_FMT = "yyyy-MM-dd'T'HH:mm:ss.SSS'Z'"
+
+def _wall_time(ts):
+    """``ts`` as the ISO-8601 UTC instant ``yyyy-MM-ddTHH:mm:ss.SSSZ``
+    whatever ``spark.sql.session.timeZone`` says: ``date_format``
+    renders in the session zone, so the date and time of day are
+    built from epoch milliseconds instead."""
+    ms = F.unix_millis(ts)
+    of_day = F.pmod(ms, F.lit(86_400_000))
+    day = F.date_from_unix_date(((ms - of_day) / 86_400_000).cast("int"))
+    return F.format_string(
+        "%sT%02d:%02d:%02d.%03dZ",
+        day.cast("string"),
+        (of_day / 3_600_000).cast("int"),
+        (F.pmod(of_day, F.lit(3_600_000)) / 60_000).cast("int"),
+        (F.pmod(of_day, F.lit(60_000)) / 1_000).cast("int"),
+        F.pmod(of_day, F.lit(1_000)).cast("int"),
+    )
 
 
 def _parsed_stream(events: DataFrame, json_col: str, seq_col: str) -> DataFrame:
@@ -298,7 +314,7 @@ def to_mongo_changestream_json(
                     F.unix_seconds(ts).alias("t"), F.lit(1).alias("i")
                 ).alias("$timestamp")
             ).alias("clusterTime"),
-            F.struct(F.date_format(ts, _WALL_FMT).alias("$date")).alias("wallTime"),
+            F.struct(_wall_time(ts).alias("$date")).alias("wallTime"),
             F.struct(F.lit("app").alias("db"), F.lit(coll).alias("coll")).alias("ns"),
             dk.alias("documentKey"),
             F.when(~is_del, data).alias("fullDocument"),
@@ -383,7 +399,7 @@ def rows_to_mongo_patch_json(
                     F.unix_seconds(ts).alias("t"), F.lit(1).alias("i")
                 ).alias("$timestamp")
             ).alias("clusterTime"),
-            F.struct(F.date_format(ts, _WALL_FMT).alias("$date")).alias("wallTime"),
+            F.struct(_wall_time(ts).alias("$date")).alias("wallTime"),
             F.struct(F.lit("app").alias("db"), F.lit(coll).alias("coll")).alias("ns"),
             dk.alias("documentKey"),
             F.when(~is_del & ~is_upd, full).alias("fullDocument"),

@@ -221,3 +221,39 @@ def test_single_from_json_per_row(spark):
         # adapters).
         plan = df._jdf.queryExecution().analyzed().toString()
         assert plan.count("from_json") == 1, plan
+
+
+def test_walltime_is_utc_under_non_utc_session_timezone(spark):
+    """``wallTime`` ends in ``Z``, so it must be the UTC instant even
+    when the session time zone is not UTC: both rewraps round-trip the
+    event time exactly under America/Los_Angeles (a DST zone)."""
+    key = "spark.sql.session.timeZone"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "America/Los_Angeles")
+    try:
+        native = _native(spark)
+        a = parse_change_events_single_pass(native).orderBy("seq").collect()
+        wire = to_mongo_changestream_json(native)
+        walls = [
+            json.loads(r.event_json)["wallTime"]["$date"]
+            for r in wire.orderBy("seq").collect()
+        ]
+        # 2024-03-01 10:00:00.123 in Los Angeles (PST, UTC-8)
+        assert walls[0] == "2024-03-01T18:00:00.123Z"
+        b = parse_mongo_changestream(wire).orderBy("seq").collect()
+        assert [r.ts for r in b] == [r.ts for r in a]
+
+        patched = spark.createDataFrame(
+            [(1, "insert", "2024-11-03 01:30:00.250", "c1", 1, "u", "x", "t"),
+             (2, "update", "1969-12-31 23:59:59.999", "c1", 1, "u", "y", "t")],
+            "seq long, op string, ts string, conv_id string, turn_idx int,"
+            " role string, text string, tool string",
+        ).withColumn("ts", F.to_timestamp("ts"))
+        back = parse_mongo_patch_events(
+            rows_to_mongo_patch_json(patched, MARKER), MARKER
+        )
+        assert [r.ts for r in back.orderBy("seq").collect()] == [
+            r.ts for r in patched.orderBy("seq").collect()
+        ]
+    finally:
+        spark.conf.set(key, prev)

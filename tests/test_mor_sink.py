@@ -261,7 +261,7 @@ def test_crash_between_write_and_commit_recovers(
     # crash b2 between data write and manifest commit
     orig_commit = sink._commit
 
-    def crash(_manifest):
+    def crash(_manifest, **_kw):
         raise RuntimeError("simulated crash before commit")
 
     sink._commit = crash
@@ -526,7 +526,7 @@ def test_apply_with_retry_wins_after_race(spark, tmp_path):
     stolen = {"done": False}
     orig_commit = a._commit
 
-    def stealing_commit(manifest):
+    def stealing_commit(manifest, **kw):
         if not stolen["done"]:
             stolen["done"] = True
             m = a.current_manifest()
@@ -536,7 +536,7 @@ def test_apply_with_retry_wins_after_race(spark, tmp_path):
                      "batch_ids": m["batch_ids"] + ["writer-b"]},
                     fh,
                 )
-        return orig_commit(manifest)
+        return orig_commit(manifest, **kw)
 
     a._commit = stealing_commit
     from embulk_util_json_spark.sources.events import parse_change_events_single_pass

@@ -128,13 +128,13 @@ def test_real_losing_attempt_is_reclaimed(spark, tmp_path):
     orig_commit = a._commit
     fired = {"n": 0}
 
-    def race_commit(manifest):
+    def race_commit(manifest, **kw):
         # first commit attempt: the competitor sneaks in and takes
         # the version — A's os.link must then fail
         if fired["n"] == 0:
             fired["n"] += 1
             b.apply(_rows(spark, 20, 40), "bB")
-        orig_commit(manifest)
+        orig_commit(manifest, **kw)
 
     a._commit = race_commit
     pre = set(os.listdir(data_root))

@@ -508,7 +508,7 @@ def test_evolution_loses_occ_race_cleanly_and_retries(spark, tmp_path):
     stolen = {"done": False}
     orig_commit = sink._commit
 
-    def stealing_commit(manifest):
+    def stealing_commit(manifest, **kw):
         if not stolen["done"]:
             stolen["done"] = True
             m = sink.current_manifest()
@@ -516,7 +516,7 @@ def test_evolution_loses_occ_race_cleanly_and_retries(spark, tmp_path):
                 _json.dump(
                     {**m, "version": manifest["version"],
                      "batch_ids": m["batch_ids"] + ["writer-b"]}, fh)
-        orig_commit(manifest)
+        orig_commit(manifest, **kw)
 
     sink._commit = stealing_commit
     try:

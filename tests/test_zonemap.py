@@ -10,9 +10,13 @@ row either loses to an in-range row or its key's winner is below the
 bound and filtered anyway); patch-mode tables skip pruning because
 carry-forward reads column values out of old rows."""
 
+import ast
+import pathlib
+
 import pytest
 from pyspark.sql import functions as F
 
+import embulk_util_json_spark
 from embulk_util_json_spark.sinks.snapshot import ParquetSnapshotSink
 from embulk_util_json_spark.streaming.runner import apply_events_batch
 
@@ -284,3 +288,169 @@ def test_key_skipping_exact_in_patch_mode(spark, tmp_path):
     assert (row.role, row.text) == ("r1", "late"), "carry-forward intact"
     zz = sink.read(key_eq={"conv_id": "zz"})
     assert set(zz.inputFiles()) < set(sink.read().inputFiles())
+
+
+def _setup_with_stats(spark, root, mode):
+    """Base + two deltas per touched bucket, with a declared stats
+    column: b0, a compaction, then b1 and b2 (an update, an insert, a
+    delete). Returns the sink and the raw events."""
+    sink = ParquetSnapshotSink(
+        spark, root, num_buckets=2, mode=mode, compact_every=64,
+        stats_cols=["turn_idx"],
+    )
+    b0 = [_ev(0, "insert", "a", 1, 1), _ev(1, "insert", "b", 2, 2),
+          _ev(2, "insert", "c", 3, 3)]
+    b1 = [_ev(3, "update", "a", 1, 5, text="a2"), _ev(4, "insert", "d", 4, 6)]
+    b2 = [_ev(5, "delete", "b", 2, 8), _ev(6, "insert", "e", 5, 9)]
+    apply_events_batch(_mk(spark, b0), sink, "b0")
+    sink.compact(drop_tombstones=False)
+    apply_events_batch(_mk(spark, b1), sink, "b1")
+    apply_events_batch(_mk(spark, b2), sink, "b2")
+    return sink, _mk(spark, b0 + b1 + b2)
+
+
+_STATE = [("a", 1, "a2"), ("c", 3, "t2"), ("d", 4, "t4"), ("e", 5, "t6")]
+
+
+def _restore(sink, events):
+    from embulk_util_json_spark.operators.lww import lww_agg
+    from embulk_util_json_spark.sources.events import parse_change_events
+
+    truth = lww_agg(
+        parse_change_events(events), ["conv_id", "turn_idx"], ["ts", "seq"]
+    )
+    return sink.restore_buckets(truth, [0])
+
+
+# writer → (sink mode, the op after the set-up, expected state); MOR
+# and MOW apply are the set-up's last apply
+_WRITERS = {
+    "mor_apply": ("mor", None, _STATE),
+    "mow_apply": ("mow", None, _STATE),
+    "compact": ("mor", lambda sink, ev: sink.compact(), _STATE),
+    "compact_banded": (
+        "mor",
+        lambda sink, ev: sink.compact(
+            drop_tombstones=False, ts_bands=["2026-01-04", "2026-01-07"]
+        ),
+        _STATE,
+    ),
+    "compact_minor": (
+        "mor", lambda sink, ev: sink.compact_minor(min_delta_levels=1), _STATE
+    ),
+    "rebucket": ("mor", lambda sink, ev: sink.rebucket(3), _STATE),
+    "restore_buckets": ("mor", _restore, _STATE),
+    "evolve_patch_cols": (
+        "mor",
+        lambda sink, ev: sink.evolve_patch_cols(
+            {"role": "string"}, unchanged_marker="__u__"
+        ),
+        _STATE,
+    ),
+    "rewrite": (
+        "mor",
+        lambda sink, ev: sink.rewrite(
+            lambda df: df.withColumn("text", F.upper("text"))
+        ),
+        [(c, t, x.upper()) for c, t, x in _STATE],
+    ),
+    "purge": (
+        "mor",
+        lambda sink, ev: sink.purge(key_eq={"conv_id": "a"}, expire_history=False),
+        _STATE[1:],
+    ),
+}
+
+
+@pytest.mark.parametrize("writer", sorted(_WRITERS))
+def test_every_writer_keeps_zone_maps_exact(spark, tmp_path, writer):
+    """Whatever wrote the current version, its manifest zone maps cover
+    exactly the referenced paths: every path has ``file_stats``,
+    ``key_stats`` and a ``col_stats`` bound for the declared column, no
+    per-path map keeps an entry for a replaced path, ``fsck`` is clean
+    and the state is the expected one."""
+    from embulk_util_json_spark.pipeline.reconcile import fsck
+
+    mode, op, want = _WRITERS[writer]
+    sink, events = _setup_with_stats(spark, str(tmp_path / "t"), mode)
+    if op is not None:
+        res = op(sink, events)
+        assert not res.get("skipped") and res.get("rewritten", True), res
+    m = sink.current_manifest()
+    referenced = {p for b in m["buckets"] for p in sink._paths_of(m, b)}
+    assert referenced
+    for p in referenced:
+        assert p in m["file_stats"] and p in m["key_stats"], p
+        assert "turn_idx" in m["col_stats"].get(p, {}), p
+    for kind in ("file_stats", "key_stats", "col_stats", "blooms"):
+        assert set(m.get(kind) or {}) <= referenced, kind
+    assert fsck(sink)["ok"]
+    assert _state(sink.read()) == sorted(want)
+
+
+def test_where_prunes_declared_column_after_compact(spark, tmp_path):
+    """Compaction records ``col_stats`` for the chains it writes, so
+    ``read(where=...)`` on the declared column still skips a chain."""
+    sink = ParquetSnapshotSink(
+        spark, str(tmp_path / "t"), num_buckets=2, mode="mor",
+        compact_every=64, stats_cols=["turn_idx"],
+    )
+    convs = [f"k{i}" for i in range(40)]
+    low = [c for c in convs if sink.bucket_of(c) == 0][:3]
+    high = [c for c in convs if sink.bucket_of(c) == 1][:3]
+    rows = [_ev(i, "insert", c, 1 + i, 1) for i, c in enumerate(low)]
+    rows += [_ev(10 + i, "insert", c, 50 + i, 2) for i, c in enumerate(high)]
+    apply_events_batch(_mk(spark, rows[:3]), sink, "b0")
+    apply_events_batch(_mk(spark, rows[3:]), sink, "b1")
+    sink.compact()
+    got = sink.read(where=[("turn_idx", ">=", 50)])
+    assert _state(got) == sorted(
+        (c, 50 + i, f"t{10 + i}") for i, c in enumerate(high)
+    )
+    assert set(got.inputFiles()) < set(sink.read().inputFiles())
+
+
+def _by_function(tree):
+    """(innermost enclosing ``def`` name or None, node) for every node."""
+    stack = [(tree, None)]
+    while stack:
+        node, fn = stack.pop()
+        yield fn, node
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            fn = node.name
+        stack.extend((c, fn) for c in ast.iter_child_nodes(node))
+
+
+def test_bucket_writes_and_zone_map_merges_have_one_home():
+    """Every bucket write goes through ``_write_buckets`` (the only
+    ``.partitionBy(`` in ``sinks/snapshot.py``), and only ``_commit``
+    merges the per-path zone maps: no other code in the package sets a
+    ``file_stats`` / ``key_stats`` / ``col_stats`` key, except
+    ``clone_to`` re-keying the source's maps to the clone's paths."""
+    pkg = pathlib.Path(embulk_util_json_spark.__file__).parent
+    maps = {"file_stats", "key_stats", "col_stats"}
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = str(path.relative_to(pkg))
+        for fn, node in _by_function(ast.parse(path.read_text(), rel)):
+            if (
+                rel == "sinks/snapshot.py"
+                and isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "partitionBy"
+                and fn != "_write_buckets"
+            ):
+                offenders.append(f"{rel}:{node.lineno} partitionBy in {fn}")
+            if isinstance(node, ast.Dict):
+                keys = node.keys
+            elif isinstance(node, ast.Subscript) and isinstance(node.ctx, ast.Store):
+                keys = [node.slice]
+            elif isinstance(node, ast.keyword):
+                keys = [ast.Constant(node.arg)]
+            else:
+                continue
+            if fn not in ("_commit", "clone_to") and any(
+                isinstance(k, ast.Constant) and k.value in maps for k in keys
+            ):
+                offenders.append(f"{rel}:{node.lineno} zone map set in {fn}")
+    assert offenders == []
