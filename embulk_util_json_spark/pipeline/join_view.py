@@ -49,34 +49,15 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..sinks.feed import window_batch_id, window_mark
 from ..sinks.snapshot import ParquetSnapshotSink
 
 JV_PREFIX = "jv@"
 
 
-def _parse_window(bid: str) -> tuple[int, int] | None:
-    """``jv@{flv}.{frv}-{tlv}.{trv}`` → (tlv, trv)."""
-    if not bid.startswith(JV_PREFIX):
-        return None
-    try:
-        to = bid[len(JV_PREFIX):].split("-")[1]
-        lv, rv = to.split(".")
-        return int(lv), int(rv)
-    except (IndexError, ValueError):
-        return None
-
-
 def last_folded_versions(view_sink: ParquetSnapshotSink) -> tuple[int, int]:
-    """(left, right) source versions the view reflects — recomputed
-    from the view sink's committed batch-id log (no sidecar state).
-    Each refresh advances at least one coordinate and never regresses
-    either, so the coordinate-wise max is the last committed window."""
-    lv, rv = 0, 0
-    for bid in view_sink.applied_batch_ids():
-        w = _parse_window(bid)
-        if w:
-            lv, rv = max(lv, w[0]), max(rv, w[1])
-    return lv, rv
+    """(left, right) source versions the view reflects."""
+    return window_mark(view_sink, JV_PREFIX, width=2)
 
 
 class IncrementalJoinView:
@@ -142,6 +123,7 @@ class IncrementalJoinView:
         if to_lv <= from_lv and to_rv <= from_rv:
             return {"skipped": True, "reason": "up-to-date",
                     "at": (from_lv, from_rv)}
+        bid = window_batch_id(JV_PREFIX, (from_lv, from_rv), (to_lv, to_rv))
 
         # changed_keys, not read_changes: the affected-key recompute
         # only needs a SUPERSET of the changed keys (re-deriving an
@@ -182,7 +164,7 @@ class IncrementalJoinView:
             batch = self.spark.createDataFrame(
                 [], self._empty_batch_schema()
             )
-            self.view.apply(batch, self._batch_id(from_lv, from_rv, to_lv, to_rv))
+            self.view.apply(batch, bid)
             return {"skipped": False, "affected": 0,
                     "window": (from_lv, from_rv, to_lv, to_rv)}
 
@@ -266,9 +248,7 @@ class IncrementalJoinView:
             .drop("_m")
         )
         try:
-            res = self.view.apply(
-                batch, self._batch_id(from_lv, from_rv, to_lv, to_rv)
-            )
+            res = self.view.apply(batch, bid)
         finally:
             # the pins are per-refresh scratch; don't let them pile up
             # in the block manager across a long refresh loop
@@ -280,9 +260,6 @@ class IncrementalJoinView:
             "window": (from_lv, from_rv, to_lv, to_rv),
             "apply": res,
         }
-
-    def _batch_id(self, flv: int, frv: int, tlv: int, trv: int) -> str:
-        return f"{JV_PREFIX}{flv}.{frv}-{tlv}.{trv}"
 
     def _empty_batch_schema(self):
         from pyspark.sql import types as T

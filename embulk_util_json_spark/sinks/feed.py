@@ -49,11 +49,44 @@ from .jsonlog import read_json, read_json_dir, replace_json
 from .snapshot import ParquetSnapshotSink
 
 
+def window_batch_id(prefix: str, frm, to) -> str:
+    """Batch id ``{prefix}{from}-{to}`` of one consumer window. A
+    window over several sources is a tuple per end, its coordinates
+    joined by dots (``jv@1.2-3.4``)."""
+
+    def _end(v) -> str:
+        return ".".join(map(str, v)) if isinstance(v, tuple) else str(v)
+
+    return f"{prefix}{_end(frm)}-{_end(to)}"
+
+
+def window_mark(sink: ParquetSnapshotSink, prefix: str, width: int = 1):
+    """Where a window consumer stands — recomputed from ``sink``'s
+    committed batch-id log (no sidecar state): the coordinate-wise max
+    window end over the ``prefix`` ids of ``width`` coordinates
+    (others are skipped). Each window advances at least one coordinate
+    and never regresses any, so that is the last committed window.
+    An int for ``width=1``, else a tuple; zeros when there is none."""
+    hi = [0] * width
+    for bid in sink.applied_batch_ids():
+        if not bid.startswith(prefix):
+            continue
+        try:
+            to = [int(c) for c in bid[len(prefix):].split("-")[1].split(".")]
+        except (IndexError, ValueError):
+            continue
+        if len(to) == width:
+            hi = [max(a, b) for a, b in zip(hi, to)]
+    return hi[0] if width == 1 else tuple(hi)
+
+
 def batch_id(window: dict) -> str:
     """Canonical idempotence key for one polled window — feed it to
     the consumer's own exactly-once machinery (e.g. ``sink.apply(df,
     batch_id(w))``)."""
-    return f"feed:{window['cursor']}@{window['from_version']}-{window['to_version']}"
+    return window_batch_id(
+        f"feed:{window['cursor']}@", window["from_version"], window["to_version"]
+    )
 
 
 class FeedCursor:

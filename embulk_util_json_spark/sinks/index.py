@@ -57,6 +57,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .feed import window_batch_id, window_mark
 from .snapshot import ParquetSnapshotSink
 
 IDX_VAL = "_iv"
@@ -64,16 +65,8 @@ INDEX_PREFIX = "ix@"
 
 
 def last_indexed_version(index_sink: ParquetSnapshotSink) -> int:
-    """Source version the index reflects — recomputed from the index
-    sink's committed batch-id log (no sidecar state)."""
-    hi = 0
-    for bid in index_sink.applied_batch_ids():
-        if bid.startswith(INDEX_PREFIX):
-            try:
-                hi = max(hi, int(bid[len(INDEX_PREFIX):].split("-")[1]))
-            except (IndexError, ValueError):
-                continue
-    return hi
+    """Source version the index reflects."""
+    return window_mark(index_sink, INDEX_PREFIX)
 
 
 class SecondaryIndex:
@@ -171,7 +164,7 @@ class SecondaryIndex:
         )
         res = self.index.apply(
             post.unionByName(pre, allowMissingColumns=True),
-            f"{INDEX_PREFIX}{from_v}-{to_v}",
+            window_batch_id(INDEX_PREFIX, from_v, to_v),
         )
         return {
             "from_version": from_v,

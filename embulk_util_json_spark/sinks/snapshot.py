@@ -1858,6 +1858,20 @@ class ParquetSnapshotSink:
         return df.drop(*[PATCH_ORD_PREFIX + c for c in patch_cols])
 
     @staticmethod
+    def _extras_to_columns(
+        df: DataFrame, manifest: dict, columns: list[str] | None = None
+    ) -> DataFrame:
+        """Materialize the manifest-declared evolved fields (only those
+        in ``columns`` when given) out of the extras map, then drop the
+        map — metadata-only schema evolution; old rows read NULL."""
+        if EXTRAS_COL not in df.columns:
+            return df
+        for name in manifest.get("extra_fields", []):
+            if name not in df.columns and (columns is None or name in columns):
+                df = df.withColumn(name, F.col(EXTRAS_COL)[name])
+        return df.drop(EXTRAS_COL)
+
+    @staticmethod
     def _paths_of(manifest: dict, bucket: str) -> list[str]:
         """Bucket → delta chain (oldest first). Legacy manifests stored
         a single path string; normalize to a list."""
@@ -2544,7 +2558,6 @@ class ParquetSnapshotSink:
         at_version: int | None = None,
         key_eq: dict | None = None,
         probe_keys: DataFrame | None = None,
-        broadcast_probe: bool = True,
         columns: list[str] | None = None,
         min_ts: object | None = None,
         probe_buckets: tuple[list[int], int] | None = None,
@@ -2593,9 +2606,8 @@ class ParquetSnapshotSink:
         ints collected driver-side), then a semi-join on the key runs
         BEFORE the LWW merge (exact, same argument as ``key_eq``), so
         the merge reduces only probed keys instead of the whole chain.
-        ``broadcast_probe`` hints the semi-join's build side — right
-        for increment ≪ store (the probe case); pass False to let AQE
-        choose when the probe set is itself huge.
+        The probe is the broadcast side (increment ≪ store). Given
+        together with ``key_eq``, both restrict the result.
 
         ``columns`` — payload projection, applied BEFORE the LWW
         merge. Catalyst cannot prune columns through the reduce (the
@@ -2647,19 +2659,11 @@ class ParquetSnapshotSink:
         nb = manifest.get("num_buckets", self.num_buckets)
         lo_us = self._ts_micros(min_ts) if min_ts is not None else None
         _patch_now, _ = self._patch_conf(manifest)
-        _zone = (
+        zone = (
             manifest.get("file_stats", {})
             if lo_us is not None and not _patch_now
             else {}
         )
-
-        def _prune(paths: list[str]) -> list[str]:
-            if not _zone:
-                return paths
-            return [
-                p for p in paths if p not in _zone or _zone[p][1] >= lo_us
-            ]
-
         # read(where=...): conjunctive payload predicates on declared
         # stats columns. Chain-level skip only (see _where_skips_chain
         # for the exactness argument); the residual filter below
@@ -2670,50 +2674,22 @@ class ParquetSnapshotSink:
             if conjs
             else None
         )
+        probe = (
+            probe_keys.select(self.bucket_by)
+            .filter(F.col(self.bucket_by).isNotNull())
+            .distinct()
+            if probe_keys is not None
+            else None
+        )
 
-        def _chain_skipped(chain: list[str]) -> bool:
-            return bool(conjs) and self._where_skips_chain(
-                chain, conjs, manifest, bool(_patch_now), bloom_pos
-            )
-
-        if key_eq and self.bucket_by in key_eq:
-            probe_val = key_eq[self.bucket_by]
-            chain = _prune(self._paths_of(
-                manifest, str(self.bucket_of(probe_val, nb))
-            ))
-            if _chain_skipped(chain):
-                chain = []
-            # Key-range skipping: within the bucket's chain, drop
-            # elements whose footer [min,max] key range provably
-            # excludes the probed key — a key updated in 2 of 40
-            # deltas opens ~2 files, not the whole chain. Exact in
-            # every mode (it removes only OTHER keys' rows; patch
-            # carry-forward for this key is untouched). Unsigned
-            # byte-wise parquet bounds == Python code-point order for
-            # UTF-8, so the comparison below is sound; unstatted paths
-            # are never pruned (fail-open).
-            kz = manifest.get("key_stats", {})
-            if kz and isinstance(probe_val, str):
-                chain = [
-                    p
-                    for p in chain
-                    if p not in kz or kz[p][0] <= probe_val <= kz[p][1]
-                ]
-            # Prune miss: fall through with a footer-typed empty frame
-            # (NOT the transcript sentinel — a re-keyed/evolved table's
-            # downstream selects would crash on the wrong schema); the
-            # normal projection/patch-align pipeline below then shapes
-            # the output exactly like a non-empty read.
-            if not chain:
-                df = self._typed_empty_from_footer(manifest)
-                depth = 1
-            else:
-                df = self._read_bucket_paths(chain, conf_manifest=manifest)
-                depth = len(chain)
-        elif probe_keys is not None:
-            probe = probe_keys.select(self.bucket_by).filter(
-                F.col(self.bucket_by).isNotNull()
-            ).distinct()
+        # File selection, the one place a read picks its data files.
+        # 1. The bucket set: key_eq's bucket when it pins bucket_by,
+        #    else the probe's hits, else every bucket.
+        pinned = bool(key_eq) and self.bucket_by in key_eq
+        point = key_eq[self.bucket_by] if pinned else None
+        if pinned:
+            buckets = [str(self.bucket_of(point, nb))]
+        elif probe is not None:
             if probe_buckets is not None and probe_buckets[1] == nb:
                 # caller precomputed the probe's bucket set (pin_probe:
                 # one job materializes the probe AND collects its
@@ -2721,48 +2697,68 @@ class ParquetSnapshotSink:
                 # the bucket count it was computed under: a concurrent
                 # rebucket invalidates it and we fall through to the
                 # exact recollect.
-                hit = sorted(int(b) for b in probe_buckets[0])
+                hit = probe_buckets[0]
             else:
-                hit = sorted(
-                    int(r.b)
+                hit = [
+                    r.b
                     for r in probe.select(
                         self._bucket_expr(F.col(self.bucket_by), nb).alias("b")
                     )
                     .distinct()
                     .collect()
-                )
-            chains = {
-                b: c
-                for b in hit
-                if not _chain_skipped(c := self._paths_of(manifest, str(b)))
-            }
-            paths = _prune([p for c in chains.values() for p in c])
-            if not paths:
-                # prune miss — same footer-typed fall-through as key_eq
-                df = self._typed_empty_from_footer(manifest)
-                depth = 1
-            else:
-                df = self._read_bucket_paths(
-                    paths, conf_manifest=manifest
-                ).join(
-                    F.broadcast(probe) if broadcast_probe else probe,
-                    self.bucket_by,
-                    "left_semi",
-                )
-                depth = max(len(c) for c in chains.values())
+                ]
+            buckets = [str(b) for b in sorted(int(b) for b in hit)]
         else:
-            kept_chains = [
-                c
-                for b in manifest["buckets"]
-                if not _chain_skipped(c := self._paths_of(manifest, b))
+            buckets = list(manifest["buckets"])
+        # 2. Per chain: the whole-chain where-skip, then the min_ts
+        #    zone-map prune, then (key_eq) key-range skipping — drop
+        #    elements whose footer [min,max] key range provably
+        #    excludes the probed key, so a key updated in 2 of 40
+        #    deltas opens ~2 files, not the whole chain. Exact in every
+        #    mode (it removes only OTHER keys' rows; patch carry-
+        #    forward for this key is untouched). Unsigned byte-wise
+        #    parquet bounds == Python code-point order for UTF-8, so
+        #    the comparison is sound; unstatted paths are never pruned
+        #    (fail-open).
+        kz = (
+            manifest.get("key_stats", {})
+            if pinned and isinstance(point, str)
+            else {}
+        )
+        chains = []
+        for b in buckets:
+            chain = self._paths_of(manifest, b)
+            if conjs and self._where_skips_chain(
+                chain, conjs, manifest, bool(_patch_now), bloom_pos
+            ):
+                continue
+            chain = [
+                p
+                for p in chain
+                if (p not in zone or zone[p][1] >= lo_us)
+                and (p not in kz or kz[p][0] <= point <= kz[p][1])
             ]
-            kept = _prune([p for c in kept_chains for p in c])
-            if not kept:
-                df = self._typed_empty_from_footer(manifest)
-                depth = 1
-            else:
-                df = self._read_bucket_paths(kept, conf_manifest=manifest)
-                depth = max((len(c) for c in kept_chains), default=1)
+            if chain:
+                chains.append(chain)
+        # 3. One scan. A prune miss reads a footer-typed empty frame
+        #    (NOT the transcript sentinel — a re-keyed/evolved table's
+        #    downstream selects would crash on the wrong schema); the
+        #    pipeline below then shapes it like a non-empty read.
+        paths = [p for c in chains for p in c]
+        df = (
+            self._read_bucket_paths(paths, conf_manifest=manifest)
+            if paths
+            else self._typed_empty_from_footer(manifest)
+        )
+        # 4. The probe's semi-join runs BEFORE the merge (exact, same
+        #    argument as key_eq), whatever chose the buckets.
+        if probe is not None:
+            df = df.join(F.broadcast(probe), self.bucket_by, "left_semi")
+        # 5. Merge depth = the longest chain actually read. Every writer
+        #    reduces a chain level to one row per key, and buckets hold
+        #    disjoint keys, so a read of one level per bucket needs no
+        #    merge.
+        depth = max(map(len, chains), default=1)
         # Null-key guard: quarantined (malformed) rows are stored as a
         # null-key group rather than pre-filtered before the shuffle
         # (see runner.apply_events_batch); they never surface in reads.
@@ -2771,7 +2767,6 @@ class ParquetSnapshotSink:
             df = df.filter(F.col(k) == F.lit(v))
         conf = manifest
         if columns is not None:
-            conf_patch, _ = self._patch_conf(manifest)
             known = (
                 set(df.columns)
                 | set(manifest.get("schema_fields", []))
@@ -2788,7 +2783,7 @@ class ParquetSnapshotSink:
                 )
             kept_patch = [
                 c
-                for c in (conf_patch or [])
+                for c in (_patch_now or [])
                 if c in columns or any(w[0] == c for w in conjs or [])
             ]
             keep = list(dict.fromkeys(
@@ -2827,15 +2822,7 @@ class ParquetSnapshotSink:
             df = df.filter(F.col("op") != "delete")
         if not include_meta:
             df = self._drop_patch_meta(df.drop(*META_COLS), manifest=conf)
-        # Materialize manifest-declared evolved fields out of the
-        # extras map (metadata-only schema evolution; old rows NULL).
-        if EXTRAS_COL in df.columns:
-            for name in manifest.get("extra_fields", []):
-                if name not in df.columns and (
-                    columns is None or name in columns
-                ):
-                    df = df.withColumn(name, F.col(EXTRAS_COL)[name])
-            df = df.drop(EXTRAS_COL)
+        df = self._extras_to_columns(df, manifest, columns)
         if conjs:
             # residual WHERE on the RESOLVED rows — chain skipping is
             # an optimization, this filter is what defines the result
@@ -2870,10 +2857,14 @@ class ParquetSnapshotSink:
 
     def _guard_rollback_window(self, from_version: int, to_version: int) -> None:
         """Refuse incremental windows that cross a rollback restoring
-        a version OLDER than the consumer's cursor — see read_changes.
-        Shared by every incremental feed (net changes, changed keys):
-        a file-delta plan cannot see keys whose change IS the
-        reversion to old files."""
+        a version OLDER than the consumer's cursor: the consumer holds
+        rows that were retracted wholesale, and a file-delta plan
+        cannot see keys whose change IS the reversion to old files (it
+        would mistake restored-old rows for late-losing replays). The
+        consumer re-syncs from the restored version (or 0).
+        Metadata-only scan; vacuumed intermediate manifests can't hide
+        a rollback marker because vacuum keeps the CURRENT chain and a
+        rollback IS a commit."""
         for v in range(from_version + 1, to_version + 1):
             try:
                 rb = (self.manifest_at(v) or {}).get("rolled_back")
@@ -2886,6 +2877,76 @@ class ParquetSnapshotSink:
                     "the rolled-back range — re-sync from "
                     f"v{rb['to']} or 0"
                 )
+
+    def _feed_window(
+        self, from_version: int, to_version: int | None
+    ) -> tuple[DataFrame, dict | None, dict | None, list[str]]:
+        """The first step of every change feed (``changed_keys``,
+        ``read_changes``): resolve the window ``(from, to]`` (``to``
+        defaults to the current version; ``0`` is the empty version,
+        not "current"), refuse a window across a rollback, and read the
+        candidate rows — the non-null-key rows of the data files in
+        ``to`` but not in ``from``. MOR appends only ever ADD files, so
+        that is exactly the data written in between: O(changes), not
+        O(table).
+
+        Returns ``(cand, from_manifest, to_manifest, new_paths)``. An
+        empty table yields the legacy sentinel frame and no paths.
+        A metadata-only window (config evolution / vacuum) has no new
+        paths and yields the TABLE's own typed schema (one stored
+        footer), so an empty feed still type-checks downstream for any
+        key/order layout."""
+        if to_version is None:
+            to_version = self.current_version()
+        if to_version < from_version:
+            raise ValueError("to_version must be >= from_version")
+        to_manifest = self.manifest_at(to_version)
+        if not to_manifest or not to_manifest["buckets"]:
+            return self._empty_state_frame(), None, to_manifest, []
+        from_manifest = (
+            self.manifest_at(from_version) if from_version > 0 else None
+        )
+        self._guard_rollback_window(from_version, to_version)
+        from_paths = set(self._all_paths(from_manifest)) if from_manifest else set()
+        new_paths = [
+            p for p in self._all_paths(to_manifest) if p not in from_paths
+        ]
+        if not new_paths:
+            return (
+                self._typed_empty_from_footer(to_manifest),
+                from_manifest,
+                to_manifest,
+                [],
+            )
+        # ALTER TABLE lens of the TO version for every read in the
+        # window: a default ADDed inside the window fills BOTH sides
+        # identically (no spurious per-key change), a column dropped
+        # inside it is absent from the whole feed
+        cand = self._read_bucket_paths(
+            new_paths, conf_manifest=to_manifest
+        ).filter(F.col(self.keys[0]).isNotNull())
+        return cand, from_manifest, to_manifest, new_paths
+
+    def _from_state(
+        self, from_manifest: dict | None, to_manifest: dict, new_paths: list[str]
+    ) -> DataFrame | None:
+        """Non-null-key rows of the ``from`` state, bucket-pruned to the
+        chains that got new files in the window and read under the
+        ``to`` version's ALTER lens; ``None`` when there are none."""
+        if not from_manifest:
+            return None
+        touched = {p.split(f"{BUCKET_COL}=")[-1] for p in new_paths}
+        old_paths = [
+            p
+            for b in from_manifest["buckets"]
+            if b in touched
+            for p in self._paths_of(from_manifest, b)
+        ]
+        if not old_paths:
+            return None
+        return self._read_bucket_paths(
+            old_paths, conf_manifest=to_manifest
+        ).filter(F.col(self.keys[0]).isNotNull())
 
     def changed_keys(
         self, from_version: int, to_version: int | None = None
@@ -2904,28 +2965,8 @@ class ParquetSnapshotSink:
         never correctness. Consumers that must retract old
         contributions (``pipeline.agg_view``) still need the exact
         preimage feed."""
-        to_version = to_version or self.current_version()
-        if to_version < from_version:
-            raise ValueError("to_version must be >= from_version")
-        to_manifest = self.manifest_at(to_version)
-        if not to_manifest or not to_manifest["buckets"]:
-            return self._empty_state_frame().select(*self.keys)
-        from_manifest = (
-            self.manifest_at(from_version) if from_version > 0 else None
-        )
-        self._guard_rollback_window(from_version, to_version)
-        from_paths = set(self._all_paths(from_manifest)) if from_manifest else set()
-        new_paths = [
-            p for p in self._all_paths(to_manifest) if p not in from_paths
-        ]
-        if not new_paths:
-            return self._typed_empty_from_footer(to_manifest).select(*self.keys)
-        return (
-            self._read_bucket_paths(new_paths, conf_manifest=to_manifest)
-            .filter(F.col(self.keys[0]).isNotNull())
-            .select(*self.keys)
-            .distinct()
-        )
+        cand = self._feed_window(from_version, to_version)[0]
+        return cand.select(*self.keys).distinct()
 
     def read_changes(
         self,
@@ -2962,17 +3003,13 @@ class ParquetSnapshotSink:
             to_version = self.version_at_ts(until_ts)
         if from_version is None:
             raise ValueError("read_changes needs from_version or since_ts")
-        out = self._read_changes_impl(from_version, to_version, include_preimage)
-        mapping = self._column_mapping(
-            self.manifest_at(to_version or self.current_version())
-        )
+        window = self._feed_window(from_version, to_version)
+        out = self._read_changes_impl(window, include_preimage)
+        mapping = self._column_mapping(window[2])
         return self._to_logical_frame(out, mapping) if mapping else out
 
     def _read_changes_impl(
-        self,
-        from_version: int,
-        to_version: int | None = None,
-        include_preimage: bool = False,
+        self, window: tuple, include_preimage: bool = False
     ) -> DataFrame:
         """Incremental change feed — the "CDC out" twin of ``apply``:
         net row-level changes between two committed versions, one row
@@ -2983,8 +3020,7 @@ class ParquetSnapshotSink:
         Plan (incremental, not a snapshot diff):
 
         1. delta files in ``to`` but not in ``from`` → candidate rows
-           (MOR appends only ever ADD files, so this is exactly the
-           data written in between — O(changes), not O(table));
+           (``window``, from ``_feed_window``);
         2. LWW-reduce candidates per key → candidate winners;
         3. read the ``from`` state ONLY for candidate keys (bucket
            pruning via the candidates' bucket set, then a broadcast
@@ -3010,43 +3046,9 @@ class ParquetSnapshotSink:
         for exactly these keys. Row-level tables only — a patch-mode
         feed's stamped levels have no single old "row" to retract.
         """
-        to_version = to_version or self.current_version()
-        if to_version < from_version:
-            raise ValueError("to_version must be >= from_version")
-        to_manifest = self.manifest_at(to_version)
-        if not to_manifest or not to_manifest["buckets"]:
-            return self._empty_state_frame()
-        from_manifest = (
-            self.manifest_at(from_version) if from_version > 0 else None
-        )
-        # A rollback inside the window that restored a version OLDER
-        # than the consumer's cursor means the consumer holds rows
-        # that were retracted wholesale — there is no incremental fix
-        # (the file-delta plan below would mistake restored-old rows
-        # for late-losing replays). Refuse; the consumer re-syncs from
-        # the restored version (or 0). Metadata-only scan; vacuumed
-        # intermediate manifests can't hide a rollback marker because
-        # vacuum keeps the CURRENT chain and a rollback IS a commit.
-        self._guard_rollback_window(from_version, to_version)
-        from_paths = set(self._all_paths(from_manifest)) if from_manifest else set()
-        new_paths = [
-            p for p in self._all_paths(to_manifest) if p not in from_paths
-        ]
+        cand, from_manifest, to_manifest, new_paths = window
         if not new_paths:
-            # metadata-only window (config evolution / vacuum): no
-            # candidate files, but return the TABLE's own typed schema
-            # (one stored footer) so an empty feed still type-checks
-            # downstream for any key/order layout — not the legacy
-            # default-schema sentinel.
-            return self._typed_empty_from_footer(to_manifest)
-
-        # ALTER TABLE lens of the TO version for every read in the
-        # window: a default ADDed inside the window fills BOTH sides
-        # identically (no spurious per-key change), a column dropped
-        # inside it is absent from the whole feed
-        cand = self._read_bucket_paths(
-            new_paths, conf_manifest=to_manifest
-        ).filter(F.col(self.keys[0]).isNotNull())
+            return cand
         if self._patch_conf(to_manifest)[0]:
             if include_preimage:
                 raise ValueError(
@@ -3058,71 +3060,53 @@ class ParquetSnapshotSink:
         cand = lww_agg(cand, self.keys, self.order_cols)
 
         pre = None
-        if from_manifest:
-            # bucket-pruned old state: only chains that got new files
-            new_buckets = {p.split(f"{BUCKET_COL}=")[-1] for p in new_paths}
-            old_paths = [
-                p
-                for b in from_manifest["buckets"]
-                if b in new_buckets
-                for p in self._paths_of(from_manifest, b)
-            ]
-            if old_paths:
-                old = self._read_bucket_paths(
-                    old_paths, conf_manifest=to_manifest
-                ).filter(F.col(self.keys[0]).isNotNull())
-                old = lww_agg(old, self.keys, self.order_cols)
-                # preimage needs the whole old row; the plain feed only
-                # needs the order columns for the beats comparison
-                old_cols = (
-                    [c for c in old.columns if c not in self.keys]
-                    if include_preimage
-                    else list(self.order_cols)
-                )
-                old = old.select(
+        old = self._from_state(from_manifest, to_manifest, new_paths)
+        if old is not None:
+            old = lww_agg(old, self.keys, self.order_cols)
+            # preimage needs the whole old row; the plain feed only
+            # needs the order columns for the beats comparison
+            old_cols = (
+                [c for c in old.columns if c not in self.keys]
+                if include_preimage
+                else list(self.order_cols)
+            )
+            old = old.select(
+                *self.keys,
+                *[F.col(c).alias(f"_old_{c}") for c in old_cols],
+            )
+            # identical inner field names on both sides — struct
+            # comparison requires matching types including names
+            new_ord = F.struct(
+                *[F.col(c).alias(c) for c in self.order_cols]
+            )
+            old_ord = F.struct(
+                *[
+                    F.col(f"_old_{c}").alias(c)
+                    for c in self.order_cols
+                ]
+            )
+            cand = cand.join(old, self.keys, "left").filter(
+                F.col(f"_old_{self.order_cols[0]}").isNull()
+                | (new_ord > old_ord)
+            )
+            if include_preimage:
+                pre = cand.filter(
+                    F.col(f"_old_{self.order_cols[0]}").isNotNull()
+                ).select(
                     *self.keys,
-                    *[F.col(c).alias(f"_old_{c}") for c in old_cols],
+                    *[F.col(f"_old_{c}").alias(c) for c in old_cols],
                 )
-                # identical inner field names on both sides — struct
-                # comparison requires matching types including names
-                new_ord = F.struct(
-                    *[F.col(c).alias(c) for c in self.order_cols]
-                )
-                old_ord = F.struct(
-                    *[
-                        F.col(f"_old_{c}").alias(c)
-                        for c in self.order_cols
-                    ]
-                )
-                cand = cand.join(old, self.keys, "left").filter(
-                    F.col(f"_old_{self.order_cols[0]}").isNull()
-                    | (new_ord > old_ord)
-                )
-                if include_preimage:
-                    pre = cand.filter(
-                        F.col(f"_old_{self.order_cols[0]}").isNotNull()
-                    ).select(
-                        *self.keys,
-                        *[F.col(f"_old_{c}").alias(c) for c in old_cols],
-                    )
-                cand = cand.drop(*[f"_old_{c}" for c in old_cols])
+            cand = cand.drop(*[f"_old_{c}" for c in old_cols])
 
-        def _shape(df: DataFrame) -> DataFrame:
-            df = df.drop(BUCKET_COL)
-            if EXTRAS_COL in df.columns:
-                for name in to_manifest.get("extra_fields", []):
-                    if name not in df.columns:
-                        df = df.withColumn(name, F.col(EXTRAS_COL)[name])
-                df = df.drop(EXTRAS_COL)
-            return df
-
-        out = _shape(cand)
+        out = self._extras_to_columns(cand.drop(BUCKET_COL), to_manifest)
         if not include_preimage:
             return out
         out = out.withColumn("_change", F.lit("postimage"))
         if pre is not None:
             out = out.unionByName(
-                _shape(pre).withColumn("_change", F.lit("preimage"))
+                self._extras_to_columns(
+                    pre.drop(BUCKET_COL), to_manifest
+                ).withColumn("_change", F.lit("preimage"))
             )
         return out
 
@@ -3144,30 +3128,15 @@ class ParquetSnapshotSink:
         their ``_po_<col>`` stamps, so the feed is itself a valid
         stamped level: applying it to a downstream patch-mode mirror
         reproduces this table's state exactly."""
-        old_state = None
-        if from_manifest:
-            new_buckets = {p.split(f"{BUCKET_COL}=")[-1] for p in new_paths}
-            old_paths = [
-                p
-                for b in from_manifest["buckets"]
-                if b in new_buckets
-                for p in self._paths_of(from_manifest, b)
-            ]
-            if old_paths:
-                # reduce the FROM state under the config committed at
-                # from_version (it may predate an evolve_patch_cols);
-                # the union below aligns missing evolved columns /
-                # stamps to NULL, which merged-side stamped slots beat
-                old_state = self._reduce(
-                    self._read_bucket_paths(
-                        old_paths, conf_manifest=to_manifest
-                    ).filter(F.col(self.keys[0]).isNotNull()),
-                    self.keys,
-                    manifest=from_manifest,
-                )
+        old_state = self._from_state(from_manifest, to_manifest, new_paths)
         if old_state is None:
             out = self._reduce(cand, self.keys, manifest=to_manifest)
         else:
+            # reduce the FROM state under the config committed at
+            # from_version (it may predate an evolve_patch_cols); the
+            # union below aligns missing evolved columns / stamps to
+            # NULL, which merged-side stamped slots beat
+            old_state = self._reduce(old_state, self.keys, manifest=from_manifest)
             merged = self._reduce(
                 cand.unionByName(old_state, allowMissingColumns=True),
                 self.keys,
@@ -3195,13 +3164,7 @@ class ParquetSnapshotSink:
                 )
                 .drop("_old_row")
             )
-        out = out.drop(BUCKET_COL)
-        if EXTRAS_COL in out.columns:
-            for name in to_manifest.get("extra_fields", []):
-                if name not in out.columns:
-                    out = out.withColumn(name, F.col(EXTRAS_COL)[name])
-            out = out.drop(EXTRAS_COL)
-        return out
+        return self._extras_to_columns(out.drop(BUCKET_COL), to_manifest)
 
     def compact(
         self,

@@ -42,22 +42,15 @@ lakes have.
 
 from __future__ import annotations
 
+from ..sinks.feed import window_batch_id, window_mark
 from ..sinks.snapshot import ParquetSnapshotSink
 
 MIRROR_PREFIX = "mirror@"
 
 
 def last_synced_version(dst: ParquetSnapshotSink) -> int:
-    """Source version the mirror is synced to — recomputed from the
-    mirror's committed batch-id log (no sidecar state)."""
-    hi = 0
-    for bid in dst.applied_batch_ids():
-        if bid.startswith(MIRROR_PREFIX):
-            try:
-                hi = max(hi, int(bid[len(MIRROR_PREFIX):].split("-")[1]))
-            except (IndexError, ValueError):
-                continue
-    return hi
+    """Source version the mirror is synced to."""
+    return window_mark(dst, MIRROR_PREFIX)
 
 
 def sync_mirror(
@@ -128,7 +121,7 @@ def sync_mirror(
         return {"skipped": True, "reason": "empty-source", "at_version": from_v}
     if key_filter is not None:
         feed = feed.filter(key_filter)
-    res = dst.apply(feed, f"{MIRROR_PREFIX}{from_v}-{to_v}")
+    res = dst.apply(feed, window_batch_id(MIRROR_PREFIX, from_v, to_v))
     return {
         "from_version": from_v,
         "to_version": to_v,

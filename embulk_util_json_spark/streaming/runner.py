@@ -605,78 +605,3 @@ def _start(stream, handle, checkpoint_dir: str):
         .trigger(availableNow=True)
         .start()
     )
-
-
-def synthetic_envelope_expr(seq, n_convs: int = 50, n_turns: int = 20):
-    """Deterministic JSON change-event envelope from a monotone seq —
-    pure codegen'd string concat (no Python per row). ts is seconds-
-    granular and deliberately NOT monotone in seq (seq*7 mod span), so
-    LWW ordering is exercised by the synthetic stream too."""
-    conv = F.pmod(seq, F.lit(n_convs)).cast("string")
-    # exact integer division (decimal, not `/`): double division loses
-    # exactness past 2^53 and a 10^10-seq stream must stay
-    # bit-deterministic end to end
-    seq_div = (
-        (seq - F.pmod(seq, F.lit(n_convs))).cast("decimal(38,0)")
-        / F.lit(n_convs)
-    ).cast("long")
-    turn = F.pmod(seq_div, F.lit(n_turns)).cast("string")
-    ts = F.date_format(
-        F.timestamp_seconds(
-            F.lit(1704067200) + F.pmod(seq * 7, F.lit(86400))
-        ),
-        "yyyy-MM-dd'T'HH:mm:ss",
-    )
-    op = F.when(F.pmod(seq, F.lit(20)) == 19, F.lit("delete")).otherwise(
-        F.lit("update")
-    )
-    return F.concat(
-        F.lit('{"op":"'), op,
-        F.lit('","ts":"'), ts,
-        F.lit('","data":{"conv_id":"c'), conv,
-        F.lit('","turn_idx":'), turn,
-        F.lit(',"role":"r'), F.pmod(seq, F.lit(4)).cast("string"),
-        F.lit('","text":"synthetic '), seq.cast("string"),
-        F.lit('","tool":null}}'),
-    )
-
-
-def stream_rate_synthetic(
-    spark: SparkSession,
-    sink: ParquetSnapshotSink,
-    checkpoint_dir: str,
-    rows_per_batch: int = 10_000,
-    n_convs: int = 50,
-    n_turns: int = 20,
-):
-    """Unbounded synthetic change stream via the deterministic
-    ``rate-micro-batch`` source (SURVEY §2.2's "rate-based synthetic
-    event source" mapping): exactly ``rows_per_batch`` events per
-    trigger with a monotone global ``value`` → envelope synthesis is
-    pure JVM string concat, the rest is the standard foreachBatch
-    exactly-once apply. A load generator for soak/throughput runs
-    that needs no input files at all; checkpoint-resumable like any
-    other stream (the source replays from the recorded offset)."""
-    stream = (
-        spark.readStream.format("rate-micro-batch")
-        .option("rowsPerBatch", rows_per_batch)
-        .load()
-    )
-    events = stream.select(
-        F.col("value").alias("seq"),
-        synthetic_envelope_expr(
-            F.col("value"), n_convs=n_convs, n_turns=n_turns
-        ).alias("event_json"),
-    )
-    stream_id = checkpoint_dir.rstrip("/").rsplit("/", 1)[-1]
-
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        apply_events_batch(batch_df, sink, f"{stream_id}-rate-{epoch_id}")
-
-    # no availableNow: the rate source is unbounded — callers run for a
-    # duration (q.awaitTermination(n); q.stop()) or forever.
-    return (
-        events.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )

@@ -501,51 +501,6 @@ def test_replay_segments_min_seq_skips_whole_segments(spark, tmp_path):
     assert got == want and len(got) > 0
 
 
-def test_stream_rate_synthetic_source(spark, tmp_path):
-    """Unbounded synthetic rate source: fixed rows per epoch, envelope
-    synthesis fully JVM-side, exactly-once applies; the table state is
-    the LWW of exactly the generated seq range (verified against a
-    batch replay of the same deterministic envelopes)."""
-    import time as _time
-
-    from embulk_util_json_spark.streaming.runner import (
-        stream_rate_synthetic,
-        synthetic_envelope_expr,
-    )
-
-    sink = ParquetSnapshotSink(spark, str(tmp_path / "t"), num_buckets=4)
-    q = stream_rate_synthetic(
-        spark, sink, str(tmp_path / "ckpt"), rows_per_batch=2000,
-        n_convs=20, n_turns=10,
-    )
-    try:
-        deadline = _time.time() + 60
-        while not sink.applied_batch_ids() and _time.time() < deadline:
-            _time.sleep(0.5)
-    finally:
-        q.stop()
-    n_batches = len(sink.applied_batch_ids())
-    assert n_batches >= 1
-
-    total = sum(
-        a["change_rows"] for a in sink.current_manifest()["applies"]
-    )
-    assert total == n_batches * 2000
-
-    # equivalence: batch replay of the same deterministic seq range
-    ref_sink = ParquetSnapshotSink(spark, str(tmp_path / "ref"), num_buckets=4)
-    ref_events = spark.range(total).select(
-        F.col("id").alias("seq"),
-        synthetic_envelope_expr(F.col("id"), n_convs=20, n_turns=10).alias(
-            "event_json"
-        ),
-    )
-    apply_events_batch(ref_events, ref_sink, "all")
-    got = sorted(map(tuple, sink.read().collect()))
-    want = sorted(map(tuple, ref_sink.read().collect()))
-    assert got == want and len(got) > 0
-
-
 def test_replay_quarantine_repairs_and_drains(spark, tmp_path):
     """DLQ repair & replay: a fixer that repairs some dead rows
     re-applies them exactly-once; still-bad rows move to a
