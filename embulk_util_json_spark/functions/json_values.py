@@ -2,9 +2,9 @@
 
 This module is the *inner loop* of the Arrow-vectorized capture UDFs
 (strategy (c) in ``plans.capture_spec``). It is plain Python so it can
-run inside ``mapInPandas`` / ``pandas_udf`` batches without Spark
-imports, and it reproduces the reference's parse/capture behavior that
-Spark's built-in JSON expressions cannot express:
+run inside ``mapInArrow`` batches without Spark imports, and it
+reproduces the reference's parse/capture behavior that Spark's
+built-in JSON expressions cannot express:
 
 - duplicate keys preserved in the value tree, last-match-wins at
   capture slots (reference TreeBasedCapturer.java:206-211,
@@ -38,7 +38,8 @@ from __future__ import annotations
 
 import json
 import math
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
+from json.encoder import encode_basestring
 from typing import Any, Iterator
 
 INT64_MIN = -(2**63)
@@ -84,11 +85,12 @@ class LiteralFloat(float):
 
 @dataclass(frozen=True)
 class ParseOptions:
-    """Mirrors JsonValueParser.Builder knobs (JsonValueParser.java:57-134)."""
+    """Mirrors JsonValueParser.Builder knobs (JsonValueParser.java:57-134).
+    ``fallback_enabled`` covers ints only: Jackson's getDoubleValue
+    saturates to Infinity, so a double never fails and never falls back."""
 
     with_literals: bool = False
     fallback_enabled: bool = False
-    fallback_double: float = 0.0
     fallback_long: int = 0
     allow_non_numeric_numbers: bool = True  # JsonValueParser.java:224
     allow_unquoted_control_chars: bool = True  # JsonValueParser.java:222
@@ -102,53 +104,42 @@ def _reject_constant(name: str) -> float:
 
 
 def make_decoder(options: ParseOptions) -> json.JSONDecoder:
+    """The ``parse_int`` hook sees only int literals and enforces the
+    reference's 64-bit value model (InternalJsonValueReader.java:115-120):
+    out of range → ``fallback_long`` when enabled, else JsonParseError
+    (getLongValue, InternalJsonValueReader.java:285-294)."""
+    with_literals = options.with_literals
+
+    def parse_int(literal: str) -> int:
+        # JSON ints have no leading zeros, so past sign + 19 digits a literal
+        # is out of range; int() of one past 4,300 digits raises ValueError.
+        if len(literal) <= 20 and INT64_MIN <= (value := int(literal)) <= INT64_MAX:
+            return LiteralInt(literal) if with_literals else value
+        if options.fallback_enabled:
+            return options.fallback_long
+        raise JsonParseError(f"Integer out of int64 range: {literal}")
+
     return json.JSONDecoder(
         object_pairs_hook=JsonObjectPairs,
-        parse_int=LiteralInt if options.with_literals else None,
-        parse_float=LiteralFloat if options.with_literals else None,
+        parse_int=parse_int,
+        parse_float=LiteralFloat if with_literals else None,
         parse_constant=None if options.allow_non_numeric_numbers else _reject_constant,
         strict=not options.allow_unquoted_control_chars,
     )
 
 
-def _normalize_numbers(value: Any, options: ParseOptions) -> Any:
-    """Apply int64-range enforcement with optional fallback.
-
-    Python ints are arbitrary precision; the reference's value model is
-    64-bit (InternalJsonValueReader.java:115-120). Out-of-range ints →
-    fallback_long when enabled, else JsonParseError — mirroring
-    getLongValue (InternalJsonValueReader.java:285-294). Floats pass
-    through unchanged (Jackson's getDoubleValue silently saturates to
-    Infinity, so overflow never errors on the double path).
-    """
-    if isinstance(value, bool) or value is None:
-        return value
-    if isinstance(value, int):
-        if INT64_MIN <= value <= INT64_MAX:
-            return value
-        if options.fallback_enabled:
-            return options.fallback_long
-        raise JsonParseError(f"Integer out of int64 range: {value}")
-    if isinstance(value, (float, str)):
-        return value
-    if isinstance(value, JsonObjectPairs):
-        return JsonObjectPairs(
-            (k, _normalize_numbers(v, options)) for k, v in value
-        )
-    if isinstance(value, list):
-        return [_normalize_numbers(v, options) for v in value]
-    raise JsonParseError(f"Unsupported JSON value type: {type(value)!r}")
-
-
-def iter_documents(text: str, options: ParseOptions = DEFAULT_OPTIONS) -> Iterator[Any]:
+def iter_documents(
+    text: str, options: ParseOptions = DEFAULT_OPTIONS, decoder: json.JSONDecoder | None = None
+) -> Iterator[Any]:
     """Yield each complete JSON document from concatenated input.
 
     ``{"a":1}{"b":2}`` yields two documents (reference pull loop,
     JsonValueParser.java:241-249; TestJsonValueParser.java:107-113).
     Empty / whitespace-only input yields nothing (readJsonValue → null
-    at EOF). Malformed input raises JsonParseError.
+    at EOF). Malformed input raises JsonParseError. ``decoder`` is
+    ``make_decoder(options)``, passed in to build it once per batch.
     """
-    decoder = make_decoder(options)
+    decoder = decoder or make_decoder(options)
     idx = 0
     n = len(text)
     while True:
@@ -157,10 +148,17 @@ def iter_documents(text: str, options: ParseOptions = DEFAULT_OPTIONS) -> Iterat
         if idx >= n:
             return
         try:
-            value, idx = decoder.raw_decode(text, idx)
+            try:
+                value, idx = decoder.raw_decode(text, idx)
+            except JsonParseError:
+                # The int64 check fires mid-decode, but a syntax error anywhere
+                # in the document outranks it: decode again with the fallback
+                # on, which never raises for a range (bad input only).
+                make_decoder(replace(options, fallback_enabled=True)).raw_decode(text, idx)
+                raise
         except json.JSONDecodeError as ex:
             raise JsonParseError(f"Invalid JSON at offset {ex.pos}: {ex.msg}") from ex
-        yield _normalize_numbers(value, options)
+        yield value
 
 
 def parse_single(text: str, options: ParseOptions = DEFAULT_OPTIONS) -> Any:
@@ -203,13 +201,13 @@ def _encode_into(value: Any, out: list[str], with_literals: bool) -> None:
         else:
             out.append(repr(value))
     elif isinstance(value, str):
-        out.append(json.dumps(value, ensure_ascii=False))
+        out.append(encode_basestring(value))
     elif isinstance(value, JsonObjectPairs):
         out.append("{")
         for i, (k, v) in enumerate(value):
             if i:
                 out.append(",")
-            out.append(json.dumps(k, ensure_ascii=False))
+            out.append(encode_basestring(k))
             out.append(":")
             _encode_into(v, out, with_literals)
         out.append("}")

@@ -3,7 +3,7 @@
 Two execution paths, chosen by ``CaptureSpec`` / caller:
 
 ``extract_parity``
-    Arrow-batched ``mapInPandas`` running the pure-Python engine —
+    ``mapInArrow`` running the pure-Python engine —
     full reference parity (concatenated-document splitting, root
     re-pointing with multiple matches, depth-N flattening, duplicate
     keys, missing-vs-JSON-null, literals, number fallbacks, row-level
@@ -11,7 +11,9 @@ Two execution paths, chosen by ``CaptureSpec`` / caller:
     SQL NULL = pointer matched nothing, the string ``"null"`` =
     captured JSON null (TestCapturingJsonPointerList.java:185-186 vs
     :293). Cardinality-changing (one input row → 0..N documents), so
-    it is a mapInPandas stage, never a per-row Python UDF.
+    it is a mapInArrow stage, never a per-row Python UDF. Only the
+    document column becomes Python objects; passthrough columns are
+    gathered with Arrow ``take`` and keep their Arrow types exactly.
 
 ``capture_typed``
     The scale path: ONE ``from_json`` with a pruned schema derived
@@ -28,7 +30,7 @@ from __future__ import annotations
 
 from typing import Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, functions as F, types as T
 
 from ..functions import json_values as jv
@@ -83,49 +85,47 @@ def extract_parity(
     options = spec.options
     with_literals = options.with_literals
     width = spec.width
-    col_names = list(spec.column_names)
+    null_cells = [None] * width
+    out_names = out_schema.names
 
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {name: [] for name in pass_names}
-            out[DOC_SEQ_COL] = []
-            for c in col_names:
-                out[c] = []
-            out[ERROR_COL] = []
-            texts = pdf[doc_col].tolist()
-            pass_vals = {name: pdf[name].tolist() for name in pass_names}
-
-            def emit(row_i: int, doc_seq: int, cells, err) -> None:
-                for name in pass_names:
-                    out[name].append(pass_vals[name][row_i])
-                out[DOC_SEQ_COL].append(doc_seq)
-                for j, c in enumerate(col_names):
-                    out[c].append(None if cells is None else cells[j])
-                out[ERROR_COL].append(err)
-
-            for i, text in enumerate(texts):
+    def process(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        decoder = jv.make_decoder(options)
+        for batch in batches:
+            # per output row: source row index, _doc_seq, K cells, _error
+            rows, seqs, cells, errs = [], [], [], []
+            for i, text in enumerate(batch.column(doc_col).to_pylist()):
                 if text is None:
                     continue
+                seq = 0
                 try:
-                    seq = 0
-                    for doc in jv.iter_documents(text, options):
+                    for doc in jv.iter_documents(text, options, decoder):
                         rooted = jv.repoint(doc, root_tokens) if root_tokens else [doc]
                         for sub in rooted:
                             for final in jv.flatten(sub, flatten_depth):
-                                cells = [
-                                    None if c is jv.MISSING else jv.encode(c, with_literals)
-                                    for c in jv.capture(final, tree)
-                                ]
-                                emit(i, seq, cells, None)
+                                cells.append(jv.capture_cells_json(final, tree, with_literals))
+                                rows.append(i)
+                                seqs.append(seq)
+                                errs.append(None)
                                 seq += 1
                 except jv.JsonParseError as ex:
                     if errors == "fail":
                         raise
                     if errors == "quarantine":
-                        emit(i, -1, None, str(ex))
-            yield pd.DataFrame(out, columns=[f.name for f in out_fields])
+                        cells.append(null_cells)
+                        rows.append(i)
+                        seqs.append(-1)
+                        errs.append(str(ex))
+            take = pa.array(rows, pa.int64())
+            columns = zip(*cells) if cells else [()] * width
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(name).take(take) for name in pass_names]
+                + [pa.array(seqs, pa.int64())]
+                + [pa.array(col, pa.string()) for col in columns]
+                + [pa.array(errs, pa.string())],
+                names=out_names,
+            )
 
-    return df.mapInPandas(process, out_schema)
+    return df.mapInArrow(process, out_schema)
 
 
 def _merge_pruned_schema(node) -> T.DataType:

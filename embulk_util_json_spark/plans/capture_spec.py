@@ -22,7 +22,7 @@ On Spark these strategies become:
   pointers so Catalyst's common-subexpression elimination keeps a
   single parse per row — the Spark equivalent of the reference's
   single-pass trie (JsonPointerTree.java:29-67).
-- parity mode  → an Arrow-batched ``mapInPandas`` stage running the
+- parity mode  → a ``mapInArrow`` stage running the
   pure-Python engine in ``functions.json_values`` (needed for the
   semantics built-ins can't express: missing-vs-JSON-null, duplicate
   keys, supplemental literals, number fallbacks, strict error

@@ -95,6 +95,83 @@ def test_extract_parity_literals_option(spark):
     assert extract_parity(df, "doc", spec2).collect()[0].n == "12345000.0"
 
 
+def test_extract_parity_passthrough_fidelity(spark):
+    # Passthrough columns are gathered by source row, never converted
+    # through Python values: every output row carries exactly its own
+    # input row's values, under a non-UTC session time zone too.
+    import datetime as dt
+    from decimal import Decimal
+
+    schema = T.StructType([
+        T.StructField("id", T.LongType()),
+        T.StructField("ts", T.TimestampType()),
+        T.StructField("d", T.DateType()),
+        T.StructField("dec", T.DecimalType(20, 4)),
+        T.StructField("bin", T.BinaryType()),
+        T.StructField("arr", T.ArrayType(T.IntegerType())),
+        T.StructField("st", T.StructType([
+            T.StructField("a", T.IntegerType()), T.StructField("b", T.StringType()),
+        ])),
+        T.StructField("nul", T.NullType()),
+        T.StructField("doc", T.StringType()),
+    ])
+
+    def doc(i):
+        if i % 10 == 0:  # doubled cell: two documents
+            return f'{{"r":{{"v":{i}}}}}{{"r":{{"v":{-i}}}}}'
+        if i % 7 == 0:  # root multi-match: two documents
+            return f'{{"r":{{"v":{i}}},"r":{{"v":{i + 1}}}}}'
+        if i % 11 == 0:  # root miss: no document
+            return '{"x":1}'
+        if i % 13 == 0:  # malformed: one quarantine row
+            return '{"r":'
+        return None if i % 17 == 0 else f'{{"r":{{"v":{i}}}}}'
+
+    base = dt.datetime(2021, 3, 14, 1, 30)  # LA DST starts at 02:00 that day
+    rows = [
+        (
+            i,
+            None if i % 9 == 0 else base + dt.timedelta(minutes=17 * i, days=-40000 * (i % 3 == 0)),
+            None if i % 8 == 0 else dt.date(1900, 1, 1) + dt.timedelta(days=331 * i),
+            None if i % 6 == 0 else Decimal(f"{(-1) ** i * i * 12345678901234}.{i % 10000:04d}"),
+            None if i % 5 == 0 else bytes([i % 256, 0, 255]) * (i % 4),
+            None if i % 4 == 0 else [i, None, -i][: i % 4],
+            None if i % 3 == 1 else (i, None if i % 2 else f"s{i}"),
+            None,
+            doc(i),
+        )
+        for i in range(1, 121)
+    ]
+    df = spark.createDataFrame(rows, schema).repartition(3)
+    spec = CaptureSpec.compile(["/v"], ["v"])
+    prev_tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    try:
+        want = {r.id: r for r in df.collect()}
+        out = extract_parity(df, "doc", spec, root="/r", keep_doc=True)
+        assert out.schema.fields[: len(schema.fields)] == schema.fields
+        got = out.collect()
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prev_tz)
+    names = schema.names
+    for r in got:
+        assert tuple(r[n] for n in names) == tuple(want[r.id][n] for n in names)
+    per_id: dict[int, list] = {}
+    for r in got:
+        per_id.setdefault(r.id, []).append((r._doc_seq, r.v, r._error is None))
+    expected: dict[int, list] = {}
+    for i in range(1, 121):
+        if i % 10 == 0:
+            expected[i] = [(0, str(i), True), (1, str(-i), True)]
+        elif i % 7 == 0:
+            expected[i] = [(0, str(i), True), (1, str(i + 1), True)]
+        elif i % 13 == 0:
+            expected[i] = [(-1, None, False)]
+        elif i % 11 and i % 17:
+            expected[i] = [(0, str(i), True)]
+    assert {k: sorted(v) for k, v in per_id.items()} == expected
+
+
 def test_pruned_schema_shared_prefix():
     spec = CaptureSpec.compile(["/qux/hoge", "/qux", "/bar"])
     schema = pruned_schema(spec.tree)

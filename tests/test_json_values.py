@@ -76,6 +76,90 @@ def test_long_overflow_uses_fallback_when_enabled():
     assert jv.encode(jv.parse_single("92233720368547758080", opts)) == "-1"
 
 
+def test_int64_bounds():
+    # 19-digit extremes are longs; one past either end is not.
+    assert jv.encode(jv.parse_single("[9223372036854775807,-9223372036854775808]")) == (
+        "[9223372036854775807,-9223372036854775808]"
+    )
+    for literal in ("9223372036854775808", "-9223372036854775809"):
+        with pytest.raises(jv.JsonParseError, match="Integer out of int64 range: " + literal):
+            jv.parse_single(literal)
+
+
+def test_int_past_python_digit_limit_is_a_parse_error():
+    # int() refuses literals past 4,300 digits with ValueError; the
+    # range check must still report a recoverable JsonParseError.
+    literal = "1" * 5000
+    with pytest.raises(jv.JsonParseError, match="Integer out of int64 range"):
+        jv.parse_single(f'{{"a":{literal}}}')
+    opts = jv.ParseOptions(fallback_enabled=True, fallback_long=-1)
+    assert jv.encode(jv.parse_single(f"[{literal}]", opts)) == "[-1]"
+
+
+def test_fallback_replaces_nested_out_of_range_ints():
+    opts = jv.ParseOptions(fallback_enabled=True, fallback_long=7)
+    v = jv.parse_single('{"a":[-9223372036854775809,1],"b":{"c":99999999999999999999}}', opts)
+    assert jv.encode(v) == '{"a":[7,1],"b":{"c":7}}'
+    # In-range ints and floats never take the fallback.
+    assert jv.encode(jv.parse_single("[9223372036854775807,1e400]", opts)) == (
+        "[9223372036854775807,Infinity]"
+    )
+
+
+def test_literals_keep_in_range_int_text():
+    opts = jv.ParseOptions(with_literals=True)
+    v = jv.parse_single('{"a":-0,"b":9223372036854775807}', opts)
+    assert isinstance(v[0][1], jv.LiteralInt)
+    assert jv.encode(v, with_literals=True) == '{"a":-0,"b":9223372036854775807}'
+    assert jv.encode(v) == '{"a":0,"b":9223372036854775807}'
+    fb = jv.ParseOptions(with_literals=True, fallback_enabled=True, fallback_long=-1)
+    assert jv.encode(jv.parse_single("[99999999999999999999]", fb), with_literals=True) == "[-1]"
+
+
+def test_syntax_error_takes_precedence_over_int_range():
+    # The range check runs inside the decoder, but a later syntax error
+    # in the same document is still the one reported.
+    with pytest.raises(jv.JsonParseError) as ex:
+        jv.parse_single('{"c":99999999999999999999,"d":}')
+    assert str(ex.value) == "Invalid JSON at offset 30: Expecting value"
+    opts = jv.ParseOptions(allow_non_numeric_numbers=False)
+    with pytest.raises(jv.JsonParseError) as ex:
+        jv.parse_single('{"c":99999999999999999999,"d":NaN}', opts)
+    assert str(ex.value) == "Non-numeric number literal not allowed: NaN"
+    with pytest.raises(jv.JsonParseError) as ex:
+        jv.parse_single('{"c":99999999999999999999,"d":1}')
+    assert str(ex.value) == "Integer out of int64 range: 99999999999999999999"
+
+
+def test_concatenated_documents_before_a_bad_one_are_yielded():
+    docs = jv.iter_documents('{"a":1}{"a":99999999999999999999}{"a":3}')
+    assert jv.encode(next(docs)) == '{"a":1}'
+    with pytest.raises(jv.JsonParseError, match="out of int64 range"):
+        next(docs)
+
+
+def test_extract_parity_number_semantics(spark):
+    from embulk_util_json_spark.operators.capture import extract_parity
+
+    df = spark.createDataFrame(
+        [
+            (1, '{"a":1,"skip":{"deep":[99999999999999999999]}}'),  # uncaptured subtree
+            (2, '{"a":1}{"a":-9223372036854775809}{"a":3}'),
+            (3, '{"a":-9223372036854775808}'),
+        ],
+        "id long, doc string",
+    )
+    spec = CaptureSpec.compile(["/a"], ["a"])
+    rows = [(r.id, r._doc_seq, r.a, r._error) for r in
+            extract_parity(df, "doc", spec).orderBy("id", "_doc_seq").collect()]
+    assert rows == [
+        (1, -1, None, "Integer out of int64 range: 99999999999999999999"),
+        (2, -1, None, "Integer out of int64 range: -9223372036854775809"),
+        (2, 0, "1", None),
+        (3, 0, "-9223372036854775808", None),
+    ]
+
+
 def test_supplemental_literals_preserved():
     # JsonValueParser.java:104-118 — original literal kept.
     opts = jv.ParseOptions(with_literals=True)
