@@ -118,9 +118,7 @@ def bench_replay(
     # BENCH_PATCH_COLS=role,text,tool switches the sink to patch mode
     # (column-level LWW with stored stamps) so tools/scaling_run.py can
     # evidence N→4N scaling for the patch path over the same full
-    # replay (envelope parse + merge — the CPU-bound regime; the
-    # merge-only tools/patch_overhead_run.py is fixed-cost-dominated
-    # and only measures RELATIVE arm cost).
+    # replay (envelope parse + merge — the CPU-bound regime).
     patch_env = os.environ.get("BENCH_PATCH_COLS")
     patch_kw = (
         {

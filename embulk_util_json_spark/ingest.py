@@ -27,7 +27,7 @@ the package exposes individually::
       },
       "out": {"root": "/lake/transcripts", "branch": "main"},
       "run": {"num_batches": 4, "batch_prefix": "b",
-               "quarantine_dir": None, "evolve": True},
+               "quarantine_dir": None},
     }
 
 ``run_ingest(spark, config)`` validates the config (loud, specific
@@ -48,7 +48,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .sinks.snapshot import ParquetSnapshotSink
-from .sources.events import EXTRAS_COL, parse_change_events
+from .sources.events import parse_change_events
 from .streaming.runner import apply_events_batch
 
 FORMATS = (
@@ -62,12 +62,12 @@ def _fail(msg: str) -> None:
 
 
 def build_parse_fn(fmt: str, options: dict | None = None):
-    """Resolve a wire-dialect name to its canonical-row parser.
-    Returns None for ``native`` (the runner's evolving single-pass
-    map parse — the only dialect with in-band schema discovery)."""
+    """Resolve a wire-dialect name to its canonical-row parser. Every
+    parser ends in ``sources.events.canonical_rows``, so schema
+    evolution and bad-value handling are the same for all of them."""
     options = options or {}
     if fmt == "native":
-        return None
+        return parse_change_events
     if fmt == "debezium":
         from .sources.debezium import parse_debezium_events
 
@@ -162,7 +162,7 @@ def run_ingest(spark: SparkSession, config: dict) -> dict:
 
         kconf = dict(src.get("kafka") or {})
         frame = spark.read.parquet(src["path"])
-        inner = parse_fn or parse_change_events
+        inner = parse_fn
         n_parts = kconf.get("n_partitions")
         if n_parts is None:
             # derive P once, over the whole topic: a slice lacking the
@@ -181,17 +181,6 @@ def run_ingest(spark: SparkSession, config: dict) -> dict:
 
     if "_pos" not in raw.columns:
         raw = raw.withColumn("_pos", F.col("seq"))
-
-    if merge.get("patch") and parse_fn is not None:
-        base_parse = parse_fn
-
-        def _drop_extras(events: DataFrame) -> DataFrame:
-            # map-typed extras have no ordering; the patch reduction
-            # is column-slot LWW over orderable values only
-            df = base_parse(events)
-            return df.drop(EXTRAS_COL) if EXTRAS_COL in df.columns else df
-
-        parse_fn = _drop_extras
 
     sink = ParquetSnapshotSink(
         spark,
@@ -231,7 +220,6 @@ def run_ingest(spark: SparkSession, config: dict) -> dict:
                 part,
                 sink,
                 f"{prefix}{i}",
-                evolve=bool(run.get("evolve", True)),
                 quarantine_dir=run.get("quarantine_dir"),
                 parse_fn=parse_fn,
             )
@@ -316,7 +304,6 @@ def run_ingest_stream(spark: SparkSession, config: dict) -> dict:
             src["path"],
             sink,
             run["checkpoint_dir"],
-            evolve=bool(run.get("evolve", True)),
             max_files_per_trigger=run.get("max_files_per_trigger"),
             parse_fn=parse_fn,
         )
@@ -338,7 +325,6 @@ def run_ingest_stream(spark: SparkSession, config: dict) -> dict:
             batch_df,
             sink,
             f"{stream_id}-epoch-{epoch_id}",
-            evolve=bool(run.get("evolve", True)),
             parse_fn=parse_fn,
         )
 

@@ -212,7 +212,7 @@ def capture_typed(
     # second select — inlining from_json per capture column defeats
     # Catalyst CSE and re-parses the document K times (measured 3×
     # slower on the CDC envelope; same rule as
-    # sources/events.py::parse_change_events_single_pass).
+    # sources/events.py::canonical_rows).
     tmp = "_cap"
     parsed_df = df.select("*", F.from_json(F.col(doc_col), schema).alias(tmp))
     paths = spec.pruned_field_paths()

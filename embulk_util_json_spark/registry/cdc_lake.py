@@ -127,9 +127,12 @@ def _q_cdc_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     row. One key-partitioned window (same hash exchange as the LWW
     apply), no global sort."""
     from embulk_util_json_spark.operators.history import scd2_history
-    from embulk_util_json_spark.sources.events import parse_change_events
+    from embulk_util_json_spark.sources.events import EXTRAS_COL, parse_change_events
 
     changes = parse_change_events(_events_as_cdc_json(spark, sf_dir))
+    # the graded frame is the base fields only; the stream has no
+    # unknown members, so the (empty) extras map is dropped
+    changes = changes.drop(EXTRAS_COL)
     return scd2_history(changes, ["conv_id", "turn_idx"], ["ts", "seq"])
 
 
@@ -574,9 +577,12 @@ def _q_cdc_compact_net_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side partial combine pre-reduces hot keys before the
     exchange."""
     from embulk_util_json_spark.operators.history import compact_net_changes
-    from embulk_util_json_spark.sources.events import parse_change_events
+    from embulk_util_json_spark.sources.events import EXTRAS_COL, parse_change_events
 
     changes = parse_change_events(_events_as_cdc_json(spark, sf_dir))
+    # the graded frame is the base fields only; the stream has no
+    # unknown members, so the (empty) extras map is dropped
+    changes = changes.drop(EXTRAS_COL)
     return compact_net_changes(changes, ["conv_id", "turn_idx"], ["ts", "seq"])
 
 

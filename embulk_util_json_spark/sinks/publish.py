@@ -71,7 +71,9 @@ def publish_changes(
     Returns ``None`` when caught up, else
     ``{"segment", "from_version", "to_version"}``. Call in a loop (or
     per micro-batch) to keep the published feed current."""
-    from ..sources.events import to_native_json
+    from pyspark.sql import functions as F
+
+    from ..sources.events import EXTRAS_COL, to_native_json
 
     cur = FeedCursor(sink, cursor_name)
     got = cur.poll()
@@ -86,6 +88,17 @@ def publish_changes(
     for stale in (tmp, final):
         if os.path.exists(stale):
             shutil.rmtree(stale)  # crash leftovers / overwrite-republish
+    # the feed returns evolved fields as columns; folded back into
+    # _extras they reach the envelope's data, so a consumer's parse
+    # evolves the same way the source did
+    evolved = [
+        c for c in sink.current_manifest().get("extra_fields", [])
+        if c in changes.columns
+    ]
+    if evolved:
+        changes = changes.withColumn(EXTRAS_COL, F.create_map(
+            *[x for c in evolved for x in (F.lit(c), F.col(c))]
+        ))
     wire_df = _wire_writer(wire)(to_native_json(changes))
     wire_df.select("event_json").write.mode("overwrite").text(tmp)
     os.replace(tmp, final)

@@ -56,17 +56,17 @@ through ``to_raw_seq`` (row seq → envelope seq), consumed by
 not break the "quarantine carries original bytes" contract.
 
 Single-pass discipline: ONE ``from_json`` per envelope with row
-images as ``array<map<string,string>>``; typed base columns cast out
-of the map, unknown members retained in ``_extras`` (schema evolution
-rides through identically to the native path).
+images as ``array<map<string,string>>``, then the shared
+``events.canonical_rows`` projection (schema evolution and bad-value
+handling identical to the native path).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F, types as T
 
-from .debezium import _canonical_select, _native_parsed
-from .events import TABLE_COL  # noqa: F401  (re-export convenience)
+from .debezium import _native_parsed
+from .events import canonical_rows
 
 _MAP = T.MapType(T.StringType(), T.StringType())
 
@@ -99,10 +99,10 @@ def parse_canal_events(
 ) -> DataFrame:
     """Canal flat-message envelopes → canonical change rows (1→N).
 
-    Output schema is identical to
-    ``events.parse_change_events_single_pass`` (plus ``_table`` when
-    ``with_table``): every downstream stage — LWW, exactly-once sink,
-    routing, quarantine — accepts the result unchanged.
+    Output schema is identical to ``events.parse_change_events``
+    (plus ``_table`` when ``with_table``): every downstream stage —
+    LWW, exactly-once sink, routing, quarantine — accepts the result
+    unchanged.
     """
     parsed = events.select(
         F.col(seq_col).cast("long").alias("_env_seq"),
@@ -127,7 +127,7 @@ def parse_canal_events(
         .when(F.col("_e.type") == "DELETE", F.lit("delete"))
     )  # no otherwise → NULL op = quarantine
     ts = F.timestamp_millis(F.coalesce(F.col("_e.es"), F.col("_e.ts")))
-    return _canonical_select(rows, op, ts, F.col("_row"), F.col("_e.table"), with_table)
+    return canonical_rows(rows, op, ts, F.col("_row"), F.col("_e.table"), with_table)
 
 
 # Row seq → envelope seq, for dead-lettering the original wire bytes.

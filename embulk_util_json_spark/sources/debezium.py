@@ -46,10 +46,10 @@ analogue — as the tie-breaking sequence, same contract as the native
 parser.
 
 Both adapters are single-pass: ONE ``from_json`` per row with the row
-images as ``map<string,string>``, typed base columns cast out of the
-map, unknown members retained in ``_extras`` (schema evolution rides
-through identically to the native path). Two-step projection keeps
-the parse under one alias so Catalyst CSE evaluates it once
+images as ``map<string,string>``, then ``events.canonical_rows`` —
+the projection every dialect shares (typed base columns try-converted
+out of the map, unknown members retained in ``_extras``), so schema
+evolution and bad-value handling are those of the native path
 (reference semantics: single-pass capture, JsonParser.java multi-doc
 stream — re-expressed, not ported).
 
@@ -64,7 +64,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
-from .events import BASE_DATA_FIELDS, EXTRAS_COL, TABLE_COL
+from .events import canonical_rows
 
 _MAP = T.MapType(T.StringType(), T.StringType())
 
@@ -100,30 +100,6 @@ MAXWELL_SCHEMA = T.StructType(
 )
 
 
-def _canonical_select(
-    parsed: DataFrame,
-    op_expr,
-    ts_expr,
-    data_expr,
-    table_expr,
-    with_table: bool,
-) -> DataFrame:
-    """Shared second-step projection: wire fields → canonical rows."""
-    base = [n for n, _ in BASE_DATA_FIELDS]
-    data = data_expr.alias("_d")
-    cols = [
-        op_expr.alias("op"),
-        ts_expr.alias("ts"),
-        F.col("seq"),
-    ]
-    if with_table:
-        cols.insert(0, table_expr.alias(TABLE_COL))
-    for name, dtype in BASE_DATA_FIELDS:
-        cols.append(data[name].cast(dtype).alias(name))
-    cols.append(F.map_filter(data, lambda k, _v: ~k.isin(*base)).alias(EXTRAS_COL))
-    return parsed.select(*cols)
-
-
 def parse_debezium_events(
     events: DataFrame,
     json_col: str = "event_json",
@@ -132,10 +108,9 @@ def parse_debezium_events(
 ) -> DataFrame:
     """Debezium change events → canonical change rows.
 
-    Output schema is identical to
-    ``events.parse_change_events_single_pass`` (with ``_table`` from
-    ``source.table`` when ``with_table``), so any sink / router /
-    LWW stage accepts the result unchanged.
+    Output schema is identical to ``events.parse_change_events``
+    (with ``_table`` from ``source.table`` when ``with_table``), so
+    any sink / router / LWW stage accepts the result unchanged.
     """
     parsed = events.select(
         F.col(seq_col).cast("long").alias("seq"),
@@ -152,7 +127,7 @@ def parse_debezium_events(
         F.timestamp_millis(F.col("_e.ts_ms")),
     )
     data = F.coalesce(F.col("_e.after"), F.col("_e.before"))
-    return _canonical_select(parsed, op, ts, data, F.col("_e.source.table"), with_table)
+    return canonical_rows(parsed, op, ts, data, F.col("_e.source.table"), with_table)
 
 
 def parse_maxwell_events(
@@ -177,7 +152,7 @@ def parse_maxwell_events(
         .when(F.col("_e.type") == "delete", F.lit("delete"))
     )
     ts = F.timestamp_seconds(F.col("_e.ts"))
-    return _canonical_select(
+    return canonical_rows(
         parsed, op, ts, F.col("_e.data"), F.col("_e.table"), with_table
     )
 

@@ -1,31 +1,44 @@
 """Change-event envelope parsing (the CDC analogue of the reference's
-capture stage).
+capture stage), and the one home of the canonical change-row shape.
 
-An event is one JSON document:
+A native event is one JSON document:
 
     {"op":"insert|update|delete","ts":"<iso8601>",
      "data":{"conv_id":..,"turn_idx":..,"role":..,"text":..,"tool":..,
              ...possibly new fields appearing mid-stream...}}
 
-``parse_change_events`` is the scale path: ONE ``from_json`` with the
-full envelope schema (every field is consumed, so Catalyst keeps a
-single JVM-side parse per row inside whole-stage codegen — the exact
-Spark analogue of the reference's single-pass capture, SURVEY.md §2.1
-R5). No Python runs per row.
+Every wire dialect (native here, Debezium/Maxwell, Canal, wal2json,
+Mongo) parses its envelope with ONE ``from_json`` whose row image is
+``map<string,string>`` (Spark coerces non-string values to their JSON
+text, so nothing is lost; nested values stay canonical JSON strings)
+and then calls :func:`canonical_rows`, the only code that builds the
+canonical columns: ``[_table,] op, ts, seq``, the five
+``BASE_DATA_FIELDS`` converted out of the map, and ``_extras``, the
+map of every other ``data`` member. No Python runs per row.
 
-Schema evolution: unknown ``data`` members are *not* lost — a second
-pass over the same parsed text is avoided by capturing ``data`` also
-as ``map<string,string>`` in the same from_json schema... which Spark
-cannot do in one schema; instead we gate the extras capture behind
-``discover_extra_fields`` (an O(batch) aggregate collecting the set of
-unseen keys) and only when new keys exist do we add typed columns.
-New fields land as string columns (additive; old rows NULL), matching
-FIXTURES.md T7.
+Schema evolution is metadata-only and identical on every entry point:
+the sink observes the set of ``_extras`` keys during its write job (an
+``observe`` aggregate, no extra scan) and declares them in the
+manifest; ``read()`` materializes them as string columns, old rows
+NULL (FIXTURES.md T7).
+
+A value that does not convert does not fail the batch. Conversions
+run in try mode (SQL ``try_cast`` / ``try_to_timestamp``), so under
+ANSI SQL a member such as ``"turn_idx":"zz"``, ``1.5`` or ``2^40``, or
+an unparseable ``ts``, reads NULL instead of raising
+``CAST_INVALID_INPUT`` — the row-skippable reading of the reference's
+JsonParseException taxonomy (JsonParseException.java:24-43). The
+quarantine rule: a row is malformed when ``op`` or the first key
+column is NULL (the sink counts it, ``read()`` never shows
+it, ``quarantine_dir`` dead-letters its raw bytes). Any other NULL
+field is stored as NULL; in particular a NULL ``ts`` orders below
+every timestamp in LWW (``max_by`` over ``struct(ts, seq)``), so such
+an event only wins a key that has no timestamped event, by ``seq``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import Column, DataFrame, functions as F, types as T
 
 BASE_DATA_FIELDS: list[tuple[str, T.DataType]] = [
     ("conv_id", T.StringType()),
@@ -38,107 +51,83 @@ BASE_DATA_FIELDS: list[tuple[str, T.DataType]] = [
 KEY_COLS = ["conv_id", "turn_idx"]
 ORDER_COLS = ["ts", "seq"]
 EXTRAS_COL = "_extras"
-
-
-def envelope_schema(extra_fields: list[str] | None = None) -> T.StructType:
-    data_fields = [T.StructField(n, t) for n, t in BASE_DATA_FIELDS]
-    data_fields += [T.StructField(n, T.StringType()) for n in (extra_fields or [])]
-    return T.StructType(
-        [
-            T.StructField("op", T.StringType()),
-            T.StructField("ts", T.StringType()),
-            T.StructField("data", T.StructType(data_fields)),
-        ]
-    )
-
-
-def discover_extra_fields(events: DataFrame, json_col: str = "event_json") -> list[str]:
-    """Distinct ``data`` member names beyond the base schema.
-
-    One aggregate over the batch: parse ``data`` as map<string,string>
-    (keys only are retained), flatten, distinct. The result is a tiny
-    driver-side list (bounded by schema width, not data size), so
-    collect() here is safe at any scale.
-    """
-    base = {n for n, _ in BASE_DATA_FIELDS}
-    rows = (
-        events.select(
-            F.explode(
-                F.map_keys(
-                    F.from_json(
-                        F.get_json_object(F.col(json_col), "$.data"),
-                        T.MapType(T.StringType(), T.StringType()),
-                    )
-                )
-            ).alias("k")
-        )
-        .filter(~F.col("k").isin(*base))
-        .distinct()
-        .collect()
-    )
-    return sorted(r.k for r in rows)
-
-
 TABLE_COL = "_table"
 
+# The second step of every parse, as SQL text built once: one
+# selectExpr call crosses the Python↔JVM boundary for all columns.
+_BASE_NAMES = ", ".join(f"'{n}'" for n, _ in BASE_DATA_FIELDS)
+_CANONICAL_DATA = [
+    f"try_cast(_d['{n}'] AS {t.simpleString()}) AS `{n}`"
+    for n, t in BASE_DATA_FIELDS
+] + [f"map_filter(_d, (k, v) -> NOT k IN ({_BASE_NAMES})) AS `{EXTRAS_COL}`"]
 
-def parse_change_events_single_pass(
+
+def canonical_rows(
+    parsed: DataFrame,
+    op: Column,
+    ts: Column,
+    data: Column,
+    table: Column | None = None,
+    with_table: bool = False,
+) -> DataFrame:
+    """Wire fields → canonical change rows: ``[_table,] op, ts, seq``,
+    the ``BASE_DATA_FIELDS`` try-converted out of the ``data``
+    map<string,string>, and ``_extras`` (every other member).
+
+    ``parsed`` must carry ``seq`` and the one aliased ``from_json``
+    the expressions read. Two-step projection: materializing that
+    parse under ONE alias and extracting in a second select keeps a
+    single JVM-side parse per row (inlining ``from_json`` per output
+    column defeats Catalyst's common-subexpression elimination and
+    re-parses the JSON once per column — measured 3× slower at 2M
+    rows)."""
+    head = [op.alias("op"), ts.alias("ts"), F.col("seq")]
+    names = ["op", "ts", "seq"]
+    if with_table:
+        head.insert(0, table.alias(TABLE_COL))
+        names.insert(0, TABLE_COL)
+    return parsed.select(*head, data.alias("_d")).selectExpr(
+        *names, *_CANONICAL_DATA
+    )
+
+
+def parse_change_events(
     events: DataFrame,
     json_col: str = "event_json",
     seq_col: str = "seq",
     with_table: bool = False,
 ) -> DataFrame:
-    """Single-pass envelope parse for the hot replay path: ONE
-    ``from_json`` with ``data`` as ``map<string,string>`` — typed base
-    columns are cast out of the map, and unknown members are retained
-    in an ``_extras`` map column instead of being discovered by a
-    separate pre-pass over the batch. (Spark coerces non-string map
-    values to their JSON text, so nothing is lost; nested values stay
-    as canonical JSON strings.)
+    """Native events (seq, event_json) → canonical change rows.
 
-    Schema evolution becomes metadata-only: the sink observes the set
-    of extra keys during its write job (an ``observe`` aggregate — no
-    additional scan) and declares them in the manifest; ``read()``
-    materializes them as string columns. Old rows read NULL. This
-    halves the JSON-parse work per batch versus discover-then-parse
-    and removes one Spark job per micro-batch.
-
-    ``with_table=True`` additionally extracts the envelope's optional
-    top-level ``table`` member into a ``_table`` column (multiplexed
-    CDC streams — Debezium-style topic routing; events without it
-    read NULL). Same single parse; the extra struct field is free.
+    Malformed envelopes yield NULL fields (PERMISSIVE) and fall under
+    the quarantine rule (``op`` or the first key NULL). ``with_table=True`` also
+    extracts the envelope's optional top-level ``table`` member into
+    ``_table`` (multiplexed CDC streams — Debezium-style topic
+    routing; events without it read NULL), in the same single parse.
     """
-    env_fields = [
+    fields = [
         T.StructField("op", T.StringType()),
         T.StructField("ts", T.StringType()),
         T.StructField("data", T.MapType(T.StringType(), T.StringType())),
     ]
     if with_table:
-        env_fields.insert(0, T.StructField("table", T.StringType()))
-    schema = T.StructType(env_fields)
-    # Two-step projection: materialize the parsed struct under ONE
-    # alias, then extract fields from it in a second select. Inlining
-    # from_json per output column defeats Catalyst's common-
-    # subexpression elimination and re-parses the JSON once per column
-    # (measured 3× slower at 2M rows).
+        fields.insert(0, T.StructField("table", T.StringType()))
     parsed = events.select(
         F.col(seq_col).cast("long").alias("seq"),
-        F.from_json(F.col(json_col), schema).alias("_e"),
+        F.from_json(F.col(json_col), T.StructType(fields)).alias("_e"),
     )
-    base = [n for n, _ in BASE_DATA_FIELDS]
-    cols = [
-        F.col("_e.op").alias("op"),
-        F.to_timestamp(F.col("_e.ts")).alias("ts"),
-        F.col("seq"),
-    ]
-    if with_table:
-        cols.insert(0, F.col("_e.table").alias(TABLE_COL))
-    for name, dtype in BASE_DATA_FIELDS:
-        cols.append(F.col("_e.data")[name].cast(dtype).alias(name))
-    cols.append(
-        F.map_filter(F.col("_e.data"), lambda k, _v: ~k.isin(*base)).alias(EXTRAS_COL)
+    return canonical_rows(
+        parsed,
+        F.col("_e.op"),
+        F.expr("try_to_timestamp(_e.ts)"),
+        F.col("_e.data"),
+        F.col("_e.table"),
+        with_table,
     )
-    return parsed.select(*cols)
+
+
+# the earlier name of the native parser, still imported by callers
+parse_change_events_single_pass = parse_change_events
 
 
 def to_native_json(
@@ -178,37 +167,3 @@ def to_native_json(
         F.col("seq").cast("long").alias("seq"),
         F.to_json(F.struct(*fields)).alias("event_json"),
     )
-
-
-def parse_change_events(
-    events: DataFrame,
-    json_col: str = "event_json",
-    seq_col: str = "seq",
-    extra_fields: list[str] | None = None,
-) -> DataFrame:
-    """events(seq, event_json) → typed change rows.
-
-    Output columns: op, ts (timestamp), seq, conv_id, turn_idx, role,
-    text, tool [, extra fields as strings]. Malformed envelopes yield
-    NULL fields (PERMISSIVE) and can be quarantined by filtering
-    ``op IS NULL`` — the reference's row-skippable JsonParseException
-    taxonomy (JsonParseException.java:24-43).
-    """
-    schema = envelope_schema(extra_fields)
-    # Two-step projection — see parse_change_events_single_pass: one
-    # aliased from_json, field extraction in a second select (single
-    # JVM-side parse per row under whole-stage codegen).
-    parsed = events.select(
-        F.col(seq_col).cast("long").alias("seq"),
-        F.from_json(F.col(json_col), schema).alias("_e"),
-    )
-    cols = [
-        F.col("_e.op").alias("op"),
-        F.to_timestamp(F.col("_e.ts")).alias("ts"),
-        F.col("seq"),
-    ]
-    for name, _ in BASE_DATA_FIELDS:
-        cols.append(F.col("_e.data")[name].alias(name))
-    for name in extra_fields or []:
-        cols.append(F.col("_e.data")[name].alias(name))
-    return parsed.select(*cols)

@@ -53,9 +53,10 @@ Mapping to the canonical change-row contract:
 
 Single-pass like the sibling adapters: ONE ``from_json`` per row
 (Spark coerces non-string JSON scalars to their text inside the
-map<string,string> row images — element-wise, in codegen), typed base
-columns cast out, unknown members retained in ``_extras``. No Python
-runs per row.
+map<string,string> row images — element-wise, in codegen), then the
+shared ``events.canonical_rows`` projection (typed base columns
+try-converted out, unknown members retained in ``_extras``). No
+Python runs per row.
 
 ``to_mongo_changestream_json`` / ``rows_to_mongo_patch_json`` re-wrap
 a native-envelope stream into the wire format so tests and the graded
@@ -71,8 +72,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
-from .debezium import _canonical_select, _native_parsed
-from .events import BASE_DATA_FIELDS, EXTRAS_COL, KEY_COLS, TABLE_COL
+from .debezium import _native_parsed
+from .events import BASE_DATA_FIELDS, KEY_COLS, canonical_rows
 
 _MAP = T.MapType(T.StringType(), T.StringType())
 
@@ -165,10 +166,12 @@ def _op_expr():
 
 def _ts_expr():
     # wallTime is an ISO-8601 instant with 'Z' — Spark's timestamp
-    # cast accepts it directly at its millisecond precision; the
-    # clusterTime fallback is epoch-second (BSON Timestamp.t).
+    # cast accepts it directly at its millisecond precision (in try
+    # mode: an unparseable one reads NULL, it does not fail the
+    # batch); the clusterTime fallback is epoch-second (BSON
+    # Timestamp.t).
     return F.coalesce(
-        F.col("_e.wallTime").getField("$date").cast("timestamp"),
+        F.expr("try_cast(_e.wallTime.`$date` AS TIMESTAMP)"),
         F.timestamp_seconds(
             F.col("_e.clusterTime").getField("$timestamp").getField("t")
         ),
@@ -183,10 +186,9 @@ def parse_mongo_changestream(
 ) -> DataFrame:
     """Mongo change-stream events → canonical change rows (row mode).
 
-    Output schema is identical to
-    ``events.parse_change_events_single_pass`` (with ``_table`` from
-    ``ns.coll`` when ``with_table``), so any sink / router / LWW
-    stage accepts the result unchanged.
+    Output schema is identical to ``events.parse_change_events``
+    (with ``_table`` from ``ns.coll`` when ``with_table``), so any
+    sink / router / LWW stage accepts the result unchanged.
     """
     parsed = _parsed_stream(events, json_col, seq_col)
     dk = F.col("_e.documentKey")
@@ -206,7 +208,7 @@ def parse_mongo_changestream(
     data = F.when(F.col("_e.operationType") == "delete", dk).otherwise(
         F.coalesce(F.col("_e.fullDocument"), degraded)
     )
-    return _canonical_select(
+    return canonical_rows(
         parsed, _op_expr(), _ts_expr(), data, F.col("_e.ns.coll"), with_table
     )
 
@@ -244,9 +246,13 @@ def parse_mongo_patch_events(
         & full.isNull()
         & upd.isNotNull()
     )
-    cols = [op.alias("op"), _ts_expr().alias("ts"), F.col("seq")]
-    base_names = [n for n, _ in BASE_DATA_FIELDS]
-    for name, dtype in BASE_DATA_FIELDS:
+    # Each base field's value is chosen per column, then converted by
+    # the shared projection from one map: the chosen values plus the
+    # unknown members of whichever image the row carried (schema
+    # evolution flows through sparse patches too). A NULL value is an
+    # explicit NULL write; the marker passes through as text.
+    pairs = []
+    for name, _ in BASE_DATA_FIELDS:
         if name in KEY_COLS:
             # keys are immutable in Mongo: documentKey always carries
             # them; fullDocument is the fallback for lax producers.
@@ -264,14 +270,13 @@ def parse_mongo_patch_events(
             )
         else:
             val = F.when(is_patch_upd, upd[name]).otherwise(full[name])
-        cols.append(val.cast(dtype).alias(name))
-    # extras: unknown members of whichever image the row carried —
-    # schema evolution flows through sparse patches too.
-    extras_src = F.coalesce(full, upd, F.create_map().cast(_MAP))
-    cols.append(
-        F.map_filter(extras_src, lambda k, _v: ~k.isin(*base_names)).alias(EXTRAS_COL)
+        pairs += [F.lit(name), val]
+    extras = F.map_filter(
+        F.coalesce(full, upd, F.create_map().cast(_MAP)),
+        lambda k, _v: ~k.isin(*[n for n, _ in BASE_DATA_FIELDS]),
     )
-    return parsed.select(*cols)
+    data = F.map_concat(F.create_map(*pairs), extras)
+    return canonical_rows(parsed, op, _ts_expr(), data)
 
 
 # ---------------------------------------------------------------------------

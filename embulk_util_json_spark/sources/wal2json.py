@@ -53,7 +53,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
-from .debezium import _canonical_select, _native_parsed
+from .debezium import _native_parsed
+from .events import canonical_rows
 
 _COLS = T.ArrayType(
     T.StructType(
@@ -88,12 +89,11 @@ def parse_wal2json_events(
 ) -> DataFrame:
     """wal2json v2 actions → canonical change rows.
 
-    Output schema is identical to
-    ``events.parse_change_events_single_pass`` (with ``_table`` from
-    the action's ``table`` member when ``with_table``), so any sink /
-    router / LWW stage accepts the result unchanged. Control actions
-    (B/C/T/M) are filtered out; unknown actions surface as NULL-op
-    quarantine rows.
+    Output schema is identical to ``events.parse_change_events``
+    (with ``_table`` from the action's ``table`` member when
+    ``with_table``), so any sink / router / LWW stage accepts the
+    result unchanged. Control actions (B/C/T/M) are filtered out;
+    unknown actions surface as NULL-op quarantine rows.
     """
     parsed = events.select(
         F.col(seq_col).cast("long").alias("seq"),
@@ -114,20 +114,21 @@ def parse_wal2json_events(
     # non-UTC offset is normalized arithmetically (wal2json emits the
     # server's log_timezone; the engine's event time is UTC).
     raw_ts = F.col("_e.timestamp")
-    zoneless = F.to_timestamp(F.regexp_replace(raw_ts, r"[+-]\d\d(:?\d\d)?$", ""))
-    # ±HH / ±HH:MM / ±HHMM → signed minutes (regexp_extract yields ""
-    # on no match; "" casts to NULL → coalesce 0 = "no offset, UTC")
+    zoneless = F.try_to_timestamp(
+        F.regexp_replace(raw_ts, r"[+-]\d\d(:?\d\d)?$", "")
+    )
+    # ±HH / ±HH:MM / ±HHMM → signed minutes. regexp_extract yields ""
+    # on no match, else two digits, so the cast only ever sees digits;
+    # "" → 0 = "no offset, UTC".
+    def _digits(pattern: str):
+        d = F.regexp_extract(raw_ts, pattern, 1)
+        return F.when(d != "", d.cast("int")).otherwise(F.lit(0))
+
     sign = F.when(
         F.regexp_extract(raw_ts, r"([+-])\d\d(:?\d\d)?$", 1) == "-", F.lit(-1)
     ).otherwise(F.lit(1))
-    hh = F.coalesce(
-        F.regexp_extract(raw_ts, r"[+-](\d\d)(:?\d\d)?$", 1).try_cast("int"),
-        F.lit(0),
-    )
-    mm = F.coalesce(
-        F.regexp_extract(raw_ts, r"[+-]\d\d:?(\d\d)$", 1).try_cast("int"),
-        F.lit(0),
-    )
+    hh = _digits(r"[+-](\d\d)(:?\d\d)?$")
+    mm = _digits(r"[+-]\d\d:?(\d\d)$")
     offset_min = sign * (hh * 60 + mm)
     ts = F.timestamp_micros(
         F.unix_micros(zoneless) - offset_min.cast("long") * 60_000_000
@@ -138,7 +139,7 @@ def parse_wal2json_events(
             lambda c: F.struct(c["name"].alias("key"), c["value"].alias("value")),
         )
     )
-    return _canonical_select(parsed, op, ts, data, F.col("_e.table"), with_table)
+    return canonical_rows(parsed, op, ts, data, F.col("_e.table"), with_table)
 
 
 def parse_wal2json_txn_stream(

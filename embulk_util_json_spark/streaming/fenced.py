@@ -65,7 +65,6 @@ class FencedApplier:
         sink: ParquetSnapshotSink,
         work_dir: str,
         seq_col: str = "seq",
-        evolve: bool = True,
         parse_fn=None,
         n_ranges: int = 64,
     ):
@@ -73,7 +72,6 @@ class FencedApplier:
         self.sink = sink
         self.work_dir = work_dir
         self.seq_col = seq_col
-        self.evolve = evolve
         self.parse_fn = parse_fn
         self.n_ranges = n_ranges
         os.makedirs(work_dir, exist_ok=True)
@@ -150,7 +148,6 @@ class FencedApplier:
                 applicable,
                 self.sink,
                 f"fence-{start}-{fence}",
-                evolve=self.evolve,
                 parse_fn=self.parse_fn,
             )
             result["fence_next_seq"] = fence
@@ -196,7 +193,6 @@ class FencedApplier:
                     lower,
                     self.sink,
                     f"abandon-{nxt}-{seq}",
-                    evolve=self.evolve,
                     parse_fn=self.parse_fn,
                 )
                 upper = pending.filter(s >= seq)

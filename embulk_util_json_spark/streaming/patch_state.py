@@ -54,7 +54,7 @@ def resolved_patch_state(
 
     ``changes``: a *streaming* DataFrame carrying ``keys`` +
     ``order_cols`` + ``op`` + ``patch_cols`` (e.g. the output of
-    ``parse_change_events_single_pass``, optionally column-pruned).
+    ``parse_change_events``, optionally column-pruned).
     Rows with NULL key or NULL order values must be quarantined
     upstream (the runner's malformed-row path) — they are dropped
     here, not merged.

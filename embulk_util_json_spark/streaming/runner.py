@@ -22,9 +22,7 @@ from ..sources.events import (
     BASE_DATA_FIELDS,
     EXTRAS_COL,
     TABLE_COL,
-    discover_extra_fields,
     parse_change_events,
-    parse_change_events_single_pass,
 )
 from ..sinks.snapshot import ParquetSnapshotSink, _obs_metrics
 
@@ -40,17 +38,21 @@ def apply_events_batch(
     events: DataFrame,
     sink: ParquetSnapshotSink,
     batch_id: str,
-    evolve: bool = True,
     quarantine_dir: str | None = None,
     parse_fn=None,
 ) -> dict:
     """Parse one micro-batch of raw events and MERGE into the sink.
 
-    ``evolve=True`` uses the single-pass map parse: unseen ``data``
-    fields ride along in an ``_extras`` map; their names are observed
-    during the sink's write job (no discovery pre-pass, exactly one
-    scan + one shuffle per batch) and added additively via the
-    manifest.
+    ``parse_fn`` (raw events → canonical change rows) picks the wire
+    dialect; the default is the native ``parse_change_events``. Every
+    dialect ends in ``sources.events.canonical_rows``, so the sink
+    cannot tell formats apart and the exactly-once / evolution /
+    quarantine machinery is the same for all of them: unseen ``data``
+    members ride along in ``_extras``, their names are observed during
+    the sink's write job (no discovery pre-pass, exactly one scan +
+    one shuffle per batch) and added additively via the manifest; a
+    value that does not convert reads NULL instead of failing the
+    batch.
 
     Malformed envelopes (op/key NULL after permissive parse) are NOT
     pre-filtered here: a filter on parsed columns gets pushed below
@@ -59,21 +61,10 @@ def apply_events_batch(
     the junk rows ride the shuffle as a single null-key group, are
     counted by the sink's observe() (the reference's row-skippable
     DataException taxonomy → quarantine metric), and are excluded by
-    ``read()``'s null-key guard.
-
-    ``parse_fn`` (raw events → canonical change rows) swaps the
-    envelope format per feed — e.g. ``sources.debezium.
-    parse_debezium_events`` / ``parse_maxwell_events`` — while the
-    exactly-once / evolution / quarantine machinery stays identical;
-    every adapter emits the same canonical schema so the sink cannot
-    tell formats apart.
+    ``read()``'s null-key guard. ``quarantine_dir`` dead-letters their
+    raw rows.
     """
-    if parse_fn is not None:
-        changes = parse_fn(events)
-    elif evolve:
-        changes = parse_change_events_single_pass(events)
-    else:
-        changes = parse_change_events(events)
+    changes = (parse_fn or parse_change_events)(events)
     result = sink.apply(changes, batch_id)
     if (
         quarantine_dir
@@ -83,6 +74,18 @@ def apply_events_batch(
         _quarantine_malformed(events, batch_id, quarantine_dir, parse_fn)
         result["quarantined_to"] = quarantine_dir
     return result
+
+
+def _malformed_seqs(events: DataFrame, parse_fn=None) -> DataFrame:
+    """Raw ``seq`` of every row the quarantine rule rejects (``op`` or
+    the first key NULL after the parse)."""
+    parse = parse_fn or parse_change_events
+    to_raw = getattr(parse, "to_raw_seq", lambda c: c)
+    return (
+        parse(events)
+        .filter(F.col("op").isNull() | F.col("conv_id").isNull())
+        .select(to_raw(F.col("seq")).alias("seq"))
+    )
 
 
 def _quarantine_malformed(
@@ -95,32 +98,14 @@ def _quarantine_malformed(
     so clean batches (the overwhelming case) never pay the extra scan.
     Per-batch overwrite keeps replays idempotent.
 
-    With a wire-format ``parse_fn`` the bad rows are identified by
-    re-running the adapter and semi-joining the RAW rows — the dead
+    The bad rows are identified by re-running the parser (native or
+    wire-format ``parse_fn``) and semi-joining the RAW rows — the dead
     letter always carries the original wire bytes, whatever the
     format. 1:1 adapters key the semi-join on ``seq`` directly; a
     row-batching adapter (Canal's 1→N expansion) exposes
     ``to_raw_seq`` mapping its derived row seqs back to envelope
     seqs."""
-    if parse_fn is not None:
-        to_raw = getattr(parse_fn, "to_raw_seq", lambda c: c)
-        bad_seq = (
-            parse_fn(events)
-            .filter(F.col("op").isNull() | F.col("conv_id").isNull())
-            .select(to_raw(F.col("seq")).alias("seq"))
-        )
-        bad = events.join(bad_seq, "seq", "left_semi")
-    else:
-        parsed = events.select(
-            "*",
-            F.from_json(
-                F.col("event_json"),
-                "op string, data struct<conv_id:string>",
-            ).alias("_e"),
-        )
-        bad = parsed.filter(
-            F.col("_e.op").isNull() | F.col("_e.data.conv_id").isNull()
-        ).drop("_e")
+    bad = events.join(_malformed_seqs(events, parse_fn), "seq", "left_semi")
     safe = "".join(c if c.isalnum() or c in "-." else "_" for c in batch_id)
     bad.write.mode("overwrite").parquet(os.path.join(quarantine_dir, safe))
 
@@ -162,20 +147,13 @@ def replay_quarantine(
         d for d in os.listdir(quarantine_dir)
         if os.path.isdir(os.path.join(quarantine_dir, d))
     )
-    parse = parse_fn or parse_change_events_single_pass
-    to_raw = getattr(parse, "to_raw_seq", lambda c: c)
     repaired_rows = still_dead = 0
     resolved, residual_dirs = [], []
     for name in names:
         sub = os.path.join(quarantine_dir, name)
         raw = spark.read.parquet(sub)
         fixed = repair_fn(raw) if repair_fn is not None else raw
-        bad_seq = (
-            parse(fixed)
-            .filter(F.col("op").isNull() | F.col("conv_id").isNull())
-            .select(to_raw(F.col("seq")).alias("seq"))
-            .localCheckpoint()
-        )
+        bad_seq = _malformed_seqs(fixed, parse_fn).localCheckpoint()
         n_bad = bad_seq.count()
         good_raw = fixed.join(bad_seq, "seq", "left_anti")
         if n_bad:
@@ -239,7 +217,7 @@ def route_tables(
         raise ValueError("route_tables requires at least one sink")
     unrouted_cond = F.col(TABLE_COL).isNull() | ~F.col(TABLE_COL).isin(*sinks)
     obs = Observation()
-    changes = parse_change_events_single_pass(events, with_table=True).observe(
+    changes = parse_change_events(events, with_table=True).observe(
         obs,
         F.coalesce(F.sum(unrouted_cond.cast("long")), F.lit(0)).alias("unrouted"),
     )
@@ -383,7 +361,6 @@ def replay_parquet(
     events_path: str,
     sink: ParquetSnapshotSink,
     num_batches: int = 1,
-    evolve: bool = True,
     min_seq: int | None = None,
     parse_fn=None,
 ) -> list[dict]:
@@ -410,9 +387,7 @@ def replay_parquet(
             break
         batch = events.filter((F.col("seq") >= lo) & (F.col("seq") < hi))
         out.append(
-            apply_events_batch(
-                batch, sink, f"seq-{lo}-{hi}", evolve=evolve, parse_fn=parse_fn
-            )
+            apply_events_batch(batch, sink, f"seq-{lo}-{hi}", parse_fn=parse_fn)
         )
     return out
 
@@ -422,7 +397,6 @@ def replay_segments(
     segments_dir: str,
     sink: ParquetSnapshotSink,
     num_batches: int = 1,
-    evolve: bool = True,
     min_seq: int | None = None,
     parse_fn=None,
 ) -> list[dict]:
@@ -459,11 +433,7 @@ def replay_segments(
         if min_seq is not None:
             batch = batch.filter(F.col("seq") >= min_seq)
             batch_id += f"@{min_seq}"
-        out.append(
-            apply_events_batch(
-                batch, sink, batch_id, evolve=evolve, parse_fn=parse_fn
-            )
-        )
+        out.append(apply_events_batch(batch, sink, batch_id, parse_fn=parse_fn))
     return out
 
 
@@ -507,7 +477,6 @@ def stream_directory(
     sink: ParquetSnapshotSink,
     checkpoint_dir: str,
     fmt: str = "parquet",
-    evolve: bool = True,
     max_files_per_trigger: int | None = None,
     parse_fn=None,
     view=None,
@@ -550,16 +519,9 @@ def stream_directory(
 
     def handle(batch_df: DataFrame, epoch_id: int) -> None:
         batch_id = f"{stream_id}-epoch-{epoch_id}"
-        apply_events_batch(
-            batch_df, sink, batch_id, evolve=evolve, parse_fn=parse_fn
-        )
+        apply_events_batch(batch_df, sink, batch_id, parse_fn=parse_fn)
         if view is not None:
-            if parse_fn is not None:
-                touched = parse_fn(batch_df)
-            elif evolve:
-                touched = parse_change_events_single_pass(batch_df)
-            else:
-                touched = parse_change_events(batch_df)
+            touched = (parse_fn or parse_change_events)(batch_df)
             view.refresh(touched, f"{batch_id}:view")
         if on_batch is not None:
             on_batch(sink, batch_id)

@@ -39,7 +39,7 @@ def conversation_progress(changes: DataFrame) -> DataFrame:
 
     ``changes``: a *streaming* DataFrame with at least
     (conv_id, turn_idx, op) — i.e. the output of
-    ``parse_change_events_single_pass`` on a streaming source.
+    ``parse_change_events`` on a streaming source.
     """
 
     def update(

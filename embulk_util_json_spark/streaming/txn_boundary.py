@@ -70,14 +70,12 @@ class TxnBoundaryApplier:
         sink: ParquetSnapshotSink,
         work_dir: str,
         txid_col: str = "txid",
-        evolve: bool = True,
         parse_fn=None,
     ):
         self.spark = spark
         self.sink = sink
         self.work_dir = work_dir
         self.txid_col = txid_col
-        self.evolve = evolve
         self.parse_fn = parse_fn
         os.makedirs(work_dir, exist_ok=True)
 
@@ -167,7 +165,6 @@ class TxnBoundaryApplier:
                 committed,
                 self.sink,
                 f"txnb-{epoch}",
-                evolve=self.evolve,
                 parse_fn=self.parse_fn,
             )
             result["applied_rows"] = n_commit

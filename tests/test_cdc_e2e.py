@@ -11,10 +11,7 @@ from pyspark.sql import functions as F
 
 from embulk_util_json_spark.operators.lww import lww_agg, lww_salted, lww_window
 from embulk_util_json_spark.sinks.snapshot import ParquetSnapshotSink
-from embulk_util_json_spark.sources.events import (
-    discover_extra_fields,
-    parse_change_events,
-)
+from embulk_util_json_spark.sources.events import parse_change_events
 from embulk_util_json_spark.sources.generator import generate_events
 from embulk_util_json_spark.streaming.runner import (
     apply_events_batch,
@@ -235,17 +232,6 @@ def test_streaming_foreachbatch_and_checkpoint_resume(spark, tmp_path, events_ta
         )
     )
     assert_matches_oracle(sink, oracle)
-
-
-def test_discover_extra_fields(spark):
-    df = spark.createDataFrame(
-        [
-            (0, '{"op":"insert","ts":"t","data":{"conv_id":"c","turn_idx":0,"role":"r","text":"x","tool":null,"model":"m","zz":"1"}}'),
-            (1, '{"op":"insert","ts":"t","data":{"conv_id":"c","turn_idx":1,"role":"r","text":"x","tool":null}}'),
-        ],
-        "seq long, event_json string",
-    )
-    assert discover_extra_fields(df) == ["model", "zz"]
 
 
 def test_bootstrap_snapshot_handoff_bit_exact(spark, events_parquet, oracle_state, tmp_path):

@@ -430,14 +430,14 @@ def test_streaming_e2e_promotion_between_restarts(spark, tmp_path):
         patch_cols=["role", "text"], unchanged_marker=M,
     )
     write(early_wire, src / "p0.parquet")
-    q = stream_directory(spark, str(src), sink, ckpt, evolve=False)
+    q = stream_directory(spark, str(src), sink, ckpt)
     q.processAllAvailable(); q.stop()
 
     res = sink.evolve_patch_cols({"tool": "string"})
     assert res["promoted"] == ["tool"] and res["rewritten"]
 
     write(late_wire, src / "p1.parquet")
-    q = stream_directory(spark, str(src), sink, ckpt, evolve=False)
+    q = stream_directory(spark, str(src), sink, ckpt)
     q.processAllAvailable(); q.stop()
 
     got = {

@@ -327,8 +327,8 @@ def test_wire_envelope_to_patch_sink_preserves_marker_vs_null(spark):
     sink = _sink(spark, "mor")
     events = spark.createDataFrame(wire, "seq long, event_json string")
     # two micro-batches through the runner's parse → apply path
-    apply_events_batch(events.filter(F.col("seq") <= 2), sink, "b0", evolve=False)
-    apply_events_batch(events.filter(F.col("seq") > 2), sink, "b1", evolve=False)
+    apply_events_batch(events.filter(F.col("seq") <= 2), sink, "b0")
+    apply_events_batch(events.filter(F.col("seq") > 2), sink, "b1")
     assert _as_set(_visible(sink)) == {
         ("c1", 0, "user", "hello v2", None),
         ("c2", 5, "asst", "hi", None),
