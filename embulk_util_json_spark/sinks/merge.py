@@ -105,14 +105,18 @@ def merge_into(
     )
     version = manifest["version"] + 1
     if not affected:  # empty source still commits its batch_id
+        metrics = {
+            "batch_id": batch_id,
+            "version": version,
+            "merge_into": True,
+            "change_rows": 0,
+        }
         sink._commit(
-            {
-                **manifest,
-                "version": version,
-                "batch_ids": manifest["batch_ids"] + [batch_id],
-            }
+            sink._next_manifest(
+                manifest, metrics, batch_ids=manifest["batch_ids"] + [batch_id]
+            )
         )
-        return {"batch_id": batch_id, "version": version, "change_rows": 0}
+        return metrics
 
     old_paths = [p for b in affected for p in sink._paths_of(manifest, str(b))]
     if old_paths:
@@ -238,6 +242,6 @@ def merge_into(
         "wall_sec": round(time.time() - t0, 3),
     }
     return sink._finish_commit(
-        manifest, version, batch_id, buckets, merged.drop(BUCKET_COL).columns,
+        manifest, batch_id, buckets, merged.drop(BUCKET_COL).columns,
         metrics, path_stats=path_stats,
     )

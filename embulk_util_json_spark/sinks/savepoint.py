@@ -111,18 +111,21 @@ def export_savepoint(
         mode=sink.mode,
         compact_every=sink.compact_every,
     )
-    first = {
-        k: v for k, v in manifest.items() if k not in ("branched_from", "rolled_back")
-    }
     # The manifest keeps the SOURCE's version number: data paths embed
     # version numbers (``data/v00000002``), so renumbering to 1 would
     # make the importer's next apply (version 2) overwrite a copied
     # dir. Gappy version chains are already normal (vacuum leaves
     # them), so the import starting at v<N> is well-formed.
-    first.update({"savepoint_of": {
-        "root": sink.root, "branch": sink.branch, "version": version,
-    }})
-    out._commit(first)
+    out._commit(
+        out._next_manifest(
+            manifest,
+            None,
+            version=version,
+            savepoint_of={
+                "root": sink.root, "branch": sink.branch, "version": version,
+            },
+        )
+    )
     out._adopt(out.current_manifest())
     return meta
 

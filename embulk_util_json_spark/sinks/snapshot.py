@@ -67,13 +67,29 @@ BAND_COL = "_band"  # time-band subdir written by banded compaction
 META_COLS = ["op", "seq"]  # ts doubles as payload and order column
 LINEAGE_COL = "_ingest_batch"  # row lineage: writer batch id (track_lineage)
 BLOOM_SEED = 0x9747B28C  # 2nd xxhash64 stream for double-hash blooms
-# manifest fields ``_commit`` carries forward from the predecessor
-_CARRIED = (
-    "column_mapping", "column_defaults", "dropped_columns", "constraints",
-    "track_lineage",
+# per-version provenance: how ONE version came to be, never inherited
+# by the version derived from it (``_next_manifest``)
+_MARKERS = ("branched_from", "rolled_back", "cloned_from", "savepoint_of")
+# the kinds of record a version appends to ``applies``, each named by
+# its flag key; a batch record (``batch_id``, no flag) is an "apply"
+_KINDS = (
+    "compact", "compact_minor", "rebucket", "restore", "rewrite", "purge",
+    "evolve_patch_cols", "analyze_blooms", "merge_into", "rollback",
+    "rename_column", "add_column", "drop_column", "add_constraint",
+    "drop_constraint",
 )
+_MAX_APPLIES = 1000  # records kept in a manifest's ``applies`` log
 # per-path maps, keyed by chain path; ``_commit`` merges and prunes them
 _PATH_MAPS = ("file_stats", "key_stats", "col_stats", "blooms")
+
+
+def _record_kind(record: dict) -> str:
+    """The kind an ``applies`` record names: its one ``_KINDS`` flag,
+    or ``"apply"`` for a batch record."""
+    kinds = [k for k in _KINDS if record.get(k)]
+    if len(kinds) > 1 or (not kinds and "batch_id" not in record):
+        raise ValueError(f"applies record names no single kind: {record}")
+    return kinds[0] if kinds else "apply"
 
 
 _INT_RANK = {"tinyint": 0, "smallint": 1, "int": 2, "bigint": 3}
@@ -442,14 +458,12 @@ class ParquetSnapshotSink:
         if child.current_version() > 0:
             raise ValueError(f"branch {name!r} already exists")
         child._commit(
-            {
-                **src,
-                "version": 1,
-                "branched_from": {
-                    "branch": self.branch,
-                    "version": src["version"],
-                },
-            }
+            self._next_manifest(
+                src,
+                None,
+                version=1,
+                branched_from={"branch": self.branch, "version": src["version"]},
+            )
         )
         child._adopt(child.current_manifest())
         return child
@@ -697,29 +711,27 @@ class ParquetSnapshotSink:
         def _rekey(d: dict | None) -> dict:
             return {path_map[p]: v for p, v in (d or {}).items() if p in path_map}
 
-        manifest = {
-            **src,
-            "version": 1,
-            "buckets": {
-                b: [path_map[p] for p in self._paths_of(src, b)]
-                for b in src["buckets"]
-            },
-            "file_stats": _rekey(src.get("file_stats")),
-            "key_stats": _rekey(src.get("key_stats")),
-            "col_stats": _rekey(src.get("col_stats")),
-            "blooms": _rekey(src.get("blooms")),
-            "cloned_from": {
-                "root": self.root,
-                "branch": self.branch,
-                "version": src["version"],
-                "deep": deep,
-            },
-        }
-        # per-commit provenance markers describe SOURCE history, not
-        # the clone's own log — they must not retrigger guards here
-        for marker in ("rolled_back", "branched_from"):
-            manifest.pop(marker, None)
-        dest._commit(manifest)
+        dest._commit(
+            self._next_manifest(
+                src,
+                None,
+                version=1,
+                buckets={
+                    b: [path_map[p] for p in self._paths_of(src, b)]
+                    for b in src["buckets"]
+                },
+                file_stats=_rekey(src.get("file_stats")),
+                key_stats=_rekey(src.get("key_stats")),
+                col_stats=_rekey(src.get("col_stats")),
+                blooms=_rekey(src.get("blooms")),
+                cloned_from={
+                    "root": self.root,
+                    "branch": self.branch,
+                    "version": src["version"],
+                    "deep": deep,
+                },
+            )
+        )
         dest._adopt(dest.current_manifest())
         if pin_tag and not deep:
             tag = f"clone-{os.path.basename(os.path.normpath(dest_root))}-v{src['version']}"
@@ -752,24 +764,16 @@ class ParquetSnapshotSink:
         cur = self.current_version()
         if not 0 < to_version <= cur:
             raise ValueError(f"no committed version {to_version}")
-        target = self.manifest_at(to_version)
-        new = {
-            k: v for k, v in target.items() if k not in ("branched_from", "rolled_back")
-        }
-        new.update(
-            {
-                "version": cur + 1,
-                "rolled_back": {"from": cur, "to": to_version},
-                # explicit (possibly empty) so _commit's fill-if-absent
-                # carry cannot resurrect ALTER TABLE state committed
-                # AFTER the restore point — a rollback across a rename
-                # restores the old names, across a drop restores the
-                # column, across an add removes it again
-                "column_mapping": target.get("column_mapping", {}),
-                "column_defaults": target.get("column_defaults", {}),
-                "dropped_columns": target.get("dropped_columns", []),
-                "constraints": target.get("constraints", {}),
-            }
+        # derived from the TARGET: its ALTER state, batch ids and log,
+        # plus this version's rollback record — a rollback across a
+        # rename restores the old names, across a drop restores the
+        # column, across an add removes it again
+        rolled_back = {"from": cur, "to": to_version}
+        new = self._next_manifest(
+            self.manifest_at(to_version),
+            {"rollback": True, **rolled_back},
+            version=cur + 1,
+            rolled_back=rolled_back,
         )
         self._commit(new)
         self._adopt(new)
@@ -825,19 +829,11 @@ class ParquetSnapshotSink:
             new_mapping[new] = phys
         version = m["version"] + 1
         self._commit(
-            {
-                **{
-                    k: v
-                    for k, v in m.items()
-                    if k not in (
-                        "branched_from", "rolled_back", "renamed",
-                        "added", "dropped",
-                    )
-                },
-                "version": version,
-                "column_mapping": new_mapping,
-                "renamed": {"from": old, "to": new},
-            }
+            self._next_manifest(
+                m,
+                {"rename_column": True, "from": old, "to": new},
+                column_mapping=new_mapping,
+            )
         )
         return {"version": version, "from": old, "to": new, "physical": phys}
 
@@ -907,18 +903,18 @@ class ParquetSnapshotSink:
         if default is not None:
             defaults[phys] = {"t": type_ddl, "v": default}
         self._commit(
-            {
-                **{
-                    k: v
-                    for k, v in m.items()
-                    if k not in ("branched_from", "rolled_back", "renamed", "added", "dropped")
+            self._next_manifest(
+                m,
+                {
+                    "add_column": True,
+                    "column": name,
+                    "type": type_ddl,
+                    "default": default,
                 },
-                "version": version,
-                "column_mapping": new_mapping,
-                "column_defaults": defaults,
-                "schema_fields": sorted(set(m.get("schema_fields", [])) | {phys}),
-                "added": {"column": name, "type": type_ddl, "default": default},
-            }
+                column_mapping=new_mapping,
+                column_defaults=defaults,
+                schema_fields=sorted(set(m.get("schema_fields", [])) | {phys}),
+            )
         )
         self._adopt(self.current_manifest())
         return {"version": version, "column": name, "physical": phys}
@@ -954,29 +950,16 @@ class ParquetSnapshotSink:
             c: d for c, d in m.get("column_defaults", {}).items() if c != phys
         }
         self._commit(
-            {
-                **{
-                    k: v
-                    for k, v in m.items()
-                    if k not in ("branched_from", "rolled_back", "renamed", "added", "dropped")
-                },
-                "version": version,
-                "column_mapping": {
-                    l: p for l, p in mapping.items() if l != name
-                },
-                "column_defaults": defaults,
-                "dropped_columns": sorted(dropped | {phys}),
-                "schema_fields": sorted(
-                    set(m.get("schema_fields", [])) - {phys}
-                ),
-                "extra_fields": sorted(
-                    set(m.get("extra_fields", [])) - {phys}
-                ),
-                "stats_cols": [
-                    c for c in m.get("stats_cols", []) if c != phys
-                ],
-                "dropped": {"column": name, "physical": phys},
-            }
+            self._next_manifest(
+                m,
+                {"drop_column": True, "column": name, "physical": phys},
+                column_mapping={l: p for l, p in mapping.items() if l != name},
+                column_defaults=defaults,
+                dropped_columns=sorted(dropped | {phys}),
+                schema_fields=sorted(set(m.get("schema_fields", [])) - {phys}),
+                extra_fields=sorted(set(m.get("extra_fields", [])) - {phys}),
+                stats_cols=[c for c in m.get("stats_cols", []) if c != phys],
+            )
         )
         self._adopt(self.current_manifest())
         return {"version": version, "column": name, "physical": phys}
@@ -1052,18 +1035,11 @@ class ParquetSnapshotSink:
         cons[name] = {"expr": expr, "cols": refs}
         version = m["version"] + 1
         self._commit(
-            {
-                **{
-                    k: v
-                    for k, v in m.items()
-                    if k not in (
-                        "branched_from", "rolled_back", "renamed",
-                        "added", "dropped",
-                    )
-                },
-                "version": version,
-                "constraints": cons,
-            }
+            self._next_manifest(
+                m,
+                {"add_constraint": True, "name": name, "expr": expr},
+                constraints=cons,
+            )
         )
         return {"version": version, "name": name, "expr": expr, "cols": refs}
 
@@ -1076,18 +1052,9 @@ class ParquetSnapshotSink:
         del cons[name]
         version = m["version"] + 1
         self._commit(
-            {
-                **{
-                    k: v
-                    for k, v in m.items()
-                    if k not in (
-                        "branched_from", "rolled_back", "renamed",
-                        "added", "dropped",
-                    )
-                },
-                "version": version,
-                "constraints": cons,
-            }
+            self._next_manifest(
+                m, {"drop_constraint": True, "name": name}, constraints=cons
+            )
         )
         return {"version": version, "name": name}
 
@@ -1169,13 +1136,10 @@ class ParquetSnapshotSink:
         return m
 
     def _commit(self, manifest: dict, path_stats: dict | None = None) -> None:
-        """Commit one manifest version. This is the ONE place that owns,
-        for every commit site:
+        """Commit one manifest version — built by ``_next_manifest``,
+        which carries the predecessor's state forward. This is the ONE
+        place that owns, for every commit site:
 
-        - carry-forward of the predecessor's ALTER state (column
-          mapping, defaults, drops, constraints, lineage flag) and of
-          its per-path maps (``file_stats``, ``key_stats``,
-          ``col_stats``, ``blooms``) when the new manifest omits them;
         - merging ``path_stats`` — the footer zone maps of the paths
           this commit adds, as ``_write_buckets`` returns them
           (``{path: {"ts", "key", "cols"}}``) — into ``file_stats`` /
@@ -1194,16 +1158,6 @@ class ParquetSnapshotSink:
           re-read + retry (the Iceberg optimistic-concurrency protocol;
           the engine's runners are single-writer, so a conflict here
           always means a misconfigured second writer)."""
-        # Fill-if-absent, so sites that DO set a field (rename_column,
-        # rollback's restore, branch fork, clone) win. Sound under OCC:
-        # a successful link means the current manifest read here IS
-        # this commit's predecessor.
-        absent = [f for f in (*_CARRIED, *_PATH_MAPS) if f not in manifest]
-        if absent:
-            prev = self.current_manifest() or {}
-            for f in absent:
-                if prev.get(f):
-                    manifest[f] = prev[f]
         referenced = {
             p
             for b in manifest.get("buckets", {})
@@ -1319,29 +1273,30 @@ class ParquetSnapshotSink:
     def history(self) -> DataFrame:
         """The Iceberg ``history``/``snapshots`` metadata-table
         analogue: one row per entry in the current manifest's applies
-        log — data batches AND maintenance commits (compact,
-        compact_minor, rebucket, rollback, publish, ...) in commit
-        order, with a ``kind`` discriminator and the entry's
-        non-standard fields folded into a JSON ``detail`` column (the
-        log's records are heterogeneous by design; forcing one wide
-        schema would lose fields silently). Driver-side manifest JSON
-        → createDataFrame — metadata-sized, no table scan."""
+        log, in commit order — every version of the table's own log
+        appends exactly one entry, so this lists data batches
+        (``apply``: apply, publish, cherry-pick, retention) and every
+        other commit under its own ``kind``: ``compact``,
+        ``compact_minor``, ``rebucket``, ``restore`` (restore_buckets),
+        ``rewrite``, ``purge``, ``evolve_patch_cols``,
+        ``analyze_blooms``, ``merge_into``, ``rollback``,
+        ``rename_column``, ``add_column``, ``drop_column``,
+        ``add_constraint``, ``drop_constraint``. After a rollback the
+        log is the restored version's log plus the rollback entry. The
+        entry's non-standard fields fold into a JSON ``detail`` column
+        (the log's records are heterogeneous by design; forcing one
+        wide schema would lose fields silently). Driver-side manifest
+        JSON → createDataFrame — metadata-sized, no table scan."""
         m = self.current_manifest()
         rows = []
         std = ("version", "batch_id", "change_rows", "wall_sec")
         for i, a in enumerate((m or {}).get("applies", [])):
-            kind = "apply"
-            for k in ("compact_minor", "compact", "rebucket", "rollback",
-                      "publish", "import"):
-                if a.get(k):
-                    kind = k
-                    break
             detail = {k: v for k, v in a.items() if k not in std}
             rows.append(
                 (
                     i,
                     a.get("version"),
-                    kind,
+                    _record_kind(a),
                     a.get("batch_id"),
                     a.get("change_rows"),
                     float(a.get("wall_sec") or 0.0),
@@ -1457,6 +1412,28 @@ class ParquetSnapshotSink:
             "bucket int, chain_files int, rows_landed long, "
             "landed_share double, compact_recommended boolean",
         )
+
+    @staticmethod
+    def _next_manifest(base: dict, record: dict | None, **fields) -> dict:
+        """THE derivation of a manifest from its predecessor, for every
+        commit: a copy of ``base`` (so everything a version does not
+        change carries forward — ALTER state, patch config, per-path
+        maps) minus the per-version provenance ``_MARKERS``, at
+        ``base``'s version + 1, with ``fields`` set over it, and with
+        ``record`` — this version's one entry of its own log, whose
+        kind ``_record_kind`` names — appended to ``applies`` (capped
+        at ``_MAX_APPLIES``). ``record=None`` starts a new log from a
+        copy (fork, clone, savepoint): those pass their own ``version``
+        and provenance marker and log nothing."""
+        new = {k: v for k, v in base.items() if k not in _MARKERS}
+        new["version"] = base["version"] + 1
+        new.update(fields)
+        if record is not None:
+            _record_kind(record)
+            new["applies"] = (
+                base["applies"] + [{**record, "version": new["version"]}]
+            )[-_MAX_APPLIES:]
+        return new
 
     def _empty_manifest(self) -> dict:
         return {
@@ -2321,7 +2298,7 @@ class ParquetSnapshotSink:
         )
 
     def _finish_commit(
-        self, manifest: dict, version: int, batch_id: str, buckets: dict,
+        self, manifest: dict, batch_id: str, buckets: dict,
         merged_cols: list[str], metrics: dict, obs=None,
         path_stats: dict | None = None,
     ) -> dict:
@@ -2332,20 +2309,20 @@ class ParquetSnapshotSink:
         if obs is not None:
             extra_fields |= set((_obs_metrics(obs) or {}).get("extra_keys") or [])
         self._commit(
-            {
-                "version": version,
-                "num_buckets": self.num_buckets,
-                "batch_ids": manifest["batch_ids"] + [batch_id],
-                "buckets": buckets,
-                "schema_fields": schema_fields,
-                "extra_fields": sorted(extra_fields),
-                "applies": (manifest["applies"] + [metrics])[-1000:],
-                "patch_cols": self.patch_cols or [],
-                "unchanged_marker": self.unchanged_marker,
-                "patch_types": self.patch_types,
-                "stats_cols": self.stats_cols,
-                "track_lineage": self.track_lineage,
-            },
+            self._next_manifest(
+                manifest,
+                metrics,
+                num_buckets=self.num_buckets,
+                batch_ids=manifest["batch_ids"] + [batch_id],
+                buckets=buckets,
+                schema_fields=schema_fields,
+                extra_fields=sorted(extra_fields),
+                patch_cols=self.patch_cols or [],
+                unchanged_marker=self.unchanged_marker,
+                patch_types=self.patch_types,
+                stats_cols=self.stats_cols,
+                track_lineage=self.track_lineage,
+            ),
             path_stats=path_stats,
         )
         return metrics
@@ -2401,14 +2378,13 @@ class ParquetSnapshotSink:
         )
         version = manifest["version"] + 1
         if not affected:  # empty batch still commits its batch_id
+            metrics = {"batch_id": batch_id, "version": version, "change_rows": 0}
             self._commit(
-                {
-                    **manifest,
-                    "version": version,
-                    "batch_ids": manifest["batch_ids"] + [batch_id],
-                }
+                self._next_manifest(
+                    manifest, metrics, batch_ids=manifest["batch_ids"] + [batch_id]
+                )
             )
-            return {"batch_id": batch_id, "version": version, "change_rows": 0}
+            return metrics
 
         old_paths = [
             p for b in affected for p in self._paths_of(manifest, str(b))
@@ -2445,7 +2421,7 @@ class ParquetSnapshotSink:
             "events_per_sec": round(change_rows / max(time.time() - t0, 1e-9), 1),
         }
         return self._finish_commit(
-            manifest, version, batch_id, buckets, merged.columns, metrics, obs,
+            manifest, batch_id, buckets, merged.columns, metrics, obs,
             path_stats=path_stats,
         )
 
@@ -2484,7 +2460,7 @@ class ParquetSnapshotSink:
             "events_per_sec": round(change_rows / max(time.time() - t0, 1e-9), 1),
         }
         result = self._finish_commit(
-            manifest, version, batch_id, buckets, delta.columns, metrics, obs,
+            manifest, batch_id, buckets, delta.columns, metrics, obs,
             path_stats=path_stats,
         )
         # Bound read amplification: collapse chains that grew too deep.
@@ -3268,21 +3244,16 @@ class ParquetSnapshotSink:
         }
         buckets.update(chains)
         self._commit(
-            {
-                **manifest,
-                "version": version,
-                "buckets": buckets,
-                "applies": manifest["applies"]
-                + [
-                    {
-                        "compact": True,
-                        "version": version,
-                        "buckets_compacted": len(target),
-                        "ts_bands": (len(edges_us) + 1) if ts_bands else None,
-                        "wall_sec": round(time.time() - t0, 3),
-                    }
-                ],
-            },
+            self._next_manifest(
+                manifest,
+                {
+                    "compact": True,
+                    "buckets_compacted": len(target),
+                    "ts_bands": (len(edges_us) + 1) if ts_bands else None,
+                    "wall_sec": round(time.time() - t0, 3),
+                },
+                buckets=buckets,
+            ),
             path_stats=path_stats,
         )
         return {"version": version, "buckets_compacted": len(target)}
@@ -3431,22 +3402,17 @@ class ParquetSnapshotSink:
         merged_levels = sum(len(ps) for ps in deltas_of.values())
         kept_levels = sum(len(ps) for ps in base_of.values())
         self._commit(
-            {
-                **manifest,
-                "version": version,
-                "buckets": buckets,
-                "applies": manifest["applies"]
-                + [
-                    {
-                        "compact_minor": True,
-                        "version": version,
-                        "buckets_compacted": len(deltas_of),
-                        "delta_levels_merged": merged_levels,
-                        "base_levels_untouched": kept_levels,
-                        "wall_sec": round(time.time() - t0, 3),
-                    }
-                ],
-            },
+            self._next_manifest(
+                manifest,
+                {
+                    "compact_minor": True,
+                    "buckets_compacted": len(deltas_of),
+                    "delta_levels_merged": merged_levels,
+                    "base_levels_untouched": kept_levels,
+                    "wall_sec": round(time.time() - t0, 3),
+                },
+                buckets=buckets,
+            ),
             path_stats=path_stats,
         )
         return {
@@ -3499,22 +3465,17 @@ class ParquetSnapshotSink:
                 df, version, self.num_buckets, pre_partitioned=True
             )
             self._commit(
-                {
-                    **manifest,
-                    "version": version,
-                    "num_buckets": self.num_buckets,
-                    "buckets": chains,
-                    "applies": manifest["applies"]
-                    + [
-                        {
-                            "rebucket": True,
-                            "version": version,
-                            "from_num_buckets": old_n,
-                            "to_num_buckets": self.num_buckets,
-                            "wall_sec": round(time.time() - t0, 3),
-                        }
-                    ],
-                },
+                self._next_manifest(
+                    manifest,
+                    {
+                        "rebucket": True,
+                        "from_num_buckets": old_n,
+                        "to_num_buckets": self.num_buckets,
+                        "wall_sec": round(time.time() - t0, 3),
+                    },
+                    num_buckets=self.num_buckets,
+                    buckets=chains,
+                ),
                 path_stats=path_stats,
             )
         except BaseException:
@@ -3572,20 +3533,15 @@ class ParquetSnapshotSink:
         # after the restore — it simply drops out of the manifest
         buckets.update(chains)
         self._commit(
-            {
-                **manifest,
-                "version": version,
-                "buckets": buckets,
-                "applies": manifest["applies"]
-                + [
-                    {
-                        "restore": True,
-                        "version": version,
-                        "buckets_restored": len(target),
-                        "wall_sec": round(time.time() - t0, 3),
-                    }
-                ],
-            },
+            self._next_manifest(
+                manifest,
+                {
+                    "restore": True,
+                    "buckets_restored": len(target),
+                    "wall_sec": round(time.time() - t0, 3),
+                },
+                buckets=buckets,
+            ),
             path_stats=path_stats,
         )
         return {"version": version, "buckets_restored": len(target)}
@@ -3659,21 +3615,12 @@ class ParquetSnapshotSink:
         promote = sorted(c for c in new if c in stored or c in extras)
         t0 = time.time()
         version = manifest["version"] + 1
-        new_manifest = {
-            **manifest,
-            "version": version,
+        fields = {
             "patch_cols": sorted(set(have) | set(new)),
             "unchanged_marker": marker,
             "patch_types": {**self.patch_types, **new},
-            "applies": manifest["applies"]
-            + [
-                {
-                    "evolve_patch_cols": sorted(new),
-                    "promoted": promote,
-                    "version": version,
-                }
-            ],
         }
+        record = {"evolve_patch_cols": sorted(new), "promoted": promote}
         path_stats = None
         if promote and manifest["buckets"]:
             # physical promotion rewrite: collapse under OLD config,
@@ -3705,15 +3652,16 @@ class ParquetSnapshotSink:
                 marker,
                 absent_if=F.col("op") == "delete",
             )
-            new_manifest["buckets"], _, path_stats = self._write_buckets(
+            fields["buckets"], _, path_stats = self._write_buckets(
                 df.withColumn(BUCKET_COL, self._bucket_expr()),
                 version,
                 self.num_buckets,
             )
-            new_manifest["schema_fields"] = sorted(
+            fields["schema_fields"] = sorted(
                 (set(manifest["schema_fields"]) | set(df.columns)) - {BUCKET_COL}
             )
-            new_manifest["applies"][-1]["wall_sec"] = round(time.time() - t0, 3)
+            record["wall_sec"] = round(time.time() - t0, 3)
+        new_manifest = self._next_manifest(manifest, record, **fields)
         self._commit(new_manifest, path_stats=path_stats)
         self._adopt(new_manifest)
         return {
@@ -3773,20 +3721,15 @@ class ParquetSnapshotSink:
             self.num_buckets,
         )
         self._commit(
-            {
-                **manifest,
-                "version": version,
-                "buckets": chains,
-                "applies": manifest["applies"]
-                + [
-                    {
-                        "rewrite": True,
-                        "version": version,
-                        "scoped": where is not None,
-                        "wall_sec": round(time.time() - t0, 3),
-                    }
-                ],
-            },
+            self._next_manifest(
+                manifest,
+                {
+                    "rewrite": True,
+                    "scoped": where is not None,
+                    "wall_sec": round(time.time() - t0, 3),
+                },
+                buckets=chains,
+            ),
             path_stats=path_stats,
         )
         return {"version": version, "rewritten": True}
@@ -3926,21 +3869,16 @@ class ParquetSnapshotSink:
         buckets.update(chains)
         purged = int((_obs_metrics(obs) or {}).get("purged_rows") or 0)
         self._commit(
-            {
-                **manifest,
-                "version": version,
-                "buckets": buckets,
-                "applies": manifest["applies"]
-                + [
-                    {
-                        "purge": True,
-                        "version": version,
-                        "purged_rows": purged,
-                        "buckets_rewritten": len(target),
-                        "wall_sec": round(time.time() - t0, 3),
-                    }
-                ],
-            },
+            self._next_manifest(
+                manifest,
+                {
+                    "purge": True,
+                    "purged_rows": purged,
+                    "buckets_rewritten": len(target),
+                    "wall_sec": round(time.time() - t0, 3),
+                },
+                buckets=buckets,
+            ),
             path_stats=path_stats,
         )
         out = {
@@ -4076,21 +4014,18 @@ class ParquetSnapshotSink:
                 "dt": dt,
                 "b64": base64.b64encode(bytes(ba)).decode(),
             }
-        new = {
-            k: v
-            for k, v in manifest.items()
-            if k not in ("branched_from", "rolled_back")
-        }
-        new.update({"version": manifest["version"] + 1, "blooms": blooms})
-        self._commit(new)
-        self._adopt(new)
-        return {
-            "version": new["version"],
+        out = {
             "elements_bloomed": len(sets),
             "bits": bits,
             "hashes": hashes,
             "wall_sec": round(time.time() - t0, 3),
         }
+        new = self._next_manifest(
+            manifest, {"analyze_blooms": True, **out}, blooms=blooms
+        )
+        self._commit(new)
+        self._adopt(new)
+        return {"version": new["version"], **out}
 
     def _bloom_probe_positions(
         self, manifest: dict, where, conjs

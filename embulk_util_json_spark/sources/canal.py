@@ -66,7 +66,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F, types as T
 
 from .debezium import _native_parsed
-from .events import canonical_rows
+from .events import canonical_rows, epoch_timestamp
 
 _MAP = T.MapType(T.StringType(), T.StringType())
 
@@ -126,7 +126,7 @@ def parse_canal_events(
         .when(F.col("_e.type") == "UPDATE", F.lit("update"))
         .when(F.col("_e.type") == "DELETE", F.lit("delete"))
     )  # no otherwise → NULL op = quarantine
-    ts = F.timestamp_millis(F.coalesce(F.col("_e.es"), F.col("_e.ts")))
+    ts = epoch_timestamp(F.coalesce(F.col("_e.es"), F.col("_e.ts")), "ms")
     return canonical_rows(rows, op, ts, F.col("_row"), F.col("_e.table"), with_table)
 
 
@@ -162,7 +162,7 @@ def to_canal_json(
         .when(F.col("_e.op") == "update", F.lit("UPDATE"))
         .when(F.col("_e.op") == "delete", F.lit("DELETE"))
     )
-    ms = F.unix_millis(F.to_timestamp(F.col("_e.ts")))
+    ms = F.unix_millis(F.try_to_timestamp(F.col("_e.ts")))
     rows = parsed.select(
         "seq",
         typ.alias("_type"),

@@ -64,7 +64,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
-from .events import canonical_rows
+from .events import canonical_rows, epoch_timestamp
 
 _MAP = T.MapType(T.StringType(), T.StringType())
 
@@ -123,8 +123,8 @@ def parse_debezium_events(
     )  # no otherwise → NULL op = quarantine, same as a malformed row
     ts = F.coalesce(
         F.timestamp_micros(F.col("_e.source.ts_us")),
-        F.timestamp_millis(F.col("_e.source.ts_ms")),
-        F.timestamp_millis(F.col("_e.ts_ms")),
+        epoch_timestamp(F.col("_e.source.ts_ms"), "ms"),
+        epoch_timestamp(F.col("_e.ts_ms"), "ms"),
     )
     data = F.coalesce(F.col("_e.after"), F.col("_e.before"))
     return canonical_rows(parsed, op, ts, data, F.col("_e.source.table"), with_table)
@@ -151,7 +151,7 @@ def parse_maxwell_events(
         .when(F.col("_e.type") == "update", F.lit("update"))
         .when(F.col("_e.type") == "delete", F.lit("delete"))
     )
-    ts = F.timestamp_seconds(F.col("_e.ts"))
+    ts = epoch_timestamp(F.col("_e.ts"), "s")
     return canonical_rows(
         parsed, op, ts, F.col("_e.data"), F.col("_e.table"), with_table
     )
@@ -191,7 +191,7 @@ def to_debezium_json(
         .when(F.col("_e.op") == "update", F.lit("u"))
         .when(is_del, F.lit("d"))
     )
-    ts = F.to_timestamp(F.col("_e.ts"))
+    ts = F.try_to_timestamp(F.col("_e.ts"))
     envelope = F.to_json(
         F.struct(
             F.when(is_del, F.col("_e.data")).alias("before"),
@@ -224,7 +224,7 @@ def to_maxwell_json(
             F.lit("transcripts_db").alias("database"),
             F.col("_e.table").alias("table"),
             op.alias("type"),
-            F.unix_timestamp(F.to_timestamp(F.col("_e.ts"))).alias("ts"),
+            F.unix_timestamp(F.try_to_timestamp(F.col("_e.ts"))).alias("ts"),
             F.col("seq").alias("xid"),
             F.col("_e.data").alias("data"),
         )

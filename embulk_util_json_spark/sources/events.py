@@ -26,7 +26,9 @@ A value that does not convert does not fail the batch. Conversions
 run in try mode (SQL ``try_cast`` / ``try_to_timestamp``), so under
 ANSI SQL a member such as ``"turn_idx":"zz"``, ``1.5`` or ``2^40``, or
 an unparseable ``ts``, reads NULL instead of raising
-``CAST_INVALID_INPUT`` — the row-skippable reading of the reference's
+``CAST_INVALID_INPUT``; an epoch event time outside Spark's timestamp
+range reads NULL through :func:`epoch_timestamp` instead of failing
+with ``long overflow`` — the row-skippable reading of the reference's
 JsonParseException taxonomy (JsonParseException.java:24-43). The
 quarantine rule: a row is malformed when ``op`` or the first key
 column is NULL (the sink counts it, ``read()`` never shows
@@ -60,6 +62,28 @@ _CANONICAL_DATA = [
     f"try_cast(_d['{n}'] AS {t.simpleString()}) AS `{n}`"
     for n, t in BASE_DATA_FIELDS
 ] + [f"map_filter(_d, (k, v) -> NOT k IN ({_BASE_NAMES})) AS `{EXTRAS_COL}`"]
+
+
+# Spark's supported timestamp range, 0001-01-01 to 9999-12-31 UTC, in
+# epoch seconds; and per epoch unit, (units per second, conversion)
+_TS_MIN_S, _TS_MAX_S = -62135596800, 253402300799
+_EPOCH_UNITS = {
+    "s": (1, F.timestamp_seconds),
+    "ms": (1000, F.timestamp_millis),
+}
+
+
+def epoch_timestamp(epoch: Column, unit: str) -> Column:
+    """An epoch number in ``unit`` (``"s"`` or ``"ms"``) as a
+    timestamp, NULL outside Spark's timestamp range. The bare
+    ``timestamp_seconds`` / ``timestamp_millis`` multiply into epoch
+    microseconds and fail the task with ``long overflow`` on a value
+    such as ``99999999999999999``, under ANSI SQL or not; a wire
+    event time must read NULL like any other value that does not
+    convert."""
+    per_s, convert = _EPOCH_UNITS[unit]
+    lo, hi = _TS_MIN_S * per_s, (_TS_MAX_S + 1) * per_s - 1
+    return F.when(epoch.between(lo, hi), convert(epoch))
 
 
 def canonical_rows(

@@ -73,7 +73,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from .debezium import _native_parsed
-from .events import BASE_DATA_FIELDS, KEY_COLS, canonical_rows
+from .events import BASE_DATA_FIELDS, KEY_COLS, canonical_rows, epoch_timestamp
 
 _MAP = T.MapType(T.StringType(), T.StringType())
 
@@ -172,8 +172,8 @@ def _ts_expr():
     # Timestamp.t).
     return F.coalesce(
         F.expr("try_cast(_e.wallTime.`$date` AS TIMESTAMP)"),
-        F.timestamp_seconds(
-            F.col("_e.clusterTime").getField("$timestamp").getField("t")
+        epoch_timestamp(
+            F.col("_e.clusterTime").getField("$timestamp").getField("t"), "s"
         ),
     )
 
@@ -306,7 +306,7 @@ def to_mongo_changestream_json(
         .when(is_upd, F.lit("update"))
         .when(is_del, F.lit("delete"))
     )
-    ts = F.to_timestamp(F.col("_e.ts"))
+    ts = F.try_to_timestamp(F.col("_e.ts"))
     dk = F.map_filter(data, lambda k, _v: k.isin(*KEY_COLS))
     envelope = F.to_json(
         F.struct(

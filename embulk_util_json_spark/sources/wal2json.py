@@ -264,7 +264,7 @@ def to_wal2json_json(
             F.lit("public").alias("schema"),
             F.coalesce(F.col("_e.table"), F.lit("transcripts")).alias("table"),
             F.concat(
-                F.date_format(F.to_timestamp(F.col("_e.ts")), "yyyy-MM-dd HH:mm:ss.SSSSSS"),
+                F.date_format(F.try_to_timestamp(F.col("_e.ts")), "yyyy-MM-dd HH:mm:ss.SSSSSS"),
                 F.lit("+00"),
             ).alias("timestamp"),
             F.when(~is_del, cols).alias("columns"),

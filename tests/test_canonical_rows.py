@@ -8,6 +8,9 @@ Contract under test:
   instead of failing the batch, on the native apply path and on the
   Debezium and Mongo-patch adapters; the quarantine rule (``op`` or
   the first key NULL) is unchanged;
+- an epoch event time no timestamp can hold reads NULL in the Maxwell,
+  Debezium, Canal and Mongo adapters, and the rewrap fixtures read an
+  unparseable native ``ts`` as NULL;
 - an unknown ``data`` member reaches ``read()`` as a column through
   every native entry point: segment replay, the ingest facade over a
   binlog or a Kafka-shaped frame, ``parse_kafka_events`` with its
@@ -153,6 +156,74 @@ def test_bad_values_read_null_in_mongo_patch_adapter(ansi):
     assert len(rows) == len(MIXED)
     assert sum(r.op is None for r in rows) == 1
     _assert_bad_values_read_null([r for r in rows if r.op is not None])
+
+
+# an epoch event time no timestamp can hold: ×10^6 overflows a long
+EPOCH_OVERFLOW = 99999999999999999
+GOOD_S = 1709287200  # 2024-03-01 10:00:00 UTC
+
+
+def _epoch_wire(dialect, conv, t_s, raw=None):
+    """One insert of ``conv`` in ``dialect``'s wire format with event
+    time ``t_s`` epoch seconds, or the raw epoch number ``raw``."""
+    data = {"conv_id": conv, "turn_idx": 0, "role": "u", "text": conv, "tool": None}
+    ms = t_s * 1000 if raw is None else raw
+    sec = t_s if raw is None else raw
+    return {
+        "maxwell": {"table": "t", "type": "insert", "ts": sec, "data": data},
+        "debezium": {"op": "c", "after": data, "source": {"ts_ms": ms}},
+        "canal": {"table": "t", "type": "INSERT", "isDdl": False, "es": ms,
+                  "ts": ms, "data": [data]},
+        "mongo": {"operationType": "insert",
+                  "clusterTime": {"$timestamp": {"t": sec, "i": 1}},
+                  "documentKey": {"conv_id": conv, "turn_idx": 0},
+                  "fullDocument": data},
+    }[dialect]
+
+
+@pytest.mark.parametrize("dialect", ["canal", "debezium", "maxwell", "mongo"])
+def test_epoch_overflow_reads_null(ansi, dialect):
+    """An epoch event time outside the timestamp range reads NULL (the
+    bare conversion fails the task with ``long overflow``); the other
+    rows keep their time."""
+    from embulk_util_json_spark.sources.canal import parse_canal_events
+    from embulk_util_json_spark.sources.debezium import (
+        parse_debezium_events,
+        parse_maxwell_events,
+    )
+    from embulk_util_json_spark.sources.mongo import parse_mongo_changestream
+
+    parse = {
+        "canal": parse_canal_events,
+        "debezium": parse_debezium_events,
+        "maxwell": parse_maxwell_events,
+        "mongo": parse_mongo_changestream,
+    }[dialect]
+    wire = [
+        (1, json.dumps(_epoch_wire(dialect, "good", GOOD_S))),
+        (2, json.dumps(_epoch_wire(dialect, "bad", 0, raw=EPOCH_OVERFLOW))),
+    ]
+    rows = parse(
+        ansi.createDataFrame(wire, "seq long, event_json string")
+    ).collect()
+    got = {r.conv_id: r for r in rows}
+    assert set(got) == {"good", "bad"}
+    assert got["good"].ts.timestamp() == GOOD_S
+    assert got["bad"].ts is None and got["bad"].op == "insert"
+
+
+def test_rewrap_reads_bad_ts_as_null(ansi):
+    """A rewrap fixture turns a native ``ts`` that does not parse into a
+    NULL event time under ANSI SQL instead of failing the job."""
+    from embulk_util_json_spark.sources.debezium import to_debezium_json
+
+    events = ansi.createDataFrame(
+        [_native_env(1, "c1", 0), _native_env(2, "c2", 0, ts="not a time")],
+        "seq long, event_json string",
+    )
+    out = {r.seq: json.loads(r.event_json) for r in to_debezium_json(events).collect()}
+    assert out[1]["source"]["ts_ms"] is not None
+    assert "ts_ms" not in out[2]["source"] and out[2]["after"]["conv_id"] == "c2"
 
 
 # ---- schema evolution through every native entry point ------------------

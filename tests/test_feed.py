@@ -144,3 +144,48 @@ def test_vacuum_protects_lagging_cursor(spark, tmp_path):
     c.reset(0)
     ch3, _ = c.poll()
     assert ch3.count() == 4
+
+
+def _restore_bucket0(sink):
+    truth = sink.read(include_tombstones=True, include_meta=True)
+    return sink.restore_buckets(truth, [0])
+
+
+# a commit made right after a rollback: (sink mode, the op)
+_AFTER_ROLLBACK = {
+    "compact": ("mor", lambda s: s.compact(drop_tombstones=False)),
+    "rewrite": (
+        "mor", lambda s: s.rewrite(lambda df: df.withColumn("text", F.upper("text")))
+    ),
+    "purge": ("mor", lambda s: s.purge(where=F.col("conv_id") == "b")),
+    "rebucket": ("mor", lambda s: s.rebucket(3)),
+    "restore_buckets": ("mor", _restore_bucket0),
+    "empty_mow_apply": (
+        "mow", lambda s: apply_events_batch(_mk(s.spark, []), s, "b_empty")
+    ),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_AFTER_ROLLBACK))
+def test_commit_after_rollback_keeps_feed_open(spark, tmp_path, op):
+    """A rollback's marker belongs to the rollback version alone: the
+    commit after it does not inherit it, so a consumer synced AT the
+    rollback version keeps polling (a cursor INSIDE the rolled-back
+    range is refused, see test_reset_after_rollback_strand)."""
+    mode, run = _AFTER_ROLLBACK[op]
+    src = ParquetSnapshotSink(spark, str(tmp_path / "s"), num_buckets=2, mode=mode)
+    for i, conv in enumerate(("a", "b", "c")):
+        apply_events_batch(_mk(spark, [_ev(i, "insert", conv, 1, i + 1)]), src, f"b{i}")
+    src.rollback(2)
+    v_rb = src.current_version()
+    c = FeedCursor(src, "at-rollback")
+    ch, w = c.poll()
+    assert _state(ch) == [("a", 1, "t0"), ("b", 1, "t1")]
+    c.commit(w)
+    run(src)
+    cur = src.current_version()
+    assert cur == v_rb + 1
+    src.read_changes(v_rb, cur).collect()
+    src.changed_keys(v_rb, cur).collect()
+    c.poll()
+    assert "rolled_back" not in src.manifest_at(cur)

@@ -39,6 +39,47 @@ def test_history_kinds_and_order(spark, tmp_path):
     assert all(r.detail for r in rows), "heterogeneous fields preserved as JSON"
 
 
+def _kinds(sink):
+    return [r.kind for r in sink.history().orderBy("seq_no").collect()]
+
+
+def test_history_names_every_commit_once(spark, tmp_path):
+    """Every commit of the table's own log adds exactly one history row
+    under its own kind — maintenance, DDL, blooms, MERGE INTO and
+    rollback included — and a rollback's log is the restored version's
+    log plus the rollback row."""
+    from embulk_util_json_spark.sinks.merge import merge_into
+    from embulk_util_json_spark.sources.events import parse_change_events
+
+    sink = ParquetSnapshotSink(spark, str(tmp_path / "t"), num_buckets=2, mode="mor")
+    apply_events_batch(
+        _mk(spark, [_ev(0, "insert", "a", 1, 1), _ev(1, "insert", "b", 1, 2)]),
+        sink, "b0",
+    )
+    sink.rewrite(lambda df: df.withColumn("text", F.upper("text")))
+    sink.purge(where=F.col("conv_id") == "b", expire_history=False)
+    sink.restore_buckets(
+        sink.read(include_tombstones=True, include_meta=True), [0]
+    )
+    src = parse_change_events(_mk(spark, [_ev(2, "insert", "c", 1, 3)]))
+    merge_into(sink, src.drop("op", "seq", "_extras"), "m0")
+    v_merge = sink.current_version()
+    sink.analyze_blooms(columns=["role"])
+    sink.rename_column("text", "body")
+    ops = [
+        "apply", "rewrite", "purge", "restore", "merge_into",
+        "analyze_blooms", "rename_column",
+    ]
+    assert _kinds(sink) == ops
+    rows = sink.history().orderBy("seq_no").collect()
+    assert [r.version for r in rows] == list(range(1, len(ops) + 1))
+    assert [r.batch_id for r in rows] == ["b0", None, None, None, "m0", None, None]
+
+    sink.rollback(v_merge)
+    assert _kinds(sink) == ops[:v_merge] + ["rollback"]
+    assert sink.history().collect()[-1].version == sink.current_version()
+
+
 def test_files_zone_map_join(spark, tmp_path):
     sink = _build(spark, tmp_path)
     f = sink.files()

@@ -454,3 +454,59 @@ def test_bucket_writes_and_zone_map_merges_have_one_home():
             ):
                 offenders.append(f"{rel}:{node.lineno} zone map set in {fn}")
     assert offenders == []
+
+
+# per-version provenance markers (``snapshot._MARKERS``)
+_MARKERS = {"branched_from", "rolled_back", "cloned_from", "savepoint_of"}
+
+
+def _constants(nodes):
+    return {
+        c.value
+        for n in nodes
+        for c in ast.walk(n)
+        if isinstance(c, ast.Constant) and isinstance(c.value, str)
+    }
+
+
+def test_next_manifests_have_one_home():
+    """Only ``_next_manifest`` derives a manifest's log and provenance:
+    no other code in the package sets an ``applies`` key (bar
+    ``_empty_manifest``'s empty log) or strips a provenance marker (a
+    ``not in`` / ``==`` test, a ``.pop``, a ``del`` or a loop naming
+    one)."""
+    pkg = pathlib.Path(embulk_util_json_spark.__file__).parent
+    home = ("_next_manifest", "_empty_manifest")
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = str(path.relative_to(pkg))
+        for fn, node in _by_function(ast.parse(path.read_text(), rel)):
+            if fn in home:
+                continue
+            if isinstance(node, ast.Dict):
+                keys = [k for k in node.keys if k is not None]
+            elif isinstance(node, ast.Subscript) and isinstance(node.ctx, ast.Store):
+                keys = [node.slice]
+            elif isinstance(node, ast.keyword) and node.arg:
+                keys = [ast.Constant(node.arg)]
+            else:
+                keys = []
+            if any(isinstance(k, ast.Constant) and k.value == "applies" for k in keys):
+                offenders.append(f"{rel}:{node.lineno} applies set in {fn}")
+            if isinstance(node, ast.Compare):
+                stripped = [node.left, *node.comparators]
+            elif (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "pop"
+            ):
+                stripped = node.args
+            elif isinstance(node, ast.Delete):
+                stripped = node.targets
+            elif isinstance(node, ast.For):
+                stripped = [node.iter]
+            else:
+                stripped = []
+            if _constants(stripped) & _MARKERS:
+                offenders.append(f"{rel}:{node.lineno} marker stripped in {fn}")
+    assert offenders == []
