@@ -88,42 +88,61 @@ def extract_parity(
     null_cells = [None] * width
     out_names = out_schema.names
 
+    def scan(batch: pa.RecordBatch, decoder, utf8: bool) -> pa.RecordBatch:
+        # per output row: source row index, _doc_seq, K cells, _error
+        rows, seqs, cells, errs = [], [], [], []
+        for i, text in enumerate(batch.column(doc_col).to_pylist()):
+            if text is None:
+                continue
+            seq = 0
+            try:
+                for doc in jv.iter_documents(text, options, decoder):
+                    rooted = jv.repoint(doc, root_tokens) if root_tokens else [doc]
+                    for sub in rooted:
+                        for final in jv.flatten(sub, flatten_depth):
+                            row = jv.capture_cells_json(final, tree, with_literals)
+                            if utf8:  # Arrow strings are UTF-8
+                                try:
+                                    "".join(filter(None, row)).encode("utf-8")
+                                except UnicodeEncodeError as ex:
+                                    raise jv.JsonParseError(
+                                        "lone surrogate \\u%04x has no UTF-8 "
+                                        "encoding" % ord(ex.object[ex.start])
+                                    ) from None
+                            cells.append(row)
+                            rows.append(i)
+                            seqs.append(seq)
+                            errs.append(None)
+                            seq += 1
+            except jv.JsonParseError as ex:
+                if errors == "fail":
+                    raise
+                if errors == "quarantine":
+                    cells.append(null_cells)
+                    rows.append(i)
+                    seqs.append(-1)
+                    errs.append(str(ex))
+        take = pa.array(rows, pa.int64())
+        columns = zip(*cells) if cells else [()] * width
+        return pa.RecordBatch.from_arrays(
+            [batch.column(name).take(take) for name in pass_names]
+            + [pa.array(seqs, pa.int64())]
+            + [pa.array(col, pa.string()) for col in columns]
+            + [pa.array(errs, pa.string())],
+            names=out_names,
+        )
+
     def process(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         decoder = jv.make_decoder(options)
         for batch in batches:
-            # per output row: source row index, _doc_seq, K cells, _error
-            rows, seqs, cells, errs = [], [], [], []
-            for i, text in enumerate(batch.column(doc_col).to_pylist()):
-                if text is None:
-                    continue
-                seq = 0
-                try:
-                    for doc in jv.iter_documents(text, options, decoder):
-                        rooted = jv.repoint(doc, root_tokens) if root_tokens else [doc]
-                        for sub in rooted:
-                            for final in jv.flatten(sub, flatten_depth):
-                                cells.append(jv.capture_cells_json(final, tree, with_literals))
-                                rows.append(i)
-                                seqs.append(seq)
-                                errs.append(None)
-                                seq += 1
-                except jv.JsonParseError as ex:
-                    if errors == "fail":
-                        raise
-                    if errors == "quarantine":
-                        cells.append(null_cells)
-                        rows.append(i)
-                        seqs.append(-1)
-                        errs.append(str(ex))
-            take = pa.array(rows, pa.int64())
-            columns = zip(*cells) if cells else [()] * width
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(name).take(take) for name in pass_names]
-                + [pa.array(seqs, pa.int64())]
-                + [pa.array(col, pa.string()) for col in columns]
-                + [pa.array(errs, pa.string())],
-                names=out_names,
-            )
+            try:
+                out = scan(batch, decoder, utf8=False)
+            except UnicodeEncodeError:
+                # a captured string holds a lone surrogate (an escaped
+                # "\ud800"), which has no UTF-8 form: re-scan the batch,
+                # treating such a document as malformed
+                out = scan(batch, decoder, utf8=True)
+            yield out
 
     return df.mapInArrow(process, out_schema)
 

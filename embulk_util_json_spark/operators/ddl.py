@@ -63,7 +63,7 @@ def parse_ddl_events(
     )
     return parsed.filter(F.col("_e.op") == DDL_OP).select(
         "seq",
-        F.to_timestamp(F.col("_e.ts")).alias("ts"),
+        F.try_to_timestamp(F.col("_e.ts")).alias("ts"),
         F.col("_e.ddl.action").alias("action"),
         F.col("_e.ddl.column").alias("column"),
     )

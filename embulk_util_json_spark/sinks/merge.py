@@ -103,21 +103,52 @@ def merge_into(
         .distinct()
         .collect()
     )
-    version = manifest["version"] + 1
-    if not affected:  # empty source still commits its batch_id
-        metrics = {
-            "batch_id": batch_id,
-            "version": version,
-            "merge_into": True,
-            "change_rows": 0,
-        }
-        sink._commit(
-            sink._next_manifest(
-                manifest, metrics, batch_ids=manifest["batch_ids"] + [batch_id]
-            )
+    merged, obs = (
+        _merged_rows(
+            sink, manifest, source, affected, batch_id, when_matched_update,
+            when_matched_delete, when_not_matched_insert,
         )
-        return metrics
+        if affected
+        else (None, None)
+    )
 
+    def record(seen, counts, _):
+        if merged is None:  # an empty source still commits its batch_id
+            return {"batch_id": batch_id, "merge_into": True, "change_rows": 0}
+        return {
+            "batch_id": batch_id,
+            "merge_into": True,
+            "change_rows": int(obs.get["rows_out"]),
+            "matched_updated": int(obs.get["update"]),
+            "matched_deleted": int(obs.get["delete"]),
+            "inserted": int(obs.get["insert"]),
+            "passthrough": int(obs.get["keep"]),
+            "affected_buckets": len(affected),
+            "rows_per_bucket": counts,
+        }
+
+    # copy-on-write: an affected chain is emptied in place (the map
+    # keeps its order) and holds only its new level
+    keep = {**sink._chains(manifest), **dict.fromkeys(map(str, affected), [])}
+    new = sink._write_level(
+        manifest, merged, keep, record, t0, n=len(affected),
+        **sink._batch_fields(manifest, batch_id, merged),
+    )
+    return new["applies"][-1]
+
+
+def _merged_rows(
+    sink: ParquetSnapshotSink,
+    manifest: dict,
+    source: DataFrame,
+    affected: list[int],
+    batch_id: str,
+    upd,
+    when_matched_delete,
+    when_not_matched_insert,
+) -> tuple[DataFrame, Observation]:
+    """The merged rows of the affected buckets (carrying ``_bucket``)
+    and the Observation counting each clause's rows."""
     old_paths = [p for b in affected for p in sink._paths_of(manifest, str(b))]
     if old_paths:
         old = sink._read_bucket_paths(old_paths).filter(
@@ -135,7 +166,7 @@ def merge_into(
         for c in old.columns
         if c not in sink.keys and c not in META_COLS and c != BUCKET_COL
     ]
-    if when_matched_update is True or (
+    if upd is True or (
         when_not_matched_insert is not False and when_not_matched_insert is not None
     ):
         # underscore columns (the ``_extras`` evolution rider) are
@@ -164,8 +195,6 @@ def merge_into(
     matched = t_exists & s_exists & (F.col("t.op") != F.lit("delete"))
     del_pred = _pred(when_matched_delete, False)
     ins_pred = _pred(when_not_matched_insert, True)
-    upd = when_matched_update
-
     action = (
         F.when(matched & del_pred, F.lit("delete"))
         .when(matched & F.lit(upd is not None), F.lit("update"))
@@ -223,25 +252,4 @@ def merge_into(
         .drop("_action")
         .withColumn(BUCKET_COL, sink._bucket_expr())
     )
-
-    chains, counts, path_stats = sink._write_buckets(
-        merged, version, len(affected)
-    )
-    buckets = {**manifest["buckets"], **chains}
-    metrics = {
-        "batch_id": batch_id,
-        "version": version,
-        "merge_into": True,
-        "change_rows": int(obs.get["rows_out"]),
-        "matched_updated": int(obs.get["update"]),
-        "matched_deleted": int(obs.get["delete"]),
-        "inserted": int(obs.get["insert"]),
-        "passthrough": int(obs.get["keep"]),
-        "affected_buckets": len(affected),
-        "rows_per_bucket": counts,
-        "wall_sec": round(time.time() - t0, 3),
-    }
-    return sink._finish_commit(
-        manifest, batch_id, buckets, merged.drop(BUCKET_COL).columns,
-        metrics, path_stats=path_stats,
-    )
+    return merged, obs

@@ -1868,11 +1868,15 @@ class ParquetSnapshotSink:
             i += 1
         return chain[:i], chain[i:]
 
+    def _chains(self, manifest: dict, drop=()) -> dict[str, list[str]]:
+        """Bucket → chain of ``manifest``, in map order, without the
+        buckets in ``drop``."""
+        return {
+            b: self._paths_of(manifest, b) for b in manifest["buckets"] if b not in drop
+        }
+
     def _all_paths(self, manifest: dict) -> list[str]:
-        out: list[str] = []
-        for b in manifest["buckets"]:
-            out.extend(self._paths_of(manifest, b))
-        return out
+        return [p for chain in self._chains(manifest).values() for p in chain]
 
     # ---- apply (the MERGE) ---------------------------------------------
 
@@ -2067,9 +2071,8 @@ class ParquetSnapshotSink:
         banded: bool = False,
         pre_partitioned: bool = False,
     ) -> tuple[dict[str, list[str]], dict[str, int], dict[str, dict]]:
-        """THE bucket-partitioned write: every writer stages its rows
-        through here into a fresh ``_data_rel(version)`` dir, then
-        hands the returned ``path_stats`` to ``_commit``. Returns
+        """THE bucket-partitioned write, called only by ``_write_level``:
+        stages rows into a fresh ``_data_rel(version)`` dir and returns
         ``_bucket_footer_info`` of what was written.
 
         Timestamps are forced to TIMESTAMP_MICROS for the write
@@ -2109,7 +2112,7 @@ class ParquetSnapshotSink:
         subset of the grouping keys satisfies its ClusteredDistribution)
         — ONE shuffle of the data instead of reduce-by-key THEN
         repartition-by-bucket. The output stays partitioned by bucket,
-        so ``_write_buckets(..., pre_partitioned=True)`` writes it
+        so ``_write_level(..., pre_partitioned=True)`` writes it
         directly. At 10^10-event scale this halves the shuffled bytes
         of every apply and compaction; plan-asserted in tests (single
         Exchange)."""
@@ -2297,35 +2300,92 @@ class ParquetSnapshotSink:
             key=int,
         )
 
-    def _finish_commit(
-        self, manifest: dict, batch_id: str, buckets: dict,
-        merged_cols: list[str], metrics: dict, obs=None,
-        path_stats: dict | None = None,
+    def _write_level(
+        self,
+        manifest: dict,
+        rows: DataFrame | None,
+        keep: dict[str, list[str]],
+        record,
+        t0: float,
+        *,
+        n: int,
+        obs=None,
+        banded: bool = False,
+        pre_partitioned: bool = False,
+        **fields,
     ) -> dict:
-        schema_fields = sorted(
-            (set(manifest["schema_fields"]) | set(merged_cols)) - {BUCKET_COL}
+        """THE write-and-commit of one level, for every bucket writer:
+        ``rows`` (carrying ``_bucket``; ``None`` writes nothing) go
+        through ``_write_buckets`` into the next version's data dir,
+        every written bucket's chain becomes ``keep[b]`` + its new
+        paths, and the version commits as ``_next_manifest(manifest,
+        record, buckets=..., **fields)`` with the level's zone maps.
+        ``keep`` is the chain prefix the writer keeps, in map order:
+        every chain (merge-on-read delta), the untouched buckets (a
+        rewrite of some), each base (minor compaction) or nothing (a
+        full rewrite); a bucket left with no chain drops out. This is
+        the one seam between staged data and a committed version: a
+        crash before ``_commit`` leaves only an unreferenced staging
+        dir, which ``remove_orphans`` reclaims.
+
+        ``record`` is the version's ``applies`` record, or a function
+        ``(seen, counts, buckets) -> record`` for a writer whose record
+        reads the write's outcome: ``seen`` is ``obs``'s metrics row
+        (``{}`` when it never resolved), ``counts`` the rows written
+        per bucket, ``buckets`` the new chain map. The step stamps
+        ``wall_sec``, and ``events_per_sec`` for a record counting
+        ``change_rows``; ``_extras`` keys the write observed join
+        ``extra_fields``. Returns the committed manifest."""
+        version = manifest["version"] + 1
+        chains, counts, path_stats = (
+            self._write_buckets(rows, version, n, banded, pre_partitioned)
+            if rows is not None
+            else ({}, {}, None)
         )
-        extra_fields = set(manifest.get("extra_fields", []))
-        if obs is not None:
-            extra_fields |= set((_obs_metrics(obs) or {}).get("extra_keys") or [])
-        self._commit(
-            self._next_manifest(
-                manifest,
-                metrics,
-                num_buckets=self.num_buckets,
-                batch_ids=manifest["batch_ids"] + [batch_id],
-                buckets=buckets,
-                schema_fields=schema_fields,
-                extra_fields=sorted(extra_fields),
-                patch_cols=self.patch_cols or [],
-                unchanged_marker=self.unchanged_marker,
-                patch_types=self.patch_types,
-                stats_cols=self.stats_cols,
-                track_lineage=self.track_lineage,
+        buckets = {
+            b: keep.get(b, []) + chains.get(b, [])
+            for b in {**keep, **chains}
+            if keep.get(b) or b in chains
+        }
+        seen = (_obs_metrics(obs) if obs is not None else None) or {}
+        if callable(record):
+            record = record(seen, counts, buckets)
+        wall = time.time() - t0
+        record["wall_sec"] = round(wall, 3)
+        if "change_rows" in record:
+            record["events_per_sec"] = round(record["change_rows"] / max(wall, 1e-9), 1)
+        if seen.get("extra_keys"):
+            # schema discovery: map keys the write saw in ``_extras``
+            fields["extra_fields"] = sorted(
+                {*manifest.get("extra_fields", []), *seen["extra_keys"]}
+            )
+        new = self._next_manifest(manifest, record, buckets=buckets, **fields)
+        self._commit(new, path_stats=path_stats)
+        return new
+
+    def _batch_fields(
+        self, manifest: dict, batch_id: str, rows: DataFrame | None
+    ) -> dict:
+        """The manifest fields a batch commit sets for
+        ``_write_level``: ``batch_id`` joins the exactly-once log and,
+        when the batch writes ``rows``, the stored schema grows by
+        their columns and the table config this handle wrote under is
+        recorded."""
+        fields = {"batch_ids": manifest["batch_ids"] + [batch_id]}
+        if rows is None:
+            return fields
+        return {
+            **fields,
+            "num_buckets": self.num_buckets,
+            "schema_fields": sorted(
+                (set(manifest["schema_fields"]) | set(rows.columns)) - {BUCKET_COL}
             ),
-            path_stats=path_stats,
-        )
-        return metrics
+            "patch_cols": self.patch_cols or [],
+            "unchanged_marker": self.unchanged_marker,
+            "patch_types": self.patch_types,
+            "stats_cols": self.stats_cols,
+            "track_lineage": self.track_lineage,
+        }
 
     def _apply_mow(
         self,
@@ -2376,54 +2436,46 @@ class ParquetSnapshotSink:
             r[BUCKET_COL]
             for r in staged_pinned.select(BUCKET_COL).distinct().collect()
         )
-        version = manifest["version"] + 1
-        if not affected:  # empty batch still commits its batch_id
-            metrics = {"batch_id": batch_id, "version": version, "change_rows": 0}
-            self._commit(
-                self._next_manifest(
-                    manifest, metrics, batch_ids=manifest["batch_ids"] + [batch_id]
+        merged = None
+        if affected:
+            old_paths = [
+                p for b in affected for p in self._paths_of(manifest, str(b))
+            ]
+            merged = staged
+            if old_paths:
+                # Bucket files don't store _bucket; recompute from the
+                # key (deterministic hash) — no partition inference.
+                old = self._read_bucket_paths(old_paths).withColumn(
+                    BUCKET_COL, self._bucket_expr()
                 )
-            )
-            return metrics
+                merged = staged.unionByName(old, allowMissingColumns=True)
+            merged = self._partitioned_reduce(merged, len(affected))
 
-        old_paths = [
-            p for b in affected for p in self._paths_of(manifest, str(b))
-        ]
-        merged = staged
-        if old_paths:
-            # Bucket files don't store _bucket; recompute from the key
-            # (deterministic hash) — no partition inference needed.
-            old = self._read_bucket_paths(old_paths).withColumn(
-                BUCKET_COL, self._bucket_expr()
-            )
-            merged = staged.unionByName(old, allowMissingColumns=True)
-        n_affected = len(affected)
-        merged = self._partitioned_reduce(merged, n_affected)
-        # per-bucket lineage counts come from the footers (a metadata
-        # read — saves one Spark job per batch)
-        chains, bucket_counts, path_stats = self._write_buckets(
-            merged, version, n_affected, pre_partitioned=True
-        )
-        buckets = {**manifest["buckets"], **chains}
+        def record(seen, counts, _):
+            if merged is None:  # an empty batch still commits its batch_id
+                return {"batch_id": batch_id, "change_rows": 0}
+            # unresolved row ⟹ zero-task plan ⟹ empty batch; the pinned
+            # frame's count (one cache-hit job) is the exact backstop.
+            # Per-bucket lineage counts come from the footers (a
+            # metadata read — saves one Spark job per batch).
+            return {
+                "batch_id": batch_id,
+                "change_rows": (
+                    int(seen["change_rows"]) if seen else int(staged_pinned.count())
+                ),
+                "malformed_rows": int(seen.get("malformed_rows") or 0),
+                "affected_buckets": len(affected),
+                "rows_per_bucket": counts,
+            }
 
-        m = _obs_metrics(obs)
-        # unresolved row ⟹ zero-task plan ⟹ empty batch; the pinned
-        # frame's count (one cache-hit job) is the exact backstop
-        change_rows = int(m["change_rows"]) if m else int(staged_pinned.count())
-        metrics = {
-            "batch_id": batch_id,
-            "version": version,
-            "change_rows": change_rows,
-            "malformed_rows": int((m or {}).get("malformed_rows") or 0),
-            "affected_buckets": n_affected,
-            "rows_per_bucket": bucket_counts,
-            "wall_sec": round(time.time() - t0, 3),
-            "events_per_sec": round(change_rows / max(time.time() - t0, 1e-9), 1),
-        }
-        return self._finish_commit(
-            manifest, batch_id, buckets, merged.columns, metrics, obs,
-            path_stats=path_stats,
+        # copy-on-write: an affected chain is emptied in place (the map
+        # keeps its order) and holds only its new level
+        keep = {**self._chains(manifest), **dict.fromkeys(map(str, affected), [])}
+        new = self._write_level(
+            manifest, merged, keep, record, t0, n=len(affected), obs=obs,
+            pre_partitioned=True, **self._batch_fields(manifest, batch_id, merged),
         )
+        return new["applies"][-1]
 
     def _apply_mor(
         self, staged: DataFrame, batch_id: str, manifest: dict, obs, t0: float
@@ -2432,40 +2484,31 @@ class ParquetSnapshotSink:
         bucket) — ONE shuffle of batch-sized data with map-side partial
         combine — and append it as a delta level; never read the
         table. Write cost is O(batch) regardless of table size."""
-        version = manifest["version"] + 1
         delta = self._partitioned_reduce(staged, self.num_buckets)
-        chains, bucket_counts, path_stats = self._write_buckets(
-            delta, version, self.num_buckets, pre_partitioned=True
-        )
-        buckets = {b: self._paths_of(manifest, b) for b in manifest["buckets"]}
-        for b, new in chains.items():
-            buckets[b] = buckets.get(b, []) + new
 
-        m = _obs_metrics(obs)
-        # unresolved row ⟹ the write ran zero tasks ⟹ empty batch.
-        # Defense in depth: if files WERE written, the delta footer
-        # counts are a (post-reduce) lower bound beating a re-parse.
-        change_rows = (
-            int(m["change_rows"]) if m else sum(bucket_counts.values())
-        )
-        metrics = {
-            "batch_id": batch_id,
-            "version": version,
-            "change_rows": change_rows,
-            "malformed_rows": int((m or {}).get("malformed_rows") or 0),
-            "affected_buckets": len(chains),
-            "rows_per_bucket": bucket_counts,
-            "chain_depth": max((len(v) for v in buckets.values()), default=0),
-            "wall_sec": round(time.time() - t0, 3),
-            "events_per_sec": round(change_rows / max(time.time() - t0, 1e-9), 1),
-        }
-        result = self._finish_commit(
-            manifest, batch_id, buckets, delta.columns, metrics, obs,
-            path_stats=path_stats,
+        def record(seen, counts, buckets):
+            # unresolved row ⟹ the write ran zero tasks ⟹ empty batch.
+            # Defense in depth: if files WERE written, the delta footer
+            # counts are a (post-reduce) lower bound beating a re-parse.
+            return {
+                "batch_id": batch_id,
+                "change_rows": (
+                    int(seen["change_rows"]) if seen else sum(counts.values())
+                ),
+                "malformed_rows": int(seen.get("malformed_rows") or 0),
+                "affected_buckets": len(counts),
+                "rows_per_bucket": counts,
+                "chain_depth": max(map(len, buckets.values()), default=0),
+            }
+
+        new = self._write_level(
+            manifest, delta, self._chains(manifest), record, t0,
+            n=self.num_buckets, obs=obs, pre_partitioned=True,
+            **self._batch_fields(manifest, batch_id, delta),
         )
         # Bound read amplification: collapse chains that grew too deep.
         # Tombstones are KEPT — replay may still deliver older events.
-        deep = [b for b, v in buckets.items() if len(v) > self.compact_every]
+        deep = [b for b, v in new["buckets"].items() if len(v) > self.compact_every]
         if deep:
             try:
                 self.compact(drop_tombstones=False, only_buckets=deep)
@@ -2475,7 +2518,7 @@ class ParquetSnapshotSink:
                 # deep, so the NEXT apply re-triggers compaction. Never
                 # surface a maintenance race as an apply failure.
                 pass
-        return result
+        return new["applies"][-1]
 
     # ---- bucketed warehouse export (shuffle-free downstream joins) -----
 
@@ -3204,7 +3247,6 @@ class ParquetSnapshotSink:
                 )
             else:
                 df = df.filter(~is_del)
-        version = manifest["version"] + 1
         ts_col = self.order_cols[0]
         if ts_bands:
             if isinstance(ts_bands, int):
@@ -3233,30 +3275,16 @@ class ParquetSnapshotSink:
             df = df.withColumn(BAND_COL, band)
         # flat layout: one chain element per bucket; banded: one per
         # (band, bucket)
-        chains, _, path_stats = self._write_buckets(
-            df, version, self.num_buckets, banded=bool(ts_bands),
-            pre_partitioned=True,
+        new = self._write_level(
+            manifest, df, self._chains(manifest, drop=set(target)),
+            {
+                "compact": True,
+                "buckets_compacted": len(target),
+                "ts_bands": (len(edges_us) + 1) if ts_bands else None,
+            },
+            t0, n=self.num_buckets, banded=bool(ts_bands), pre_partitioned=True,
         )
-        buckets = {
-            b: self._paths_of(manifest, b)
-            for b in manifest["buckets"]
-            if b not in set(target)
-        }
-        buckets.update(chains)
-        self._commit(
-            self._next_manifest(
-                manifest,
-                {
-                    "compact": True,
-                    "buckets_compacted": len(target),
-                    "ts_bands": (len(edges_us) + 1) if ts_bands else None,
-                    "wall_sec": round(time.time() - t0, 3),
-                },
-                buckets=buckets,
-            ),
-            path_stats=path_stats,
-        )
-        return {"version": version, "buckets_compacted": len(target)}
+        return {"version": new["version"], "buckets_compacted": len(target)}
 
     def maintain(
         self,
@@ -3385,42 +3413,20 @@ class ParquetSnapshotSink:
         )
         df = df.withColumn(BUCKET_COL, self._bucket_expr())
         df = self._partitioned_reduce(df, self.num_buckets)
-        version = manifest["version"] + 1
-        chains, _, path_stats = self._write_buckets(
-            df, version, self.num_buckets, pre_partitioned=True
-        )
-        buckets = {
-            b: self._paths_of(manifest, b)
-            for b in manifest["buckets"]
-            if b not in deltas_of
-        }
-        for b in sorted(deltas_of, key=int):
-            # a delta set can reduce to zero rows only if it was all
-            # duplicates of itself — the write still emits the bucket
-            # dir when any row lands; fall back to base-only otherwise
-            buckets[b] = base_of[b] + chains.get(b, [])
-        merged_levels = sum(len(ps) for ps in deltas_of.values())
-        kept_levels = sum(len(ps) for ps in base_of.values())
-        self._commit(
-            self._next_manifest(
-                manifest,
-                {
-                    "compact_minor": True,
-                    "buckets_compacted": len(deltas_of),
-                    "delta_levels_merged": merged_levels,
-                    "base_levels_untouched": kept_levels,
-                    "wall_sec": round(time.time() - t0, 3),
-                },
-                buckets=buckets,
-            ),
-            path_stats=path_stats,
-        )
-        return {
-            "version": version,
+        # each merged bucket keeps its base, and its deltas become one
+        # level on top of it
+        keep = self._chains(manifest, drop=deltas_of)
+        keep.update((b, base_of[b]) for b in sorted(deltas_of, key=int))
+        out = {
             "buckets_compacted": len(deltas_of),
-            "delta_levels_merged": merged_levels,
-            "base_levels_untouched": kept_levels,
+            "delta_levels_merged": sum(len(ps) for ps in deltas_of.values()),
+            "base_levels_untouched": sum(len(ps) for ps in base_of.values()),
         }
+        new = self._write_level(
+            manifest, df, keep, {"compact_minor": True, **out}, t0,
+            n=self.num_buckets, pre_partitioned=True,
+        )
+        return {"version": new["version"], **out}
 
     def rebucket(self, new_num_buckets: int) -> dict:
         """Bucket-layout rescaling — the partition-spec-evolution
@@ -3460,23 +3466,15 @@ class ParquetSnapshotSink:
             # so the fused single-shuffle path applies here too
             df = df.withColumn(BUCKET_COL, self._bucket_expr())
             df = self._partitioned_reduce(df, self.num_buckets)
-            version = manifest["version"] + 1
-            chains, _, path_stats = self._write_buckets(
-                df, version, self.num_buckets, pre_partitioned=True
-            )
-            self._commit(
-                self._next_manifest(
-                    manifest,
-                    {
-                        "rebucket": True,
-                        "from_num_buckets": old_n,
-                        "to_num_buckets": self.num_buckets,
-                        "wall_sec": round(time.time() - t0, 3),
-                    },
-                    num_buckets=self.num_buckets,
-                    buckets=chains,
-                ),
-                path_stats=path_stats,
+            new = self._write_level(
+                manifest, df, {},
+                {
+                    "rebucket": True,
+                    "from_num_buckets": old_n,
+                    "to_num_buckets": self.num_buckets,
+                },
+                t0, n=self.num_buckets, pre_partitioned=True,
+                num_buckets=self.num_buckets,
             )
         except BaseException:
             # commit lost / write failed: the table is still on the old
@@ -3484,7 +3482,7 @@ class ParquetSnapshotSink:
             self.num_buckets = old_n
             raise
         return {
-            "version": version,
+            "version": new["version"],
             "from_num_buckets": old_n,
             "to_num_buckets": self.num_buckets,
         }
@@ -3522,29 +3520,14 @@ class ParquetSnapshotSink:
         df = truth.withColumn(BUCKET_COL, self._bucket_expr()).filter(
             F.col(BUCKET_COL).isin([int(b) for b in target])
         )
-        version = manifest["version"] + 1
-        chains, _, path_stats = self._write_buckets(df, version, len(target))
-        buckets = {
-            b: self._paths_of(manifest, b)
-            for b in manifest["buckets"]
-            if b not in set(target)
-        }
         # a targeted bucket with no truth rows is legitimately EMPTY
         # after the restore — it simply drops out of the manifest
-        buckets.update(chains)
-        self._commit(
-            self._next_manifest(
-                manifest,
-                {
-                    "restore": True,
-                    "buckets_restored": len(target),
-                    "wall_sec": round(time.time() - t0, 3),
-                },
-                buckets=buckets,
-            ),
-            path_stats=path_stats,
+        new = self._write_level(
+            manifest, df, self._chains(manifest, drop=set(target)),
+            {"restore": True, "buckets_restored": len(target)},
+            t0, n=len(target),
         )
-        return {"version": version, "buckets_restored": len(target)}
+        return {"version": new["version"], "buckets_restored": len(target)}
 
     def evolve_patch_cols(
         self, cols: dict[str, str], unchanged_marker: str | None = None
@@ -3614,14 +3597,12 @@ class ParquetSnapshotSink:
         extras = set(manifest.get("extra_fields", []))
         promote = sorted(c for c in new if c in stored or c in extras)
         t0 = time.time()
-        version = manifest["version"] + 1
         fields = {
             "patch_cols": sorted(set(have) | set(new)),
             "unchanged_marker": marker,
             "patch_types": {**self.patch_types, **new},
         }
-        record = {"evolve_patch_cols": sorted(new), "promoted": promote}
-        path_stats = None
+        rows, keep = None, self._chains(manifest)
         if promote and manifest["buckets"]:
             # physical promotion rewrite: collapse under OLD config,
             # stamp promoted columns at the surviving rows' positions
@@ -3652,23 +3633,21 @@ class ParquetSnapshotSink:
                 marker,
                 absent_if=F.col("op") == "delete",
             )
-            fields["buckets"], _, path_stats = self._write_buckets(
-                df.withColumn(BUCKET_COL, self._bucket_expr()),
-                version,
-                self.num_buckets,
-            )
+            rows, keep = df.withColumn(BUCKET_COL, self._bucket_expr()), {}
             fields["schema_fields"] = sorted(
                 (set(manifest["schema_fields"]) | set(df.columns)) - {BUCKET_COL}
             )
-            record["wall_sec"] = round(time.time() - t0, 3)
-        new_manifest = self._next_manifest(manifest, record, **fields)
-        self._commit(new_manifest, path_stats=path_stats)
-        self._adopt(new_manifest)
+        committed = self._write_level(
+            manifest, rows, keep,
+            {"evolve_patch_cols": sorted(new), "promoted": promote},
+            t0, n=self.num_buckets, **fields,
+        )
+        self._adopt(committed)
         return {
-            "version": version,
-            "patch_cols": new_manifest["patch_cols"],
+            "version": committed["version"],
+            "patch_cols": committed["patch_cols"],
             "promoted": promote,
-            "rewritten": bool(promote and manifest["buckets"]),
+            "rewritten": rows is not None,
         }
 
     def rewrite(self, transform, where=None) -> dict:
@@ -3714,25 +3693,12 @@ class ParquetSnapshotSink:
                 "rewrite transform must preserve the column set; got "
                 f"{sorted(set(out.columns) ^ set(df.columns))} changed"
             )
-        version = manifest["version"] + 1
-        chains, _, path_stats = self._write_buckets(
-            out.withColumn(BUCKET_COL, self._bucket_expr()),
-            version,
-            self.num_buckets,
+        new = self._write_level(
+            manifest, out.withColumn(BUCKET_COL, self._bucket_expr()), {},
+            {"rewrite": True, "scoped": where is not None},
+            t0, n=self.num_buckets,
         )
-        self._commit(
-            self._next_manifest(
-                manifest,
-                {
-                    "rewrite": True,
-                    "scoped": where is not None,
-                    "wall_sec": round(time.time() - t0, 3),
-                },
-                buckets=chains,
-            ),
-            path_stats=path_stats,
-        )
-        return {"version": version, "rewritten": True}
+        return {"version": new["version"], "rewritten": True}
 
     def retention_delete(
         self, older_than, batch_id: str | None = None
@@ -3859,31 +3825,18 @@ class ParquetSnapshotSink:
         kept = self._reduce(kept, self.keys).withColumn(
             BUCKET_COL, self._bucket_expr()
         )
-        version = manifest["version"] + 1
-        chains, _, path_stats = self._write_buckets(kept, version, len(target))
-        buckets = {
-            b: self._paths_of(manifest, b)
-            for b in manifest["buckets"]
-            if b not in set(target)
-        }
-        buckets.update(chains)
-        purged = int((_obs_metrics(obs) or {}).get("purged_rows") or 0)
-        self._commit(
-            self._next_manifest(
-                manifest,
-                {
-                    "purge": True,
-                    "purged_rows": purged,
-                    "buckets_rewritten": len(target),
-                    "wall_sec": round(time.time() - t0, 3),
-                },
-                buckets=buckets,
-            ),
-            path_stats=path_stats,
+        new = self._write_level(
+            manifest, kept, self._chains(manifest, drop=set(target)),
+            lambda seen, counts, buckets: {
+                "purge": True,
+                "purged_rows": int(seen.get("purged_rows") or 0),
+                "buckets_rewritten": len(target),
+            },
+            t0, n=len(target), obs=obs,
         )
         out = {
-            "version": version,
-            "purged_rows": purged,
+            "version": new["version"],
+            "purged_rows": new["applies"][-1]["purged_rows"],
             "buckets_rewritten": len(target),
         }
         if expire_history:

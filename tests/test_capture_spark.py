@@ -87,6 +87,32 @@ def test_extract_parity_fail_policy(spark, docs_df):
     assert all(r._error is None for r in out)
 
 
+@pytest.mark.parametrize("errors", ["quarantine", "fail", "skip"])
+def test_extract_parity_lone_surrogate_is_malformed(spark, errors):
+    """A captured string holding an escaped lone surrogate — in a value
+    or in an object key of a captured subtree — has no UTF-8 form for
+    Arrow, so its document is malformed under every ``errors`` mode;
+    the good row of the same batch is untouched."""
+    df = spark.createDataFrame(
+        [(1, '{"a":"ok"}'), (2, '{"a":"\\ud800"}'), (3, '{"a":{"\\udc00":1}}')],
+        "id long, doc string",
+    ).coalesce(1)  # one Arrow batch
+    out = extract_parity(df, "doc", CaptureSpec.compile(["/a"], ["a"]), errors=errors)
+    if errors == "fail":
+        with pytest.raises(Exception, match="lone surrogate"):
+            out.collect()
+        return
+    rows = sorted(out.collect(), key=lambda r: r.id)
+    if errors == "skip":
+        assert [(r.id, r.a, r._error) for r in rows] == [(1, '"ok"', None)]
+        return
+    assert [(r.id, r._doc_seq, r.a) for r in rows] == [
+        (1, 0, '"ok"'), (2, -1, None), (3, -1, None),
+    ]
+    assert "lone surrogate \\ud800" in rows[1]._error
+    assert "lone surrogate \\udc00" in rows[2]._error
+
+
 def test_extract_parity_literals_option(spark):
     df = spark.createDataFrame([(1, '{"n":12345e3}')], "id long, doc string")
     spec = CaptureSpec.compile(["/n"], ["n"], options=ParseOptions(with_literals=True))

@@ -76,3 +76,25 @@ def test_gate_plan_is_projection_only(spark):
     plan = gated._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan  # no shuffle: pure CASE projection
     assert "SortMergeJoin" not in plan and "BroadcastHashJoin" not in plan
+
+
+def test_parse_ddl_events_bad_ts_reads_null_under_ansi(spark):
+    """Under ANSI SQL (the Spark 4 default) one DDL envelope with an
+    unparseable ``ts`` reads NULL instead of failing the batch."""
+    rows = [
+        (1, '{"op":"ddl","ts":"2024-01-01 00:00:01",'
+            '"ddl":{"action":"add_column","column":"a"}}'),
+        (2, '{"op":"ddl","ts":"not a time",'
+            '"ddl":{"action":"add_column","column":"b"}}'),
+    ]
+    key = "spark.sql.ansi.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "true")
+    try:
+        got = parse_ddl_events(
+            spark.createDataFrame(rows, "seq long, event_json string")
+        ).orderBy("seq").collect()
+    finally:
+        spark.conf.set(key, old)
+    assert [(r.seq, r.column) for r in got] == [(1, "a"), (2, "b")]
+    assert got[0].ts is not None and got[1].ts is None

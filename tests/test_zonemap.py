@@ -11,12 +11,14 @@ bound and filtered anyway); patch-mode tables skip pruning because
 carry-forward reads column values out of old rows."""
 
 import ast
+import os
 import pathlib
 
 import pytest
 from pyspark.sql import functions as F
 
 import embulk_util_json_spark
+from embulk_util_json_spark.sinks.merge import merge_into
 from embulk_util_json_spark.sinks.snapshot import ParquetSnapshotSink
 from embulk_util_json_spark.streaming.runner import apply_events_batch
 
@@ -322,11 +324,32 @@ def _restore(sink, events):
     return sink.restore_buckets(truth, [0])
 
 
-# writer → (sink mode, the op after the set-up, expected state); MOR
-# and MOW apply are the set-up's last apply
+def _apply_b3(sink, events):
+    return apply_events_batch(
+        _mk(sink.spark, [_ev(7, "insert", "f", 6, 10)]), sink, "b3"
+    )
+
+
+def _merge(sink, events):
+    src = sink.spark.createDataFrame(
+        [("c", 3, "r", "merged", "x", "2026-01-11"),
+         ("g", 7, "r", "new", "x", "2026-01-11")],
+        "conv_id string, turn_idx int, role string, text string, "
+        "tool string, ts string",
+    ).withColumn("ts", F.to_timestamp("ts"))
+    return merge_into(sink, src, "m1")
+
+
+# writer → (sink mode, the op after the set-up, expected state)
 _WRITERS = {
-    "mor_apply": ("mor", None, _STATE),
-    "mow_apply": ("mow", None, _STATE),
+    "mor_apply": ("mor", _apply_b3, _STATE + [("f", 6, "t7")]),
+    "mow_apply": ("mow", _apply_b3, _STATE + [("f", 6, "t7")]),
+    "merge_into": (
+        "mor",
+        _merge,
+        [("a", 1, "a2"), ("c", 3, "merged"), ("d", 4, "t4"), ("e", 5, "t6"),
+         ("g", 7, "new")],
+    ),
     "compact": ("mor", lambda sink, ev: sink.compact(), _STATE),
     "compact_banded": (
         "mor",
@@ -373,9 +396,8 @@ def test_every_writer_keeps_zone_maps_exact(spark, tmp_path, writer):
 
     mode, op, want = _WRITERS[writer]
     sink, events = _setup_with_stats(spark, str(tmp_path / "t"), mode)
-    if op is not None:
-        res = op(sink, events)
-        assert not res.get("skipped") and res.get("rewritten", True), res
+    res = op(sink, events)
+    assert not res.get("skipped") and res.get("rewritten", True), res
     m = sink.current_manifest()
     referenced = {p for b in m["buckets"] for p in sink._paths_of(m, b)}
     assert referenced
@@ -385,6 +407,42 @@ def test_every_writer_keeps_zone_maps_exact(spark, tmp_path, writer):
     for kind in ("file_stats", "key_stats", "col_stats", "blooms"):
         assert set(m.get(kind) or {}) <= referenced, kind
     assert fsck(sink)["ok"]
+    assert _state(sink.read()) == sorted(want)
+
+
+@pytest.mark.parametrize("writer", sorted(_WRITERS))
+def test_crash_before_commit_leaves_table_unchanged(
+    spark, tmp_path, monkeypatch, writer
+):
+    """A writer that dies after staging its level but before the
+    manifest commit changes nothing a reader sees: same version, same
+    batch ledger, same state, ``fsck`` clean (deep), the staged dir is
+    an orphan that ``remove_orphans`` reclaims, and re-running the op
+    reaches the expected state."""
+    from embulk_util_json_spark.pipeline.reconcile import fsck
+
+    mode, op, want = _WRITERS[writer]
+    sink, events = _setup_with_stats(spark, str(tmp_path / "t"), mode)
+    version, batch_ids = sink.current_version(), sink.applied_batch_ids()
+    state = _state(sink.read())
+    data = tmp_path / "t" / "data"
+    dirs = set(os.listdir(data))
+
+    def crash(self, manifest, path_stats=None):
+        raise RuntimeError("crash before the commit")
+
+    with monkeypatch.context() as m:
+        m.setattr(ParquetSnapshotSink, "_commit", crash)
+        with pytest.raises(RuntimeError, match="crash before the commit"):
+            op(sink, events)
+    assert set(os.listdir(data)) > dirs, "the level was staged"
+    assert sink.current_version() == version
+    assert sink.applied_batch_ids() == batch_ids
+    assert _state(sink.read()) == state
+    assert fsck(sink, deep=True)["ok"]
+    sink.remove_orphans(grace_seconds=0)
+    assert set(os.listdir(data)) == dirs
+    op(sink, events)
     assert _state(sink.read()) == sorted(want)
 
 
@@ -423,10 +481,13 @@ def _by_function(tree):
 
 def test_bucket_writes_and_zone_map_merges_have_one_home():
     """Every bucket write goes through ``_write_buckets`` (the only
-    ``.partitionBy(`` in ``sinks/snapshot.py``), and only ``_commit``
-    merges the per-path zone maps: no other code in the package sets a
-    ``file_stats`` / ``key_stats`` / ``col_stats`` key, except
-    ``clone_to`` re-keying the source's maps to the clone's paths."""
+    ``.partitionBy(`` in ``sinks/snapshot.py``), whose one caller is
+    ``_write_level``, the only code that builds a chain map (sets a
+    ``buckets`` key); and only ``_commit`` merges the per-path zone
+    maps: no other code in the package sets a ``file_stats`` /
+    ``key_stats`` / ``col_stats`` key. Exempt: ``clone_to`` re-keying
+    the source's chains and maps to the clone's paths, and
+    ``_empty_manifest``'s empty chain map."""
     pkg = pathlib.Path(embulk_util_json_spark.__file__).parent
     maps = {"file_stats", "key_stats", "col_stats"}
     offenders = []
@@ -441,6 +502,13 @@ def test_bucket_writes_and_zone_map_merges_have_one_home():
                 and fn != "_write_buckets"
             ):
                 offenders.append(f"{rel}:{node.lineno} partitionBy in {fn}")
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "_write_buckets"
+                and fn != "_write_level"
+            ):
+                offenders.append(f"{rel}:{node.lineno} _write_buckets in {fn}")
             if isinstance(node, ast.Dict):
                 keys = node.keys
             elif isinstance(node, ast.Subscript) and isinstance(node.ctx, ast.Store):
@@ -453,6 +521,10 @@ def test_bucket_writes_and_zone_map_merges_have_one_home():
                 isinstance(k, ast.Constant) and k.value in maps for k in keys
             ):
                 offenders.append(f"{rel}:{node.lineno} zone map set in {fn}")
+            if fn not in ("_write_level", "clone_to", "_empty_manifest") and any(
+                isinstance(k, ast.Constant) and k.value == "buckets" for k in keys
+            ):
+                offenders.append(f"{rel}:{node.lineno} chain map set in {fn}")
     assert offenders == []
 
 
