@@ -58,14 +58,10 @@ from __future__ import annotations
 import hashlib
 import re
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..operators.lww import (
-    PATCH_ORD_PREFIX,
-    lww_agg,
-    lww_patch_stamped,
-    patch_stamp,
-)
+from ..operators.lww import PATCH_ORD_PREFIX, lww_agg, stamp_batch
 from ..sources.events import EXTRAS_COL, KEY_COLS, ORDER_COLS
 
 
@@ -241,8 +237,9 @@ def merge_patch_sql(
 ) -> str:
     """The COLUMN-level LWW MERGE for partial-update streams — the
     Iceberg twin of the snapshot sink's patch mode (same stamped
-    model: the staged view is ``patch_stamp`` + ``lww_patch_stamped``
-    output, one row per key carrying ``_po_<col>`` order stamps).
+    model: the staged view is ``stamp_batch`` + ``lww_agg`` output
+    with the patch columns, one row per key carrying ``_po_<col>``
+    order stamps).
 
     - each patch column updates independently: staged value wins iff
       its stamp is non-NULL and beats (or the target has none) the
@@ -283,8 +280,8 @@ def patch_merge_exprs(
     their text) are testable without the Iceberg runtime: the jarless
     test runs them in a plain Spark SQL SELECT over a full-outer join
     of (target, staged) — which is exactly what MERGE evaluates per
-    matched pair — and pins the result bit-equal to
-    ``lww_patch_stamped`` over the combined history."""
+    matched pair — and pins the result bit-equal to the stamped
+    ``lww_agg`` over the combined history."""
 
     def tup(side: str, cols: list[str]) -> str:
         return "struct(" + ", ".join(f"{side}.{c}" for c in cols) + ")"
@@ -578,53 +575,20 @@ class IcebergSink:
         if stored_marker is not None:
             self.unchanged_marker = stored_marker
 
-    def _stamp_aligned(self, changes: DataFrame) -> DataFrame:
-        """Stamp the batch for the patch merge, aligning missing patch
-        columns (sparse feeds; producers older than an
-        ``evolve_patch_cols``) the way the snapshot sink does: a
-        column still riding ``_extras`` is extracted before stamping
-        (promotion seamlessness); a genuinely absent column is added
-        AFTER stamping as NULL value + NULL stamp — "never carried".
-        Pre-filling NULL values would be wrong under a marker: NULL
-        reads as an explicit NULL WRITE (the Debezium set-to-NULL
-        contract) and would clobber carried values."""
-        patch_cols = self.patch_cols or []
-        missing = [c for c in patch_cols if c not in changes.columns]
+    def _patch_types(self, changes: DataFrame) -> dict[str, str]:
+        """The value type of every patch column, for ``stamp_batch``:
+        the recorded ``patch_types``, else the live table's column
+        type, else ``string``. The table schema is read only when the
+        batch lacks a patch column with no recorded type."""
         types = dict(self.patch_types)
-        if missing and EXTRAS_COL in changes.columns:
-            for c in list(missing):
-                ddl = types.setdefault(c, "string")
-                changes = changes.withColumn(
-                    c, F.col(EXTRAS_COL)[c].cast(ddl)
-                )
-            missing = []
-        carried = [c for c in patch_cols if c in changes.columns]
-        stamped = patch_stamp(
-            changes,
-            self.order_cols,
-            carried,
-            self.unchanged_marker,
-            absent_if=F.col("op") == "delete",
-        )
-        if missing:
+        cols = set(changes.columns)
+        if any(c not in cols and c not in types for c in self.patch_cols or []):
             try:
                 for f in self.spark.table(self.table).schema.fields:
                     types.setdefault(f.name, f.dataType.simpleString())
-            except Exception:
+            except AnalysisException:  # no table yet: first apply
                 pass
-            by_name = {f.name: f.dataType for f in stamped.schema.fields}
-            from pyspark.sql import types as T
-
-            stamp_ddl = T.StructType(
-                [T.StructField(o, by_name[o]) for o in self.order_cols]
-            ).simpleString()
-            for c in missing:
-                stamped = stamped.withColumn(
-                    c, F.lit(None).cast(types.get(c, "string"))
-                ).withColumn(
-                    PATCH_ORD_PREFIX + c, F.lit(None).cast(stamp_ddl)
-                )
-        return stamped
+        return {c: types.get(c, "string") for c in self.patch_cols or []}
 
     # The remaining methods are executable only with the runtime jar;
     # they are exercised by integration deployments, not this sandbox.
@@ -689,13 +653,14 @@ class IcebergSink:
         module docstring), skipped outright when the batch log already
         carries ``batch_id``."""
         self._adopt_table_props()  # refresh stale handles per entry point
-        if self.patch_cols:
-            stamped = self._stamp_aligned(changes)
-            reduced = lww_patch_stamped(
-                stamped, self.keys, self.order_cols, self.patch_cols
-            )
-        else:
-            reduced = lww_agg(changes, self.keys, self.order_cols)
+        stamped = stamp_batch(
+            changes,
+            self.order_cols,
+            self.patch_cols,
+            self._patch_types(changes),
+            self.unchanged_marker,
+        )
+        reduced = lww_agg(stamped, self.keys, self.order_cols, self.patch_cols or ())
         reduced = self._promote_extras(reduced)
         self.ensure_tables(reduced)
         if self._applied(batch_id):

@@ -50,9 +50,10 @@ from pyspark.sql import DataFrame, Observation, SparkSession, functions as F, ty
 
 from ..operators.lww import (
     PATCH_ORD_PREFIX,
+    align_stamps,
     lww_agg,
-    lww_patch_stamped,
     patch_stamp,
+    stamp_batch,
 )
 from ..sources.events import EXTRAS_COL, KEY_COLS, ORDER_COLS
 from .jsonlog import (
@@ -187,11 +188,11 @@ class ParquetSnapshotSink:
 
         What makes this storable and incremental: rows are stamped at
         apply with per-column order structs (``_po_<col>``, see
-        ``patch_stamp``), and every reduction — batch pre-reduce, MOW
+        ``stamp_batch``), and every reduction — batch pre-reduce, MOW
         merge, MOR chain-merge at read, compaction — is the same
-        closed operator ``lww_patch_stamped``. A reduced row re-enters
-        a later merge at exactly the positions its column values were
-        written, so out-of-order batches and replay stay exact: N
+        closed operator, ``lww_agg`` with the patch columns. A reduced
+        row re-enters a later merge at exactly the positions its column
+        values were written, so out-of-order batches and replay stay exact: N
         incremental applies ≡ one reduction over the raw history
         (pinned bit-exact against ``lww_patch`` full-history replay in
         tests). Patch config is recorded in the manifest on first
@@ -1704,127 +1705,20 @@ class ParquetSnapshotSink:
             )
         return self.patch_cols, self.patch_types
 
-    def _align_patch(
-        self, df: DataFrame, manifest: dict | None = None
-    ) -> DataFrame:
-        """Make ``df`` carry every patch column (plus, for stamped
-        frames, every ``_po_<col>`` stamp) as typed NULLs when missing —
-        the metadata-only half of patch-column evolution. A sparse
-        batch that omits an entire patch column, or a stored level
-        written before ``evolve_patch_cols`` added one, reduces as
-        "column never present", which is exactly the patch semantics
-        of an event that does not carry the column. Types come from
-        the manifest's ``patch_types`` (recorded at first apply and at
-        evolution), so alignment never guesses.
-
-        A stamped frame carrying a patch column's VALUE without its
-        stamp is ambiguous (at what position was the value written?)
-        and raises — stored levels are always written with both, and
-        a pre-evolution change feed carries neither."""
-        patch_cols, patch_types = self._patch_conf(manifest)
-        if not patch_cols:
-            return df
-        add = []
-        stamp_ddl = None
-        for c in patch_cols:
-            po = PATCH_ORD_PREFIX + c
-            if po in df.columns:
-                stamp_ddl = df.schema[po].dataType.simpleString()
-                break
-        if stamp_ddl is None and all(o in df.columns for o in self.order_cols):
-            # no stamp column present at all — derive the stamp struct
-            # type from the order columns (a fully pre-evolution level)
-            stamp_ddl = T.StructType(
-                [T.StructField(o, df.schema[o].dataType) for o in self.order_cols]
-            ).simpleString()
-        for c in patch_cols:
-            po = PATCH_ORD_PREFIX + c
-            have_v, have_po = c in df.columns, po in df.columns
-            if have_v and have_po:
-                continue
-            if have_v and not have_po:
-                raise ValueError(
-                    f"stamped frame carries patch column {c!r} without its "
-                    f"{po!r} stamp — evolve the table (evolve_patch_cols) "
-                    "before applying feeds that carry this column"
-                )
-            ddl = patch_types.get(c)
-            if ddl is None:
-                raise ValueError(
-                    f"patch column {c!r} missing from the frame and no type "
-                    "recorded in the manifest (patch_types) to align it"
-                )
-            if stamp_ddl is None:
-                raise ValueError(
-                    "cannot derive the order-stamp type: frame has no "
-                    f"existing {PATCH_ORD_PREFIX}* column and no order "
-                    f"columns {self.order_cols}"
-                )
-            add.append(F.lit(None).cast(ddl).alias(c))
-            add.append(F.lit(None).cast(stamp_ddl).alias(po))
-        return df.select("*", *add) if add else df
-
-    def _stamp(self, df: DataFrame) -> DataFrame:
-        """Patch mode: stamp raw change rows with per-column order
-        structs (no-op row-level). Pure projection — applied once per
-        batch before any reduction, so stored rows are always in the
-        closed stamped form. Alignment of missing patch columns always
-        happens in STAMPED space (NULL value + NULL stamp = "never
-        carried") — never by pre-filling NULL values, which a
-        configured marker would read as explicit NULL writes."""
-        if not self.patch_cols:
-            return df
-        if any(PATCH_ORD_PREFIX + c in df.columns for c in self.patch_cols):
-            # already in stamped form (a patch-mode change feed, or a
-            # replayed stored level) — re-stamping would overwrite the
-            # carried per-column positions with the row's own order;
-            # stamps missing for evolved columns align to NULL.
-            return self._align_patch(df)
-        # Raw batch: a column evolved from the extras map may still
-        # arrive inside ``_extras`` (upstream parser not yet re-run
-        # with the evolved schema) — extract it before stamping so the
-        # promotion is seamless.
-        missing = [c for c in self.patch_cols if c not in df.columns]
-        if missing and EXTRAS_COL in df.columns:
-            for c in missing:
-                # record the type used for the extraction: a later
-                # batch carrying neither the column nor _extras must
-                # still be alignable (patch_types is the only source
-                # of truth for columns that never appear top-level)
-                ddl = self.patch_types.setdefault(c, "string")
-                df = df.withColumn(c, F.col(EXTRAS_COL)[c].cast(ddl))
-        # Stamp ONLY the columns the batch actually carries, then
-        # align the rest in STAMPED space (NULL value + NULL stamp =
-        # "never carried"). Aligning BEFORE stamping would be wrong
-        # under a marker: a NULL value reads as an explicit NULL WRITE
-        # (the Debezium set-to-NULL contract), silently clobbering
-        # carried values at the batch's positions.
-        carried = [c for c in self.patch_cols if c in df.columns]
-        df = patch_stamp(
-            df,
-            self.order_cols,
-            carried,
-            self.unchanged_marker,
-            absent_if=F.col("op") == "delete",
-        )
-        return self._align_patch(df)
-
     def _reduce(
         self, df: DataFrame, keys: list[str], manifest: dict | None = None
     ) -> DataFrame:
-        """THE merge operator for this table: row-level LWW, or the
-        closed column-level patch reduction when in patch mode. Every
-        reduction in the sink (apply, chain-merge at read, compact,
-        rebucket, rewrite, purge) goes through here — correctness of
-        MOR / replay rests on all of them being the same associative
-        operator. ``manifest`` overrides the patch config for time
+        """THE merge operator for this table: ``lww_agg`` over the
+        stamped form, aligned to the patch columns (plain row-level
+        LWW when there are none). Every reduction in the sink (apply,
+        chain-merge at read, compact, rebucket, rewrite, purge) goes
+        through here — correctness of MOR / replay rests on all of
+        them being the same associative operator. ``manifest`` overrides the patch config for time
         travel (merge a snapshot under the config committed at that
         version, not today's)."""
-        patch_cols, _ = self._patch_conf(manifest)
-        if patch_cols:
-            df = self._align_patch(df, manifest=manifest)
-            return lww_patch_stamped(df, keys, self.order_cols, patch_cols)
-        return lww_agg(df, keys, self.order_cols)
+        patch_cols, patch_types = self._patch_conf(manifest)
+        df = align_stamps(df, self.order_cols, patch_cols, patch_types)
+        return lww_agg(df, keys, self.order_cols, patch_cols or ())
 
     def _drop_patch_meta(
         self, df: DataFrame, manifest: dict | None = None
@@ -2024,14 +1918,6 @@ class ParquetSnapshotSink:
                     changes = changes.withColumn(
                         c, F.lit(d["v"]).cast(d["t"])
                     )
-        if self.patch_cols:
-            # Record each patch column's type the first time a batch
-            # carries it — alignment of later sparse batches / stored
-            # pre-evolution levels needs a recorded type, never a guess.
-            by_name = {f.name: f.dataType.simpleString() for f in changes.schema.fields}
-            for c in self.patch_cols:
-                if c not in self.patch_types and c in by_name:
-                    self.patch_types[c] = by_name[c]
 
         obs = Observation(f"apply-{batch_id}-{uuid.uuid4().hex[:8]}")
         key0 = F.col(self.keys[0])
@@ -2056,7 +1942,13 @@ class ParquetSnapshotSink:
                     F.flatten(F.collect_set(F.map_keys(F.col(EXTRAS_COL))))
                 ).alias("extra_keys")
             )
-        staged = self._stamp(changes.withColumn(BUCKET_COL, self._bucket_expr()))
+        staged = stamp_batch(
+            changes.withColumn(BUCKET_COL, self._bucket_expr()),
+            self.order_cols,
+            self.patch_cols,
+            self.patch_types,
+            self.unchanged_marker,
+        )
         if self.mode == "mor":
             return self._apply_mor(
                 staged.observe(obs, *metrics_exprs), batch_id, manifest, obs, t0
@@ -2825,7 +2717,7 @@ class ParquetSnapshotSink:
             # single-level chain: no reduction runs, but the output
             # schema must still carry evolved patch columns (typed
             # NULL for levels written before the evolution)
-            df = self._align_patch(df, manifest=conf)
+            df = align_stamps(df, self.order_cols, *self._patch_conf(conf))
         if lo_us is not None:
             # residual freshness filter on the WINNER's ts (pruning is
             # an optimization; this guarantees exactness either way)
@@ -3545,7 +3437,7 @@ class ParquetSnapshotSink:
           first appears mid-stream, typically discovered via the
           ``_extras`` map): METADATA-ONLY. No data is touched; stored
           levels lacking the column align to typed-NULL value + NULL
-          stamp at merge time (``_align_patch``), which is exactly
+          stamp at merge time (``align_stamps``), which is exactly
           "never present yet". O(1) regardless of table size.
         - **Promotion** (the column exists in stored rows — as row-level
           payload, or inside ``_extras``): one manifest-committed

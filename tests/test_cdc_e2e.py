@@ -9,7 +9,12 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from embulk_util_json_spark.operators.lww import lww_agg, lww_salted, lww_window
+from embulk_util_json_spark.operators.lww import (
+    lww_agg,
+    lww_patch,
+    lww_salted,
+    lww_window,
+)
 from embulk_util_json_spark.sinks.snapshot import ParquetSnapshotSink
 from embulk_util_json_spark.sources.events import parse_change_events
 from embulk_util_json_spark.sources.generator import generate_events
@@ -89,7 +94,7 @@ def assert_matches_oracle(sink, oracle_state):
     assert not mismatches, f"{len(mismatches)} mismatching keys, e.g. {list(mismatches.items())[:3]}"
 
 
-def test_lww_variants_equivalent(spark, events_parquet):
+def test_lww_variants_equivalent(spark, events_parquet, tmp_path):
     ev = spark.read.parquet(events_parquet)
     ch = parse_change_events(ev)
     keys = ["conv_id", "turn_idx"]
@@ -102,6 +107,37 @@ def test_lww_variants_equivalent(spark, events_parquet):
     rw = sorted(map(tuple, w.select(cols).collect()))
     rs = sorted(map(tuple, s.select(cols).collect()))
     assert ra == rw == rs
+
+    # a payload column named with a dot is one column, not a struct
+    # field access: every variant and a two-level MOR read agree
+    rows = [
+        ("k1", 1, 1, "insert", "x1"),
+        ("k1", 2, 2, "update", "x2"),
+        ("k2", 1, 3, "insert", "y1"),
+        ("k2", 1, 4, "delete", "y2"),
+        ("k3", 5, 5, "insert", "z1"),
+    ]
+    dot = spark.createDataFrame(
+        rows, "conv_id string, ts long, seq long, op string, `a.b` string"
+    )
+    by_name = [F.col(f"`{c}`") for c in dot.columns]
+    k = ["conv_id"]
+    want = sorted(map(tuple, lww_window(dot, k, order).collect()))
+    for got in (
+        lww_agg(dot, k, order),
+        lww_salted(dot, k, order, salt_buckets=4),
+        lww_patch(dot, k, order, ["a.b"]),
+    ):
+        assert sorted(map(tuple, got.select(by_name).collect())) == want
+    sink = ParquetSnapshotSink(
+        spark, str(tmp_path / "dotted"), num_buckets=2, keys=k, mode="mor"
+    )
+    sink.apply(dot.filter("seq <= 3"), "b0")
+    sink.apply(dot.filter("seq >= 3"), "b1")
+    got = sink.read().select("conv_id", F.col("`a.b`")).collect()
+    assert sorted(map(tuple, got)) == [
+        (r[0], r[4]) for r in want if r[3] != "delete"
+    ]
 
 
 def test_single_batch_replay_matches_oracle(spark, events_parquet, oracle_state, tmp_path):

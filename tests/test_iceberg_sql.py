@@ -286,16 +286,13 @@ def test_merge_patch_structure():
 def test_patch_merge_exprs_semantics(spark):
     """Run the generated CASE expressions in plain Spark SQL over a
     full-outer join of (target, staged) — exactly what MERGE evaluates
-    per key pair — and pin the result bit-equal to lww_patch_stamped
+    per key pair — and pin the result bit-equal to the stamped lww_agg
     over the combined history. This is the jarless semantic proof that
     the Iceberg patch MERGE and the snapshot sink's patch mode are the
     same operator."""
     from pyspark.sql import functions as F
 
-    from embulk_util_json_spark.operators.lww import (
-        lww_patch_stamped,
-        patch_stamp,
-    )
+    from embulk_util_json_spark.operators.lww import lww_agg, patch_stamp
     from embulk_util_json_spark.sinks.iceberg import patch_merge_exprs
 
     M = "__unchanged__"
@@ -318,7 +315,7 @@ def test_patch_merge_exprs_semantics(spark):
         spark.createDataFrame(rs, schema), ORDER, PATCH, M,
         absent_if=F.col("op") == "delete",
     )
-    red = lambda d: lww_patch_stamped(d, KEYS, ORDER, PATCH)  # noqa: E731
+    red = lambda d: lww_agg(d, KEYS, ORDER, PATCH)  # noqa: E731
     target = red(stamp(rows[:80]))   # prior table state
     staged = red(stamp(rows[80:]))   # one pre-reduced batch
     target.createOrReplaceTempView("t_state")

@@ -144,13 +144,20 @@ def test_patch_stamp_rejects_map_and_missing_columns(spark):
     from embulk_util_json_spark.operators.lww import patch_stamp
 
     df = spark.createDataFrame(
-        [("c1", 0, 1, 1, {"k": "v"})],
-        "conv_id string, turn_idx int, ts long, seq long, attrs map<string,string>",
+        [("c1", 0, 1, 1, {"k": "v"}, [{"k": "v"}], ([{"k": "v"}],))],
+        "conv_id string, turn_idx int, ts long, seq long, attrs map<string,string>, "
+        "tags array<map<string,string>>, doc struct<m: array<map<string,string>>>",
     )
     import pytest as _pytest
 
     with _pytest.raises(ValueError, match="map-typed"):
         patch_stamp(df, ORDER, ["attrs"])
+    # a map at any depth inside an array or struct is just as unorderable
+    for nested in ("tags", "doc"):
+        with _pytest.raises(ValueError, match="map-typed"):
+            patch_stamp(df, ORDER, [nested])
+        with _pytest.raises(ValueError, match="map-typed"):
+            lww_patch(df, KEYS, ORDER, [nested])
     with _pytest.raises(ValueError, match="absent"):
         patch_stamp(df, ORDER, ["nope"])
 

@@ -4,7 +4,7 @@ The contract under test: N incremental ``apply`` calls of a patch-
 style change stream (MOW or MOR, in or out of batch order, with
 compactions interleaved) produce EXACTLY the state of one
 ``lww_patch`` reduction over the full raw history — the storable
-stamped form (``patch_stamp`` / ``lww_patch_stamped``) is a closed
+stamped form (``patch_stamp`` / ``lww_agg`` with ``patch_cols``) is a closed
 associative operator, so the sink can persist intermediate reductions
 without losing column-level carry-forward.
 
@@ -16,7 +16,9 @@ merge. Here the merge IS the engine's, so its algebra is pinned.
 
 from __future__ import annotations
 
+import ast
 import os
+import pathlib
 import tempfile
 
 import pytest
@@ -24,9 +26,10 @@ from pyspark.sql import functions as F
 
 from embulk_util_json_spark.operators.lww import (
     PATCH_ORD_PREFIX,
+    lww_agg,
     lww_patch,
-    lww_patch_stamped,
     patch_stamp,
+    stamp_batch,
 )
 from embulk_util_json_spark.sinks.snapshot import ParquetSnapshotSink
 
@@ -124,7 +127,7 @@ def test_stamp_reduce_equals_lww_patch(spark):
     stamped = patch_stamp(
         df, ORDER, PATCH, unchanged_marker=M, absent_if=F.col("op") == "delete"
     )
-    via_stamped = lww_patch_stamped(stamped, KEYS, ORDER, PATCH).drop(
+    via_stamped = lww_agg(stamped, KEYS, ORDER, PATCH).drop(
         *[PATCH_ORD_PREFIX + c for c in PATCH]
     )
     assert _as_set(via_stamped.select(*via_patch.columns)) == _as_set(via_patch)
@@ -140,10 +143,141 @@ def test_stamped_reduction_is_associative(spark):
             _df(spark, rs), ORDER, PATCH, unchanged_marker=M,
             absent_if=F.col("op") == "delete",
         )
-        red = lambda d: lww_patch_stamped(d, KEYS, ORDER, PATCH)  # noqa: E731
+        red = lambda d: lww_agg(d, KEYS, ORDER, PATCH)  # noqa: E731
         split = red(red(stamp(a)).unionByName(red(stamp(b))))
         whole = red(stamp(rows))
         assert _as_set(split.select(*whole.columns)) == _as_set(whole)
+
+
+# ---- the batch-stamping step both sinks share ----------------------------
+#
+# The Iceberg sink runs only with its runtime jar, so its stamping is
+# pinned here through the shared function, with the types it resolves
+# (``IcebergSink._patch_types``: recorded, else the table's, else
+# ``string``).
+
+_ROW = ["conv_id", "turn_idx", "op", "role", "text", "tool"]
+
+
+def _merged(stamped):
+    """Per-key state of a stamped frame, stamps dropped."""
+    return _as_set(lww_agg(stamped, KEYS, ORDER, PATCH).select(*_ROW))
+
+
+def _want(spark, rows):
+    """lww_patch over the equivalent raw batch."""
+    return _as_set(
+        lww_patch(
+            _df(spark, rows), KEYS, ORDER, PATCH, M, F.col("op") == "delete"
+        ).select(*_ROW)
+    )
+
+
+def test_stamp_batch_extracts_column_riding_extras(spark):
+    rows = _stream(n=120)
+    raw = _df(spark, rows)
+    batch = raw.withColumn(
+        "_extras", F.create_map(F.lit("tool"), F.col("tool"))
+    ).drop("tool")
+    types = {"role": "string", "text": "string"}
+    stamped = stamp_batch(batch, ORDER, PATCH, types, M)
+    assert types["tool"] == "string"  # recorded for later sparse batches
+    assert _merged(stamped.drop("_extras")) == _want(spark, rows)
+
+
+def test_stamp_batch_aligns_absent_column_with_fallback_type(spark):
+    from embulk_util_json_spark.sinks.iceberg import IcebergSink
+
+    rows = _stream(n=120)
+    batch = _df(spark, rows).drop("tool")
+    # the Iceberg sink's resolution with no recorded type and no table
+    sink = object.__new__(IcebergSink)
+    sink.spark, sink.table = spark, "no_such_db.no_such_table"
+    sink.patch_cols, sink.patch_types = PATCH, {"role": "string"}
+    types = sink._patch_types(batch)
+    assert types == {"role": "string", "text": "string", "tool": "string"}
+    stamped = stamp_batch(batch, ORDER, PATCH, types, M)
+    assert stamped.schema["tool"].dataType.simpleString() == "string"
+    assert stamped.filter(F.col(PATCH_ORD_PREFIX + "tool").isNotNull()).count() == 0
+    # never carried == carried as the marker on every event
+    never = [(*r[:7], M) for r in rows]
+    assert _merged(stamped) == _want(spark, never)
+    # with no type to align by, the snapshot sink's config raises
+    with pytest.raises(ValueError, match="no type"):
+        stamp_batch(batch, ORDER, PATCH, {"role": "string", "text": "string"}, M)
+
+
+def test_stamp_batch_keeps_stamps_of_stamped_frame(spark):
+    rows = _stream(n=160)
+    types = {c: "string" for c in PATCH}
+    level = lww_agg(
+        stamp_batch(_df(spark, rows[:100]), ORDER, PATCH, types, M),
+        KEYS, ORDER, PATCH,
+    )
+    again = stamp_batch(level, ORDER, PATCH, types, M)
+    assert again.columns == level.columns
+    assert _as_set(again) == _as_set(level)
+    tail = stamp_batch(_df(spark, rows[100:]), ORDER, PATCH, types, M)
+    assert _merged(again.unionByName(tail)) == _want(spark, rows)
+    # a level written before ``tool`` was a patch column aligns to
+    # "never carried", like its raw events with the marker
+    early = stamp_batch(
+        level.drop("tool", PATCH_ORD_PREFIX + "tool"), ORDER, PATCH, types, M
+    )
+    assert _merged(early) == _want(
+        spark, [(*r[:7], M) for r in rows[:100]]
+    )
+
+
+def test_stamp_batch_rejects_value_without_stamp(spark):
+    types = {c: "string" for c in PATCH}
+    stamped = stamp_batch(_df(spark, _stream(n=40)), ORDER, PATCH, types, M)
+    with pytest.raises(ValueError, match="without its"):
+        stamp_batch(
+            stamped.drop(PATCH_ORD_PREFIX + "tool"), ORDER, PATCH, types, M
+        )
+
+
+def _by_function(tree):
+    """(innermost enclosing ``def`` name or None, node) for every node."""
+    stack = [(tree, None)]
+    while stack:
+        node, fn = stack.pop()
+        yield fn, node
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            fn = node.name
+        stack.extend((c, fn) for c in ast.iter_child_nodes(node))
+
+
+def test_merge_algebra_has_one_home():
+    """``operators/lww.py`` holds the one reduction (``lww_agg``), the
+    one salted split and the one batch-stamping step: no second
+    stamped reduction or sink-side stamper is defined anywhere in the
+    package, and no sink calls ``patch_stamp`` directly except the
+    ``evolve_patch_cols`` promotion, which stamps already-reduced rows
+    at their own positions."""
+    import embulk_util_json_spark
+
+    pkg = pathlib.Path(embulk_util_json_spark.__file__).parent
+    gone = {"lww_patch_stamped", "_stamp_aligned", "_align_patch"}
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = str(path.relative_to(pkg))
+        for fn, node in _by_function(ast.parse(path.read_text(), rel)):
+            if (
+                isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+                and node.name in gone
+            ):
+                offenders.append(f"{rel}:{node.lineno} defines {node.name}")
+            if (
+                rel.startswith("sinks/")
+                and isinstance(node, ast.Call)
+                and getattr(node.func, "id", getattr(node.func, "attr", None))
+                == "patch_stamp"
+                and fn != "evolve_patch_cols"
+            ):
+                offenders.append(f"{rel}:{node.lineno} patch_stamp in {fn}")
+    assert offenders == []
 
 
 # ---- sink end-to-end -----------------------------------------------------

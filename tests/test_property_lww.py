@@ -207,8 +207,8 @@ def test_patch_evolution_alignment_equals_full_history(spark, events, cut, seed)
 
     from embulk_util_json_spark.operators.lww import (
         PATCH_ORD_PREFIX,
+        lww_agg,
         lww_patch,
-        lww_patch_stamped,
         patch_stamp,
     )
 
@@ -233,7 +233,7 @@ def test_patch_evolution_alignment_equals_full_history(spark, events, cut, seed)
         F.lit(None).cast("struct<ts:int,seq:int>").alias(PATCH_ORD_PREFIX + "b"),
     )
     post_stamped = patch_stamp(post, ["ts", "seq"], ["a", "b"], _M)
-    merged = lww_patch_stamped(
+    merged = lww_agg(
         pre_aligned.unionByName(post_stamped), ["key"], ["ts", "seq"], ["a", "b"]
     )
     got = {r.key: (r.a, r.b) for r in merged.collect()}
