@@ -131,7 +131,7 @@ def merge_into(
     # keeps its order) and holds only its new level
     keep = {**sink._chains(manifest), **dict.fromkeys(map(str, affected), [])}
     new = sink._write_level(
-        manifest, merged, keep, record, t0, n=len(affected),
+        manifest, merged, keep, record, t0,
         **sink._batch_fields(manifest, batch_id, merged),
     )
     return new["applies"][-1]

@@ -50,6 +50,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession, functions as F, ty
 
 from ..operators.lww import (
     PATCH_ORD_PREFIX,
+    _col,
     align_stamps,
     lww_agg,
     patch_stamp,
@@ -1073,7 +1074,7 @@ class ParquetSnapshotSink:
         if not checks:
             return
         scope = (
-            changes.filter(F.col("op") != F.lit("delete"))
+            changes.filter(_col("op") != F.lit("delete"))
             if "op" in present
             else changes
         )
@@ -1739,7 +1740,7 @@ class ParquetSnapshotSink:
             return df
         for name in manifest.get("extra_fields", []):
             if name not in df.columns and (columns is None or name in columns):
-                df = df.withColumn(name, F.col(EXTRAS_COL)[name])
+                df = df.withColumn(name, _col(EXTRAS_COL)[name])
         return df.drop(EXTRAS_COL)
 
     @staticmethod
@@ -1776,7 +1777,7 @@ class ParquetSnapshotSink:
 
     def _bucket_expr(self, col=None, num_buckets: int | None = None):
         if col is None:
-            col = F.col(self.bucket_by)
+            col = _col(self.bucket_by)
         return F.pmod(F.xxhash64(col), F.lit(num_buckets or self.num_buckets))
 
     def bucket_of(self, value, num_buckets: int | None = None) -> int:
@@ -1835,7 +1836,7 @@ class ParquetSnapshotSink:
         pinned = probe.persist()
         row = pinned.agg(
             *[
-                F.collect_set(s._bucket_expr(F.col(c), n)).alias(f"b{i}")
+                F.collect_set(s._bucket_expr(_col(c), n)).alias(f"b{i}")
                 for i, (s, c, n) in enumerate(pairs)
             ]
         ).collect()[0]
@@ -1920,7 +1921,7 @@ class ParquetSnapshotSink:
                     )
 
         obs = Observation(f"apply-{batch_id}-{uuid.uuid4().hex[:8]}")
-        key0 = F.col(self.keys[0])
+        key0 = _col(self.keys[0])
         metrics_exprs = [
             F.count(F.lit(1)).alias("change_rows"),
             # Quarantine count (reference: row-skippable JsonParseException,
@@ -1929,7 +1930,7 @@ class ParquetSnapshotSink:
             # projection — a pre-filter would be pushed below the parse
             # and re-parse every row per predicate.
             F.sum(
-                F.when(F.col("op").isNull() | key0.isNull(), 1).otherwise(0)
+                F.when(_col("op").isNull() | key0.isNull(), 1).otherwise(0)
             ).alias("malformed_rows"),
         ]
         if EXTRAS_COL in changes.columns:
@@ -1939,7 +1940,7 @@ class ParquetSnapshotSink:
             # number of distinct event shapes, not rows).
             metrics_exprs.append(
                 F.array_distinct(
-                    F.flatten(F.collect_set(F.map_keys(F.col(EXTRAS_COL))))
+                    F.flatten(F.collect_set(F.map_keys(_col(EXTRAS_COL))))
                 ).alias("extra_keys")
             )
         staged = stamp_batch(
@@ -1959,13 +1960,20 @@ class ParquetSnapshotSink:
         self,
         df: DataFrame,
         version: int,
-        n: int,
         banded: bool = False,
         pre_partitioned: bool = False,
     ) -> tuple[dict[str, list[str]], dict[str, int], dict[str, dict]]:
         """THE bucket-partitioned write, called only by ``_write_level``:
         stages rows into a fresh ``_data_rel(version)`` dir and returns
         ``_bucket_footer_info`` of what was written.
+
+        Rows are hash-partitioned by ``_bucket`` with no count (unless
+        ``pre_partitioned`` by ``_partitioned_reduce``), so adaptive
+        execution coalesces the write by its bytes; with AQE off it
+        runs ``spark.sql.shuffle.partitions`` tasks. A task may hold
+        several buckets but a bucket never spans two, and sorting by
+        the partition columns, then the keys, gives each bucket one
+        key-sorted file per level with no sort of the writer's own.
 
         Timestamps are forced to TIMESTAMP_MICROS for the write
         (session conf scoped + restored): Spark's INT96 default
@@ -1981,13 +1989,9 @@ class ParquetSnapshotSink:
         part_cols = [BAND_COL, BUCKET_COL] if banded else [BUCKET_COL]
         try:
             if not pre_partitioned:
-                # ``pre_partitioned``: the caller already hash-
-                # partitioned by _bucket (the fused reduce+write path —
-                # see _partitioned_reduce), so a second full-data
-                # shuffle here would be pure waste.
-                df = df.repartition(min(n, 256), F.col(BUCKET_COL))
+                df = df.repartition(_col(BUCKET_COL))
             (
-                df.sortWithinPartitions(*self.keys)
+                df.sortWithinPartitions(*part_cols, *map(_col, self.keys))
                 .write.mode("overwrite")
                 .partitionBy(*part_cols)
                 .parquet(os.path.join(self.root, out_rel))
@@ -1996,7 +2000,7 @@ class ParquetSnapshotSink:
             self.spark.conf.set(key, prev)
         return self._bucket_footer_info(out_rel)
 
-    def _partitioned_reduce(self, df: DataFrame, n: int) -> DataFrame:
+    def _partitioned_reduce(self, df: DataFrame) -> DataFrame:
         """Fused shuffle for the apply/compact hot path: hash-
         partition by ``_bucket`` once, then run THE reduce on top.
         ``_bucket`` is a member of the grouping keys, so Catalyst
@@ -2005,12 +2009,12 @@ class ParquetSnapshotSink:
         — ONE shuffle of the data instead of reduce-by-key THEN
         repartition-by-bucket. The output stays partitioned by bucket,
         so ``_write_level(..., pre_partitioned=True)`` writes it
-        directly. At 10^10-event scale this halves the shuffled bytes
-        of every apply and compaction; plan-asserted in tests (single
-        Exchange)."""
+        directly; plan-asserted in tests (single Exchange). The
+        repartition names no count, so adaptive execution sizes the
+        shuffle by its bytes: a trickle apply into 8 buckets runs one
+        reduce+write task, not 8 (see ``_write_buckets``)."""
         return self._reduce(
-            df.repartition(min(n, 256), F.col(BUCKET_COL)),
-            self.keys + [BUCKET_COL],
+            df.repartition(_col(BUCKET_COL)), self.keys + [BUCKET_COL]
         )
 
     @staticmethod
@@ -2200,7 +2204,6 @@ class ParquetSnapshotSink:
         record,
         t0: float,
         *,
-        n: int,
         obs=None,
         banded: bool = False,
         pre_partitioned: bool = False,
@@ -2230,7 +2233,7 @@ class ParquetSnapshotSink:
         ``extra_fields``. Returns the committed manifest."""
         version = manifest["version"] + 1
         chains, counts, path_stats = (
-            self._write_buckets(rows, version, n, banded, pre_partitioned)
+            self._write_buckets(rows, version, banded, pre_partitioned)
             if rows is not None
             else ({}, {}, None)
         )
@@ -2341,7 +2344,7 @@ class ParquetSnapshotSink:
                     BUCKET_COL, self._bucket_expr()
                 )
                 merged = staged.unionByName(old, allowMissingColumns=True)
-            merged = self._partitioned_reduce(merged, len(affected))
+            merged = self._partitioned_reduce(merged)
 
         def record(seen, counts, _):
             if merged is None:  # an empty batch still commits its batch_id
@@ -2364,7 +2367,7 @@ class ParquetSnapshotSink:
         # keeps its order) and holds only its new level
         keep = {**self._chains(manifest), **dict.fromkeys(map(str, affected), [])}
         new = self._write_level(
-            manifest, merged, keep, record, t0, n=len(affected), obs=obs,
+            manifest, merged, keep, record, t0, obs=obs,
             pre_partitioned=True, **self._batch_fields(manifest, batch_id, merged),
         )
         return new["applies"][-1]
@@ -2376,7 +2379,7 @@ class ParquetSnapshotSink:
         bucket) — ONE shuffle of batch-sized data with map-side partial
         combine — and append it as a delta level; never read the
         table. Write cost is O(batch) regardless of table size."""
-        delta = self._partitioned_reduce(staged, self.num_buckets)
+        delta = self._partitioned_reduce(staged)
 
         def record(seen, counts, buckets):
             # unresolved row ⟹ the write ran zero tasks ⟹ empty batch.
@@ -2395,7 +2398,7 @@ class ParquetSnapshotSink:
 
         new = self._write_level(
             manifest, delta, self._chains(manifest), record, t0,
-            n=self.num_buckets, obs=obs, pre_partitioned=True,
+            obs=obs, pre_partitioned=True,
             **self._batch_fields(manifest, batch_id, delta),
         )
         # Bound read amplification: collapse chains that grew too deep.
@@ -2587,7 +2590,7 @@ class ParquetSnapshotSink:
         )
         probe = (
             probe_keys.select(self.bucket_by)
-            .filter(F.col(self.bucket_by).isNotNull())
+            .filter(_col(self.bucket_by).isNotNull())
             .distinct()
             if probe_keys is not None
             else None
@@ -2613,7 +2616,7 @@ class ParquetSnapshotSink:
                 hit = [
                     r.b
                     for r in probe.select(
-                        self._bucket_expr(F.col(self.bucket_by), nb).alias("b")
+                        self._bucket_expr(_col(self.bucket_by), nb).alias("b")
                     )
                     .distinct()
                     .collect()
@@ -2673,9 +2676,9 @@ class ParquetSnapshotSink:
         # Null-key guard: quarantined (malformed) rows are stored as a
         # null-key group rather than pre-filtered before the shuffle
         # (see runner.apply_events_batch); they never surface in reads.
-        df = df.filter(F.col(self.keys[0]).isNotNull())
+        df = df.filter(_col(self.keys[0]).isNotNull())
         for k, v in (key_eq or {}).items():
-            df = df.filter(F.col(k) == F.lit(v))
+            df = df.filter(_col(k) == F.lit(v))
         conf = manifest
         if columns is not None:
             known = (
@@ -2706,7 +2709,7 @@ class ParquetSnapshotSink:
                 c in manifest.get("extra_fields", []) for c in columns
             ):
                 keep.append(EXTRAS_COL)
-            df = df.select(*[c for c in keep if c in df.columns])
+            df = df.select(*[_col(c) for c in keep if c in df.columns])
             # merge under the PROJECTED patch set: per-column
             # independence makes dropping unrequested columns exact,
             # and alignment must not resurrect them as NULLs
@@ -2728,9 +2731,9 @@ class ParquetSnapshotSink:
             ).replace(tzinfo=None)
             ts_col = self.order_cols[0]
             if ts_col in df.columns:
-                df = df.filter(F.col(ts_col) >= F.lit(naive))
+                df = df.filter(_col(ts_col) >= F.lit(naive))
         if not include_tombstones:
-            df = df.filter(F.col("op") != "delete")
+            df = df.filter(_col("op") != "delete")
         if not include_meta:
             df = self._drop_patch_meta(df.drop(*META_COLS), manifest=conf)
         df = self._extras_to_columns(df, manifest, columns)
@@ -2751,7 +2754,7 @@ class ParquetSnapshotSink:
                     val = _dt.datetime.fromtimestamp(
                         val / 1e6, _dt.timezone.utc
                     ).replace(tzinfo=None)
-                c = F.col(col)
+                c = _col(col)
                 df = df.filter(
                     {
                         "=": c == F.lit(val),
@@ -2763,7 +2766,7 @@ class ParquetSnapshotSink:
                 )
         if columns is not None and not include_meta:
             out_cols = list(dict.fromkeys([*self.keys, *columns]))
-            df = df.select(*[c for c in out_cols if c in df.columns])
+            df = df.select(*[_col(c) for c in out_cols if c in df.columns])
         return self._to_logical_frame(df, mapping) if mapping else df
 
     def _guard_rollback_window(self, from_version: int, to_version: int) -> None:
@@ -2835,7 +2838,7 @@ class ParquetSnapshotSink:
         # inside it is absent from the whole feed
         cand = self._read_bucket_paths(
             new_paths, conf_manifest=to_manifest
-        ).filter(F.col(self.keys[0]).isNotNull())
+        ).filter(_col(self.keys[0]).isNotNull())
         return cand, from_manifest, to_manifest, new_paths
 
     def _from_state(
@@ -2857,7 +2860,7 @@ class ParquetSnapshotSink:
             return None
         return self._read_bucket_paths(
             old_paths, conf_manifest=to_manifest
-        ).filter(F.col(self.keys[0]).isNotNull())
+        ).filter(_col(self.keys[0]).isNotNull())
 
     def changed_keys(
         self, from_version: int, to_version: int | None = None
@@ -2983,29 +2986,22 @@ class ParquetSnapshotSink:
             )
             old = old.select(
                 *self.keys,
-                *[F.col(c).alias(f"_old_{c}") for c in old_cols],
+                *[_col(c).alias(f"_old_{c}") for c in old_cols],
             )
             # identical inner field names on both sides — struct
             # comparison requires matching types including names
-            new_ord = F.struct(
-                *[F.col(c).alias(c) for c in self.order_cols]
-            )
-            old_ord = F.struct(
-                *[
-                    F.col(f"_old_{c}").alias(c)
-                    for c in self.order_cols
-                ]
-            )
+            new_ord = F.struct(*[_col(c).alias(c) for c in self.order_cols])
+            old_ord = F.struct(*[_col(f"_old_{c}").alias(c) for c in self.order_cols])
             cand = cand.join(old, self.keys, "left").filter(
-                F.col(f"_old_{self.order_cols[0]}").isNull()
+                _col(f"_old_{self.order_cols[0]}").isNull()
                 | (new_ord > old_ord)
             )
             if include_preimage:
                 pre = cand.filter(
-                    F.col(f"_old_{self.order_cols[0]}").isNotNull()
+                    _col(f"_old_{self.order_cols[0]}").isNotNull()
                 ).select(
                     *self.keys,
-                    *[F.col(f"_old_{c}").alias(c) for c in old_cols],
+                    *[_col(f"_old_{c}").alias(c) for c in old_cols],
                 )
             cand = cand.drop(*[f"_old_{c}" for c in old_cols])
 
@@ -3053,25 +3049,30 @@ class ParquetSnapshotSink:
                 self.keys,
                 manifest=to_manifest,
             )
+            # a map is not comparable: compare it by its sorted entries
             vis = [
-                c
-                for c in merged.columns
-                if not c.startswith(PATCH_ORD_PREFIX)
-                and c not in self.keys
-                and c != BUCKET_COL
+                (
+                    F.array_sort(F.map_entries(_col(f.name)))
+                    if isinstance(f.dataType, T.MapType)
+                    else _col(f.name)
+                ).alias(f.name)
+                for f in merged.schema
+                if not f.name.startswith(PATCH_ORD_PREFIX)
+                and f.name not in self.keys
+                and f.name != BUCKET_COL
             ]
-            row_of = lambda: F.struct(*[F.col(c).alias(c) for c in vis])  # noqa: E731
+            row = F.struct(*vis)
             # align the old state to merged's (possibly evolved)
             # schema: missing columns appear as typed NULLs
             old_aligned = old_state.unionByName(
                 merged.limit(0), allowMissingColumns=True
             )
-            old_cmp = old_aligned.select(*self.keys, row_of().alias("_old_row"))
+            old_cmp = old_aligned.select(*map(_col, self.keys), row.alias("_old_row"))
             out = (
                 merged.join(old_cmp, self.keys, "left")
                 .filter(
-                    F.col("_old_row").isNull()
-                    | ~row_of().eqNullSafe(F.col("_old_row"))
+                    _col("_old_row").isNull()
+                    | ~row.eqNullSafe(_col("_old_row"))
                 )
                 .drop("_old_row")
             )
@@ -3130,12 +3131,12 @@ class ParquetSnapshotSink:
         # so adding it to the grouping keys is a no-op) — the fused
         # single-shuffle reduce+write path, same as apply
         df = df.withColumn(BUCKET_COL, self._bucket_expr())
-        df = self._partitioned_reduce(df, self.num_buckets)
+        df = self._partitioned_reduce(df)
         if drop_tombstones:
-            is_del = F.col("op") == "delete"
+            is_del = _col("op") == "delete"
             if tombstone_watermark is not None:
                 df = df.filter(
-                    ~(is_del & (F.col("ts") < F.lit(tombstone_watermark).cast("timestamp")))
+                    ~(is_del & (_col("ts") < F.lit(tombstone_watermark).cast("timestamp")))
                 )
             else:
                 df = df.filter(~is_del)
@@ -3146,7 +3147,7 @@ class ParquetSnapshotSink:
                     raise ValueError("ts_bands int must be >= 2")
                 qs = [i / ts_bands for i in range(1, ts_bands)]
                 micros = df.select(
-                    F.unix_micros(F.col(ts_col)).alias("_us")
+                    F.unix_micros(_col(ts_col)).alias("_us")
                 )
                 edges_us = sorted(
                     set(
@@ -3162,7 +3163,7 @@ class ParquetSnapshotSink:
             band = F.lit(0)
             for e in edges_us:
                 band = band + F.when(
-                    F.unix_micros(F.col(ts_col)) >= F.lit(e), 1
+                    F.unix_micros(_col(ts_col)) >= F.lit(e), 1
                 ).otherwise(0)
             df = df.withColumn(BAND_COL, band)
         # flat layout: one chain element per bucket; banded: one per
@@ -3174,7 +3175,7 @@ class ParquetSnapshotSink:
                 "buckets_compacted": len(target),
                 "ts_bands": (len(edges_us) + 1) if ts_bands else None,
             },
-            t0, n=self.num_buckets, banded=bool(ts_bands), pre_partitioned=True,
+            t0, banded=bool(ts_bands), pre_partitioned=True,
         )
         return {"version": new["version"], "buckets_compacted": len(target)}
 
@@ -3304,7 +3305,7 @@ class ParquetSnapshotSink:
             [p for ps in deltas_of.values() for p in ps]
         )
         df = df.withColumn(BUCKET_COL, self._bucket_expr())
-        df = self._partitioned_reduce(df, self.num_buckets)
+        df = self._partitioned_reduce(df)
         # each merged bucket keeps its base, and its deltas become one
         # level on top of it
         keep = self._chains(manifest, drop=deltas_of)
@@ -3316,7 +3317,7 @@ class ParquetSnapshotSink:
         }
         new = self._write_level(
             manifest, df, keep, {"compact_minor": True, **out}, t0,
-            n=self.num_buckets, pre_partitioned=True,
+            pre_partitioned=True,
         )
         return {"version": new["version"], **out}
 
@@ -3357,7 +3358,7 @@ class ParquetSnapshotSink:
             # bucket is as much a function of the key as the old one,
             # so the fused single-shuffle path applies here too
             df = df.withColumn(BUCKET_COL, self._bucket_expr())
-            df = self._partitioned_reduce(df, self.num_buckets)
+            df = self._partitioned_reduce(df)
             new = self._write_level(
                 manifest, df, {},
                 {
@@ -3365,7 +3366,7 @@ class ParquetSnapshotSink:
                     "from_num_buckets": old_n,
                     "to_num_buckets": self.num_buckets,
                 },
-                t0, n=self.num_buckets, pre_partitioned=True,
+                t0, pre_partitioned=True,
                 num_buckets=self.num_buckets,
             )
         except BaseException:
@@ -3410,14 +3411,13 @@ class ParquetSnapshotSink:
         if not target:
             return {"skipped": True}
         df = truth.withColumn(BUCKET_COL, self._bucket_expr()).filter(
-            F.col(BUCKET_COL).isin([int(b) for b in target])
+            _col(BUCKET_COL).isin([int(b) for b in target])
         )
         # a targeted bucket with no truth rows is legitimately EMPTY
         # after the restore — it simply drops out of the manifest
         new = self._write_level(
             manifest, df, self._chains(manifest, drop=set(target)),
-            {"restore": True, "buckets_restored": len(target)},
-            t0, n=len(target),
+            {"restore": True, "buckets_restored": len(target)}, t0,
         )
         return {"version": new["version"], "buckets_restored": len(target)}
 
@@ -3499,17 +3499,17 @@ class ParquetSnapshotSink:
             # physical promotion rewrite: collapse under OLD config,
             # stamp promoted columns at the surviving rows' positions
             df = self._read_bucket_paths(self._all_paths(manifest))
-            df = df.filter(F.col(self.keys[0]).isNotNull())
+            df = df.filter(_col(self.keys[0]).isNotNull())
             df = self._reduce(df, self.keys, manifest=manifest)
             if EXTRAS_COL in df.columns:
                 from_extras = [c for c in promote if c not in df.columns]
                 for c in from_extras:
-                    df = df.withColumn(c, F.col(EXTRAS_COL)[c].cast(new[c]))
+                    df = df.withColumn(c, _col(EXTRAS_COL)[c].cast(new[c]))
                 if from_extras:
                     df = df.withColumn(
                         EXTRAS_COL,
                         F.map_filter(
-                            F.col(EXTRAS_COL),
+                            _col(EXTRAS_COL),
                             lambda k, _: ~k.isin(*[F.lit(c) for c in from_extras]),
                         ),
                     )
@@ -3523,7 +3523,7 @@ class ParquetSnapshotSink:
                 self.order_cols,
                 promote,
                 marker,
-                absent_if=F.col("op") == "delete",
+                absent_if=_col("op") == "delete",
             )
             rows, keep = df.withColumn(BUCKET_COL, self._bucket_expr()), {}
             fields["schema_fields"] = sorted(
@@ -3532,7 +3532,7 @@ class ParquetSnapshotSink:
         committed = self._write_level(
             manifest, rows, keep,
             {"evolve_patch_cols": sorted(new), "promoted": promote},
-            t0, n=self.num_buckets, **fields,
+            t0, **fields,
         )
         self._adopt(committed)
         return {
@@ -3587,8 +3587,7 @@ class ParquetSnapshotSink:
             )
         new = self._write_level(
             manifest, out.withColumn(BUCKET_COL, self._bucket_expr()), {},
-            {"rewrite": True, "scoped": where is not None},
-            t0, n=self.num_buckets,
+            {"rewrite": True, "scoped": where is not None}, t0,
         )
         return {"version": new["version"], "rewritten": True}
 
@@ -3630,7 +3629,7 @@ class ParquetSnapshotSink:
         ts_col = self.order_cols[0]
         cutoff = F.lit(older_than).cast("timestamp")
         state = self.read()
-        expired = state.filter(F.col(ts_col) < cutoff)
+        expired = state.filter(_col(ts_col) < cutoff)
         tomb_cols: list = [*self.keys, F.lit("delete").alias("op")]
         for f in state.schema.fields:
             if f.name in self.keys or f.name == ts_col:
@@ -3683,7 +3682,7 @@ class ParquetSnapshotSink:
         if key_eq is not None:
             pred = None
             for k, v in key_eq.items():
-                c = F.col(k) == F.lit(v)
+                c = _col(k) == F.lit(v)
                 pred = c if pred is None else (pred & c)
             if self.bucket_by in key_eq:
                 target = [str(self.bucket_of(key_eq[self.bucket_by]))]
@@ -3724,7 +3723,7 @@ class ParquetSnapshotSink:
                 "purged_rows": int(seen.get("purged_rows") or 0),
                 "buckets_rewritten": len(target),
             },
-            t0, n=len(target), obs=obs,
+            t0, obs=obs,
         )
         out = {
             "version": new["version"],
@@ -3824,11 +3823,11 @@ class ParquetSnapshotSink:
                         self._path_schema(p)
                     ).parquet(os.path.join(self.root, p))
                 frames.append(
-                    df.filter(F.col(c).isNotNull()).select(
+                    df.filter(_col(c).isNotNull()).select(
                         F.lit(p).alias("_p"),
                         F.lit(c).alias("_c"),
                         F.explode(
-                            self._bloom_pos_expr(F.col(c), bits, hashes)
+                            self._bloom_pos_expr(_col(c), bits, hashes)
                         ).alias("_q"),
                     )
                 )

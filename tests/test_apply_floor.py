@@ -10,6 +10,7 @@ like any operator.
 """
 
 import datetime
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -44,7 +45,7 @@ def test_partitioned_reduce_single_shuffle(spark, tmp_path):
     grouping keys) — no second exchange by the full key set."""
     sink = ParquetSnapshotSink(spark, str(tmp_path / "s"), num_buckets=4, mode="mor")
     staged = _events_df(spark).withColumn(BUCKET_COL, sink._bucket_expr())
-    red = sink._partitioned_reduce(staged, 4)
+    red = sink._partitioned_reduce(staged)
     red.collect()
     plan = red._jdf.queryExecution().executedPlan().toString()
     ex_lines = [l for l in plan.splitlines() if "Exchange hashpartitioning" in l]
@@ -52,6 +53,70 @@ def test_partitioned_reduce_single_shuffle(spark, tmp_path):
     for l in ex_lines:
         assert "conv_id" not in l, f"aggregation added its own key shuffle: {l}"
         assert f"{BUCKET_COL}#" in l
+
+
+def _files_per_level(sink):
+    """Parquet files in each bucket dir of the sink's data tree, after
+    checking that the dirs are exactly the current chain elements."""
+    out = {}
+    for d, _, files in os.walk(os.path.join(sink.root, "data")):
+        if os.path.basename(d).startswith(f"{BUCKET_COL}="):
+            out[d] = sum(f.endswith(".parquet") for f in files)
+    m = sink.current_manifest()
+    assert len(out) == sum(len(sink._paths_of(m, b)) for b in m["buckets"])
+    return sorted(out.values())
+
+
+def _write_tasks(spark, sink, df, batch_id):
+    """Tasks of the final stage of the last job that ``sink.apply``
+    runs: the bucket write. Read through a job group and the status
+    tracker."""
+    sc = spark.sparkContext
+    group = f"write-tasks-{batch_id}-{id(sink)}"
+    sc.setJobGroup(group, "count the write tasks of one apply")
+    try:
+        sink.apply(df, batch_id)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    last_job = tracker.getJobInfo(max(tracker.getJobIdsForGroup(group)))
+    return tracker.getStageInfo(max(last_job.stageIds)).numTasks
+
+
+def test_trickle_apply_write_is_sized_by_its_data(spark, tmp_path):
+    """The fused reduce+write shuffle names no partition count, so
+    adaptive execution coalesces a small apply into 8 buckets into ONE
+    write task (a count-pinned repartition ran one task per bucket)."""
+    sink = ParquetSnapshotSink(spark, str(tmp_path / "s"), num_buckets=8, mode="mor")
+    df = _events_df(spark)
+    assert _write_tasks(spark, sink, df, "b0") == 1
+    assert _files_per_level(sink) == [1] * len(sink.current_manifest()["buckets"])
+
+
+def test_apply_without_aqe_keeps_one_file_per_bucket(spark, tmp_path):
+    """With adaptive execution off the write runs
+    ``spark.sql.shuffle.partitions`` tasks, each holding whole
+    buckets: the same two applies read back the same rows and every
+    level still holds one file per bucket."""
+    df = _events_df(spark)
+    cuts = [df.filter("seq < 150"), df.filter("seq >= 150")]
+    reads = []
+    for aqe in ("true", "false"):
+        prev = spark.conf.get("spark.sql.adaptive.enabled")
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+        try:
+            sink = ParquetSnapshotSink(
+                spark, str(tmp_path / f"aqe_{aqe}"), num_buckets=8, mode="mor"
+            )
+            for i, cut in enumerate(cuts):
+                sink.apply(cut, f"b{i}")
+            rows = sorted(map(tuple, sink.read().collect()))
+        finally:
+            spark.conf.set("spark.sql.adaptive.enabled", prev)
+        assert set(_files_per_level(sink)) == {1}
+        reads.append(rows)
+    assert reads[0] == reads[1] and reads[0]
 
 
 def test_apply_equivalence_mor_vs_mow_after_fusion(spark, tmp_path):

@@ -133,11 +133,42 @@ def test_lww_variants_equivalent(spark, events_parquet, tmp_path):
         spark, str(tmp_path / "dotted"), num_buckets=2, keys=k, mode="mor"
     )
     sink.apply(dot.filter("seq <= 3"), "b0")
+    v1 = sink.current_version()
     sink.apply(dot.filter("seq >= 3"), "b1")
+    live = [(r[0], r[4]) for r in want if r[3] != "delete"]
     got = sink.read().select("conv_id", F.col("`a.b`")).collect()
-    assert sorted(map(tuple, got)) == [
-        (r[0], r[4]) for r in want if r[3] != "delete"
+    assert sorted(map(tuple, got)) == live
+    got = sink.read(columns=["a.b"]).select("conv_id", F.col("`a.b`")).collect()
+    assert sorted(map(tuple, got)) == live
+    # b1 deletes k2 (its old row y1 is the preimage) and inserts k3
+    got = sink.read_changes(v1, include_preimage=True).select(
+        "conv_id", F.col("`a.b`"), "_change"
+    )
+    assert sorted(map(tuple, got.collect())) == [
+        ("k2", "y1", "preimage"), ("k2", "y2", "postimage"),
+        ("k3", "z1", "postimage"),
     ]
+    # patch mode, with the dotted column as its patch column: the feed
+    # holds exactly the keys whose resolved row changed
+    patch = ParquetSnapshotSink(
+        spark, str(tmp_path / "dotted_patch"), num_buckets=2, keys=k,
+        mode="mor", patch_cols=["a.b"],
+    )
+    patch.apply(dot.filter("seq <= 3"), "b0")
+    v1 = patch.current_version()
+    patch.apply(dot.filter("seq >= 3"), "b1")
+
+    def resolved(df):
+        rows = lww_patch(
+            df, k, order, ["a.b"], absent_if=F.col("op") == "delete"
+        ).select(by_name)
+        return {r[0]: tuple(r) for r in rows.collect()}
+
+    old, new = resolved(dot.filter("seq <= 3")), resolved(dot)
+    got = patch.read_changes(v1).select(by_name).collect()
+    assert sorted(map(tuple, got)) == sorted(
+        v for key, v in new.items() if old.get(key) != v
+    )
 
 
 def test_single_batch_replay_matches_oracle(spark, events_parquet, oracle_state, tmp_path):

@@ -432,6 +432,44 @@ def test_read_changes_patch_net_and_mirror(spark):
     assert _as_set(_visible(mirror)) == _as_set(_visible(sink))
 
 
+def test_read_changes_patch_compares_extras_map(spark):
+    """The native parser always emits an ``_extras`` map. A map has no
+    ordering, so the patch feed compares it by its sorted entries: the
+    feed over two applies carrying the map holds exactly the rows of
+    ``lww_patch`` over the raw batches whose resolved row changed."""
+    bs = _batches(_stream(n=80), 2)
+
+    def with_extras(rows):
+        return _df(spark, rows).withColumn(
+            "_extras",
+            F.create_map(F.lit("src"), (F.col("seq") % 3).cast("string")),
+        )
+
+    sink = _sink(spark, "mor")
+    sink.apply(with_extras(bs[0]), "b0")
+    v1 = sink.current_version()
+    sink.apply(with_extras(bs[1]), "b1")
+
+    cols = ["conv_id", "turn_idx", "op", "ts", "seq", "role", "text", "tool"]
+
+    def resolved(rows):
+        # the oracle takes no map; ``src`` is the row winner's, a
+        # function of its ``seq``
+        return {
+            (r.conv_id, r.turn_idx): (*r, str(r.seq % 3))
+            for r in lww_patch(
+                _df(spark, rows), KEYS, ORDER, PATCH,
+                unchanged_marker=M, absent_if=F.col("op") == "delete",
+            ).select(*cols).collect()
+        }
+
+    old, new = resolved(bs[0]), resolved(bs[0] + bs[1])
+    feed = sink.read_changes(v1).select(*cols, "src").collect()
+    assert sorted(map(tuple, feed)) == sorted(
+        v for k, v in new.items() if old.get(k) != v
+    )
+
+
 def test_wire_envelope_to_patch_sink_preserves_marker_vs_null(spark):
     """Full wire path: JSON change envelopes (Debezium-style — every
     update restates all columns, unavailable ones as the marker

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 import embulk_util_json_spark
 from embulk_util_json_spark.sinks.merge import merge_into
-from embulk_util_json_spark.sinks.snapshot import ParquetSnapshotSink
+from embulk_util_json_spark.sinks.snapshot import BUCKET_COL, ParquetSnapshotSink
 from embulk_util_json_spark.streaming.runner import apply_events_batch
 
 
@@ -292,18 +292,22 @@ def test_key_skipping_exact_in_patch_mode(spark, tmp_path):
     assert set(zz.inputFiles()) < set(sink.read().inputFiles())
 
 
-def _setup_with_stats(spark, root, mode):
+def _setup_with_stats(spark, root, mode, num_buckets=2, more_keys=0):
     """Base + two deltas per touched bucket, with a declared stats
     column: b0, a compaction, then b1 and b2 (an update, an insert, a
-    delete). Returns the sink and the raw events."""
+    delete). ``more_keys`` adds that many inserted keys to b0 and b1.
+    Returns the sink and the raw events."""
     sink = ParquetSnapshotSink(
-        spark, root, num_buckets=2, mode=mode, compact_every=64,
+        spark, root, num_buckets=num_buckets, mode=mode, compact_every=64,
         stats_cols=["turn_idx"],
     )
     b0 = [_ev(0, "insert", "a", 1, 1), _ev(1, "insert", "b", 2, 2),
           _ev(2, "insert", "c", 3, 3)]
     b1 = [_ev(3, "update", "a", 1, 5, text="a2"), _ev(4, "insert", "d", 4, 6)]
     b2 = [_ev(5, "delete", "b", 2, 8), _ev(6, "insert", "e", 5, 9)]
+    # keys arrive out of order, so a sorted file is the writer's doing
+    b0 += [_ev(100 + i, "insert", f"m{-i % more_keys:02d}", i, 2) for i in range(more_keys)]
+    b1 += [_ev(200 + i, "insert", f"n{-i % more_keys:02d}", i, 5) for i in range(more_keys)]
     apply_events_batch(_mk(spark, b0), sink, "b0")
     sink.compact(drop_tombstones=False)
     apply_events_batch(_mk(spark, b1), sink, "b1")
@@ -444,6 +448,36 @@ def test_crash_before_commit_leaves_table_unchanged(
     assert set(os.listdir(data)) == dirs
     op(sink, events)
     assert _state(sink.read()) == sorted(want)
+
+
+@pytest.mark.parametrize("writer", sorted(_WRITERS))
+def test_every_writer_writes_one_key_sorted_file_per_bucket(spark, tmp_path, writer):
+    """A write task may hold several buckets (8 buckets, at most
+    ``spark.sql.shuffle.partitions`` = 4 tasks, one after adaptive
+    coalescing), yet every bucket dir a writer adds holds exactly one
+    parquet file, sorted by the keys."""
+    import pyarrow.parquet as pq
+
+    mode, op, _ = _WRITERS[writer]
+    sink, events = _setup_with_stats(
+        spark, str(tmp_path / "t"), mode, num_buckets=8, more_keys=40
+    )
+    data = tmp_path / "t" / "data"
+    before = set(os.listdir(data))
+    op(sink, events)
+    levels = [
+        d
+        for v in set(os.listdir(data)) - before
+        for d, _, _ in os.walk(data / v)
+        if os.path.basename(d).startswith(f"{BUCKET_COL}=")
+    ]
+    assert levels
+    for d in levels:
+        files = [f for f in os.listdir(d) if f.endswith(".parquet")]
+        assert len(files) == 1, (d, files)
+        rows = pq.read_table(os.path.join(d, files[0]), columns=sink.keys).to_pylist()
+        keys = [tuple(r[k] for k in sink.keys) for r in rows]
+        assert keys == sorted(keys), d
 
 
 def test_where_prunes_declared_column_after_compact(spark, tmp_path):
