@@ -201,10 +201,13 @@ def lww_patch(
     ``max(when(present, struct(order..., value)))``; ``when`` yields
     NULL for absent slots and ``max`` skips NULLs, and the (ts, seq)
     total order makes the trailing value field inert in the struct
-    comparison. Column-wise max over a total order is associative and
+    comparison. A non-patch column holding a map (no ordering; e.g.
+    the parser's ``_extras``) is taken by ``max_by`` over the order
+    alone. Column-wise max over a total order is associative and
     commutative, so map-side partial combine applies and the salted
     two-stage split stays exact (same argument as ``lww_salted``)."""
     _check_patch_cols(df, patch_cols, unchanged_marker)
+    by_name = {f.name: f.dataType for f in df.schema.fields}
     payload = [c for c in df.columns if c not in keys]
     order_fields = [_col(o).alias(f"_o{i}") for i, o in enumerate(order_cols)]
     aggs = []
@@ -212,6 +215,10 @@ def lww_patch(
         if c in patch_cols:
             present = patch_present(_col(c), unchanged_marker, absent_if)
             slot = F.when(present, F.struct(*order_fields, _col(c).alias("_v")))
+        elif _holds_map(by_name[c]):
+            # a map has no ordering: take it by the order alone
+            aggs.append(F.max_by(_col(c), F.struct(*order_fields)).alias(c))
+            continue
         else:
             slot = F.struct(*order_fields, _col(c).alias("_v"))
         aggs.append(F.max(slot).getField("_v").alias(c))

@@ -29,9 +29,10 @@ Consistency rules baked in:
   the view's key set always equals ``SELECT DISTINCT group FROM
   base``;
 - refresh is idempotent: the folded base-table version is recorded in
-  the view state (``sinks.jsonlog.replace_json``); a
-  redelivered refresh is a skip, a crash between data write and state
-  write leaves only unreferenced garbage.
+  the view state (``view.json`` beside ``agg-<uuid>`` data
+  generations, kept by ``sinks.jsonlog.StateDir``); a redelivered
+  refresh is a skip, a crash between data write and state write
+  leaves only unreferenced garbage.
 
 Scale shape: the delta is one hash aggregation over the change feed
 (map-side combinable), the merge is one hash aggregation over
@@ -42,12 +43,9 @@ no joins against the base table.
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
-from ..sinks.jsonlog import read_json, replace_json
+from ..sinks.jsonlog import StateDir
 from ..sinks.snapshot import ParquetSnapshotSink
 
 _N = "_n"  # internal per-group live-row count
@@ -69,42 +67,21 @@ class IncrementalAggView:
         if _N in measures:
             raise ValueError(f"{_N} is reserved")
         self.spark = spark
-        self.path = path
         self.sink = sink
         self.group_cols = list(group_cols)
         self.measures = dict(measures)
         self.op_col = op_col
-        os.makedirs(path, exist_ok=True)
-
-    # -- durable state ------------------------------------------------
-
-    @property
-    def _state_path(self) -> str:
-        return os.path.join(self.path, "view.json")
-
-    def _state(self) -> dict:
-        return read_json(self._state_path, {"table_version": 0, "data": None})
-
-    def _write_state(self, state: dict) -> None:
-        replace_json(self._state_path, state)
-
-    def _stored(self, state: dict) -> DataFrame | None:
-        name = state.get("data")
-        if not name:
-            return None
-        return self.spark.read.parquet(os.path.join(self.path, name))
-
-    def _gc(self, keep: str | None) -> None:
-        for f in os.listdir(self.path):
-            if f.startswith("agg-") and f != keep:
-                shutil.rmtree(os.path.join(self.path, f), ignore_errors=True)
+        self.state_dir = StateDir(
+            path, "view.json", {"table_version": 0, "data": None},
+            {"data": "agg-"}, spark.read.parquet,
+        )
 
     # -- maintenance ----------------------------------------------------
 
     def refresh(self) -> dict:
         """Fold every base-table version committed since the last
         refresh into the view. O(changed keys) + O(groups)."""
-        state = self._state()
+        state = self.state_dir.read()
         from_v = int(state["table_version"])
         to_v = self.sink.current_version()
         if to_v <= from_v:
@@ -113,9 +90,7 @@ class IncrementalAggView:
         if "_change" not in feed.columns:
             # metadata-only window (config evolution / vacuum): no data
             # changed — just advance the folded-version pointer
-            self._write_state(
-                {"table_version": to_v, "data": state.get("data")}
-            )
+            self.state_dir.publish({**state, "table_version": to_v})
             return {"skipped": False, "table_version": to_v, "empty": True}
         # Align the feed to the sink's CURRENT read schema: a window
         # that spans versions before a column evolved in (or whose
@@ -142,7 +117,7 @@ class IncrementalAggView:
             ],
         )
         merged = delta
-        stored = self._stored(state)
+        stored = self.state_dir.load(state, "data")
         if stored is not None:
             merged = stored.unionByName(delta)
         out = (
@@ -153,10 +128,8 @@ class IncrementalAggView:
             )
             .filter(F.col(_N) > 0)
         )
-        data_name = f"agg-{to_v:08d}.parquet"
-        out.write.mode("overwrite").parquet(os.path.join(self.path, data_name))
-        self._write_state({"table_version": to_v, "data": data_name})
-        self._gc(data_name)
+        data_name = self.state_dir.stage("data", out.write.parquet)
+        self.state_dir.publish({"table_version": to_v, "data": data_name})
         return {
             "skipped": False,
             "table_version": to_v,
@@ -165,7 +138,7 @@ class IncrementalAggView:
 
     def read(self) -> DataFrame:
         """Current view: group columns + the declared measures."""
-        stored = self._stored(self._state())
+        stored = self.state_dir.load(self.state_dir.read(), "data")
         if stored is None:
             fields = ", ".join(
                 [f"{c} string" for c in self.group_cols]

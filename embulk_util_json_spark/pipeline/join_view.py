@@ -109,11 +109,6 @@ class IncrementalJoinView:
 
     # -- maintenance ----------------------------------------------------
 
-    def _delta_keys(self, feed: DataFrame | None, cols: list[str]) -> DataFrame | None:
-        if feed is None or cols[0] not in feed.columns:
-            return None
-        return feed.select(*cols).distinct()
-
     def refresh(self) -> dict:
         """Fold both sources' versions committed since the last refresh
         into the view. O(affected keys) per call; idempotent and
@@ -130,18 +125,15 @@ class IncrementalJoinView:
         # unchanged key from current state is idempotent), and the
         # superset feed skips the old-state read + beats comparison —
         # the dominant cost of an exact net-change feed per refresh.
-        dl = (
-            self.left.changed_keys(from_lv, to_lv) if to_lv > from_lv else None
-        )
-        dr = (
-            self.right.changed_keys(from_rv, to_rv) if to_rv > from_rv else None
-        )
+        # Past the up-to-date return at least one side moved, so
+        # `parts` is never empty; changed_keys selects the distinct
+        # sink keys, and the right sink's keys are `on`.
         parts = []
-        lk = self._delta_keys(dl, self.left.keys)
-        if lk is not None:
-            parts.append(lk)
-        rk = self._delta_keys(dr, self.on)
-        if rk is not None:
+        if to_lv > from_lv:
+            parts.append(self.left.changed_keys(from_lv, to_lv))
+        rk = None
+        if to_rv > from_rv:
+            rk = self.right.changed_keys(from_rv, to_rv).select(*self.on)
             # left rows currently pointing at a changed right key: one
             # bucket-pruned probe read of L (on[0] == left.bucket_by),
             # narrowed to the full on-tuple, projected to the left keys.
@@ -157,16 +149,6 @@ class IncrementalJoinView:
             if len(self.on) > 1 or extra:
                 touched = touched.join(F.broadcast(rk), self.on, "left_semi")
             parts.append(touched.select(*self.left.keys))
-
-        if not parts:
-            # metadata-only windows on both sides: advance the mark
-            # with an empty committed batch
-            batch = self.spark.createDataFrame(
-                [], self._empty_batch_schema()
-            )
-            self.view.apply(batch, bid)
-            return {"skipped": False, "affected": 0,
-                    "window": (from_lv, from_rv, to_lv, to_rv)}
 
         aff = parts[0]
         for p in parts[1:]:
@@ -260,18 +242,6 @@ class IncrementalJoinView:
             "window": (from_lv, from_rv, to_lv, to_rv),
             "apply": res,
         }
-
-    def _empty_batch_schema(self):
-        from pyspark.sql import types as T
-
-        base = self.left._empty_state_frame().schema
-        fields = [f for f in base.fields if f.name in self.left.keys]
-        fields += [
-            T.StructField("op", T.StringType()),
-            T.StructField("src_lv", T.LongType()),
-            T.StructField("src_rv", T.LongType()),
-        ]
-        return T.StructType(fields)
 
     # -- query ----------------------------------------------------------
 

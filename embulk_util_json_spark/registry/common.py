@@ -8,10 +8,12 @@ Part of the driver registry package — every ``_q_*`` callable is a
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-import tempfile
 
 
 TS_FMT = "yyyy-MM-dd HH:mm:ss.SSSSSS"
@@ -45,13 +47,26 @@ def _events_as_cdc_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ev.select(F.col("event_id").alias("seq"), event_json.alias("event_json"))
 
 
+_SCRATCH: list[str] = []
+
+
 def _scratch(prefix: str) -> str:
     """Sink-building queries write their scratch tables to tmpfs when
     available (same rationale as bench.py's work_base: a single
     local[·] JVM shares ONE host disk; on a real cluster every
-    executor brings its own)."""
+    executor brings its own). The dirs are removed at interpreter exit,
+    not earlier: the frames the queries return read them lazily."""
     base = "/dev/shm" if os.access("/dev/shm", os.W_OK) else None
-    return tempfile.mkdtemp(prefix=prefix, dir=base)
+    path = tempfile.mkdtemp(prefix=prefix, dir=base)
+    if not _SCRATCH:
+        atexit.register(_remove_scratch)
+    _SCRATCH.append(path)
+    return path
+
+
+def _remove_scratch() -> None:
+    while _SCRATCH:
+        shutil.rmtree(_SCRATCH.pop(), ignore_errors=True)
 
 
 _ORACLE_CDC_EVENTS = """

@@ -13,6 +13,11 @@ cursors, runner and view state, publish and export manifests.
   clobbering the winner. This is the optimistic-concurrency step.
 - ``NumberedLog`` is an append-only log of immutable records
   ``<prefix>NNNNNNNN.json``, each published once by ``create_json``.
+- ``StateDir`` is the durable state of a stateful applier or view: one
+  state JSON naming immutable data generations in the same directory.
+  A generation is written once under a fresh name, the state naming it
+  is published by ``replace_json``, and only then are the generations
+  the new state does not name swept.
 
 Temp files are named ``.<name>.tmp-<uuid>``. They are dot-prefixed
 and never end in ``.json``, so every listing skips one a crash left
@@ -25,6 +30,7 @@ from __future__ import annotations
 import contextlib
 import json
 import os
+import shutil
 import uuid
 
 
@@ -156,3 +162,57 @@ class NumberedLog:
         self._cache[n] = raw
         while len(self._cache) > 16:
             self._cache.pop(next(iter(self._cache)))
+
+
+class StateDir:
+    """One state JSON ``<dir>/<name>`` naming data generations
+    ``<dir>/<prefix><uuid>``. ``generations`` maps each state field
+    that holds a generation name to that generation's prefix; ``read``
+    turns a generation path into its data (e.g. a parquet reader), so
+    this module stays free of Spark.
+
+    A change writes its new generations through ``stage`` — never onto
+    a name the committed state references, so a failed write leaves
+    that state and its data intact — then calls ``publish``. A crash at
+    any step leaves at most generations no state names, which the next
+    ``publish`` sweeps. A generation the committed state names is read
+    without an existence check: a missing one fails loudly rather than
+    reading as no data."""
+
+    def __init__(
+        self, path: str, name: str, default: dict,
+        generations: dict[str, str], read,
+    ) -> None:
+        self.dir = path
+        self._path = os.path.join(path, name)
+        self._default = default
+        self._generations = generations
+        self._read = read
+        os.makedirs(path, exist_ok=True)
+
+    def read(self) -> dict:
+        """The committed state; ``default`` before the first publish."""
+        return read_json(self._path, dict(self._default))
+
+    def load(self, state: dict, field: str):
+        """The data of the generation ``state[field]`` names, or
+        ``None`` when it names none."""
+        name = state.get(field)
+        return self._read(os.path.join(self.dir, name)) if name else None
+
+    def stage(self, field: str, write) -> str:
+        """Write a new ``field`` generation with ``write(path)`` under a
+        name nothing has used; returns the name for the next state."""
+        name = f"{self._generations[field]}{uuid.uuid4().hex}"
+        write(os.path.join(self.dir, name))
+        return name
+
+    def publish(self, state: dict) -> None:
+        """Make ``state`` the committed state, then remove every
+        generation it does not name."""
+        replace_json(self._path, state)
+        keep = {state.get(f) for f in self._generations}
+        prefixes = tuple(self._generations.values())
+        for f in os.listdir(self.dir):
+            if f.startswith(prefixes) and f not in keep:
+                shutil.rmtree(os.path.join(self.dir, f), ignore_errors=True)

@@ -141,8 +141,6 @@ def compact_published(spark, out_dir: str, keep_last: int = 1) -> dict | None:
     per-window granularity — exactly Kafka's compaction trade — so
     size ``keep_last`` to cover active consumer lag (``feed.cursors``
     is the dashboard)."""
-    from pyspark.sql import functions as F
-
     from ..operators.lww import lww_agg
     from ..sources.events import to_native_json
 
@@ -156,23 +154,11 @@ def compact_published(spark, out_dir: str, keep_last: int = 1) -> dict | None:
     head, tail = segs[: len(segs) - keep_last], segs[len(segs) - keep_last:]
     lo = head[0]["from_version"]
     hi = head[-1]["to_version"]
-    parsed = None
-    for s in head:
-        part = spark.read.text(os.path.join(out_dir, s["name"])).select(
-            F.lit(int(s["to_version"])).cast("long").alias("seq"),
-            F.col("value").alias("event_json"),
-        )
-        parsed = part if parsed is None else parsed.unionByName(part)
     wire = manifest.get("wire", "debezium")
-    if wire == "debezium":
-        from ..sources.debezium import parse_debezium_events as parse
-    elif wire == "maxwell":
-        from ..sources.debezium import parse_maxwell_events as parse
-    elif wire == "canal":
-        from ..sources.canal import parse_canal_events as parse
-    else:
-        from ..sources.events import parse_change_events as parse
-    net = lww_agg(parse(parsed), ["conv_id", "turn_idx"], ["ts", "seq"])
+    net = lww_agg(
+        _read_segments(spark, out_dir, head, wire),
+        ["conv_id", "turn_idx"], ["ts", "seq"],
+    )
     name = f"segment-{lo:08d}-{hi:08d}"
     tmp = os.path.join(out_dir, f"_tmp-{lo:08d}-{hi:08d}")
     final = os.path.join(out_dir, name)
@@ -207,25 +193,25 @@ def read_published(spark, out_dir: str, from_version: int = 0):
     reproduces the source state exactly. Pass a consumer's own
     committed ``from_version`` to resume mid-topic — the published
     directory IS a resumable feed."""
-    from pyspark.sql import functions as F
-
     wire = read_json(os.path.join(out_dir, "_published.json"), {}).get(
         "wire", "debezium"
     )
-    if wire == "debezium":
-        from ..sources.debezium import parse_debezium_events as parse
-    elif wire == "maxwell":
-        from ..sources.debezium import parse_maxwell_events as parse
-    elif wire == "canal":
-        from ..sources.canal import parse_canal_events as parse
-    else:  # native
-        from ..sources.events import parse_change_events as parse
     segs = [
         s for s in published_segments(out_dir)
         if s["to_version"] > from_version
     ]
     if not segs:
         return None
+    return _read_segments(spark, out_dir, segs, wire)
+
+
+def _read_segments(spark, out_dir: str, segs: list[dict], wire: str):
+    """Canonical change rows of ``segs`` through the ``wire`` parser,
+    with ``seq`` = each segment's ``to_version``."""
+    from pyspark.sql import functions as F
+
+    from ..ingest import build_parse_fn
+
     raw = None
     for s in segs:
         part = spark.read.text(os.path.join(out_dir, s["name"])).select(
@@ -233,4 +219,4 @@ def read_published(spark, out_dir: str, from_version: int = 0):
             F.col("value").alias("event_json"),
         )
         raw = part if raw is None else raw.unionByName(part)
-    return parse(raw)
+    return build_parse_fn(wire)(raw)

@@ -11,14 +11,16 @@ two updates (reference analogue: the row-skippable error taxonomy of
 ``JsonParser.java`` guards a single document; this guards the ORDER
 contract of the whole feed).
 
-:class:`FencedApplier` wraps ``apply_events_batch`` with two pieces of
-durable state in a work dir:
+:class:`FencedApplier` wraps ``apply_events_batch`` with durable
+state in a work dir, kept by ``sinks.jsonlog.StateDir``:
 
 - ``fence.json`` — ``next_seq`` (the applied contiguous frontier + 1)
-  and the current pending-file name, written atomically
-  (``sinks.jsonlog.replace_json``);
-- ``pending-<fence>.parquet`` — the held-back suffix (rows at/past the
-  first unfilled hole), re-written each batch.
+  and the name of the pending generation;
+- ``pending-<uuid>`` — the held-back suffix (rows at/past the first
+  unfilled hole). Each batch that holds rows writes a NEW generation;
+  the one the committed state names is never written again, so a
+  failed write (say, on a tick that leaves the hole open) loses
+  nothing.
 
 Per batch: union incoming with pending, drop rows below the frontier
 (redelivered duplicates — already applied), compute the first missing
@@ -29,9 +31,9 @@ persist the rest as the new pending set, then advance the frontier.
 Crash safety is ordering, not locking: (1) the apply is idempotent —
 its batch id is a pure function of the frontier pair, so a redo after
 a crash between apply and state-write is skipped by the sink's batch
-log; (2) the pending file for the new frontier is written before the
-state points at it; (3) stale pending files are unreferenced garbage,
-removed opportunistically. At-least-once redelivery of source batches
+log; (2) the new pending generation is written before the state
+points at it; (3) generations the state no longer names are swept
+after it is published. At-least-once redelivery of source batches
 is therefore safe end to end.
 
 Scale shape: everything is DataFrame work — the union is two parquet
@@ -47,13 +49,10 @@ refetched (the documented escape hatch).
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..pipeline.disorder import seq_gaps
-from ..sinks.jsonlog import read_json, replace_json
+from ..sinks.jsonlog import StateDir
 from ..sinks.snapshot import ParquetSnapshotSink
 from .runner import apply_events_batch
 
@@ -70,37 +69,13 @@ class FencedApplier:
     ):
         self.spark = spark
         self.sink = sink
-        self.work_dir = work_dir
         self.seq_col = seq_col
         self.parse_fn = parse_fn
         self.n_ranges = n_ranges
-        os.makedirs(work_dir, exist_ok=True)
-
-    # -- durable state ------------------------------------------------
-
-    @property
-    def _state_path(self) -> str:
-        return os.path.join(self.work_dir, "fence.json")
-
-    def _state(self) -> dict:
-        return read_json(self._state_path, {"next_seq": None, "pending": None})
-
-    def _write_state(self, state: dict) -> None:
-        replace_json(self._state_path, state)
-
-    def _pending_df(self, state: dict) -> DataFrame | None:
-        name = state.get("pending")
-        if not name:
-            return None
-        path = os.path.join(self.work_dir, name)
-        if not os.path.exists(path):
-            return None
-        return self.spark.read.parquet(path)
-
-    def _gc_pending(self, keep: str | None) -> None:
-        for f in os.listdir(self.work_dir):
-            if f.startswith("pending-") and f != keep:
-                shutil.rmtree(os.path.join(self.work_dir, f), ignore_errors=True)
+        self.state_dir = StateDir(
+            work_dir, "fence.json", {"next_seq": None, "pending": None},
+            {"pending": "pending-"}, spark.read.parquet,
+        )
 
     # -- the apply ----------------------------------------------------
 
@@ -110,9 +85,9 @@ class FencedApplier:
         sink apply result plus fence telemetry (``fence_next_seq``,
         ``applied_rows``, ``pending_rows``, ``held_batch``)."""
         s = F.col(self.seq_col)
-        state = self._state()
+        state = self.state_dir.read()
         union = events
-        pending = self._pending_df(state)
+        pending = self.state_dir.load(state, "pending")
         if pending is not None:
             union = events.unionByName(pending)
         if state["next_seq"] is not None:
@@ -158,12 +133,8 @@ class FencedApplier:
         n_held = held.count()
         pending_name = None
         if n_held:
-            pending_name = f"pending-{fence}.parquet"
-            held.write.mode("overwrite").parquet(
-                os.path.join(self.work_dir, pending_name)
-            )
-        self._write_state({"next_seq": fence, "pending": pending_name})
-        self._gc_pending(pending_name)
+            pending_name = self.state_dir.stage("pending", held.write.parquet)
+        self.state_dir.publish({"next_seq": fence, "pending": pending_name})
         result["pending_rows"] = n_held
         result["held_batch"] = bool(n_held)
         return result
@@ -177,12 +148,12 @@ class FencedApplier:
         apply reuses the exactly-once batch-id machinery
         (``abandon-<old>-<seq>``), so a crash-redo is skipped by the
         sink's batch log before the state advances."""
-        state = self._state()
+        state = self.state_dir.read()
         nxt = state["next_seq"]
         if nxt is not None and seq <= nxt:
             return state
         s = F.col(self.seq_col)
-        pending = self._pending_df(state)
+        pending = self.state_dir.load(state, "pending")
         applied = 0
         pending_name = state.get("pending")
         if pending is not None:
@@ -196,15 +167,11 @@ class FencedApplier:
                     parse_fn=self.parse_fn,
                 )
                 upper = pending.filter(s >= seq)
-                if upper.isEmpty():
-                    pending_name = None
-                else:
-                    pending_name = f"pending-abandon-{seq}.parquet"
-                    upper.write.mode("overwrite").parquet(
-                        os.path.join(self.work_dir, pending_name)
+                pending_name = None
+                if not upper.isEmpty():
+                    pending_name = self.state_dir.stage(
+                        "pending", upper.write.parquet
                     )
-        self._write_state({"next_seq": seq, "pending": pending_name})
-        self._gc_pending(pending_name)
-        out = self._state()
-        out["applied_rows"] = applied
-        return out
+        state = {"next_seq": seq, "pending": pending_name}
+        self.state_dir.publish(state)
+        return {**state, "applied_rows": applied}

@@ -19,19 +19,19 @@ of visibility:
   has been seen; rows of ``abort``-ed transactions are dropped; rows
   of still-open transactions are held durably across batches.
 
-Durable state in a work dir (same ``replace_json`` / unreferenced-
-garbage pattern as :class:`.fenced.FencedApplier`):
+Durable state in a work dir, kept by ``sinks.jsonlog.StateDir`` (as
+for :class:`.fenced.FencedApplier`):
 
 - ``txns.json`` — apply epoch (the exactly-once batch-id counter) and
-  the current pending/marker parquet names, written atomically;
-- ``pending-<epoch>.parquet`` — held rows of open transactions;
-- ``markers-<epoch>.parquet`` — the resolved ``(txid, status)`` set.
+  the names of the current pending and marker generations;
+- ``pending-<uuid>`` — held rows of open transactions;
+- ``markers-<uuid>`` — the resolved ``(txid, status)`` set.
 
 Crash safety is the fenced applier's ordering argument: the sink
 apply's batch id is a pure function of the durable epoch, so a redo
 after a crash between apply and state-write is skipped by the sink's
-batch log; new pending/marker files are written before the state
-points at them.
+batch log; new generations are written under fresh names before the
+state points at them, and the ones it stops naming are swept after.
 
 Markers are retained (not retired at resolution) so that an
 at-least-once redelivery of an already-applied transaction's rows
@@ -50,12 +50,9 @@ never enter the merge exchange. Driver-side state is O(1).
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..sinks.jsonlog import read_json, replace_json
+from ..sinks.jsonlog import StateDir
 from ..sinks.snapshot import ParquetSnapshotSink
 from .runner import apply_events_batch
 
@@ -74,42 +71,14 @@ class TxnBoundaryApplier:
     ):
         self.spark = spark
         self.sink = sink
-        self.work_dir = work_dir
         self.txid_col = txid_col
         self.parse_fn = parse_fn
-        os.makedirs(work_dir, exist_ok=True)
-
-    # -- durable state ------------------------------------------------
-
-    @property
-    def _state_path(self) -> str:
-        return os.path.join(self.work_dir, "txns.json")
-
-    def _state(self) -> dict:
-        return read_json(
-            self._state_path, {"epoch": 0, "pending": None, "markers": None}
+        self.state_dir = StateDir(
+            work_dir, "txns.json",
+            {"epoch": 0, "pending": None, "markers": None},
+            {"pending": "pending-", "markers": "markers-"},
+            spark.read.parquet,
         )
-
-    def _write_state(self, state: dict) -> None:
-        replace_json(self._state_path, state)
-
-    def _read_store(self, state: dict, key: str) -> DataFrame | None:
-        name = state.get(key)
-        if not name:
-            return None
-        path = os.path.join(self.work_dir, name)
-        if not os.path.exists(path):
-            return None
-        return self.spark.read.parquet(path)
-
-    def _gc(self, prefix: str, keep: str | None) -> None:
-        for f in os.listdir(self.work_dir):
-            if f.startswith(prefix) and f != keep:
-                shutil.rmtree(os.path.join(self.work_dir, f), ignore_errors=True)
-
-    def _write_store(self, df: DataFrame, name: str) -> str:
-        df.write.mode("overwrite").parquet(os.path.join(self.work_dir, name))
-        return name
 
     # -- the apply ----------------------------------------------------
 
@@ -121,10 +90,10 @@ class TxnBoundaryApplier:
         Returns the sink apply result plus transaction telemetry
         (``applied_rows``, ``aborted_rows``, ``open_rows``,
         ``held_batch``)."""
-        state = self._state()
+        state = self.state_dir.read()
         epoch = int(state["epoch"])
 
-        all_markers = self._read_store(state, "markers")
+        all_markers = self.state_dir.load(state, "markers")
         if markers is not None:
             m = markers.select(
                 F.col("txid").cast("long").alias("txid"),
@@ -139,7 +108,7 @@ class TxnBoundaryApplier:
             all_markers = all_markers.distinct().localCheckpoint()
 
         union = events
-        pending = self._read_store(state, "pending")
+        pending = self.state_dir.load(state, "pending")
         if pending is not None:
             union = events.unionByName(pending)
 
@@ -172,17 +141,15 @@ class TxnBoundaryApplier:
         n_held = held.count()
         pending_name = None
         if n_held:
-            pending_name = self._write_store(held, f"pending-{epoch + 1}.parquet")
+            pending_name = self.state_dir.stage("pending", held.write.parquet)
         markers_name = None
         if all_markers is not None:
-            markers_name = self._write_store(
-                all_markers, f"markers-{epoch + 1}.parquet"
+            markers_name = self.state_dir.stage(
+                "markers", all_markers.write.parquet
             )
-        self._write_state(
+        self.state_dir.publish(
             {"epoch": epoch + 1, "pending": pending_name, "markers": markers_name}
         )
-        self._gc("pending-", pending_name)
-        self._gc("markers-", markers_name)
         result.update(
             aborted_rows=aborted_rows,
             open_rows=n_held,
@@ -196,8 +163,8 @@ class TxnBoundaryApplier:
         once the source's redelivery horizon has passed them. A row of
         a vacuumed COMMITTED transaction redelivered after this point
         would be held as open — vacuum only below the horizon."""
-        state = self._state()
-        markers = self._read_store(state, "markers")
+        state = self.state_dir.read()
+        markers = self.state_dir.load(state, "markers")
         if markers is None:
             return {"kept": 0, "dropped": 0}
         kept = markers.filter(F.col("txid") >= below_txid).localCheckpoint()
@@ -206,7 +173,6 @@ class TxnBoundaryApplier:
         epoch = int(state["epoch"])
         name = None
         if n_kept:
-            name = self._write_store(kept, f"markers-{epoch + 1}.parquet")
-        self._write_state({**state, "epoch": epoch + 1, "markers": name})
-        self._gc("markers-", name)
+            name = self.state_dir.stage("markers", kept.write.parquet)
+        self.state_dir.publish({**state, "epoch": epoch + 1, "markers": name})
         return {"kept": n_kept, "dropped": dropped}

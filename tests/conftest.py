@@ -1,4 +1,5 @@
-"""Shared pytest fixtures: one local SparkSession per test session."""
+"""Shared pytest fixtures: one local SparkSession per test session, and
+the removal of every ``tests.scratch`` dir at its test's teardown."""
 
 from __future__ import annotations
 
@@ -35,3 +36,11 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_smoke_dir():
     return SF_SMOKE
+
+
+@pytest.fixture(autouse=True)
+def _remove_scratch_dirs():
+    yield
+    from tests.scratch import remove_all
+
+    remove_all()

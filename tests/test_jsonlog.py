@@ -6,7 +6,8 @@ there must leave the previous metadata reading back byte-identical,
 leave no temp file behind, and let the next call succeed. A process
 killed mid-write (no cleanup at all) must leave nothing a later
 reader trips over. A guard keeps the package from growing a new
-hand-rolled write outside ``jsonlog``.
+hand-rolled write outside ``jsonlog``, and another keeps the stateful
+appliers and views on ``jsonlog.StateDir``.
 """
 
 from __future__ import annotations
@@ -169,13 +170,13 @@ def _compacted(spark, tmp_path):
 def _state_case(make, first, second):
     def setup(spark, tmp_path):
         obj = make(spark, _sink(spark, tmp_path / "t", applies=0), tmp_path / "w")
-        obj._write_state(first)
+        obj.state_dir.publish(first)
 
         def retry():
-            obj._write_state(second)
-            assert obj._state() == second
+            obj.state_dir.publish(second)
+            assert obj.state_dir.read() == second
 
-        return tmp_path / "w", lambda: obj._write_state(second), retry
+        return tmp_path / "w", lambda: obj.state_dir.publish(second), retry
 
     return setup
 
@@ -380,4 +381,38 @@ def test_no_hand_rolled_json_writes_outside_jsonlog():
                 and (f.value.id, f.attr) in {("json", "dump"), ("os", "fsync")}
             ):
                 offenders.append(f"{path.relative_to(pkg)}:{node.lineno}")
+    assert offenders == []
+
+
+STATEFUL = (
+    "streaming/fenced.py",
+    "streaming/txn_boundary.py",
+    "pipeline/agg_view.py",
+)
+
+
+def test_applier_and_view_state_goes_through_state_dir():
+    """The stateful appliers and views keep their state only through
+    ``jsonlog.StateDir``: no state file read or written by hand, no
+    generation written in place or removed outside its sweep."""
+    pkg = pathlib.Path(embulk_util_json_spark.__file__).parent
+    offenders = []
+    for rel in STATEFUL:
+        path = pkg / rel
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
+            name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", "")
+            overwrite = name == "mode" and any(
+                isinstance(a, ast.Constant) and a.value == "overwrite"
+                for a in node.args
+            )
+            rmtree = (
+                name == "rmtree"
+                and isinstance(f, ast.Attribute)
+                and getattr(f.value, "id", "") == "shutil"
+            )
+            if overwrite or rmtree or name in {"read_json", "replace_json"}:
+                offenders.append(f"{rel}:{node.lineno}")
     assert offenders == []

@@ -162,6 +162,37 @@ def test_patch_stamp_rejects_map_and_missing_columns(spark):
         patch_stamp(df, ORDER, ["nope"])
 
 
+def test_patch_oracle_takes_map_payload_by_order(spark):
+    """A non-patch map column (the parser's ``_extras``) has no
+    ordering: ``lww_patch`` takes it from the latest event, so over raw
+    batches that carry it the oracle still equals the stamped
+    reduction ``lww_agg(..., PATCH)``."""
+    from embulk_util_json_spark.operators.lww import patch_stamp
+
+    rows = [
+        ("c1", 0, 1, 1, "insert", "user", "hello", "search"),
+        ("c1", 0, 2, 2, "update", M, "hello v2", M),
+        ("c1", 1, 1, 3, "insert", "user", "hi", M),
+        ("c1", 0, 3, 4, "update", M, M, "browser"),
+        ("c2", 0, 4, 5, "insert", "user", "x", "search"),
+        ("c2", 0, 5, 6, "delete", None, None, None),
+        ("c2", 0, 6, 7, "insert", M, "back", M),
+    ]
+    df = _df(spark, rows).withColumn(
+        "_extras", F.create_map(F.lit("src"), F.col("seq").cast("string"))
+    )
+    patch = ["role", "text", "tool"]
+    tomb = F.col("op") == "delete"
+    got = lww_patch(df, KEYS, ORDER, patch, M, absent_if=tomb)
+    want = lww_agg(
+        patch_stamp(df, ORDER, patch, M, absent_if=tomb), KEYS, ORDER, patch
+    )
+    cols = [*COLS, "_extras"]
+    assert sorted(map(str, got.select(*cols).collect())) == sorted(
+        map(str, want.select(*cols).collect())
+    )
+
+
 def test_patch_marker_on_non_string_column(spark):
     """A non-string patch column under a string marker: the presence
     predicate compares in STRING space. The naive `col != lit(marker)`

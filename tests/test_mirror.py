@@ -6,9 +6,6 @@ mid-stream patch-column evolution."""
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import functions as F
 
 from embulk_util_json_spark.sinks.snapshot import ParquetSnapshotSink
@@ -16,6 +13,7 @@ from embulk_util_json_spark.streaming.mirror import (
     last_synced_version,
     sync_mirror,
 )
+from tests.scratch import scratch
 
 KEYS = ["conv_id", "turn_idx"]
 ORDER = ["ts", "seq"]
@@ -43,15 +41,10 @@ def _stream(n=180, n_convs=5, n_turns=4, seed=23):
     return rows
 
 
-def _scratch():
-    base = "/dev/shm" if os.access("/dev/shm", os.W_OK) else None
-    return tempfile.mkdtemp(prefix="mirror_", dir=base)
-
-
 def _sink(spark, **kw):
     kw.setdefault("mode", "mor")
     return ParquetSnapshotSink(
-        spark, _scratch(), num_buckets=4, keys=KEYS, order_cols=ORDER, **kw
+        spark, scratch("mirror_"), num_buckets=4, keys=KEYS, order_cols=ORDER, **kw
     )
 
 
@@ -202,7 +195,7 @@ def test_mirror_custom_keys_metadata_only_window(spark):
     schema = "user_id string, ts long, seq long, op string, score string"
     def sink():
         return ParquetSnapshotSink(
-            spark, _scratch(), num_buckets=2, mode="mor",
+            spark, scratch("mirror_"), num_buckets=2, mode="mor",
             keys=["user_id"], order_cols=ORDER,
             patch_cols=["score"], unchanged_marker=M,
         )

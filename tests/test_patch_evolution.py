@@ -23,14 +23,12 @@ itself, which only exists engine-side.
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 import pytest
 from pyspark.sql import functions as F
 
 from embulk_util_json_spark.operators.lww import lww_patch, lww_window
 from embulk_util_json_spark.sinks.snapshot import ParquetSnapshotSink
+from tests.scratch import scratch
 
 KEYS = ["conv_id", "turn_idx"]
 ORDER = ["ts", "seq"]
@@ -89,14 +87,9 @@ def _as_set(df):
     return {tuple(r) for r in df.collect()}
 
 
-def _scratch():
-    base = "/dev/shm" if os.access("/dev/shm", os.W_OK) else None
-    return tempfile.mkdtemp(prefix="patch_evo_", dir=base)
-
-
 def _sink(spark, mode, patch_cols=("role", "text"), **kw):
     return ParquetSnapshotSink(
-        spark, _scratch(), num_buckets=4, keys=KEYS, order_cols=ORDER,
+        spark, scratch("patch_evo_"), num_buckets=4, keys=KEYS, order_cols=ORDER,
         mode=mode, patch_cols=list(patch_cols), unchanged_marker=M, **kw,
     )
 
@@ -281,7 +274,7 @@ def test_promotion_row_level_to_patch(spark):
     oracle. Promotion itself cannot resurrect collapsed history."""
     rows = _dense_stream()
     pre, post = rows[:120], _patchify(rows[120:])
-    root = _scratch()
+    root = scratch("patch_evo_")
     sink = ParquetSnapshotSink(
         spark, root, num_buckets=4, keys=KEYS, order_cols=ORDER, mode="mor"
     )

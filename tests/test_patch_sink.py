@@ -17,9 +17,7 @@ merge. Here the merge IS the engine's, so its algebra is pinned.
 from __future__ import annotations
 
 import ast
-import os
 import pathlib
-import tempfile
 
 import pytest
 from pyspark.sql import functions as F
@@ -32,6 +30,7 @@ from embulk_util_json_spark.operators.lww import (
     stamp_batch,
 )
 from embulk_util_json_spark.sinks.snapshot import ParquetSnapshotSink
+from tests.scratch import scratch
 
 KEYS = ["conv_id", "turn_idx"]
 ORDER = ["ts", "seq"]
@@ -92,14 +91,9 @@ def _as_set(df):
     return {tuple(r) for r in df.collect()}
 
 
-def _scratch():
-    base = "/dev/shm" if os.access("/dev/shm", os.W_OK) else None
-    return tempfile.mkdtemp(prefix="patch_sink_", dir=base)
-
-
 def _sink(spark, mode, **kw):
     return ParquetSnapshotSink(
-        spark, _scratch(), num_buckets=4, keys=KEYS, order_cols=ORDER,
+        spark, scratch("patch_sink_"), num_buckets=4, keys=KEYS, order_cols=ORDER,
         mode=mode, patch_cols=PATCH, unchanged_marker=M, **kw,
     )
 
@@ -368,7 +362,7 @@ def test_sparse_mode_null_means_unchanged(spark):
         ("c1", 1, 1, 3, "insert", "asst", "hi", None),
     ]
     sink = ParquetSnapshotSink(
-        spark, _scratch(), num_buckets=4, keys=KEYS, order_cols=ORDER,
+        spark, scratch("patch_sink_"), num_buckets=4, keys=KEYS, order_cols=ORDER,
         mode="mow", patch_cols=PATCH,
     )
     sink.apply(_df(spark, rows[:1]), "b0")
