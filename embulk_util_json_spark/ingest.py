@@ -318,14 +318,8 @@ def run_ingest_stream(spark: SparkSession, config: dict) -> dict:
         seq_col=src.get("seq_member"),
         max_files_per_trigger=run.get("max_files_per_trigger"),
     )
-    stream_id = run["checkpoint_dir"].rstrip("/").rsplit("/", 1)[-1]
 
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        apply_events_batch(
-            batch_df,
-            sink,
-            f"{stream_id}-epoch-{epoch_id}",
-            parse_fn=parse_fn,
-        )
+    def handle(batch_df: DataFrame, batch_id: str, _epoch_id: int) -> None:
+        apply_events_batch(batch_df, sink, batch_id, parse_fn=parse_fn)
 
     return {"sink": sink, "query": _start(stream, handle, run["checkpoint_dir"])}

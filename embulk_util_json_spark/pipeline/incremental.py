@@ -32,6 +32,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..sinks.snapshot import ParquetSnapshotSink
+from ..streaming.runner import _start
 from .dedup import norm_text
 
 
@@ -159,23 +160,13 @@ def stream_dedupe_directory(
     checkpoint lineage, which is exactly the ``batch_seq`` contract.
     """
     stream = spark.readStream.schema(schema).parquet(docs_dir)
-    stream_id = checkpoint_dir.rstrip("/").rsplit("/", 1)[-1]
 
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
+    def handle(batch_df: DataFrame, batch_id: str, epoch_id: int) -> None:
         survivors = deduper.dedupe_batch(
-            batch_df,
-            text_col,
-            id_col,
-            batch_seq=epoch_id,
-            batch_id=f"{stream_id}-epoch-{epoch_id}",
+            batch_df, text_col, id_col, batch_seq=epoch_id, batch_id=batch_id
         )
         survivors.write.mode("overwrite").parquet(
             os.path.join(out_dir, f"epoch={epoch_id}")
         )
 
-    return (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(stream, handle, checkpoint_dir)

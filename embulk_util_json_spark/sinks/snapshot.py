@@ -43,6 +43,7 @@ from __future__ import annotations
 import json
 import os
 import re
+import shutil
 import time
 import uuid
 
@@ -428,6 +429,96 @@ class ParquetSnapshotSink:
             return f"data/v{version:08d}-{tag}"
         return f"data/{self.branch}~v{version:08d}-{tag}"
 
+    # ---- the table copy (branch, clone, savepoint) ---------------------
+
+    def _layout(self, manifest: dict) -> dict:
+        """The constructor layout of a copy of ``manifest``: every
+        handle a copy opens — branch, clone, savepoint export and
+        import — is built from this one dict (a savepoint records it
+        as its ``layout``). Patch config, stats columns and lineage are
+        table state the copy's manifest carries and ``_adopt`` reads."""
+        return {
+            "keys": list(self.keys),
+            "order_cols": list(self.order_cols),
+            "bucket_by": self.bucket_by,
+            "mode": self.mode,
+            "compact_every": self.compact_every,
+            "num_buckets": int(manifest.get("num_buckets", self.num_buckets)),
+        }
+
+    def _copy(
+        self,
+        src: dict,
+        dest: "ParquetSnapshotSink",
+        *,
+        deep: bool = False,
+        version: int = 1,
+        **marker,
+    ) -> "ParquetSnapshotSink":
+        """THE copy of one committed manifest ``src`` to the empty
+        handle ``dest`` (built from ``_layout(src)``), for every
+        branch, clone and savepoint. Each data path maps to: itself in
+        the same root (a branch shares its files); its absolute source
+        path for a shallow copy (zero bytes move); a root-relative name
+        for a deep copy, where an absolute path (a shallow clone's
+        foreign reference) re-roots at its own ``data/`` tail — data
+        dirs are uuid-suffixed, so names never collide. A deep copy
+        places every file of a referenced dir under ``dest``'s root,
+        hard-linked (data files are immutable, so a link is safe) or
+        copied across filesystems; a file a crashed earlier copy left
+        is replaced, so a copy that died before its commit re-runs.
+        The chain map and the four per-path maps are re-keyed to the
+        new names, and ``_next_manifest(src, None, version=...,
+        **marker)`` commits last: a crash before it leaves ``dest``
+        with no version."""
+
+        def target(p: str) -> str:
+            if dest.root == self.root:
+                return p
+            if not deep:
+                return p if os.path.isabs(p) else os.path.join(self.root, p)
+            return "data/" + p.rsplit("/data/", 1)[-1] if os.path.isabs(p) else p
+
+        path_map = {p: target(p) for p in self._all_paths(src)}
+        if deep:
+            for p, rel in path_map.items():
+                top = os.path.join(self.root, p)  # an absolute p wins
+                for d, _dirs, files in os.walk(top):
+                    out = os.path.normpath(
+                        os.path.join(dest.root, rel, os.path.relpath(d, top))
+                    )
+                    os.makedirs(out, exist_ok=True)
+                    for f in files:
+                        s, t = os.path.join(d, f), os.path.join(out, f)
+                        if os.path.lexists(t):
+                            os.unlink(t)
+                        try:
+                            os.link(s, t)
+                        except OSError:
+                            shutil.copy2(s, t)
+        dest._commit(
+            self._next_manifest(
+                src,
+                None,
+                version=version,
+                buckets={
+                    b: [path_map[p] for p in self._paths_of(src, b)]
+                    for b in src["buckets"]
+                },
+                **{
+                    kind: {
+                        path_map[p]: v
+                        for p, v in src.get(kind, {}).items()
+                        if p in path_map
+                    }
+                    for kind in _PATH_MAPS
+                },
+                **marker,
+            )
+        )
+        dest._adopt(dest.current_manifest())
+        return dest
+
     # ---- branches (zero-copy snapshot branching) -----------------------
 
     def create_branch(self, name: str, at_version: int | None = None) -> "ParquetSnapshotSink":
@@ -447,28 +538,15 @@ class ParquetSnapshotSink:
         if src is None:
             raise ValueError("cannot branch an empty table (no commits yet)")
         child = ParquetSnapshotSink(
-            self.spark,
-            self.root,
-            num_buckets=self.num_buckets,
-            keys=self.keys,
-            order_cols=self.order_cols,
-            bucket_by=self.bucket_by,
-            mode=self.mode,
-            compact_every=self.compact_every,
-            branch=name,
+            self.spark, self.root, branch=name, **self._layout(src)
         )
         if child.current_version() > 0:
             raise ValueError(f"branch {name!r} already exists")
-        child._commit(
-            self._next_manifest(
-                src,
-                None,
-                version=1,
-                branched_from={"branch": self.branch, "version": src["version"]},
-            )
+        return self._copy(
+            src,
+            child,
+            branched_from={"branch": self.branch, "version": src["version"]},
         )
-        child._adopt(child.current_manifest())
-        return child
 
     def branches(self) -> list[str]:
         """Branch names with at least one committed manifest
@@ -549,8 +627,6 @@ class ParquetSnapshotSink:
         data directories become unreferenced and are reclaimed by the
         next ``vacuum``; shared pre-fork files stay (still referenced
         by the surviving branches)."""
-        import shutil
-
         if name == "main":
             raise ValueError("cannot drop the main branch")
         if name == self.branch:
@@ -626,16 +702,6 @@ class ParquetSnapshotSink:
 
     # ---- cross-root clone (zero-copy shallow / self-contained deep) ----
 
-    @staticmethod
-    def _clone_rel(path: str) -> str:
-        """Destination-relative name for a cloned data path: relative
-        paths keep their name; an absolute path (a prior shallow
-        clone's foreign reference) re-roots at its own ``data/`` tail
-        — version dirs are uuid-suffixed, so names never collide."""
-        if not os.path.isabs(path):
-            return path
-        return "data/" + path.rsplit("/data/", 1)[-1]
-
     def clone_to(
         self,
         dest_root: str,
@@ -665,76 +731,36 @@ class ParquetSnapshotSink:
         rewrites chains into clone-local files — the clone localizes
         itself incrementally as it is maintained.
 
-        ``deep=True``: copy every referenced data directory under the
-        clone's root (same rel layout, driver-side file copy — the
-        data is already columnar/compressed; no Spark job, no decode).
-        Self-contained from birth; no source tag needed.
+        ``deep=True``: place every file of every referenced data
+        directory under the clone's root (same rel layout), hard-linked
+        when both roots share a filesystem — data files are immutable,
+        so a link is safe — and copied otherwise; driver-side, no Spark
+        job, no decode. Self-contained from birth (deleting the source
+        root only drops a link count); no source tag needed. A deep
+        clone that crashed before its commit is re-run in place.
 
         Layout, patch config, ALTER state (renames, defaults, drops,
         constraints), zone maps, and blooms all carry over — stats and
         bloom keys are rewritten to the clone's path names."""
-        import shutil
-
         src = self.manifest_at(
             at_version if at_version is not None else self.current_version()
         )
         if src is None or not src.get("buckets"):
             raise ValueError("cannot clone an empty table (no data commits)")
-        dest = ParquetSnapshotSink(
-            self.spark,
-            dest_root,
-            num_buckets=int(src["num_buckets"]),
-            keys=self.keys,
-            order_cols=self.order_cols,
-            bucket_by=self.bucket_by,
-            mode=self.mode,
-            compact_every=self.compact_every,
-        )
+        dest = ParquetSnapshotSink(self.spark, dest_root, **self._layout(src))
         if dest.current_version() > 0:
             raise ValueError(f"clone destination {dest_root!r} is not empty")
-
-        path_map: dict[str, str] = {}
-        for b in src["buckets"]:
-            for p in self._paths_of(src, b):
-                if p in path_map:
-                    continue
-                if deep:
-                    rel = self._clone_rel(p)
-                    src_abs = (
-                        p if os.path.isabs(p) else os.path.join(self.root, p)
-                    )
-                    shutil.copytree(src_abs, os.path.join(dest_root, rel))
-                    path_map[p] = rel
-                else:
-                    path_map[p] = (
-                        p if os.path.isabs(p) else os.path.join(self.root, p)
-                    )
-
-        def _rekey(d: dict | None) -> dict:
-            return {path_map[p]: v for p, v in (d or {}).items() if p in path_map}
-
-        dest._commit(
-            self._next_manifest(
-                src,
-                None,
-                version=1,
-                buckets={
-                    b: [path_map[p] for p in self._paths_of(src, b)]
-                    for b in src["buckets"]
-                },
-                file_stats=_rekey(src.get("file_stats")),
-                key_stats=_rekey(src.get("key_stats")),
-                col_stats=_rekey(src.get("col_stats")),
-                blooms=_rekey(src.get("blooms")),
-                cloned_from={
-                    "root": self.root,
-                    "branch": self.branch,
-                    "version": src["version"],
-                    "deep": deep,
-                },
-            )
+        self._copy(
+            src,
+            dest,
+            deep=deep,
+            cloned_from={
+                "root": self.root,
+                "branch": self.branch,
+                "version": src["version"],
+                "deep": deep,
+            },
         )
-        dest._adopt(dest.current_manifest())
         if pin_tag and not deep:
             tag = f"clone-{os.path.basename(os.path.normpath(dest_root))}-v{src['version']}"
             if tag not in self.tags():
@@ -3939,8 +3965,6 @@ class ParquetSnapshotSink:
         Driver-side filesystem work only — no Spark job. Safe against
         a concurrent reader of a retained version because data files
         are immutable and only unreferenced ones are removed."""
-        import shutil
-
         current = self.current_version()
         if current == 0:
             return {"removed_versions": 0, "removed_dirs": 0}
@@ -4018,7 +4042,6 @@ class ParquetSnapshotSink:
         (staged but not yet committed = unreferenced but NOT orphaned).
         ``vacuum`` passes None: everything it unreferences was
         committed long ago."""
-        import shutil
 
         def _old_enough(path: str) -> bool:
             if min_age_before is None:

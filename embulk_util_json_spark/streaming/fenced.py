@@ -22,11 +22,13 @@ state in a work dir, kept by ``sinks.jsonlog.StateDir``:
   failed write (say, on a tick that leaves the hole open) loses
   nothing.
 
-Per batch: union incoming with pending, drop rows below the frontier
-(redelivered duplicates — already applied), compute the first missing
-position at/after the frontier with the range-parallel gap detector,
-apply the contiguous prefix through the sink's exactly-once MERGE,
-persist the rest as the new pending set, then advance the frontier.
+Per batch: union incoming with pending (less the rows pending already
+holds, so a redelivery adds no held row twice), drop rows below the
+frontier (redelivered duplicates — already applied), compute the first
+missing position at/after the frontier with the range-parallel gap
+detector, apply the contiguous prefix through the sink's exactly-once
+MERGE, persist the rest as the new pending set, then advance the
+frontier.
 
 Crash safety is ordering, not locking: (1) the apply is idempotent —
 its batch id is a pure function of the frontier pair, so a redo after
@@ -89,7 +91,11 @@ class FencedApplier:
         union = events
         pending = self.state_dir.load(state, "pending")
         if pending is not None:
-            union = events.unionByName(pending)
+            # a redelivered row is byte-identical to the one held: keep
+            # each held row once (multiset difference, NULL-safe)
+            union = events.exceptAll(pending.select(*events.columns)).unionByName(
+                pending
+            )
         if state["next_seq"] is not None:
             # rows below the frontier are redelivered duplicates of
             # already-applied positions — drop before any shuffle

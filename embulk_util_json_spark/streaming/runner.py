@@ -512,13 +512,7 @@ def stream_directory(
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     stream = reader.load(events_dir)
 
-    # Scope epoch-based batch ids to the checkpoint: epoch numbering is
-    # only meaningful within one checkpoint lineage (a fresh checkpoint
-    # restarts at 0 and must not collide with committed ids).
-    stream_id = checkpoint_dir.rstrip("/").rsplit("/", 1)[-1]
-
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        batch_id = f"{stream_id}-epoch-{epoch_id}"
+    def handle(batch_df: DataFrame, batch_id: str, _epoch_id: int) -> None:
         apply_events_batch(batch_df, sink, batch_id, parse_fn=parse_fn)
         if view is not None:
             touched = (parse_fn or parse_change_events)(batch_df)
@@ -550,19 +544,30 @@ def stream_directory_multi(
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     stream = reader.load(events_dir)
-    stream_id = checkpoint_dir.rstrip("/").rsplit("/", 1)[-1]
 
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        route_tables(
-            batch_df, sinks, f"{stream_id}-epoch-{epoch_id}", txn_log=txn_log
-        )
+    def handle(batch_df: DataFrame, batch_id: str, _epoch_id: int) -> None:
+        route_tables(batch_df, sinks, batch_id, txn_log=txn_log)
 
     return _start(stream, handle, checkpoint_dir)
 
 
 def _start(stream, handle, checkpoint_dir: str):
+    """Start ``stream`` as an available-now ``foreachBatch`` query
+    under ``checkpoint_dir`` that calls ``handle(batch_df, batch_id,
+    epoch_id)`` per micro-batch — the one start of every such tail.
+
+    The batch id is ``<checkpoint dir name>-epoch-<epoch id>``: epoch
+    numbering is only meaningful within one checkpoint lineage (a
+    fresh checkpoint restarts at 0 and must not collide with committed
+    ids), while a restart on the same checkpoint redelivers the same
+    ids, which the sink's batch log skips."""
+    stream_id = checkpoint_dir.rstrip("/").rsplit("/", 1)[-1]
+
+    def per_batch(batch_df: DataFrame, epoch_id: int) -> None:
+        handle(batch_df, f"{stream_id}-epoch-{epoch_id}", epoch_id)
+
     return (
-        stream.writeStream.foreachBatch(handle)
+        stream.writeStream.foreachBatch(per_batch)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()

@@ -17,7 +17,8 @@ of visibility:
   ``abort`` arrive on their own feed (possibly batches later);
 - a row becomes visible ONLY once its transaction's ``commit`` marker
   has been seen; rows of ``abort``-ed transactions are dropped; rows
-  of still-open transactions are held durably across batches.
+  of still-open transactions are held durably across batches, each
+  once however often its batch is redelivered.
 
 Durable state in a work dir, kept by ``sinks.jsonlog.StateDir`` (as
 for :class:`.fenced.FencedApplier`):
@@ -110,7 +111,11 @@ class TxnBoundaryApplier:
         union = events
         pending = self.state_dir.load(state, "pending")
         if pending is not None:
-            union = events.unionByName(pending)
+            # a redelivered row is byte-identical to the one held: keep
+            # each held row once (multiset difference, NULL-safe)
+            union = events.exceptAll(pending.select(*events.columns)).unionByName(
+                pending
+            )
 
         if all_markers is None:
             resolved = union.withColumn("_status", F.lit(None).cast("string"))

@@ -9,7 +9,8 @@ analogues over the engine's own manifest log):
 - the source-side pin tag keeps the clone readable across source
   vacuum; the clone's own vacuum/compact never touch source files;
 - deep clone (including deep-of-shallow, which exercises absolute →
-  relative path re-rooting) survives deletion of every source root;
+  relative path re-rooting) survives deletion of every source root,
+  and one that crashed mid-copy re-runs;
 - cherry-pick transplants exactly one commit's net changes under LWW
   with an idempotent batch id, and refuses patch-mode tables.
 """
@@ -186,3 +187,27 @@ def test_cherrypick_refuses_patch_mode(spark, tmp_path):
         a.cherrypick_from(b, 1)
     with pytest.raises(ValueError, match="no committed version"):
         b.cherrypick_from(b, 9)
+
+
+def test_deep_clone_reruns_after_crash_mid_copy(spark, tmp_path, src, monkeypatch):
+    """A deep clone that dies mid-copy, before its commit, leaves no
+    version at the destination; the re-run replaces the files it left
+    and reads correctly without the source."""
+    real_link, placed = os.link, []
+
+    def dying_link(s, d, *a, **kw):
+        if len(placed) == 3:
+            raise RuntimeError("injected crash mid-copy")
+        placed.append(d)
+        return real_link(s, d, *a, **kw)
+
+    monkeypatch.setattr(os, "link", dying_link)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        src.clone_to(str(tmp_path / "deep"), deep=True)
+    monkeypatch.undo()
+    assert ParquetSnapshotSink(spark, str(tmp_path / "deep")).current_version() == 0
+    want = _state(src)
+    deep = src.clone_to(str(tmp_path / "deep"), deep=True)
+    shutil.rmtree(src.root)
+    assert _state(deep) == want
+    assert deep.current_version() == 1

@@ -129,3 +129,20 @@ def test_empty_batch_with_open_hole_keeps_pending(spark, ev_parquet, tmp_path):
     assert r2["applied_rows"] == 0
     assert r2["pending_rows"] == r1["pending_rows"]
     assert r2["fence_next_seq"] == 500
+
+
+def test_redelivered_held_rows_are_held_once(spark, ev_parquet, tmp_path):
+    """A redelivered batch adds no second copy of a row the pending
+    generation already holds."""
+    ev = spark.read.parquet(ev_parquet)
+    s = F.col("seq")
+    sink = ParquetSnapshotSink(spark, str(tmp_path / "t"), num_buckets=4)
+    fa = FencedApplier(spark, sink, str(tmp_path / "fence"))
+    batch = ev.filter((s < 500) | (s >= 600))
+    fa.apply(batch)
+    r = fa.apply(batch)  # at-least-once redelivery, hole still open
+    assert r["pending_rows"] == ev.filter(s >= 600).count()
+    held = fa.state_dir.load(fa.state_dir.read(), "pending")
+    assert sorted(map(str, held.select(*ev.columns).collect())) == sorted(
+        map(str, ev.filter(s >= 600).collect())
+    )

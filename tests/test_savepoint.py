@@ -1,8 +1,10 @@
 """Portable savepoints (sinks/savepoint.py) and rollback-to-version
 (sinks/snapshot.py rollback): a savepoint is a standalone copy of one
-committed version that survives losing the source, carries the
-batch-id log (exactly-once resume) and the full layout (self-
-describing import, including patch mode and non-default keys);
+committed version that survives losing the source (a shallow
+clone's too), carries the batch-id log (exactly-once resume), the
+full layout (self-describing import, including patch mode and
+non-default keys) and the source's version number (a mirror resumes
+from it), and is committed by its ``savepoint.json`` alone;
 rollback restores a prior version metadata-only, reverts batch_ids so
 a corrected redelivery applies, keeps history linear for time travel,
 and the change feed refuses cursors inside the rolled-back range."""
@@ -18,6 +20,7 @@ from embulk_util_json_spark.sinks.savepoint import (
     import_savepoint,
 )
 from embulk_util_json_spark.sinks.snapshot import ParquetSnapshotSink
+from embulk_util_json_spark.streaming.mirror import last_synced_version, sync_mirror
 from embulk_util_json_spark.streaming.runner import apply_events_batch
 
 
@@ -169,3 +172,59 @@ def test_rollback_validates_version(spark, tmp_path):
     for bad in (0, 5):
         with pytest.raises(ValueError, match="no committed version"):
             sink.rollback(bad)
+
+
+def test_savepoint_of_shallow_clone_outlives_both_roots(spark, tmp_path):
+    """A shallow clone's manifest names the source's files by absolute
+    path; its savepoint re-roots them, so it reads the clone's state
+    after both the source and the clone are gone."""
+    src = ParquetSnapshotSink(spark, str(tmp_path / "src"), num_buckets=2, mode="mor")
+    apply_events_batch(_mk(spark, [_ev(0, "insert", "a", 1, 1)]), src, "b0")
+    clone = src.clone_to(str(tmp_path / "cl"))
+    # a clone-local delta beside the foreign base
+    apply_events_batch(_mk(spark, [_ev(1, "insert", "b", 1, 2)]), clone, "b1")
+    want, version = _state(clone), clone.current_version()
+    export_savepoint(clone, str(tmp_path / "sp"))
+    shutil.rmtree(src.root)
+    shutil.rmtree(clone.root)
+    dst = import_savepoint(spark, str(tmp_path / "sp"))
+    assert _state(dst) == want
+    assert dst.current_version() == version
+    assert dst.current_manifest()["savepoint_of"]["version"] == version
+
+
+def test_crash_at_export_commit_is_not_a_savepoint(spark, tmp_path, monkeypatch):
+    """``savepoint.json`` is the savepoint's commit point: an export
+    that dies at its manifest commit leaves a destination the import
+    refuses, never an empty table that would re-apply old batches."""
+    src = ParquetSnapshotSink(spark, str(tmp_path / "s"), num_buckets=2, mode="mor")
+    apply_events_batch(_mk(spark, [_ev(0, "insert", "a", 1, 1)]), src, "b0")
+
+    def crash(self, manifest, path_stats=None):
+        raise OSError("injected crash at the manifest commit")
+
+    monkeypatch.setattr(ParquetSnapshotSink, "_commit", crash)
+    with pytest.raises(OSError, match="injected crash"):
+        export_savepoint(src, str(tmp_path / "sp"))
+    monkeypatch.undo()
+    with pytest.raises(ValueError, match="not a savepoint"):
+        import_savepoint(spark, str(tmp_path / "sp"))
+
+
+def test_mirror_resumes_from_restored_savepoint(spark, tmp_path):
+    """A savepoint keeps the source's version number, so a mirror
+    synced to source vN keeps syncing exactly from the restored vN
+    once the source is lost."""
+    src = ParquetSnapshotSink(spark, str(tmp_path / "src"), num_buckets=2, mode="mor")
+    mirror = ParquetSnapshotSink(spark, str(tmp_path / "m"), num_buckets=2, mode="mor")
+    for i, (op, conv) in enumerate([("insert", "a"), ("insert", "b"), ("update", "a")]):
+        apply_events_batch(_mk(spark, [_ev(i, op, conv, 1, i + 1)]), src, f"b{i}")
+    sync_mirror(src, mirror)
+    assert last_synced_version(mirror) == 3
+    export_savepoint(src, str(tmp_path / "sp"))
+    shutil.rmtree(src.root)
+    restored = import_savepoint(spark, str(tmp_path / "sp"))
+    apply_events_batch(_mk(spark, [_ev(3, "delete", "b", 1, 4)]), restored, "b3")
+    r = sync_mirror(restored, mirror)
+    assert (r["from_version"], r["to_version"]) == (3, 4)
+    assert _state(mirror) == _state(restored) == [("a", 1, "t2")]

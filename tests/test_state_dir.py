@@ -167,13 +167,13 @@ class _FailingWriter:
 
 
 def _rows(df):
-    return sorted(set(map(str, df.collect())))
+    return sorted(map(str, df.collect()))
 
 
 def _observe(user, read, generations):
     """The sink or view rows plus the rows of every generation the
     committed state names (names differ between runs, content not;
-    a redelivered batch may hold a row twice, so rows are a set)."""
+    rows are a multiset: a redelivered batch holds each row once)."""
     state = user.state_dir.read()
     held = {
         f: _rows(user.state_dir.load(state, f)) if state.get(f) else None

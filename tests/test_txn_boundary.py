@@ -133,3 +133,22 @@ def test_vacuum_markers_retention(spark, ev_parquet, tmp_path):
     # after retention is held as open (not lost, not misapplied)
     r = ap.apply(ev.filter(F.col("txid") == 0))
     assert r["open_rows"] > 0 and r["applied_rows"] == 0
+
+
+def test_redelivered_open_rows_are_held_once(spark, ev_parquet, tmp_path):
+    """A redelivered batch adds no second copy of an open
+    transaction's row the pending generation already holds."""
+    ev = _ev(spark, ev_parquet)
+    t = F.col("txid")
+    last = N // TX - 1
+    sink = ParquetSnapshotSink(spark, str(tmp_path / "t"), num_buckets=4)
+    ap = TxnBoundaryApplier(spark, sink, str(tmp_path / "txn"))
+    markers = _markers(spark, range(last))
+    ap.apply(ev, markers)
+    r = ap.apply(ev, markers)  # at-least-once redelivery, txn still open
+    assert r["open_rows"] == ev.filter(t == last).count()
+    held = ap.state_dir.load(ap.state_dir.read(), "pending")
+    assert sorted(map(str, held.select(*ev.columns).collect())) == sorted(
+        map(str, ev.filter(t == last).collect())
+    )
+    assert _state(sink) == _clean_state(spark, ev, tmp_path, t < last)

@@ -519,9 +519,9 @@ def test_bucket_writes_and_zone_map_merges_have_one_home():
     ``_write_level``, the only code that builds a chain map (sets a
     ``buckets`` key); and only ``_commit`` merges the per-path zone
     maps: no other code in the package sets a ``file_stats`` /
-    ``key_stats`` / ``col_stats`` key. Exempt: ``clone_to`` re-keying
-    the source's chains and maps to the clone's paths, and
-    ``_empty_manifest``'s empty chain map."""
+    ``key_stats`` / ``col_stats`` key. Exempt: ``_copy`` (the table
+    copy) re-keying the source's chains and maps to the copy's paths,
+    and ``_empty_manifest``'s empty chain map."""
     pkg = pathlib.Path(embulk_util_json_spark.__file__).parent
     maps = {"file_stats", "key_stats", "col_stats"}
     offenders = []
@@ -551,14 +551,53 @@ def test_bucket_writes_and_zone_map_merges_have_one_home():
                 keys = [ast.Constant(node.arg)]
             else:
                 continue
-            if fn not in ("_commit", "clone_to") and any(
+            if fn not in ("_commit", "_copy") and any(
                 isinstance(k, ast.Constant) and k.value in maps for k in keys
             ):
                 offenders.append(f"{rel}:{node.lineno} zone map set in {fn}")
-            if fn not in ("_write_level", "clone_to", "_empty_manifest") and any(
+            if fn not in ("_write_level", "_copy", "_empty_manifest") and any(
                 isinstance(k, ast.Constant) and k.value == "buckets" for k in keys
             ):
                 offenders.append(f"{rel}:{node.lineno} chain map set in {fn}")
+    assert offenders == []
+
+
+# the constructor layout a copy forwards (``_layout``)
+_LAYOUT = {"keys", "order_cols", "bucket_by", "mode", "compact_every", "num_buckets"}
+
+
+def test_table_copies_have_one_home():
+    """Data directories in ``sinks/`` are copied or linked only by the
+    table copy, ``ParquetSnapshotSink._copy``: no ``shutil.copy*`` /
+    ``shutil.copytree`` or ``os.link`` anywhere else in ``sinks/`` bar
+    ``jsonlog.py`` (whose ``create_json`` links metadata). And no
+    ``ParquetSnapshotSink(`` call in ``snapshot.py`` or ``savepoint.py``
+    hand-lists a layout kwarg: a copy's handle is built from the one
+    ``_layout`` dict (a savepoint's recorded ``layout`` included)."""
+    pkg = pathlib.Path(embulk_util_json_spark.__file__).parent
+    offenders = []
+    for path in sorted((pkg / "sinks").glob("*.py")):
+        rel = str(path.relative_to(pkg))
+        for fn, node in _by_function(ast.parse(path.read_text(), rel)):
+            if (
+                isinstance(node, ast.Attribute)
+                and isinstance(node.value, ast.Name)
+                and (
+                    (node.value.id == "shutil" and node.attr.startswith("copy"))
+                    or (node.value.id == "os" and node.attr == "link")
+                )
+                and fn != "_copy"
+                and rel != "sinks/jsonlog.py"
+            ):
+                offenders.append(f"{rel}:{node.lineno} {node.value.id}.{node.attr} in {fn}")
+            if (
+                rel in ("sinks/snapshot.py", "sinks/savepoint.py")
+                and isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Name)
+                and node.func.id == "ParquetSnapshotSink"
+                and {k.arg for k in node.keywords} & _LAYOUT
+            ):
+                offenders.append(f"{rel}:{node.lineno} hand-listed layout in {fn}")
     assert offenders == []
 
 
