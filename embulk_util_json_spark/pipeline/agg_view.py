@@ -32,7 +32,9 @@ Consistency rules baked in:
   the view state (``view.json`` beside ``agg-<uuid>`` data
   generations, kept by ``sinks.jsonlog.StateDir``); a redelivered
   refresh is a skip, a crash between data write and state write
-  leaves only unreferenced garbage.
+  leaves only unreferenced garbage. It pulls like every table
+  consumer but keeps this position, not ``sinks.feed.fold_window``'s
+  batch-log mark: its store is not a sink.
 
 Scale shape: the delta is one hash aggregation over the change feed
 (map-side combinable), the merge is one hash aggregation over
@@ -86,12 +88,13 @@ class IncrementalAggView:
         to_v = self.sink.current_version()
         if to_v <= from_v:
             return {"skipped": True, "table_version": from_v}
-        feed = self.sink.read_changes(from_v, to_v, include_preimage=True)
-        if "_change" not in feed.columns:
-            # metadata-only window (config evolution / vacuum): no data
-            # changed — just advance the folded-version pointer
+        old, new = (self.sink.manifest_at(v) or {} for v in (from_v, to_v))
+        if (old.get("buckets") or {}) == (new.get("buckets") or {}):
+            # no data file changed (config evolution / vacuum, or no
+            # data yet): just advance the folded-version pointer
             self.state_dir.publish({**state, "table_version": to_v})
             return {"skipped": False, "table_version": to_v, "empty": True}
+        feed = self.sink.read_changes(from_v, to_v, include_preimage=True)
         # Align the feed to the sink's CURRENT read schema: a window
         # that spans versions before a column evolved in (or whose
         # early batches were tombstone-only and never carried the

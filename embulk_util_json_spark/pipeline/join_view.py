@@ -26,11 +26,11 @@ identified by its LEFT key):
    version pair, strictly increasing per refresh, so replays and
    overlapping repairs resolve deterministically.
 
-Exactly-once with NO sidecar state (the ``sinks.index`` argument): the
-refresh batch id encodes the two-sided version window
-(``jv@{flv}.{frv}-{tlv}.{trv}``) and the view sink's committed batch
-log IS the high-water mark; a crash replays into a batch-log skip or a
-clean retry.
+Exactly-once with NO sidecar state: a refresh is one
+``sinks.feed.fold_window`` step over both sources, so the batch id
+encodes the two-sided version window (``jv@{flv}.{frv}-{tlv}.{trv}``)
+and the view sink's committed batch log IS the high-water mark; a
+crash replays into a batch-log skip or a clean retry.
 
 Join-shape contract (checked at construction): ``on`` must equal the
 RIGHT sink's full key set — an FK→PK join, so each left row has at
@@ -49,7 +49,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..sinks.feed import window_batch_id, window_mark
+from ..sinks.feed import fold_window, window_mark
 from ..sinks.snapshot import ParquetSnapshotSink
 
 JV_PREFIX = "jv@"
@@ -113,25 +113,33 @@ class IncrementalJoinView:
         """Fold both sources' versions committed since the last refresh
         into the view. O(affected keys) per call; idempotent and
         crash-safe via the view sink's batch log."""
-        to_lv, to_rv = self.left.current_version(), self.right.current_version()
-        from_lv, from_rv = last_folded_versions(self.view)
-        if to_lv <= from_lv and to_rv <= from_rv:
-            return {"skipped": True, "reason": "up-to-date",
-                    "at": (from_lv, from_rv)}
-        bid = window_batch_id(JV_PREFIX, (from_lv, from_rv), (to_lv, to_rv))
+        pins: list = []
+        try:
+            return fold_window(
+                self.view, JV_PREFIX, [self.left, self.right],
+                lambda frm, to: self._batch(*frm, *to, pins),
+            )
+        finally:
+            # the pins are per-refresh scratch; don't let them pile up
+            # in the block manager across a long refresh loop
+            for pinned in pins:
+                pinned.unpersist()
 
+    def _batch(self, from_lv, from_rv, to_lv, to_rv, pins: list) -> DataFrame:
+        """The window's view rows: an upsert per affected left key
+        that joins, a tombstone per one that no longer does. Appends
+        every frame it pins to ``pins``."""
         # changed_keys, not read_changes: the affected-key recompute
         # only needs a SUPERSET of the changed keys (re-deriving an
         # unchanged key from current state is idempotent), and the
         # superset feed skips the old-state read + beats comparison —
         # the dominant cost of an exact net-change feed per refresh.
-        # Past the up-to-date return at least one side moved, so
-        # `parts` is never empty; changed_keys selects the distinct
+        # fold_window builds only when a side moved, so `parts` is
+        # never empty; changed_keys selects the distinct
         # sink keys, and the right sink's keys are `on`.
         parts = []
         if to_lv > from_lv:
             parts.append(self.left.changed_keys(from_lv, to_lv))
-        rk = None
         if to_rv > from_rv:
             rk = self.right.changed_keys(from_rv, to_rv).select(*self.on)
             # left rows currently pointing at a changed right key: one
@@ -142,6 +150,7 @@ class IncrementalJoinView:
             # the job that materializes `aff`, and each lazy
             # consumption would re-run the right feed's chain read.
             rk, rk_buckets = self.left.pin_probe(rk, self.on[0])
+            pins.append(rk)
             extra = [c for c in self.on if c not in self.left.keys]
             touched = self.left.read(
                 probe_keys=rk, probe_buckets=rk_buckets, columns=extra
@@ -163,7 +172,6 @@ class IncrementalJoinView:
         # pins). All pinned frames are O(affected keys), never
         # O(table). `aff` is reused as probe source, semi-join build
         # side and tombstone anti-join probe.
-        pinned_cur_l = None
         if all(c in self.left.keys for c in self.on):
             # on ⊆ left keys: the affected-key set already carries the
             # join values, so probe R from pinned `aff` directly — a
@@ -174,6 +182,7 @@ class IncrementalJoinView:
             aff, aff_buckets, [r_buckets] = self.left.pin_probe(
                 aff.distinct(), also=[(self.right, self.on[0])]
             )
+            pins.append(aff)
             cur_l = self.left.read(
                 probe_keys=aff, probe_buckets=aff_buckets
             ).join(F.broadcast(aff), self.left.keys, "left_semi")
@@ -183,15 +192,14 @@ class IncrementalJoinView:
             )
         else:
             aff, aff_buckets = self.left.pin_probe(aff.distinct())
+            pins.append(aff)
             cur_l = self.left.read(
                 probe_keys=aff, probe_buckets=aff_buckets
             ).join(F.broadcast(aff), self.left.keys, "left_semi")
             # on carries left PAYLOAD columns: cur_l must materialize
             # before its on-values can probe R
-            pinned_cur_l, on_buckets = self.right.pin_probe(
-                cur_l, self.on[0]
-            )
-            cur_l = pinned_cur_l
+            cur_l, on_buckets = self.right.pin_probe(cur_l, self.on[0])
+            pins.append(cur_l)
             cur_r = self.right.read(
                 probe_keys=cur_l.select(*self.on).distinct(),
                 probe_buckets=on_buckets,
@@ -218,7 +226,7 @@ class IncrementalJoinView:
             F.lit(to_lv).cast("long").alias("src_lv"),
             F.lit(to_rv).cast("long").alias("src_rv"),
         ]
-        batch = (
+        return (
             aff.join(joined, self.left.keys, "left")
             .select(
                 "*",
@@ -229,19 +237,6 @@ class IncrementalJoinView:
             )
             .drop("_m")
         )
-        try:
-            res = self.view.apply(batch, bid)
-        finally:
-            # the pins are per-refresh scratch; don't let them pile up
-            # in the block manager across a long refresh loop
-            for pinned in (rk, aff, pinned_cur_l):
-                if pinned is not None:
-                    pinned.unpersist()
-        return {
-            "skipped": bool(res.get("skipped")),
-            "window": (from_lv, from_rv, to_lv, to_rv),
-            "apply": res,
-        }
 
     # -- query ----------------------------------------------------------
 

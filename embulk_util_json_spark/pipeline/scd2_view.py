@@ -29,6 +29,10 @@ stores exactly that:
   Reads of affected keys use the sink's two-level ``probe_keys``
   pruning — only the touched bucket chains open.
 
+Table consumers pull (``sinks.feed.fold_window``); this stream
+consumer is fed each batch (``refresh(changes, batch_id)``): it needs
+every event, and a table's net feed keeps only each key's winner.
+
 Convergence: the stored event set per key grows monotonically toward
 the log's event set for that key, and the interval recompute is a
 deterministic function of it — so after every key's last event has

@@ -6,44 +6,46 @@ prep consumes *assembled conversations* (one document per conv_id),
 and at 10^10 events reassembling every conversation after every
 micro-batch is O(table) work per batch. This operator maintains the
 assembled view INCREMENTALLY: each refresh recomputes only the
-conversations the batch touched, using the sink's two-level
+conversations the source changed since the last refresh
+(``changed_keys`` of the version window), using the sink's two-level
 ``probe_keys`` pruning (only the touched keys' bucket chains are
 opened, then a broadcast semi-join restricts the merge to touched
-keys) — per-batch cost is O(touched conversations), not O(table).
+keys) — per-refresh cost is O(touched conversations), not O(table).
+
+Table consumers pull and stream consumers are fed: ``refresh()``
+takes no arguments and folds the source's version window through
+``sinks.feed.fold_window``, like the mirror, index and join view.
+Call it on any cadence, e.g. from a streaming tail's ``on_batch``.
 
 The view itself is a second ``ParquetSnapshotSink`` keyed by
 ``conv_id`` — the same bucketed exactly-once machinery as the base
 table, pointed at derived state (precedent:
 ``incremental.IncrementalDeduper``'s fingerprint store):
 
-- refreshes are idempotent on batch_id (redelivery after a crash is
-  a no-op via the sink's batch log);
-- the LWW order column is the SOURCE manifest version the refresh
-  read — monotone across refreshes because every refresh follows a
-  source apply. Two refreshes at the same version (a crash-recovery
-  re-read under a new batch_id) write byte-identical rows (the
-  refresh is a deterministic function of source state), so the tie
-  is harmless;
+- the view's batch log is its position (batch id ``cv@{from}-{to}``):
+  with no new source version a refresh is an up-to-date skip, and a
+  crash replays into a skip or a clean retry;
+- the LWW order column is the window's ``to`` version;
 - a conversation whose last turn was deleted from the base table
   refreshes to a ``delete`` tombstone — it leaves the view exactly
   as a row delete leaves the base table.
 
-Convergence under replay: refreshes applied in batch order reproduce
-"assemble the final state" exactly; a refresh that runs late (after
-MORE source batches were applied) reads newer source state for its
-touched keys, which a later refresh of those keys overwrites or
-confirms — the view converges to assemble(final state) whenever every
-touched set is eventually refreshed.
+Convergence: each refresh re-derives its touched conversations from
+current source state and consecutive windows cover every version, so
+a refresh after the last apply leaves the view equal to
+assemble(source state).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..sinks.feed import fold_window
 from ..sinks.snapshot import ParquetSnapshotSink
 from .transcripts import assemble_conversations
 
 VIEW_COLS = ["conv_id", "document", "n_turns"]
+VIEW_PREFIX = "cv@"
 
 
 class IncrementalConversationView:
@@ -67,40 +69,41 @@ class IncrementalConversationView:
             mode=mode,
         )
 
-    def refresh(self, touched: DataFrame, batch_id: str) -> dict:
-        """Re-derive the view rows for ``touched`` (a DataFrame with a
-        ``conv_id`` column — normally the batch's change rows) and
-        MERGE them. One key-pruned source read + one view apply."""
+    def refresh(self) -> dict:
+        """Re-derive the view rows of every conversation the source
+        changed since the last refresh and MERGE them: one key-pruned
+        source read + one view apply (``sinks.feed.fold_window``)."""
+        return fold_window(self.view, VIEW_PREFIX, [self.source], self._rows)
+
+    def _rows(self, from_v: int, to_v: int) -> DataFrame:
         # Both metadata-sized frames are consumed several times (ids:
         # bucket-probe collect, probe semi-join, tombstone anti-join;
-        # docs: upsert branch + anti-join): checkpoint so the batch's
-        # parse and the pruned read+assemble each run exactly once.
+        # docs: upsert branch + anti-join): checkpoint so the window's
+        # key scan and the pruned read+assemble each run exactly once.
         ids = (
-            touched.select("conv_id")
-            .filter(F.col("conv_id").isNotNull())
+            self.source.changed_keys(from_v, to_v)
+            .select("conv_id")
             .distinct()
             .localCheckpoint()
         )
-        version = self.source.current_version()
         turns = self.source.read(probe_keys=ids)
         docs = assemble_conversations(turns).localCheckpoint()
         gone = ids.join(docs, "conv_id", "left_anti")
-        changes = docs.select(
+        return docs.select(
             "conv_id",
             "document",
             "n_turns",
-            F.lit(version).cast("long").alias("src_version"),
+            F.lit(to_v).cast("long").alias("src_version"),
             F.lit("update").alias("op"),
         ).unionByName(
             gone.select(
                 "conv_id",
                 F.lit(None).cast("string").alias("document"),
                 F.lit(None).cast("int").alias("n_turns"),
-                F.lit(version).cast("long").alias("src_version"),
+                F.lit(to_v).cast("long").alias("src_version"),
                 F.lit("delete").alias("op"),
             )
         )
-        return self.view.apply(changes, batch_id)
 
     def read(self) -> DataFrame:
         """Current view state: (conv_id, document, n_turns)."""

@@ -18,8 +18,9 @@ def _q_transcript_view_incremental(spark: SparkSession, sf_dir: str) -> DataFram
     """Incremental materialized view (derived-table maintenance): the
     change stream applies to the base transcripts sink in 2 seq-range
     micro-batches, and after each apply the assembled-conversations
-    view refreshes ONLY the touched conv_ids (probe_keys-pruned source
-    read → MERGE into a conv_id-keyed view sink). The oracle is a full
+    view pulls the version window and refreshes ONLY the conv_ids it
+    touched (probe_keys-pruned source read → MERGE into a
+    conv_id-keyed view sink). The oracle is a full
     reassembly of the CDC final state — the incremental maintenance
     must converge to it exactly. (At toy scale the wall time is almost
     entirely the 4 fixed micro-batch apply costs; the per-batch work
@@ -40,11 +41,8 @@ def _q_transcript_view_incremental(spark: SparkSession, sf_dir: str) -> DataFram
     for i in range(2):
         lo = int(b.lo) + i * step
         batch = events.filter((F.col("seq") >= lo) & (F.col("seq") < lo + step))
-        # apply and refresh both consume the parse: checkpoint so the
-        # envelope JSON is parsed once per micro-batch
-        changes = parse_change_events_single_pass(batch).localCheckpoint()
-        sink.apply(changes, f"b{i}")
-        view.refresh(changes, f"b{i}:view")
+        sink.apply(parse_change_events_single_pass(batch), f"b{i}")
+        view.refresh()
     return view.read().select("conv_id", "document", "n_turns")
 
 

@@ -1,13 +1,13 @@
 """Durable named change-feed cursors — consumer-group semantics over
 ``ParquetSnapshotSink.read_changes``.
 
-``streaming/mirror.sync_mirror`` is the sink-to-sink consumer: its
-position lives in the TARGET sink's batch-id log. ``FeedCursor`` is
-the generic consumer — any number of independently-named subscribers
-(an exporter, a cache invalidator, a search indexer, a second mirror)
-each hold their own durable position over ONE source table and drain
-it at their own pace, Kafka-consumer-group style, without the source
-or each other knowing.
+``fold_window`` is the sink-to-sink consumer step (mirror, index,
+views): its position lives in the TARGET sink's batch-id log.
+``FeedCursor`` is the generic consumer — any number of
+independently-named subscribers (an exporter, a cache invalidator, a
+search indexer, a second mirror) each hold their own durable position
+over ONE source table and drain it at their own pace,
+Kafka-consumer-group style, without the source or each other knowing.
 
 Delivery contract (the same one Kafka offers, deliberately):
 
@@ -78,6 +78,37 @@ def window_mark(sink: ParquetSnapshotSink, prefix: str, width: int = 1):
         if len(to) == width:
             hi = [max(a, b) for a, b in zip(hi, to)]
     return hi[0] if width == 1 else tuple(hi)
+
+
+def fold_window(
+    target: ParquetSnapshotSink,
+    prefix: str,
+    sources: list[ParquetSnapshotSink],
+    build,
+) -> dict:
+    """The one refresh step of a consumer that folds its sources'
+    change feeds into its own sink: apply ``build(frm, to)`` to
+    ``target`` under ``window_batch_id(prefix, frm, to)``, with ``frm``
+    the target's ``window_mark`` — its batch log is the only position.
+    An empty batch still commits (a metadata-only window advances the
+    mark). Skips ``"up-to-date"`` when no source moved and
+    ``"empty-source"`` when none holds a data file (nothing to type an
+    apply with). Versions are ints for one source, else tuples."""
+    one = len(sources) == 1
+    frm = window_mark(target, prefix, len(sources))
+    to = tuple(s.current_version() for s in sources)
+    if all(t <= f for t, f in zip(to, (frm,) if one else frm)):
+        return {"skipped": True, "reason": "up-to-date", "at_version": frm}
+    if not any((s.manifest_at(v) or {}).get("buckets") for s, v in zip(sources, to)):
+        return {"skipped": True, "reason": "empty-source", "at_version": frm}
+    to = to[0] if one else to
+    res = target.apply(build(frm, to), window_batch_id(prefix, frm, to))
+    return {
+        "from_version": frm,
+        "to_version": to,
+        "skipped": bool(res.get("skipped")),
+        "apply": res,
+    }
 
 
 def batch_id(window: dict) -> str:

@@ -23,11 +23,12 @@ record-level-index / DynamoDB-GSI shape:
 - NULL values are not indexed (SQL-standard index semantics: an
   ``IS NULL`` probe is not an equality lookup).
 
-Exactly-once with no sidecar state: the refresh batch id encodes the
-(from, to) version window and the index sink's committed batch log is
-the high-water mark (``last_indexed_version`` — the
-``streaming.mirror`` idempotence argument reused). A crash replays
-into a batch-log skip or a clean retry; redelivery is a no-op.
+Exactly-once with no sidecar state: a refresh is one
+``sinks.feed.fold_window`` step, so the batch id encodes the (from,
+to) version window and the index sink's committed batch log is the
+high-water mark (``last_indexed_version``). A crash replays into a
+batch-log skip or a clean retry; redelivery is a no-op; a
+metadata-only window commits its empty batch and advances the mark.
 
 ``lookup(value)`` opens ONE index bucket chain (``key_eq`` pins
 ``bucket_by = value``), semi-joins the posting keys against a
@@ -57,7 +58,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .feed import window_batch_id, window_mark
+from .feed import fold_window, window_mark
 from .snapshot import ParquetSnapshotSink
 
 IDX_VAL = "_iv"
@@ -116,20 +117,15 @@ class SecondaryIndex:
         """Fold base-table versions committed since the last refresh
         into the index. Idempotent and crash-safe via the index sink's
         batch log; O(changed keys) per call."""
-        to_v = self.source.current_version()
-        from_v = last_indexed_version(self.index)
-        if to_v <= from_v:
-            return {"skipped": True, "reason": "up-to-date", "at_version": from_v}
+        return fold_window(self.index, INDEX_PREFIX, [self.source], self._entries)
+
+    def _entries(self, from_v: int, to_v: int) -> DataFrame:
+        """The window's index entries: an upsert per live postimage
+        and a delete per preimage."""
         feed = self.source.read_changes(from_v, to_v, include_preimage=True)
-        if "_change" not in feed.columns:
-            # empty source / metadata-only window: nothing to post and
-            # nothing to commit a typed apply with — leave the mark;
-            # the window re-widens from the same from_v (mirror.sync
-            # contract).
-            return {"skipped": True, "reason": "empty-window", "at_version": from_v}
         val = F.col(self.column)
 
-        def _entries(rows: DataFrame, pref: int, op: str, covered: bool) -> DataFrame:
+        def _project(rows: DataFrame, pref: int, op: str, covered: bool) -> DataFrame:
             cover = (
                 [F.col(c) for c in self.include_cols if c in rows.columns]
                 if covered
@@ -144,7 +140,7 @@ class SecondaryIndex:
                 *cover,
             )
 
-        post = _entries(
+        post = _project(
             feed.filter(
                 (F.col("_change") == "postimage") & (F.col("op") != "delete")
             ),
@@ -158,20 +154,11 @@ class SecondaryIndex:
         # (nothing was live), harmless by the pref tie rule. Delete
         # entries carry no covered payload (the LWW winner is always
         # the pref=1 upsert when the posting survives).
-        pre = _entries(
+        pre = _project(
             feed.filter(F.col("_change") == "preimage"),
             pref=0, op="delete", covered=False,
         )
-        res = self.index.apply(
-            post.unionByName(pre, allowMissingColumns=True),
-            window_batch_id(INDEX_PREFIX, from_v, to_v),
-        )
-        return {
-            "from_version": from_v,
-            "to_version": to_v,
-            "skipped": bool(res.get("skipped")),
-            "apply": res,
-        }
+        return post.unionByName(pre, allowMissingColumns=True)
 
     # -- query ----------------------------------------------------------
 

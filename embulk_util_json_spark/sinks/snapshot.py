@@ -722,8 +722,9 @@ class ParquetSnapshotSink:
         sound: (1) data files are immutable — the source only ever
         supersedes them, never rewrites in place; (2) ``pin_tag``
         (default on) tags the cloned version on the SOURCE
-        (``clone-…``), and vacuum pins tagged versions, so source
-        maintenance cannot reclaim files the clone still reads.
+        (``clone-…``) before the clone commits, and vacuum pins tagged
+        versions, so source maintenance cannot reclaim files the clone
+        still reads.
         Dropping that tag transfers the risk Delta documents for
         shallow clones: a source VACUUM may strand the clone. The
         clone's own vacuum/compact never touch foreign files (its
@@ -750,6 +751,11 @@ class ParquetSnapshotSink:
         dest = ParquetSnapshotSink(self.spark, dest_root, **self._layout(src))
         if dest.current_version() > 0:
             raise ValueError(f"clone destination {dest_root!r} is not empty")
+        # pin first: a crash before the commit leaves an empty dest
+        if pin_tag and not deep:
+            tag = f"clone-{os.path.basename(os.path.normpath(dest_root))}-v{src['version']}"
+            if tag not in self.tags():
+                self.create_tag(tag, at_version=src["version"])
         self._copy(
             src,
             dest,
@@ -761,10 +767,6 @@ class ParquetSnapshotSink:
                 "deep": deep,
             },
         )
-        if pin_tag and not deep:
-            tag = f"clone-{os.path.basename(os.path.normpath(dest_root))}-v{src['version']}"
-            if tag not in self.tags():
-                self.create_tag(tag, at_version=src["version"])
         return dest
 
     def rollback(self, to_version: int) -> dict:
@@ -2985,9 +2987,12 @@ class ParquetSnapshotSink:
         Free by construction: step 3 already reduced the old winners
         for exactly these keys. Row-level tables only — a patch-mode
         feed's stamped levels have no single old "row" to retract.
+        A window with no new files has a typed empty ``_change`` too.
         """
         cand, from_manifest, to_manifest, new_paths = window
         if not new_paths:
+            if include_preimage:
+                return cand.withColumn("_change", F.lit(None).cast("string"))
             return cand
         if self._patch_conf(to_manifest)[0]:
             if include_preimage:

@@ -12,7 +12,9 @@ log is the high-water mark — ``last_synced_version`` recomputes it
 from the log, so a crash anywhere re-runs into either a skip (apply
 already committed) or a clean retry (nothing committed). This is the
 same idempotence argument as the streaming runner's foreachBatch
-replay, reused across tables.
+replay, reused across tables. The window protocol is
+``sinks.feed.fold_window``, shared with the index and the views;
+this module supplies only the feed to apply.
 
 Patch-mode tables mirror exactly because feed rows are valid stamped
 levels (``_read_changes_patch``); the mirror must merge them under
@@ -42,7 +44,7 @@ lakes have.
 
 from __future__ import annotations
 
-from ..sinks.feed import window_batch_id, window_mark
+from ..sinks.feed import fold_window, window_mark
 from ..sinks.snapshot import ParquetSnapshotSink
 
 MIRROR_PREFIX = "mirror@"
@@ -78,53 +80,29 @@ def sync_mirror(
     Postgres logical-replication row filters place on UPDATE-mode
     publications; it is the caller's contract here (predicates are
     arbitrary Columns and cannot be statically checked)."""
-    to_v = src.current_version()
-    from_v = last_synced_version(dst)
-    if to_v <= from_v:
-        return {"skipped": True, "reason": "up-to-date", "at_version": from_v}
 
-    # Refresh the SOURCE handle's config from the manifest being
-    # synced: a long-lived mirror job may hold a handle built before
-    # another writer ran evolve_patch_cols, and version/feed reads go
-    # to the filesystem while patch config sits on the handle — a
-    # stale handle here would silently merge evolved columns
-    # row-level on the mirror (the same reason every sink entry point
-    # calls _adopt).
-    src._adopt(src.manifest_at(to_v) or {})
-    # adopt the source's patch config (incl. mid-stream evolution)
-    # onto the MIRROR before applying: merging a stamped feed
-    # row-level — or under a stale column set — would corrupt
-    # column-level carry-forward.
-    src_patch = list(src.patch_cols or [])
-    dst_patch = list(dst.patch_cols or [])
-    missing = [c for c in src_patch if c not in dst_patch]
-    if missing:
-        unknown = [c for c in missing if c not in src.patch_types]
-        if unknown:
-            raise ValueError(
-                f"source patch columns {unknown} have no recorded type; "
-                "cannot evolve the mirror"
+    def build(from_v: int, to_v: int):
+        # Refresh the SOURCE handle's patch config from the synced
+        # manifest (a long-lived handle may predate another writer's
+        # evolve_patch_cols), then adopt it onto the MIRROR: merging a
+        # stamped feed row-level, or under a stale column set, would
+        # corrupt column-level carry-forward.
+        src._adopt(src.manifest_at(to_v) or {})
+        src_patch = list(src.patch_cols or [])
+        dst_patch = list(dst.patch_cols or [])
+        missing = [c for c in src_patch if c not in dst_patch]
+        if missing:
+            unknown = [c for c in missing if c not in src.patch_types]
+            if unknown:
+                raise ValueError(
+                    f"source patch columns {unknown} have no recorded type; "
+                    "cannot evolve the mirror"
+                )
+            dst.evolve_patch_cols(
+                {c: src.patch_types[c] for c in missing},
+                unchanged_marker=src.unchanged_marker,
             )
-        dst.evolve_patch_cols(
-            {c: src.patch_types[c] for c in missing},
-            unchanged_marker=src.unchanged_marker,
-        )
+        feed = src.read_changes(from_v, to_v)
+        return feed if key_filter is None else feed.filter(key_filter)
 
-    feed = src.read_changes(from_v, to_v)
-    if "op" not in feed.columns:
-        # The source has never stored a data file (empty table whose
-        # versions advanced via config-only commits): read_changes has
-        # no typed schema to return and yields the legacy sentinel.
-        # Nothing to sync and nothing to type an empty apply with —
-        # leave the mark where it is; the window re-widens from the
-        # same from_v once data exists.
-        return {"skipped": True, "reason": "empty-source", "at_version": from_v}
-    if key_filter is not None:
-        feed = feed.filter(key_filter)
-    res = dst.apply(feed, window_batch_id(MIRROR_PREFIX, from_v, to_v))
-    return {
-        "from_version": from_v,
-        "to_version": to_v,
-        "skipped": bool(res.get("skipped")),
-        "apply": res,
-    }
+    return fold_window(dst, MIRROR_PREFIX, [src], build)

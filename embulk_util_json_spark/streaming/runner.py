@@ -479,7 +479,6 @@ def stream_directory(
     fmt: str = "parquet",
     max_files_per_trigger: int | None = None,
     parse_fn=None,
-    view=None,
     on_batch=None,
 ):
     """Structured Streaming tail of a growing directory of event files.
@@ -489,23 +488,14 @@ def stream_directory(
     (production). Batch ids are the streaming epoch ids; the sink's
     commit log makes redelivery after checkpoint restore a no-op.
 
-    ``view`` (an ``IncrementalConversationView`` or anything with
-    ``refresh(touched, batch_id)``) is maintained after every base
-    apply: each epoch refreshes only the conversations the batch
-    touched. The refresh runs UNCONDITIONALLY — even when the base
-    apply was a redelivered no-op — because a crash can land between
-    the base commit and the view commit; the view's own batch log
-    makes double refreshes no-ops, and a late refresh (base already
-    ahead) reads newer source state that a later refresh of the same
-    keys confirms (convergence argument: ``pipeline/views.py``).
-
     ``on_batch`` (``callable(sink, batch_id)``) runs after the apply
-    (and view refresh) of every epoch — the generic post-commit hook:
-    e.g. ``lambda s, bid: publish_changes(s, "bridge", out)`` keeps a
-    wire topic continuously exported. The hook must be idempotent /
-    self-positioned (cursors are): a crash between the apply and the
-    hook means the NEXT epoch's hook sees a wider window, never a
-    lost one.
+    of every epoch — the generic post-commit hook: e.g.
+    ``lambda s, bid: publish_changes(s, "bridge", out)`` keeps a wire
+    topic continuously exported, and ``lambda s, _bid: view.refresh()``
+    keeps a table consumer (conversation view, index, mirror) current.
+    The hook must be idempotent / self-positioned (cursors and table
+    consumers are): a crash between the apply and the hook means the
+    NEXT epoch's hook sees a wider window, never a lost one.
     """
     reader = spark.readStream.schema(EVENTS_SCHEMA).format(fmt)
     if max_files_per_trigger:
@@ -514,9 +504,6 @@ def stream_directory(
 
     def handle(batch_df: DataFrame, batch_id: str, _epoch_id: int) -> None:
         apply_events_batch(batch_df, sink, batch_id, parse_fn=parse_fn)
-        if view is not None:
-            touched = (parse_fn or parse_change_events)(batch_df)
-            view.refresh(touched, f"{batch_id}:view")
         if on_batch is not None:
             on_batch(sink, batch_id)
 

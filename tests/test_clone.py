@@ -7,7 +7,9 @@ analogues over the engine's own manifest log):
 - shallow clone copies ZERO data bytes, reads bit-identically, and
   diverges independently after writes to either side;
 - the source-side pin tag keeps the clone readable across source
-  vacuum; the clone's own vacuum/compact never touch source files;
+  vacuum, and is created before the clone commits, so a clone that
+  crashed at either step re-runs pinned; the clone's own
+  vacuum/compact never touch source files;
 - deep clone (including deep-of-shallow, which exercises absolute →
   relative path re-rooting) survives deletion of every source root,
   and one that crashed mid-copy re-runs;
@@ -187,6 +189,35 @@ def test_cherrypick_refuses_patch_mode(spark, tmp_path):
         a.cherrypick_from(b, 1)
     with pytest.raises(ValueError, match="no committed version"):
         b.cherrypick_from(b, 9)
+
+
+def test_shallow_clone_is_pinned_before_it_commits(spark, tmp_path, src, monkeypatch):
+    """A shallow clone tags the source version before it commits: a
+    crash at the pin leaves no version at the destination, a crash
+    after it leaves the tag and an empty destination, and each re-run
+    produces a pinned clone that reads the source's state."""
+    want = _state(src)
+    for crash in ("create_tag", "_copy"):
+        real = getattr(ParquetSnapshotSink, crash)
+        calls = []
+
+        def dying(self, *a, _real=real, **kw):
+            if not calls:
+                calls.append(1)
+                raise RuntimeError("injected crash")
+            return _real(self, *a, **kw)
+
+        monkeypatch.setattr(ParquetSnapshotSink, crash, dying)
+        dest = str(tmp_path / f"cl_{crash}")
+        with pytest.raises(RuntimeError, match="injected crash"):
+            src.clone_to(dest)
+        monkeypatch.undo()
+        assert ParquetSnapshotSink(spark, dest).current_version() == 0
+        clone = src.clone_to(dest)
+        assert clone.current_version() == 1
+        tag = f"clone-cl_{crash}-v{src.current_version()}"
+        assert src.tags()[tag]["version"] == src.current_version()
+        assert _state(clone) == want
 
 
 def test_deep_clone_reruns_after_crash_mid_copy(spark, tmp_path, src, monkeypatch):

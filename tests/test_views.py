@@ -1,7 +1,9 @@
 """Incremental materialized conversation view (derived-table
-maintenance): per-batch refresh of only the touched conv_ids must
-converge to a full reassembly of the base table, including full
-conversation deletion, and redelivered refreshes must be no-ops."""
+maintenance): a refresh pulls the source's version window and
+re-derives only the conv_ids it touched; it must converge to a full
+reassembly of the base table, including full conversation deletion,
+and a refresh with no new source version must be an up-to-date
+skip."""
 
 from __future__ import annotations
 
@@ -53,12 +55,22 @@ def _setup(spark, tmp_path):
     return sink, view
 
 
+def _apply(spark, sink, rows, batch_id):
+    ev = spark.createDataFrame(rows, "seq long, event_json string")
+    sink.apply(parse_change_events_single_pass(ev), batch_id)
+
+
 def _apply_batches(spark, sink, view, batches):
     for i, rows in enumerate(batches):
-        ev = spark.createDataFrame(rows, "seq long, event_json string")
-        changes = parse_change_events_single_pass(ev)
-        sink.apply(changes, f"b{i}")
-        view.refresh(changes, f"b{i}:view")
+        _apply(spark, sink, rows, f"b{i}")
+        view.refresh()
+
+
+def _oracle(sink):
+    return {
+        r.conv_id: (r.document, r.n_turns)
+        for r in assemble_conversations(sink.read()).collect()
+    }
 
 
 def _view_state(view):
@@ -71,11 +83,7 @@ def test_view_converges_to_full_reassembly(spark, tmp_path):
     sink, view = _setup(spark, tmp_path)
     _apply_batches(spark, sink, view, [BATCH1, BATCH2])
     got = _view_state(view)
-    oracle = {
-        r.conv_id: (r.document, r.n_turns)
-        for r in assemble_conversations(sink.read()).collect()
-    }
-    assert got == oracle
+    assert got == _oracle(sink)
     assert got["cA"] == ("user: a0\nuser: a1v2", 2)
     # cC's only turn was deleted → tombstoned OUT of the view
     assert "cC" not in got
@@ -83,22 +91,47 @@ def test_view_converges_to_full_reassembly(spark, tmp_path):
 
 
 def test_view_refresh_redelivery_is_noop(spark, tmp_path):
+    """A redelivered refresh — a second one with no new source
+    version — is an up-to-date skip: nothing is committed and the
+    view is unchanged."""
     sink, view = _setup(spark, tmp_path)
     _apply_batches(spark, sink, view, [BATCH1, BATCH2])
-    before = _view_state(view)
-    # redeliver batch 1's refresh under its committed batch_id: the
-    # view's batch log must skip it (no stale overwrite of cA/cC)
-    ev = spark.createDataFrame(BATCH1, "seq long, event_json string")
-    changes = parse_change_events_single_pass(ev)
-    res = view.refresh(changes, "b0:view")
-    assert res.get("skipped")
+    before, version = _view_state(view), view.view.current_version()
+    res = view.refresh()
+    assert res == {
+        "skipped": True, "reason": "up-to-date",
+        "at_version": sink.current_version(),
+    }
+    assert view.view.current_version() == version
     assert _view_state(view) == before
 
 
+def test_refresh_job_count(spark, tmp_path):
+    """One refresh over BATCH2's window runs at most 11 Spark jobs
+    (counted through a job group and the status tracker). The push
+    refresh it replaced, fed the parsed batch, ran 13 over the same
+    batches."""
+    sink, view = _setup(spark, tmp_path)
+    _apply(spark, sink, BATCH1, "b0")
+    view.refresh()
+    _apply(spark, sink, BATCH2, "b1")
+    sc = spark.sparkContext
+    group = f"view-refresh-{id(view)}"
+    sc.setJobGroup(group, "count the jobs of one view refresh")
+    try:
+        assert not view.refresh()["skipped"]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 11
+    assert _view_state(view) == _oracle(sink)
+
+
 def test_stream_directory_maintains_view(spark, tmp_path):
-    """Streaming tail with a view attached: every epoch refreshes the
-    touched conversations; after a checkpoint restart (new file lands,
-    stream resumes) the view still equals a full reassembly."""
+    """Streaming tail with a view attached through ``on_batch``: every
+    epoch refreshes the touched conversations; after a checkpoint
+    restart (new file lands, stream resumes) the view still equals a
+    full reassembly."""
     import pyarrow.parquet as pq
 
     from embulk_util_json_spark.sources.generator import generate_events
@@ -111,40 +144,31 @@ def test_stream_directory_maintains_view(spark, tmp_path):
 
     sink, view = _setup(spark, tmp_path)
     ckpt = str(tmp_path / "ckpt")
-    q = stream_directory(spark, str(events_dir), sink, ckpt, view=view)
+    def refresh(_sink, _batch_id):
+        view.refresh()
+
+    q = stream_directory(spark, str(events_dir), sink, ckpt, on_batch=refresh)
     q.awaitTermination()
     assert view.view.applied_batch_ids()  # view committed its epochs
 
     pq.write_table(table.slice(2000), str(events_dir / "part-1.parquet"))
-    q2 = stream_directory(spark, str(events_dir), sink, ckpt, view=view)
+    q2 = stream_directory(spark, str(events_dir), sink, ckpt, on_batch=refresh)
     q2.awaitTermination()
 
     got = _view_state(view)
-    oracle = {
-        r.conv_id: (r.document, r.n_turns)
-        for r in assemble_conversations(sink.read()).collect()
-    }
-    assert got == oracle and len(got) > 0
+    assert got == _oracle(sink) and len(got) > 0
 
 
 def test_late_refresh_converges(spark, tmp_path):
-    """A refresh that runs AFTER more source batches were applied
-    (crash between apply and refresh, recovery applied the tail
-    first) reads newer source state — the view still converges."""
+    """One refresh that runs AFTER two source applies (crash between
+    apply and refresh, recovery applied the tail first) folds both in
+    one window — the view converges."""
     sink, view = _setup(spark, tmp_path)
-    ev1 = spark.createDataFrame(BATCH1, "seq long, event_json string")
-    ch1 = parse_change_events_single_pass(ev1)
-    ev2 = spark.createDataFrame(BATCH2, "seq long, event_json string")
-    ch2 = parse_change_events_single_pass(ev2)
-    sink.apply(ch1, "b0")
-    sink.apply(ch2, "b1")  # crash window: b0's refresh never ran
-    view.refresh(ch1, "b0:view")  # late — sees b1's source state
-    view.refresh(ch2, "b1:view")
-    oracle = {
-        r.conv_id: (r.document, r.n_turns)
-        for r in assemble_conversations(sink.read()).collect()
-    }
-    assert _view_state(view) == oracle
+    _apply(spark, sink, BATCH1, "b0")
+    _apply(spark, sink, BATCH2, "b1")  # crash window: b0's refresh never ran
+    res = view.refresh()
+    assert (res["from_version"], res["to_version"]) == (0, sink.current_version())
+    assert _view_state(view) == _oracle(sink)
 
 
 def test_view_over_patch_mode_base(spark, tmp_path):
@@ -175,7 +199,7 @@ def test_view_over_patch_mode_base(spark, tmp_path):
     for i, batch in enumerate([rows[:3], rows[3:5], rows[5:]]):
         df = spark.createDataFrame(batch, ddl)
         base.apply(df, f"b{i}")
-        view.refresh(df.select("conv_id"), f"b{i}:view")
+        view.refresh()
 
     final = lww_patch(
         spark.createDataFrame(rows, ddl),
