@@ -84,6 +84,10 @@ _KINDS = (
 _MAX_APPLIES = 1000  # records kept in a manifest's ``applies`` log
 # per-path maps, keyed by chain path; ``_commit`` merges and prunes them
 _PATH_MAPS = ("file_stats", "key_stats", "col_stats", "blooms")
+# seconds a never-committed data dir must sit untouched before
+# ``vacuum`` (and, by default, ``remove_orphans``) reclaims it: a
+# younger one may be a live writer's staged level
+ORPHAN_GRACE_SECONDS = 300.0
 
 
 def _record_kind(record: dict) -> str:
@@ -422,7 +426,8 @@ class ParquetSnapshotSink:
         ``mode("overwrite")`` write would clobber the winner's
         already-committed files before the loser even reaches the
         manifest race. The loser's orphaned directory is never
-        referenced and is reclaimed by ``vacuum`` (which walks actual
+        referenced and is reclaimed by ``remove_orphans`` or ``vacuum``
+        once older than the grace window (``_reclaim`` walks actual
         directories against the referenced-path set, not names)."""
         tag = uuid.uuid4().hex[:8]
         if self.branch == "main":
@@ -624,9 +629,10 @@ class ParquetSnapshotSink:
 
     def drop_branch(self, name: str) -> None:
         """Delete a branch's manifest chain. Its exclusively-owned
-        data directories become unreferenced and are reclaimed by the
-        next ``vacuum``; shared pre-fork files stay (still referenced
-        by the surviving branches)."""
+        data directories become unreferenced: ``remove_orphans``, or a
+        ``vacuum`` once they are older than the grace window, reclaims
+        them; shared pre-fork files stay (still referenced by the
+        surviving branches)."""
         if name == "main":
             raise ValueError("cannot drop the main branch")
         if name == self.branch:
@@ -1127,9 +1133,9 @@ class ParquetSnapshotSink:
 
     def _foreign_branch_refs(self) -> set[str]:
         """Every data path referenced by ANY manifest of any OTHER
-        branch — the protected set for ``vacuum`` (metadata-only JSON
-        reads; manifests are small and per-branch chains short after
-        their own vacuums)."""
+        branch — the protected set ``vacuum`` and ``remove_orphans``
+        pass to ``_reclaim`` (metadata-only JSON reads; manifests are
+        small and per-branch chains short after their own vacuums)."""
         refs: set[str] = set()
         own = os.path.basename(self._log.dir)
         for d in os.listdir(self.root):
@@ -1885,7 +1891,8 @@ class ParquetSnapshotSink:
         ``apply`` re-reads the manifest each attempt: if the competing
         writer committed THIS batch_id, the retry is a skip; otherwise
         the batch lands on the next free version. Data written by the
-        losing attempt is orphaned, never referenced (vacuum GCs it).
+        losing attempt is orphaned, never referenced (``remove_orphans``
+        or ``vacuum`` reclaims it once older than the grace window).
         """
         for _ in range(max_retries):
             try:
@@ -1985,23 +1992,22 @@ class ParquetSnapshotSink:
         return self._apply_mow(staged, metrics_exprs, batch_id, manifest, obs, t0)
 
     def _write_buckets(
-        self,
-        df: DataFrame,
-        version: int,
-        banded: bool = False,
-        pre_partitioned: bool = False,
+        self, df: DataFrame, version: int, banded: bool = False
     ) -> tuple[dict[str, list[str]], dict[str, int], dict[str, dict]]:
         """THE bucket-partitioned write, called only by ``_write_level``:
         stages rows into a fresh ``_data_rel(version)`` dir and returns
         ``_bucket_footer_info`` of what was written.
 
-        Rows are hash-partitioned by ``_bucket`` with no count (unless
-        ``pre_partitioned`` by ``_partitioned_reduce``), so adaptive
-        execution coalesces the write by its bytes; with AQE off it
-        runs ``spark.sql.shuffle.partitions`` tasks. A task may hold
-        several buckets but a bucket never spans two, and sorting by
-        the partition columns, then the keys, gives each bucket one
-        key-sorted file per level with no sort of the writer's own.
+        Rows are always hash-partitioned by ``_bucket`` with no count,
+        so adaptive execution coalesces the write by its bytes; with
+        AQE off it runs ``spark.sql.shuffle.partitions`` tasks. Over
+        rows that ``_partitioned_reduce`` already partitioned by
+        ``_bucket`` (through projections, filters or a union of such
+        inputs) the planner drops this exchange, so a reduce-and-write
+        shuffles once. A task may hold several buckets but a bucket
+        never spans two, and sorting by the partition columns, then
+        the keys, gives each bucket one key-sorted file per level with
+        no sort of the writer's own.
 
         Timestamps are forced to TIMESTAMP_MICROS for the write
         (session conf scoped + restored): Spark's INT96 default
@@ -2016,10 +2022,9 @@ class ParquetSnapshotSink:
         self.spark.conf.set(key, "TIMESTAMP_MICROS")
         part_cols = [BAND_COL, BUCKET_COL] if banded else [BUCKET_COL]
         try:
-            if not pre_partitioned:
-                df = df.repartition(_col(BUCKET_COL))
             (
-                df.sortWithinPartitions(*part_cols, *map(_col, self.keys))
+                df.repartition(_col(BUCKET_COL))
+                .sortWithinPartitions(*part_cols, *map(_col, self.keys))
                 .write.mode("overwrite")
                 .partitionBy(*part_cols)
                 .parquet(os.path.join(self.root, out_rel))
@@ -2028,21 +2033,24 @@ class ParquetSnapshotSink:
             self.spark.conf.set(key, prev)
         return self._bucket_footer_info(out_rel)
 
-    def _partitioned_reduce(self, df: DataFrame) -> DataFrame:
-        """Fused shuffle for the apply/compact hot path: hash-
-        partition by ``_bucket`` once, then run THE reduce on top.
-        ``_bucket`` is a member of the grouping keys, so Catalyst
-        reuses the exchange for the aggregation (hashpartitioning on a
-        subset of the grouping keys satisfies its ClusteredDistribution)
-        — ONE shuffle of the data instead of reduce-by-key THEN
-        repartition-by-bucket. The output stays partitioned by bucket,
-        so ``_write_level(..., pre_partitioned=True)`` writes it
-        directly; plan-asserted in tests (single Exchange). The
-        repartition names no count, so adaptive execution sizes the
-        shuffle by its bytes: a trickle apply into 8 buckets runs one
-        reduce+write task, not 8 (see ``_write_buckets``)."""
+    def _partitioned_reduce(
+        self, df: DataFrame, manifest: dict | None = None
+    ) -> DataFrame:
+        """THE reduce of every writer that merges stored levels or a
+        batch before writing them: hash-partition by ``_bucket`` once,
+        then run ``_reduce`` (``manifest`` as there) over the keys and
+        ``_bucket``. ``_bucket`` is a member of the grouping keys, so
+        Catalyst reuses the exchange for the aggregation
+        (hashpartitioning on a subset of the grouping keys satisfies
+        its ClusteredDistribution), and the output stays partitioned
+        by bucket, so ``_write_buckets``' own repartition is dropped:
+        ONE shuffle of the data instead of reduce-by-key THEN
+        repartition-by-bucket (plan-asserted in tests). ``df`` must
+        carry ``_bucket``. The repartition names no count, so adaptive
+        execution sizes the shuffle by its bytes: a trickle apply into
+        8 buckets runs one reduce+write task, not 8."""
         return self._reduce(
-            df.repartition(_col(BUCKET_COL)), self.keys + [BUCKET_COL]
+            df.repartition(_col(BUCKET_COL)), self.keys + [BUCKET_COL], manifest
         )
 
     @staticmethod
@@ -2234,12 +2242,12 @@ class ParquetSnapshotSink:
         *,
         obs=None,
         banded: bool = False,
-        pre_partitioned: bool = False,
         **fields,
     ) -> dict:
         """THE write-and-commit of one level, for every bucket writer:
         ``rows`` (carrying ``_bucket``; ``None`` writes nothing) go
-        through ``_write_buckets`` into the next version's data dir,
+        through ``_write_buckets`` into the next version's data dir
+        (with no second shuffle over ``_partitioned_reduce`` output),
         every written bucket's chain becomes ``keep[b]`` + its new
         paths, and the version commits as ``_next_manifest(manifest,
         record, buckets=..., **fields)`` with the level's zone maps.
@@ -2249,7 +2257,8 @@ class ParquetSnapshotSink:
         full rewrite); a bucket left with no chain drops out. This is
         the one seam between staged data and a committed version: a
         crash before ``_commit`` leaves only an unreferenced staging
-        dir, which ``remove_orphans`` reclaims.
+        dir, which ``remove_orphans`` (or ``vacuum``, once older than
+        the grace window) reclaims.
 
         ``record`` is the version's ``applies`` record, or a function
         ``(seen, counts, buckets) -> record`` for a writer whose record
@@ -2261,7 +2270,7 @@ class ParquetSnapshotSink:
         ``extra_fields``. Returns the committed manifest."""
         version = manifest["version"] + 1
         chains, counts, path_stats = (
-            self._write_buckets(rows, version, banded, pre_partitioned)
+            self._write_buckets(rows, version, banded)
             if rows is not None
             else ({}, {}, None)
         )
@@ -2396,7 +2405,7 @@ class ParquetSnapshotSink:
         keep = {**self._chains(manifest), **dict.fromkeys(map(str, affected), [])}
         new = self._write_level(
             manifest, merged, keep, record, t0, obs=obs,
-            pre_partitioned=True, **self._batch_fields(manifest, batch_id, merged),
+            **self._batch_fields(manifest, batch_id, merged),
         )
         return new["applies"][-1]
 
@@ -2425,8 +2434,7 @@ class ParquetSnapshotSink:
             }
 
         new = self._write_level(
-            manifest, delta, self._chains(manifest), record, t0,
-            obs=obs, pre_partitioned=True,
+            manifest, delta, self._chains(manifest), record, t0, obs=obs,
             **self._batch_fields(manifest, batch_id, delta),
         )
         # Bound read amplification: collapse chains that grew too deep.
@@ -3206,7 +3214,7 @@ class ParquetSnapshotSink:
                 "buckets_compacted": len(target),
                 "ts_bands": (len(edges_us) + 1) if ts_bands else None,
             },
-            t0, banded=bool(ts_bands), pre_partitioned=True,
+            t0, banded=bool(ts_bands),
         )
         return {"version": new["version"], "buckets_compacted": len(target)}
 
@@ -3347,8 +3355,7 @@ class ParquetSnapshotSink:
             "base_levels_untouched": sum(len(ps) for ps in base_of.values()),
         }
         new = self._write_level(
-            manifest, df, keep, {"compact_minor": True, **out}, t0,
-            pre_partitioned=True,
+            manifest, df, keep, {"compact_minor": True, **out}, t0
         )
         return {"version": new["version"], **out}
 
@@ -3397,8 +3404,7 @@ class ParquetSnapshotSink:
                     "from_num_buckets": old_n,
                     "to_num_buckets": self.num_buckets,
                 },
-                t0, pre_partitioned=True,
-                num_buckets=self.num_buckets,
+                t0, num_buckets=self.num_buckets,
             )
         except BaseException:
             # commit lost / write failed: the table is still on the old
@@ -3531,7 +3537,9 @@ class ParquetSnapshotSink:
             # stamp promoted columns at the surviving rows' positions
             df = self._read_bucket_paths(self._all_paths(manifest))
             df = df.filter(_col(self.keys[0]).isNotNull())
-            df = self._reduce(df, self.keys, manifest=manifest)
+            df = self._partitioned_reduce(
+                df.withColumn(BUCKET_COL, self._bucket_expr()), manifest
+            )
             if EXTRAS_COL in df.columns:
                 from_extras = [c for c in promote if c not in df.columns]
                 for c in from_extras:
@@ -3556,7 +3564,7 @@ class ParquetSnapshotSink:
                 marker,
                 absent_if=_col("op") == "delete",
             )
-            rows, keep = df.withColumn(BUCKET_COL, self._bucket_expr()), {}
+            rows, keep = df, {}
             fields["schema_fields"] = sorted(
                 (set(manifest["schema_fields"]) | set(df.columns)) - {BUCKET_COL}
             )
@@ -3580,17 +3588,18 @@ class ParquetSnapshotSink:
         the stream keeps running).
 
         One manifest-committed rewrite, same protocol as ``rebucket``:
-        current state LWW-collapsed (tombstones KEPT — late replays
-        inside the horizon still lose), ``transform`` applied, rows
-        re-hashed and committed as the next version. The batch-id log
-        survives, so a replayed pre-rewrite batch is still a skip; an
-        event NEWER than a stored row's (ts, seq) still beats the
-        transformed row, exactly as it would have beaten the original.
+        current state LWW-collapsed by ``_partitioned_reduce``
+        (tombstones KEPT — late replays inside the horizon still lose),
+        ``transform`` applied and the rows committed as the next
+        version, with one shuffle. The batch-id log survives, so a
+        replayed pre-rewrite batch is still a skip; an event NEWER than
+        a stored row's (ts, seq) still beats the transformed row,
+        exactly as it would have beaten the original.
 
         ``transform`` is DataFrame → DataFrame over full table rows
-        (meta included) and must preserve the column set and the key /
-        order / op columns — payload columns only (the bucket column is
-        recomputed from the key, and a changed column set raises).
+        (meta and ``_bucket`` included) and must preserve the column
+        set and the key / order / op / ``_bucket`` columns — payload
+        columns only (a changed column set raises).
         ``where`` scopes the transform: matching rows are transformed,
         the rest pass through byte-identical.
 
@@ -3604,7 +3613,7 @@ class ParquetSnapshotSink:
         self._adopt(manifest)
         t0 = time.time()
         df = self._read_bucket_paths(self._all_paths(manifest))
-        df = self._reduce(df, self.keys)
+        df = self._partitioned_reduce(df.withColumn(BUCKET_COL, self._bucket_expr()))
         if where is not None:
             changed = transform(df.filter(where))
             kept = df.filter(~F.coalesce(where, F.lit(False)))
@@ -3617,8 +3626,7 @@ class ParquetSnapshotSink:
                 f"{sorted(set(out.columns) ^ set(df.columns))} changed"
             )
         new = self._write_level(
-            manifest, out.withColumn(BUCKET_COL, self._bucket_expr()), {},
-            {"rewrite": True, "scoped": where is not None}, t0,
+            manifest, out, {}, {"rewrite": True, "scoped": where is not None}, t0
         )
         return {"version": new["version"], "rewritten": True}
 
@@ -3685,9 +3693,15 @@ class ParquetSnapshotSink:
         history. ``purge`` physically removes matching rows: the
         affected bucket chains are rewritten without them (every
         level, including tombstones and superseded versions of the
-        key), and with ``expire_history=True`` all prior snapshots are
-        vacuumed so no retained file contains the data. Time travel
-        across the purge boundary is intentionally destroyed.
+        key: the predicate drops rows BEFORE ``_partitioned_reduce``
+        collapses each bucket to one level, with one shuffle), and
+        with ``expire_history=True`` all prior snapshots are vacuumed,
+        which deletes every data dir they referenced, so no retained
+        file contains the data. A never-committed staging dir holding
+        the rows (a crashed writer's) goes once older than
+        ``ORPHAN_GRACE_SECONDS``; run ``remove_orphans(0)`` when no
+        writer can be live. Time travel across the purge boundary is
+        intentionally destroyed.
 
         ``key_eq`` — equality match on key columns; pinning
         ``bucket_by`` confines the rewrite to ONE bucket chain
@@ -3744,8 +3758,8 @@ class ParquetSnapshotSink:
             kept = self._to_physical_frame(kept, mapping)
         # collapse to one level per bucket (tombstones preserved), so
         # the rewritten chain stays read-correct at depth 1
-        kept = self._reduce(kept, self.keys).withColumn(
-            BUCKET_COL, self._bucket_expr()
+        kept = self._partitioned_reduce(
+            kept.withColumn(BUCKET_COL, self._bucket_expr())
         )
         new = self._write_level(
             manifest, kept, self._chains(manifest, drop=set(target)),
@@ -3945,10 +3959,13 @@ class ParquetSnapshotSink:
     ) -> dict:
         """Expire old snapshots (the Iceberg ``expire_snapshots``
         analogue): delete manifest versions older than the newest
-        ``keep_versions`` and any data directory no retained manifest
-        references. Time travel remains possible to every retained
-        version; anything older is gone for good (run only once
-        replay/audit windows have passed).
+        ``keep_versions`` (at least 1, so the current version always
+        stays; a smaller value raises before anything is touched) and,
+        through ``_reclaim``, every data dir they alone referenced plus
+        never-committed dirs older than ``ORPHAN_GRACE_SECONDS`` — a
+        concurrent writer's staged level survives. Time travel remains
+        possible to every retained version; anything older is gone
+        for good (run only once replay/audit windows have passed).
 
         ``protect_cursors`` (default on) widens retention so no named
         change-feed cursor (``sinks/feed.FeedCursor``) is stranded:
@@ -3970,6 +3987,8 @@ class ParquetSnapshotSink:
         Driver-side filesystem work only — no Spark job. Safe against
         a concurrent reader of a retained version because data files
         are immutable and only unreferenced ones are removed."""
+        if keep_versions < 1:
+            raise ValueError(f"keep_versions must be >= 1, got {keep_versions}")
         current = self.current_version()
         if current == 0:
             return {"removed_versions": 0, "removed_dirs": 0}
@@ -3992,16 +4011,6 @@ class ParquetSnapshotSink:
                     # keep laggiest..current INCLUSIVE — the diff reads
                     # the committed version's own manifest
                     keep_versions = max(keep_versions, current - laggiest + 1)
-        # Build the keep set from manifests that actually EXIST: after
-        # an earlier vacuum with a smaller keep_versions, versions in
-        # the nominal keep range may already be gone, and manifest_at
-        # on them would raise and abort maintenance.
-        keep: set[int] = set()
-        # full "data/vN/_bucket=K" rel paths; seeded with every OTHER
-        # branch's references — a vacuum on one branch must never
-        # reclaim files a sibling branch still reads (zero-copy forks
-        # share pre-fork data dirs by reference)
-        referenced: set[str] = self._foreign_branch_refs()
         # tagged versions of THIS branch are pinned outside the keep
         # window (named immutable refs — the whole point of a tag is
         # surviving vacuum); other branches' tags point into manifest
@@ -4011,129 +4020,96 @@ class ParquetSnapshotSink:
             for rec in self.tags().values()
             if rec["branch"] == self.branch
         }
-        for v in sorted(
-            set(range(max(1, current - keep_versions + 1), current + 1)) | tagged
-        ):
+        # below the keep window only: a version committed concurrently,
+        # after ``current`` was read, is never expired
+        expire = {
+            v
+            for v in self._log.numbers()
+            if v <= current - keep_versions and v not in tagged
+        }
+        return self._reclaim(self._foreign_branch_refs(), expire, ORPHAN_GRACE_SECONDS)
+
+    def _reclaim(
+        self, foreign: set[str], expire: set[int], grace_seconds: float
+    ) -> dict:
+        """THE deletion step of ``vacuum`` and ``remove_orphans``:
+        delete the manifests of ``expire`` (versions of this branch),
+        then every data level (bucket subdir) that no remaining
+        manifest of this branch and no ``foreign`` path (every
+        manifest of every other branch — zero-copy forks share pre-fork
+        dirs) references, when an expired version referenced it or its
+        mtime is older than ``grace_seconds`` — the Iceberg
+        ``older_than`` discipline: a concurrent writer's staged level
+        is unreferenced until its manifest commits, so "unreferenced"
+        alone cannot tell it from an orphan. A version or band dir
+        left with no level goes too, if it lost one here or is past
+        the grace window (a live write holds only ``_temporary``).
+        Tracking is per bucket subdir, not per version dir: a retained
+        chain may point at some buckets of an old version dir, and
+        purge() needs the others reclaimed."""
+        referenced, expired = set(foreign), set()
+        for v in self._log.numbers():
             m = self._log.read(v)
-            if m is None:
-                continue
-            keep.add(v)
-            for b in m["buckets"]:
-                referenced.update(self._paths_of(m, b))
+            if m is not None:
+                (expired if v in expire else referenced).update(self._all_paths(m))
         removed_versions = 0
-        for v in range(1, current):
-            if v in keep:
-                continue
-            path = self._log.path(v)
-            if os.path.exists(path):
-                os.unlink(path)
-                removed_versions += 1
-        removed_dirs = self._reclaim_unreferenced(referenced)
-        return {"removed_versions": removed_versions, "removed_dirs": removed_dirs}
-
-    def _reclaim_unreferenced(
-        self, referenced: set[str], min_age_before: float | None = None
-    ) -> int:
-        """Delete data bucket subdirs not in ``referenced``. Reference
-        tracking is per BUCKET SUBDIR, not per version dir: a retained
-        manifest's chain may point at only some buckets of an old
-        version dir, and the others must still be reclaimed — purge()
-        depends on this (a superseded bucket subdir left behind would
-        retain the purged rows on disk).
-
-        ``min_age_before`` (epoch seconds): only reclaim subdirs whose
-        mtime is strictly older — the ``remove_orphans`` grace window
-        that protects a concurrent OCC writer's in-flight staging dir
-        (staged but not yet committed = unreferenced but NOT orphaned).
-        ``vacuum`` passes None: everything it unreferences was
-        committed long ago."""
-
-        def _old_enough(path: str) -> bool:
-            if min_age_before is None:
-                return True
+        for v in sorted(expire):
             try:
-                return os.path.getmtime(path) < min_age_before
+                os.unlink(self._log.path(v))
+                removed_versions += 1
+            except FileNotFoundError:
+                pass  # a concurrent vacuum expired it first
+        cutoff = time.time() - grace_seconds
+
+        def _old(path: str) -> bool:
+            try:
+                return os.path.getmtime(path) < cutoff
             except OSError:
                 return False
-        data_root = os.path.join(self.root, "data")
-        removed_dirs = 0
-        if not os.path.isdir(data_root):
-            return 0
-        for d in sorted(os.listdir(data_root)):
-            vdir = os.path.join(data_root, d)
-            if not os.path.isdir(vdir):
-                continue
-            for sub in sorted(os.listdir(vdir)):
-                rel = f"data/{d}/{sub}"
-                if (
-                    sub.startswith(f"{BUCKET_COL}=")
-                    and rel not in referenced
-                    and _old_enough(os.path.join(vdir, sub))
-                ):
-                    shutil.rmtree(os.path.join(vdir, sub), ignore_errors=True)
-                    removed_dirs += 1
-                elif sub.startswith(f"{BAND_COL}="):
-                    # banded-compaction layout: one nesting level
-                    # deeper (_band=i/_bucket=b); reclaim per
-                    # bucket subdir, then the emptied band dir
-                    bdir = os.path.join(vdir, sub)
-                    for bb in sorted(os.listdir(bdir)):
-                        brel = f"{rel}/{bb}"
-                        if (
-                            bb.startswith(f"{BUCKET_COL}=")
-                            and brel not in referenced
-                            and _old_enough(os.path.join(bdir, bb))
-                        ):
-                            shutil.rmtree(
-                                os.path.join(bdir, bb), ignore_errors=True
-                            )
-                            removed_dirs += 1
-                    if not any(
-                        s.startswith(f"{BUCKET_COL}=")
-                        for s in os.listdir(bdir)
-                    ):
-                        shutil.rmtree(bdir, ignore_errors=True)
-            # version dir with no referenced content left → remove
-            remaining = [
-                s
-                for s in os.listdir(vdir)
-                if s.startswith(f"{BUCKET_COL}=")
-                or (
-                    s.startswith(f"{BAND_COL}=")
-                    and os.path.isdir(os.path.join(vdir, s))
-                )
-            ]
-            if not remaining:
-                shutil.rmtree(vdir, ignore_errors=True)
-        return removed_dirs
 
-    def remove_orphans(self, grace_seconds: float = 300.0) -> dict:
+        def _sweep(rel: str) -> int:
+            # levels sit at data/<dir>/_bucket=b, or one band deeper
+            # (_band=i/_bucket=b) in the banded-compaction layout
+            path, removed = os.path.join(self.root, rel), 0
+            for sub in sorted(os.listdir(path)):
+                child, full = f"{rel}/{sub}", os.path.join(path, sub)
+                if sub.startswith(f"{BUCKET_COL}="):
+                    if child not in referenced and (child in expired or _old(full)):
+                        shutil.rmtree(full, ignore_errors=True)
+                        removed += 1
+                elif sub.startswith(f"{BAND_COL}=") and os.path.isdir(full):
+                    removed += _sweep(child)
+            levels = (f"{BUCKET_COL}=", f"{BAND_COL}=")
+            if not any(s.startswith(levels) for s in os.listdir(path)) and (
+                removed or _old(path)
+            ):
+                shutil.rmtree(path, ignore_errors=True)
+            return removed
+
+        data = os.path.join(self.root, "data")
+        removed_dirs = sum(
+            _sweep(f"data/{d}")
+            for d in (sorted(os.listdir(data)) if os.path.isdir(data) else [])
+            if os.path.isdir(os.path.join(data, d))
+        )
+        return {"removed_versions": removed_versions, "removed_dirs": removed_dirs}
+
+    def remove_orphans(self, grace_seconds: float = ORPHAN_GRACE_SECONDS) -> dict:
         """Reclaim data directories referenced by NO manifest of ANY
-        branch — the Iceberg ``remove_orphan_files`` analogue, disjoint
-        from ``vacuum``: no snapshot is expired, every committed
+        branch — the Iceberg ``remove_orphan_files`` analogue: the
+        ``_reclaim`` step with no version expired, so every committed
         version (all branches) keeps reading bit-identically; only
-        never-committed leftovers go. Orphans come from exactly one
-        place in this design: a losing OCC attempt's uniquely-named
-        staging dir (see ``_data_rel`` — the loser re-stages under a
-        new name, the old dir is never referenced).
+        never-committed leftovers go. Orphans come from a losing OCC
+        attempt's uniquely-named staging dir (see ``_data_rel`` — the
+        loser re-stages under a new name, the old dir is never
+        referenced) or a writer that died before its commit.
 
-        ``grace_seconds`` is the Iceberg ``older_than`` discipline: a
-        CONCURRENT writer mid-apply has staged its dir but not yet
-        won the manifest race, so "unreferenced" alone cannot
-        distinguish an orphan from an in-flight commit. Only dirs
-        untouched for the grace window are reclaimed (default 5 min —
-        far beyond a single apply's stage→commit gap; pass 0 only when
-        no writer can be live).
+        ``grace_seconds``: only dirs untouched for the grace window are
+        reclaimed — a CONCURRENT writer mid-apply has staged its dir
+        but not yet won the manifest race (default
+        ``ORPHAN_GRACE_SECONDS``, 5 min — far beyond a single apply's
+        stage→commit gap; pass 0 only when no writer can be live).
 
         Driver-side filesystem metadata work only — no Spark job."""
-        referenced = self._foreign_branch_refs()
-        for v in range(1, self.current_version() + 1):
-            m = self._log.read(v)
-            if m is None:
-                continue
-            for b in m["buckets"]:
-                referenced.update(self._paths_of(m, b))
-        removed = self._reclaim_unreferenced(
-            referenced, min_age_before=time.time() - grace_seconds
-        )
-        return {"removed_dirs": removed}
+        removed = self._reclaim(self._foreign_branch_refs(), set(), grace_seconds)
+        return {"removed_dirs": removed["removed_dirs"]}

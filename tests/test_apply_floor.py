@@ -55,6 +55,66 @@ def test_partitioned_reduce_single_shuffle(spark, tmp_path):
         assert f"{BUCKET_COL}#" in l
 
 
+def _write_exchanges(spark, run):
+    """Exchange nodes of the executed plan of the one bucket write that
+    ``run()`` makes, read from the SQL status store: the execution of
+    a job in ``run``'s job group whose plan holds the file write."""
+    sc = spark.sparkContext
+    group = f"write-exchanges-{id(run)}"
+    sc.setJobGroup(group, "read the plan of one bucket write")
+    try:
+        run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    execs = store.executionsList()
+    writes = []
+    for i in range(execs.size()):
+        e = execs.apply(i)
+        if not any(e.jobs().contains(j) for j in jobs):
+            continue
+        nodes = store.planGraph(e.executionId()).allNodes()
+        names = [nodes.apply(k).name() for k in range(nodes.size())]
+        if any("InsertIntoHadoopFsRelationCommand" in n for n in names):
+            writes.append([
+                nodes.apply(k).desc()
+                for k in range(nodes.size())
+                if nodes.apply(k).name() == "Exchange"
+            ])
+    assert len(writes) == 1, writes
+    return writes[0]
+
+
+_REWRITES = {
+    "rewrite": lambda sink: sink.rewrite(
+        lambda df: df.withColumn("text", F.upper("text"))
+    ),
+    "purge": lambda sink: sink.purge(key_eq={"conv_id": "c1"}, expire_history=False),
+    "promotion": lambda sink: sink.evolve_patch_cols(
+        {"role": "string"}, unchanged_marker="__u__"
+    ),
+}
+
+
+@pytest.mark.parametrize("writer", sorted(_REWRITES))
+def test_level_rewrites_shuffle_once(spark, tmp_path, writer):
+    """A rewrite that reduces stored levels (unscoped ``rewrite``,
+    ``purge``, the ``evolve_patch_cols`` promotion) writes through
+    ``_partitioned_reduce``: its write job plans ONE exchange, the
+    bucket repartition the reduce reuses, where a reduce by key then
+    a repartition by bucket planned two."""
+    sink = ParquetSnapshotSink(spark, str(tmp_path / "s"), num_buckets=4, mode="mor")
+    df = _events_df(spark)
+    sink.apply(df.filter("seq < 150"), "b0")
+    sink.apply(df.filter("seq >= 150"), "b1")
+    exchanges = _write_exchanges(spark, lambda: _REWRITES[writer](sink))
+    assert len(exchanges) == 1, exchanges
+    assert exchanges[0].startswith(f"Exchange hashpartitioning({BUCKET_COL}#"), exchanges
+
+
 def _files_per_level(sink):
     """Parquet files in each bucket dir of the sink's data tree, after
     checking that the dirs are exactly the current chain elements."""

@@ -6,11 +6,12 @@ dropping a branch releases exactly its exclusively-owned dirs."""
 
 import glob
 import os
+import time
 
 import pytest
 from pyspark.sql import functions as F
 
-from embulk_util_json_spark.sinks.snapshot import ParquetSnapshotSink
+from embulk_util_json_spark.sinks.snapshot import ORPHAN_GRACE_SECONDS, ParquetSnapshotSink
 from embulk_util_json_spark.streaming.runner import apply_events_batch
 
 
@@ -101,6 +102,14 @@ def test_drop_branch_releases_only_its_dirs(spark, tmp_path):
     assert dev_dirs  # the branch owns its post-fork dirs
     main.drop_branch("dev")
     assert "dev" not in main.branches()
+    # no manifest references them now, but they are fresh: vacuum keeps
+    # them for the grace window, as it would a live writer's level
+    main.vacuum(keep_versions=1)
+    assert sorted(glob.glob(os.path.join(root, "data", "dev~v*"))) == sorted(dev_dirs)
+    then = time.time() - ORPHAN_GRACE_SECONDS - 60
+    for d in dev_dirs:
+        for sub, _, _ in os.walk(d):
+            os.utime(sub, (then, then))
     main.vacuum(keep_versions=1)
     assert not glob.glob(os.path.join(root, "data", "dev~v*"))
     assert _state(main) == [("a", 1, "t0")]  # main untouched

@@ -655,3 +655,41 @@ def test_next_manifests_have_one_home():
             if _constants(stripped) & _MARKERS:
                 offenders.append(f"{rel}:{node.lineno} marker stripped in {fn}")
     assert offenders == []
+
+
+def test_maintenance_has_one_path():
+    """Level rewrites and reclaim each take one path. No code in the
+    package names ``pre_partitioned`` (``_write_buckets`` always
+    repartitions by ``_bucket`` and the planner drops that exchange
+    over ``_partitioned_reduce`` output); ``sinks/snapshot.py`` calls
+    ``.repartition(`` only in those two; and only ``vacuum`` and
+    ``remove_orphans`` build the other branches' references or call
+    the deletion step, ``_reclaim``."""
+    pkg = pathlib.Path(embulk_util_json_spark.__file__).parent
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = str(path.relative_to(pkg))
+        for fn, node in _by_function(ast.parse(path.read_text(), rel)):
+            name = (
+                getattr(node, "id", None)
+                or getattr(node, "arg", None)
+                or getattr(node, "attr", None)
+                or getattr(node, "name", None)
+            )
+            if name == "pre_partitioned":
+                offenders.append(f"{rel}:{node.lineno} pre_partitioned in {fn}")
+            if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)):
+                continue
+            call = node.func.attr
+            if (
+                rel == "sinks/snapshot.py"
+                and call == "repartition"
+                and fn not in ("_write_buckets", "_partitioned_reduce")
+            ):
+                offenders.append(f"{rel}:{node.lineno} repartition in {fn}")
+            if call in ("_foreign_branch_refs", "_reclaim") and fn not in (
+                "vacuum",
+                "remove_orphans",
+            ):
+                offenders.append(f"{rel}:{node.lineno} {call} in {fn}")
+    assert offenders == []
