@@ -140,6 +140,23 @@ def _normalize(config: dict) -> dict:
     return c
 
 
+def _open_sink(spark: SparkSession, merge: dict, out: dict) -> ParquetSnapshotSink:
+    """The sink a normalized config's ``merge`` and ``out`` sections
+    name; both facades open theirs here."""
+    patch = merge.get("patch") or {}
+    return ParquetSnapshotSink(
+        spark,
+        out["root"],
+        num_buckets=int(merge.get("num_buckets", 32)),
+        keys=merge.get("keys"),
+        order_cols=merge.get("order"),
+        mode=merge["mode"],
+        branch=out.get("branch", "main"),
+        patch_cols=patch.get("cols"),
+        unchanged_marker=patch.get("marker"),
+    )
+
+
 def run_ingest(spark: SparkSession, config: dict) -> dict:
     """Validate ``config``, replay the configured input through the
     exactly-once sink, return ``{"sink", "batches"}`` (per-batch apply
@@ -182,17 +199,7 @@ def run_ingest(spark: SparkSession, config: dict) -> dict:
     if "_pos" not in raw.columns:
         raw = raw.withColumn("_pos", F.col("seq"))
 
-    sink = ParquetSnapshotSink(
-        spark,
-        out["root"],
-        num_buckets=int(merge.get("num_buckets", 32)),
-        keys=merge.get("keys"),
-        order_cols=merge.get("order"),
-        mode=merge["mode"],
-        branch=out.get("branch", "main"),
-        patch_cols=(merge.get("patch") or {}).get("cols"),
-        unchanged_marker=(merge.get("patch") or {}).get("marker"),
-    )
+    sink = _open_sink(spark, merge, out)
 
     n = run["num_batches"]
     prefix = run.get("batch_prefix", "b")
@@ -285,16 +292,7 @@ def run_ingest_stream(spark: SparkSession, config: dict) -> dict:
         "run": {"num_batches": 1},
     }
     norm = _normalize(batch_cfg)
-    merge, out = norm["merge"], norm["out"]
-    sink = ParquetSnapshotSink(
-        spark,
-        out["root"],
-        num_buckets=int(merge.get("num_buckets", 32)),
-        keys=merge.get("keys"),
-        order_cols=merge.get("order"),
-        mode=merge["mode"],
-        branch=out.get("branch", "main"),
-    )
+    sink = _open_sink(spark, norm["merge"], norm["out"])
 
     if src["type"] == "parquet_stream":
         from .streaming.runner import stream_directory

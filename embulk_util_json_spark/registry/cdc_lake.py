@@ -215,18 +215,19 @@ def _q_cdc_published_feed_roundtrip(
     applies in three batches, and after each one ``publish_changes``
     drains a named cursor into a Debezium JSONL segment on disk. An
     external consumer then re-ingests EVERY published segment through
-    the wire parser and LWW-folds (seq = the segment's to_version —
-    deterministic: each segment is net-per-key, so ties only occur
-    ACROSS segments and resolve to the later window, matching source
-    semantics). The fold must equal the whole-stream oracle — the
-    published feed loses nothing end-to-end, tombstones included."""
+    ``read_published`` (the wire parser, seq = the segment's
+    to_version) and LWW-folds (deterministic: each segment is
+    net-per-key, so ties only occur ACROSS segments and resolve to the
+    later window, matching source semantics). The fold must equal the
+    whole-stream oracle — the published feed loses nothing
+    end-to-end, tombstones included."""
     from embulk_util_json_spark.operators.lww import lww_agg
     from embulk_util_json_spark.sinks.publish import (
         publish_changes,
         published_segments,
+        read_published,
     )
     from embulk_util_json_spark.sinks.snapshot import ParquetSnapshotSink
-    from embulk_util_json_spark.sources.debezium import parse_debezium_events
     from embulk_util_json_spark.streaming.runner import apply_events_batch
 
     work = _scratch("publish_")
@@ -249,18 +250,9 @@ def _q_cdc_published_feed_roundtrip(
     segs = published_segments(out)
     assert len(segs) == 3, f"one segment per window, got {len(segs)}"
     assert publish_changes(src, "exporter", out) is None, "must be caught up"
-    parts = [
-        spark.read.text(os.path.join(out, s["name"])).select(
-            F.lit(int(s["to_version"])).cast("long").alias("seq"),
-            F.col("value").alias("event_json"),
-        )
-        for s in segs
-    ]
-    raw = parts[0]
-    for p in parts[1:]:
-        raw = raw.unionByName(p)
-    parsed = parse_debezium_events(raw)
-    final = lww_agg(parsed, ["conv_id", "turn_idx"], ["ts", "seq"])
+    final = lww_agg(
+        read_published(spark, out), ["conv_id", "turn_idx"], ["ts", "seq"]
+    )
     return final.filter(F.col("op") != "delete").select(
         "conv_id", "turn_idx", "role", "text", "tool", "ts"
     )

@@ -2972,11 +2972,12 @@ class ParquetSnapshotSink:
         1. delta files in ``to`` but not in ``from`` → candidate rows
            (``window``, from ``_feed_window``);
         2. LWW-reduce candidates per key → candidate winners;
-        3. read the ``from`` state ONLY for candidate keys (bucket
-           pruning via the candidates' bucket set, then a broadcast
-           semi-join) and keep keys whose old winner already beats or
-           equals the candidate — those are late-losing replays, NOT
-           net changes;
+        3. read the ``from`` state of every bucket that got new files
+           in the window (``_from_state``: bucket pruning only, no
+           key filter), LWW-reduce it to old winners and left-join the
+           candidate winners against ALL of them; a key whose old
+           winner already beats or equals its candidate is a
+           late-losing replay, NOT a net change;
         4. emit candidate winners that beat (or are new to) the old
            state.
 

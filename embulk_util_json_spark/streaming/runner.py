@@ -1,14 +1,15 @@
 """Replay and streaming drivers: events → capture → LWW MERGE.
 
-Batch replay chunks a binlog by seq range into deterministic
-micro-batches; Structured Streaming tails a directory with
-``foreachBatch``. Both funnel into ``apply_events_batch``, and
-exactly-once is anchored in the *sink's* batch-id commit log — the
-streaming checkpoint only provides offsets, so a kill/resume that
-redelivers a batch is de-duplicated at the sink (idempotent MERGE),
-and replaying from ANY checkpoint converges to the same final table
-(LWW is order-insensitive across batches once the sink holds
-tombstones; SURVEY.md §7.3 #2).
+Batch replay groups a directory of seq-contiguous binlog segment
+files into deterministic micro-batches (``replay_segments``);
+Structured Streaming tails a directory with ``foreachBatch``. Both
+funnel into ``apply_events_batch``, and exactly-once is anchored in
+the *sink's* batch-id commit log — the streaming checkpoint only
+provides offsets, so a kill/resume that redelivers a batch is
+de-duplicated at the sink (idempotent MERGE), and replaying from ANY
+checkpoint converges to the same final table (LWW is
+order-insensitive across batches once the sink holds tombstones;
+SURVEY.md §7.3 #2).
 """
 
 from __future__ import annotations
@@ -262,8 +263,8 @@ def bootstrap_snapshot(
 ) -> dict:
     """Debezium-style initial load: seed an empty sink from a
     consistent snapshot taken at binlog position ``watermark_seq``,
-    then continue the tail with ``replay_*(..., min_seq=watermark_seq
-    + 1)``.
+    then continue the tail with ``replay_segments(...,
+    min_seq=watermark_seq + 1)``.
 
     ``snapshot`` columns: the key + payload columns (``conv_id,
     turn_idx, role, text, tool, ts``); optional ``op``/``seq``/extra
@@ -354,42 +355,6 @@ def bootstrap_snapshot(
         *base_names, EXTRAS_COL, *stamp_cols,
     )
     return sink.apply(out, batch_id or f"bootstrap-seq-{watermark_seq}")
-
-
-def replay_parquet(
-    spark: SparkSession,
-    events_path: str,
-    sink: ParquetSnapshotSink,
-    num_batches: int = 1,
-    min_seq: int | None = None,
-    parse_fn=None,
-) -> list[dict]:
-    """Batch replay: split the event log into ``num_batches`` seq-range
-    micro-batches (deterministic batch ids → resumable: already-applied
-    ranges are skipped by the sink). ``min_seq`` starts the tail after
-    a bootstrap watermark (the filter is pushed to the parquet scan —
-    seq-sorted segments skip whole row groups via footer stats)."""
-    events = spark.read.parquet(events_path)
-    if min_seq is not None:
-        events = events.filter(F.col("seq") >= min_seq)
-    bounds = events.agg(
-        F.min("seq").alias("lo"), F.max("seq").alias("hi")
-    ).collect()[0]
-    if bounds.lo is None:
-        return []
-    span = bounds.hi - bounds.lo + 1
-    step = math.ceil(span / num_batches)
-    out = []
-    for i in range(num_batches):
-        lo = bounds.lo + i * step
-        hi = min(lo + step, bounds.hi + 1)
-        if lo >= hi:
-            break
-        batch = events.filter((F.col("seq") >= lo) & (F.col("seq") < hi))
-        out.append(
-            apply_events_batch(batch, sink, f"seq-{lo}-{hi}", parse_fn=parse_fn)
-        )
-    return out
 
 
 def replay_segments(

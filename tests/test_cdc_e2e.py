@@ -2,8 +2,10 @@
 sequential oracle (FIXTURES.md T5/T6), plus exactly-once, resume,
 salted-LWW equivalence, and schema evolution (T7)."""
 
+import ast
 import json
 import os
+import pathlib
 
 import pandas as pd
 import pytest
@@ -20,11 +22,15 @@ from embulk_util_json_spark.sources.events import parse_change_events
 from embulk_util_json_spark.sources.generator import generate_events
 from embulk_util_json_spark.streaming.runner import (
     apply_events_batch,
-    replay_parquet,
+    replay_segments,
     stream_directory,
 )
+from tests.segments import write_segments
 
 N_EVENTS = 8000
+# enough seq-contiguous segment files that every num_batches in use
+# (1-8) gets full file groups
+SEGMENTS = 24
 
 
 def sequential_oracle(event_rows):
@@ -58,11 +64,10 @@ def events_table():
 
 @pytest.fixture(scope="module")
 def events_parquet(events_table, tmp_path_factory):
-    import pyarrow.parquet as pq
-
-    path = str(tmp_path_factory.mktemp("events") / "events.parquet")
-    pq.write_table(events_table, path)
-    return path
+    """The events as a directory of ``SEGMENTS`` binlog segment files."""
+    return write_segments(
+        events_table, str(tmp_path_factory.mktemp("events")), SEGMENTS
+    )
 
 
 @pytest.fixture(scope="module")
@@ -173,14 +178,14 @@ def test_lww_variants_equivalent(spark, events_parquet, tmp_path):
 
 def test_single_batch_replay_matches_oracle(spark, events_parquet, oracle_state, tmp_path):
     sink = ParquetSnapshotSink(spark, str(tmp_path / "t1"), num_buckets=8)
-    metrics = replay_parquet(spark, events_parquet, sink, num_batches=1)
+    metrics = replay_segments(spark, events_parquet, sink, num_batches=1)
     assert metrics[0]["change_rows"] > 0
     assert_matches_oracle(sink, oracle_state)
 
 
 def test_multi_batch_replay_matches_oracle(spark, events_parquet, oracle_state, tmp_path):
     sink = ParquetSnapshotSink(spark, str(tmp_path / "t2"), num_buckets=8)
-    replay_parquet(spark, events_parquet, sink, num_batches=5)
+    replay_segments(spark, events_parquet, sink, num_batches=5)
     assert_matches_oracle(sink, oracle_state)
     # stable turn ordering check: per-conversation turn_idx is sorted & unique
     df = sink.read().orderBy("conv_id", "turn_idx").collect()
@@ -192,27 +197,39 @@ def test_multi_batch_replay_matches_oracle(spark, events_parquet, oracle_state, 
 
 def test_reapply_batch_is_noop(spark, events_parquet, oracle_state, tmp_path):
     sink = ParquetSnapshotSink(spark, str(tmp_path / "t3"), num_buckets=4)
-    m1 = replay_parquet(spark, events_parquet, sink, num_batches=2)
+    m1 = replay_segments(spark, events_parquet, sink, num_batches=2)
     v1 = sink.current_version()
-    m2 = replay_parquet(spark, events_parquet, sink, num_batches=2)
+    m2 = replay_segments(spark, events_parquet, sink, num_batches=2)
     assert all(m.get("skipped") for m in m2)
     assert sink.current_version() == v1
     assert_matches_oracle(sink, oracle_state)
 
 
-def test_resume_from_partial_replay(spark, events_parquet, oracle_state, tmp_path):
-    # "replay from any checkpoint reproduces the final state": apply
-    # only the first 2 of 5 ranges (simulated crash), then rerun all 5.
-    sink = ParquetSnapshotSink(spark, str(tmp_path / "t4"), num_buckets=4)
-    ev = spark.read.parquet(events_parquet)
-    hi = ev.agg(F.max("seq")).collect()[0][0]
-    import math
+def test_resume_from_partial_replay(
+    spark, events_parquet, oracle_state, tmp_path, monkeypatch
+):
+    # "replay from any checkpoint reproduces the final state": the
+    # replay crashes after the first 2 of its 5 file groups, then the
+    # rerun skips those 2 and applies the other 3.
+    from embulk_util_json_spark.streaming import runner
 
-    step = math.ceil((hi + 1) / 5)
-    for i in range(2):
-        batch = ev.filter((F.col("seq") >= i * step) & (F.col("seq") < (i + 1) * step))
-        apply_events_batch(batch, sink, f"seq-{i * step}-{min((i + 1) * step, hi + 1)}")
-    replay_parquet(spark, events_parquet, sink, num_batches=5)
+    sink = ParquetSnapshotSink(spark, str(tmp_path / "t4"), num_buckets=4)
+    applied = []
+
+    def crash_after_two(events, sink_, batch_id, **kw):
+        if len(applied) == 2:
+            raise RuntimeError("simulated crash")
+        applied.append(batch_id)
+        return apply_events_batch(events, sink_, batch_id, **kw)
+
+    monkeypatch.setattr(runner, "apply_events_batch", crash_after_two)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        replay_segments(spark, events_parquet, sink, num_batches=5)
+    monkeypatch.undo()
+    assert sink.applied_batch_ids() == applied
+
+    out = replay_segments(spark, events_parquet, sink, num_batches=5)
+    assert [bool(m.get("skipped")) for m in out] == [True] * 2 + [False] * 3
     assert_matches_oracle(sink, oracle_state)
 
 
@@ -231,14 +248,11 @@ def test_out_of_order_batches_converge(spark, events_parquet, oracle_state, tmp_
 
 
 def test_schema_evolution_additive(spark, tmp_path):
-    import pyarrow.parquet as pq
-
     t = generate_events(4000, n_convs=20, n_turns=20, evolve_after=0.5)
-    path = str(tmp_path / "evo.parquet")
-    pq.write_table(t, path)
+    path = write_segments(t, str(tmp_path / "evo"), 2)
     sink = ParquetSnapshotSink(spark, str(tmp_path / "t6"), num_buckets=4)
     # two batches: pre-cutover events (no model field), then post-cutover
-    replay_parquet(spark, path, sink, num_batches=2)
+    replay_segments(spark, path, sink, num_batches=2)
     out = sink.read()
     assert "model" in out.columns  # column added additively
     rows = out.collect()
@@ -311,7 +325,7 @@ def test_bootstrap_snapshot_handoff_bit_exact(spark, events_parquet, oracle_stat
     w = N_EVENTS // 2
 
     full = ParquetSnapshotSink(spark, str(tmp_path / "full"), num_buckets=8)
-    replay_parquet(spark, events_parquet, full, num_batches=2)
+    replay_segments(spark, events_parquet, full, num_batches=2)
 
     prefix = ParquetSnapshotSink(spark, str(tmp_path / "prefix"), num_buckets=8)
     apply_events_batch(events.filter(F.col("seq") <= w), prefix, "prefix")
@@ -321,7 +335,7 @@ def test_bootstrap_snapshot_handoff_bit_exact(spark, events_parquet, oracle_stat
         spark, str(tmp_path / "boot"), num_buckets=8, mode="mor"
     )
     bootstrap_snapshot(boot, snap, w)
-    replay_parquet(spark, events_parquet, boot, num_batches=2, min_seq=w + 1)
+    replay_segments(spark, events_parquet, boot, num_batches=2, min_seq=w + 1)
 
     assert_matches_oracle(boot, oracle_state)
     cols = sorted(full.read().columns)
@@ -528,23 +542,49 @@ def test_quarantine_dead_letter_raw_rows(spark, tmp_path):
     assert sorted(os.listdir(qdir)) == ["b0"]
 
 
-def test_replay_segments_min_seq_skips_whole_segments(spark, tmp_path):
+def test_replay_segments_min_seq_skips_whole_segments(spark, tmp_path, monkeypatch):
     """Segments wholly below the bootstrap watermark never enter the
-    plan (footer-stat skip); the straddling segment is filtered; state
-    equals a full tail replay."""
+    plan (footer-stat skip); the straddling segment's batch pushes the
+    ``seq >= w`` filter to its parquet scan; state equals a full tail
+    replay."""
+    import pyarrow.parquet as pq
+
     from embulk_util_json_spark.sources.generator import ensure_events_segments
-    from embulk_util_json_spark.streaming.runner import replay_segments
+    from embulk_util_json_spark.streaming import runner
 
     seg_dir = ensure_events_segments(
         str(tmp_path / "segs"), 4000, segments=8, n_convs=20, n_turns=10
     )
     w = 2500
+    bounds = {}  # segment file -> (min seq, max seq)
+    for f in os.listdir(seg_dir):
+        if f.endswith(".parquet"):
+            seqs = pq.read_table(os.path.join(seg_dir, f)).column("seq").to_pylist()
+            bounds[f] = (min(seqs), max(seqs))
+    (straddling,) = [f for f, (lo, hi) in bounds.items() if lo < w <= hi]
+
+    batches = []
+
+    def capture(events, *args, **kw):
+        batches.append(events)
+        return apply_events_batch(events, *args, **kw)
+
+    monkeypatch.setattr(runner, "apply_events_batch", capture)
     sink = ParquetSnapshotSink(spark, str(tmp_path / "t"), num_buckets=4)
     out = replay_segments(spark, seg_dir, sink, num_batches=8, min_seq=w)
+    monkeypatch.undo()
     # 8 segments of 500 seqs: segments 0-4 (seq<2500) must be skipped
     applied = sink.applied_batch_ids()
     assert len(applied) <= 4, applied
     assert all(f"@{w}" in b for b in applied)
+    # no batch scans a segment wholly below the watermark, and the
+    # straddling segment's scan carries the pushed seq filter
+    read = [{os.path.basename(p) for p in b.inputFiles()} for b in batches]
+    assert all(bounds[f][1] >= w for files in read for f in files), read
+    (batch,) = [b for b, files in zip(batches, read) if straddling in files]
+    plan = batch._jdf.queryExecution().executedPlan().toString()
+    pushed = [l for l in plan.splitlines() if "PushedFilters" in l]
+    assert any(f"GreaterThanOrEqual(seq,{w})" in l for l in pushed), plan
 
     ref = ParquetSnapshotSink(spark, str(tmp_path / "ref"), num_buckets=4)
     ev = spark.read.parquet(seg_dir).filter(F.col("seq") >= w)
@@ -711,3 +751,43 @@ def test_route_tables_mixed_patch_and_row_level_sinks(spark, tmp_path):
          for r in sinks["audit"].read().collect()}
     # row-level LWW: whole payload replaced
     assert a == {("a1", 0): "updated"}
+
+
+def test_batch_replay_has_one_path():
+    """One batch replay per batching model: ``replay_segments`` groups
+    segment files, ``ingest.run_ingest`` slices an arbitrary frame by
+    position. No code in the package, ``tools/``, ``tests/``,
+    ``bench.py`` or ``__spark_entry__.py`` names the deleted
+    seq-range replay of a monolithic file, and ``ingest.py`` opens its
+    sink in one place for both facades."""
+    root = pathlib.Path(__file__).resolve().parents[1]
+    pkg = root / "embulk_util_json_spark"
+    paths = [
+        *pkg.rglob("*.py"),
+        *(root / "tools").rglob("*.py"),
+        *(root / "tests").rglob("*.py"),
+        root / "bench.py",
+        root / "__spark_entry__.py",
+    ]
+    gone = "replay_parquet"
+    offenders = []
+    sinks = []
+    for path in sorted(paths):
+        rel = str(path.relative_to(root))
+        for node in ast.walk(ast.parse(path.read_text(), rel)):
+            names = {
+                getattr(node, a, None) for a in ("id", "arg", "attr", "name", "asname")
+            }
+            if gone in names:
+                offenders.append(f"{rel}:{node.lineno} {gone}")
+            if (
+                path == pkg / "ingest.py"
+                and isinstance(node, ast.Call)
+                and "ParquetSnapshotSink" in {
+                    getattr(node.func, "id", None), getattr(node.func, "attr", None)
+                }
+            ):
+                sinks.append(f"{rel}:{node.lineno} ParquetSnapshotSink(")
+    if len(sinks) > 1:
+        offenders += sinks
+    assert offenders == []

@@ -9,9 +9,15 @@ from pyspark.sql import functions as F
 
 from embulk_util_json_spark.sinks.snapshot import ParquetSnapshotSink
 from embulk_util_json_spark.sources.generator import generate_events
-from embulk_util_json_spark.streaming.runner import apply_events_batch, replay_parquet
+from embulk_util_json_spark.streaming.runner import apply_events_batch, replay_segments
 
-from tests.test_cdc_e2e import assert_matches_oracle, sequential_oracle, state_from_sink
+from tests.segments import write_segments
+from tests.test_cdc_e2e import (
+    SEGMENTS,
+    assert_matches_oracle,
+    sequential_oracle,
+    state_from_sink,
+)
 
 N_EVENTS = 6000
 
@@ -23,11 +29,10 @@ def events_table():
 
 @pytest.fixture(scope="module")
 def events_parquet(events_table, tmp_path_factory):
-    import pyarrow.parquet as pq
-
-    path = str(tmp_path_factory.mktemp("mor_events") / "events.parquet")
-    pq.write_table(events_table, path)
-    return path
+    """The events as a directory of ``SEGMENTS`` binlog segment files."""
+    return write_segments(
+        events_table, str(tmp_path_factory.mktemp("mor_events")), SEGMENTS
+    )
 
 
 @pytest.fixture(scope="module")
@@ -43,8 +48,8 @@ def oracle_state(events_table):
 def test_mor_matches_oracle_and_mow(spark, events_parquet, oracle_state, tmp_path):
     mor = ParquetSnapshotSink(spark, str(tmp_path / "mor"), num_buckets=4, mode="mor")
     mow = ParquetSnapshotSink(spark, str(tmp_path / "mow"), num_buckets=4, mode="mow")
-    replay_parquet(spark, events_parquet, mor, num_batches=5)
-    replay_parquet(spark, events_parquet, mow, num_batches=5)
+    replay_segments(spark, events_parquet, mor, num_batches=5)
+    replay_segments(spark, events_parquet, mow, num_batches=5)
     assert_matches_oracle(mor, oracle_state)
     assert state_from_sink(mor) == state_from_sink(mow)
     # MOR actually appended deltas (chain depth > 1 before compaction)
@@ -54,9 +59,9 @@ def test_mor_matches_oracle_and_mow(spark, events_parquet, oracle_state, tmp_pat
 
 def test_mor_reapply_is_noop(spark, events_parquet, oracle_state, tmp_path):
     sink = ParquetSnapshotSink(spark, str(tmp_path / "m2"), num_buckets=4, mode="mor")
-    replay_parquet(spark, events_parquet, sink, num_batches=3)
+    replay_segments(spark, events_parquet, sink, num_batches=3)
     v1 = sink.current_version()
-    m2 = replay_parquet(spark, events_parquet, sink, num_batches=3)
+    m2 = replay_segments(spark, events_parquet, sink, num_batches=3)
     assert all(m.get("skipped") for m in m2)
     assert sink.current_version() == v1
     assert_matches_oracle(sink, oracle_state)
@@ -66,7 +71,7 @@ def test_mor_auto_compaction_bounds_chain(spark, events_parquet, oracle_state, t
     sink = ParquetSnapshotSink(
         spark, str(tmp_path / "m3"), num_buckets=4, mode="mor", compact_every=3
     )
-    replay_parquet(spark, events_parquet, sink, num_batches=8)
+    replay_segments(spark, events_parquet, sink, num_batches=8)
     manifest = sink.current_manifest()
     depth = max(len(v) for v in manifest["buckets"].values())
     assert depth <= 3 + 1  # one delta may land after the last compaction
@@ -76,7 +81,7 @@ def test_mor_auto_compaction_bounds_chain(spark, events_parquet, oracle_state, t
 
 def test_mor_manual_compact_drops_tombstones(spark, events_parquet, oracle_state, tmp_path):
     sink = ParquetSnapshotSink(spark, str(tmp_path / "m4"), num_buckets=4, mode="mor")
-    replay_parquet(spark, events_parquet, sink, num_batches=4)
+    replay_segments(spark, events_parquet, sink, num_batches=4)
     assert sink.read(include_tombstones=True).filter("op = 'delete'").count() > 0
     sink.compact(drop_tombstones=True)
     manifest = sink.current_manifest()
@@ -86,13 +91,10 @@ def test_mor_manual_compact_drops_tombstones(spark, events_parquet, oracle_state
 
 
 def test_mor_schema_evolution_across_levels(spark, tmp_path):
-    import pyarrow.parquet as pq
-
     t = generate_events(3000, n_convs=15, n_turns=20, evolve_after=0.5)
-    path = str(tmp_path / "evo.parquet")
-    pq.write_table(t, path)
+    path = write_segments(t, str(tmp_path / "evo"), 2)
     sink = ParquetSnapshotSink(spark, str(tmp_path / "m5"), num_buckets=4, mode="mor")
-    replay_parquet(spark, path, sink, num_batches=2)
+    replay_segments(spark, path, sink, num_batches=2)
     out = sink.read()
     assert "model" in out.columns
     rows = out.collect()
@@ -139,7 +141,7 @@ def test_vacuum_expires_old_snapshots(spark, events_parquet, oracle_state, tmp_p
     import os
 
     sink = ParquetSnapshotSink(spark, str(tmp_path / "vac"), num_buckets=4, mode="mor")
-    replay_parquet(spark, events_parquet, sink, num_batches=4)
+    replay_segments(spark, events_parquet, sink, num_batches=4)
     # with uncompacted MOR chains every delta dir is still referenced —
     # vacuum must delete NOTHING even when expiring manifests
     stats0 = sink.vacuum(keep_versions=1)
@@ -168,7 +170,7 @@ def test_vacuum_expires_old_snapshots(spark, events_parquet, oracle_state, tmp_p
 
 def test_compact_tombstone_watermark(spark, events_parquet, oracle_state, tmp_path):
     sink = ParquetSnapshotSink(spark, str(tmp_path / "wm"), num_buckets=4, mode="mor")
-    replay_parquet(spark, events_parquet, sink, num_batches=3)
+    replay_segments(spark, events_parquet, sink, num_batches=3)
     tomb = sink.read(include_tombstones=True, include_meta=True).filter("op = 'delete'")
     n_total = tomb.count()
     assert n_total > 0
@@ -195,7 +197,7 @@ def test_read_changes_incremental_feed(spark, events_parquet, tmp_path):
     two table states: exactly the keys whose winner changed, carrying
     the new winner — late-losing replays excluded."""
     sink = ParquetSnapshotSink(spark, str(tmp_path / "cf"), num_buckets=4, mode="mor")
-    replay_parquet(spark, events_parquet, sink, num_batches=5)
+    replay_segments(spark, events_parquet, sink, num_batches=5)
     v_hi = sink.current_version()
     assert v_hi >= 4  # compaction may add versions; need a range
     v_lo = 2
@@ -228,7 +230,7 @@ def test_read_changes_exact_after_compaction(spark, events_parquet, tmp_path):
     rewritten old rows; the old-state winner check must filter them so
     the feed still equals the snapshot diff."""
     sink = ParquetSnapshotSink(spark, str(tmp_path / "cfc"), num_buckets=4, mode="mor")
-    replay_parquet(spark, events_parquet, sink, num_batches=4)
+    replay_segments(spark, events_parquet, sink, num_batches=4)
     v_lo = sink.current_version()
     sink.compact(drop_tombstones=False)
     v_hi = sink.current_version()
@@ -285,7 +287,7 @@ def test_lineage_dataframe(spark, events_parquet, tmp_path):
     sink = ParquetSnapshotSink(
         spark, str(tmp_path / "t"), num_buckets=4, mode="mor"
     )
-    replay_parquet(spark, events_parquet, sink, num_batches=2)
+    replay_segments(spark, events_parquet, sink, num_batches=2)
     lin = sink.lineage()
     rows = lin.collect()
     assert {r.batch_id for r in rows} == set(sink.applied_batch_ids())
@@ -307,7 +309,7 @@ def test_point_lookup_prunes_to_one_bucket(spark, events_parquet, tmp_path):
     sink = ParquetSnapshotSink(
         spark, str(tmp_path / "t"), num_buckets=8, mode="mor"
     )
-    replay_parquet(spark, events_parquet, sink, num_batches=3)
+    replay_segments(spark, events_parquet, sink, num_batches=3)
 
     full = sink.read().collect()
     some_key = next((r.conv_id, r.turn_idx) for r in full)
@@ -352,11 +354,11 @@ def test_rebucket_midstream_matches_oracle(
     sink = ParquetSnapshotSink(
         spark, str(tmp_path / "rb"), num_buckets=4, mode="mor"
     )
-    replay_parquet(spark, events_parquet, sink, num_batches=6)
+    replay_segments(spark, events_parquet, sink, num_batches=6)
     # replay only delivered batches 1..6; rebucket midway through a
     # SECOND pass that also carries 3 fresh batches
     sink2 = ParquetSnapshotSink(spark, str(tmp_path / "rb2"), num_buckets=4, mode="mor")
-    mids = replay_parquet(spark, events_parquet, sink2, num_batches=3)
+    mids = replay_segments(spark, events_parquet, sink2, num_batches=3)
     assert not any(m.get("skipped") for m in mids)
     pre_version = sink2.current_version()
     r = sink2.rebucket(9)
@@ -364,7 +366,7 @@ def test_rebucket_midstream_matches_oracle(
     assert sink2.num_buckets == 9
     # pre-rebucket batches are still skips; the finer split delivers
     # the remaining ranges
-    replay_parquet(spark, events_parquet, sink2, num_batches=6)
+    replay_segments(spark, events_parquet, sink2, num_batches=6)
     assert_matches_oracle(sink2, oracle_state)
     assert state_from_sink(sink2) == state_from_sink(sink)
 
@@ -417,7 +419,7 @@ def test_probe_keys_prunes_to_hit_buckets(spark, events_parquet, tmp_path):
     sink = ParquetSnapshotSink(
         spark, str(tmp_path / "t"), num_buckets=8, mode="mor"
     )
-    replay_parquet(spark, events_parquet, sink, num_batches=3)
+    replay_segments(spark, events_parquet, sink, num_batches=3)
 
     full = sink.read().collect()
     # two distinct conv_ids that land in different buckets
@@ -453,7 +455,7 @@ def test_point_lookup_missing_key_and_deleted_key(spark, events_parquet, tmp_pat
     sink = ParquetSnapshotSink(
         spark, str(tmp_path / "t"), num_buckets=8, mode="mor"
     )
-    replay_parquet(spark, events_parquet, sink, num_batches=2)
+    replay_segments(spark, events_parquet, sink, num_batches=2)
     assert sink.read(key_eq={"conv_id": "no-such-conv"}).count() == 0
     # a tombstoned key returns nothing without include_tombstones
     dead = (
@@ -485,7 +487,7 @@ def test_point_lookup_filters_reach_parquet_scan(spark, events_parquet, tmp_path
     sink = ParquetSnapshotSink(
         spark, str(tmp_path / "t"), num_buckets=4, mode="mor"
     )
-    replay_parquet(spark, events_parquet, sink, num_batches=2)
+    replay_segments(spark, events_parquet, sink, num_batches=2)
     df = sink.read(key_eq={"conv_id": "c000001", "turn_idx": 3})
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters" in plan
@@ -496,13 +498,25 @@ def test_point_lookup_filters_reach_parquet_scan(spark, events_parquet, tmp_path
     ), pushed
 
 
-def test_replay_min_seq_pushdown(spark, events_parquet, tmp_path):
-    """min_seq tail filters reach the binlog parquet scan."""
-    from pyspark.sql import functions as F2
+def test_replay_min_seq_pushdown(spark, events_parquet, tmp_path, monkeypatch):
+    """min_seq tail filters reach the binlog parquet scan of every
+    batch replay_segments builds."""
+    from embulk_util_json_spark.streaming import runner
 
-    events = spark.read.parquet(events_parquet).filter(F2.col("seq") >= 1234)
-    plan = events._jdf.queryExecution().executedPlan().toString()
-    assert "GreaterThanOrEqual(seq,1234)" in plan
+    batches = []
+
+    def capture(events, *args, **kw):
+        batches.append(events)
+        return {}
+
+    monkeypatch.setattr(runner, "apply_events_batch", capture)
+    sink = ParquetSnapshotSink(spark, str(tmp_path / "t"), num_buckets=4)
+    replay_segments(spark, events_parquet, sink, num_batches=3, min_seq=1234)
+    assert batches
+    for events in batches:
+        plan = events._jdf.queryExecution().executedPlan().toString()
+        pushed = [l for l in plan.splitlines() if "PushedFilters" in l]
+        assert any("GreaterThanOrEqual(seq,1234)" in l for l in pushed), plan
 
 
 def test_apply_with_retry_wins_after_race(spark, tmp_path):
@@ -589,7 +603,7 @@ def test_purge_physically_removes_key_everywhere(spark, events_parquet, tmp_path
 
     root = str(tmp_path / "t")
     sink = ParquetSnapshotSink(spark, root, num_buckets=4, mode="mor")
-    replay_parquet(spark, events_parquet, sink, num_batches=3)
+    replay_segments(spark, events_parquet, sink, num_batches=3)
 
     victim = sink.read().select("conv_id").first().conv_id
     before = sink.read().count()
@@ -621,13 +635,13 @@ def test_purge_physically_removes_key_everywhere(spark, events_parquet, tmp_path
     assert sink.applied_batch_ids() == ids_before
 
     # replaying an already-committed batch cannot resurrect the key
-    replay_parquet(spark, events_parquet, sink, num_batches=3)
+    replay_segments(spark, events_parquet, sink, num_batches=3)
     assert sink.read().filter(F.col("conv_id") == victim).count() == 0
 
 
 def test_purge_where_predicate_all_buckets(spark, events_parquet, tmp_path):
     sink = ParquetSnapshotSink(spark, str(tmp_path / "t"), num_buckets=4)
-    replay_parquet(spark, events_parquet, sink, num_batches=2)
+    replay_segments(spark, events_parquet, sink, num_batches=2)
     n_high = sink.read().filter(F.col("turn_idx") >= 20).count()
     out = sink.purge(where=F.col("turn_idx") >= 20, expire_history=False)
     assert out["purged_rows"] >= n_high > 0
@@ -648,7 +662,7 @@ def test_table_health_tracks_chains_and_compaction(spark, events_parquet, tmp_pa
         spark, str(tmp_path / "h"), num_buckets=4, mode="mor",
         compact_every=100,  # keep auto-compaction out of the assertion
     )
-    replay_parquet(spark, events_parquet, sink, num_batches=3)
+    replay_segments(spark, events_parquet, sink, num_batches=3)
     h = {r.bucket: r for r in sink.table_health(compact_threshold=2).collect()}
     assert set(h) == {0, 1, 2, 3}
     touched = [r for r in h.values() if r.rows_landed > 0]
@@ -677,7 +691,7 @@ def test_rewrite_transforms_at_rest_preserving_semantics(
     import json
 
     sink = ParquetSnapshotSink(spark, str(tmp_path / "rw"), num_buckets=4, mode="mor")
-    replay_parquet(spark, events_parquet, sink, num_batches=3)
+    replay_segments(spark, events_parquet, sink, num_batches=3)
 
     def redact(df):
         return df.withColumn("text", F.concat(F.lit("X"), F.col("text")))
@@ -693,7 +707,7 @@ def test_rewrite_transforms_at_rest_preserving_semantics(
 
     # exactly-once survives the rewrite: replaying an applied batch skips
     ev = spark.read.parquet(events_parquet)
-    out = replay_parquet(spark, events_parquet, sink, num_batches=3)
+    out = replay_segments(spark, events_parquet, sink, num_batches=3)
     assert all(o.get("skipped") for o in out)
     assert state_from_sink(sink) == want
 
@@ -728,7 +742,7 @@ def test_rewrite_scoped_where_touches_only_matches(
     spark, events_parquet, oracle_state, tmp_path
 ):
     sink = ParquetSnapshotSink(spark, str(tmp_path / "rws"), num_buckets=4, mode="mor")
-    replay_parquet(spark, events_parquet, sink, num_batches=2)
+    replay_segments(spark, events_parquet, sink, num_batches=2)
     convs = sorted({k[0] for k in state_from_sink(sink)})
     target = convs[0]
 
@@ -755,7 +769,7 @@ def test_read_columns_projection_prunes_scan(spark, events_parquet, tmp_path):
     sink = ParquetSnapshotSink(
         spark, str(tmp_path / "t"), num_buckets=4, mode="mor"
     )
-    replay_parquet(spark, events_parquet, sink, num_batches=3)
+    replay_segments(spark, events_parquet, sink, num_batches=3)
 
     df = sink.read(columns=["text"])
     assert sorted(df.columns) == ["conv_id", "text", "turn_idx"]
@@ -814,11 +828,11 @@ def test_stale_handle_adopts_rebucketed_layout(
     chain and re-commit the old layout metadata on apply."""
     root = str(tmp_path / "stale")
     a = ParquetSnapshotSink(spark, root, num_buckets=4, mode="mor")
-    replay_parquet(spark, events_parquet, a, num_batches=3)
+    replay_segments(spark, events_parquet, a, num_batches=3)
     b = ParquetSnapshotSink(spark, root, mode="mor")  # stale after...
     a.rebucket(9)
     # ...but b's next apply adopts 9 and must NOT revert the manifest
-    replay_parquet(spark, events_parquet, b, num_batches=6)
+    replay_segments(spark, events_parquet, b, num_batches=6)
     assert b.num_buckets == 9
     assert b.current_manifest()["num_buckets"] == 9
     assert_matches_oracle(b, oracle_state)

@@ -507,20 +507,18 @@ def test_patch_sink_with_schema_evolution_extras(spark, tmp_path):
     promoted to real columns at read, and on a DENSE stream (every
     event restates all columns — the generated corpus) the patch
     sink's visible state equals the sequential row-level oracle."""
-    import pyarrow.parquet as pq
-
     from embulk_util_json_spark.sources.generator import generate_events
-    from embulk_util_json_spark.streaming.runner import replay_parquet
+    from embulk_util_json_spark.streaming.runner import replay_segments
+    from tests.segments import write_segments
     from tests.test_cdc_e2e import sequential_oracle
 
     t = generate_events(4000, n_convs=20, n_turns=20, evolve_after=0.5)
-    path = str(tmp_path / "evo.parquet")
-    pq.write_table(t, path)
+    path = write_segments(t, str(tmp_path / "evo"), 2)
     sink = ParquetSnapshotSink(
         spark, str(tmp_path / "t_patch_evo"), num_buckets=4,
         patch_cols=PATCH, unchanged_marker=M,
     )
-    replay_parquet(spark, path, sink, num_batches=2)
+    replay_segments(spark, path, sink, num_batches=2)
     out = sink.read()
     assert "model" in out.columns
     rows = out.collect()

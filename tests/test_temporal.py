@@ -75,17 +75,15 @@ def test_sessionize(spark):
 
 
 def test_sink_time_travel(spark, tmp_path):
-    import pyarrow.parquet as pq
-
     from embulk_util_json_spark.sinks.snapshot import ParquetSnapshotSink
     from embulk_util_json_spark.sources.generator import generate_events
-    from embulk_util_json_spark.streaming.runner import replay_parquet
+    from embulk_util_json_spark.streaming.runner import replay_segments
+    from tests.segments import write_segments
 
     t = generate_events(3000, n_convs=10, n_turns=10)
-    path = str(tmp_path / "ev.parquet")
-    pq.write_table(t, path)
+    path = write_segments(t, str(tmp_path / "ev"), 3)
     sink = ParquetSnapshotSink(spark, str(tmp_path / "t"), num_buckets=4, mode="mor")
-    replay_parquet(spark, path, sink, num_batches=3)
+    replay_segments(spark, path, sink, num_batches=3)
     v_final = sink.current_version()
     assert v_final == 3
     final_rows = sink.read().count()
